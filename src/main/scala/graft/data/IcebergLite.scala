@@ -1,8 +1,12 @@
 package graft.data
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -272,10 +276,23 @@ object IcebergLite {
     * (an OR-per-snapshot predicate grew O(#batches) and was re-walked by
     * every optimizer pass). basePath keeps snapid + the partition column
     * recoverable as partition columns; uncommitted / superseded / in-flight
-    * snapshot dirs are simply never listed. */
-  def read(spark: SparkSession, table: String, asOfSnapshot: Long = -1L): DataFrame = {
-    val m = (if (asOfSnapshot >= 0) readSnapshot(table, asOfSnapshot) else readManifest(table))
-      .getOrElse(throw new IllegalStateException(s"no committed snapshot at $table"))
+    * snapshot dirs are simply never listed.
+    *
+    * The current snapshot is resolved ONCE per session ([[current]]): the
+    * returned DataFrame already holds the listed files and the inferred
+    * schema, so a repeat read of an unchanged table starts no Spark job
+    * (listing more than 32 directories is a parallel job, and schema
+    * inference is another). Any commit — [[write]], [[extend]], [[update]],
+    * [[compact]] — changes the snapshot CURRENT points at, and the next
+    * read resolves the new one. Time travel (`asOfSnapshot >= 0`) resolves
+    * the requested snapshot afresh on every call: the cache holds only the
+    * current snapshot of each table, never a history. */
+  def read(spark: SparkSession, table: String, asOfSnapshot: Long = -1L): DataFrame =
+    if (asOfSnapshot < 0) current(spark, table).df
+    else load(spark, table, readSnapshot(table, asOfSnapshot)
+      .getOrElse(throw new IllegalStateException(s"no committed snapshot at $table")))
+
+  private def load(spark: SparkSession, table: String, m: Manifest): DataFrame = {
     if (m.entries.isEmpty) throw new IllegalStateException(
       s"table $table snapshot ${m.snapshotId} has no data partitions")
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
@@ -284,6 +301,78 @@ object IcebergLite {
       .distinct
     spark.read.option("basePath", s"$table/data").parquet(dirs: _*).drop("snapid")
   }
+
+  /** The snapshot CURRENT points at, as one session sees it: its manifest
+    * and the DataFrame over its visible files (resolved on first use, then
+    * reused). Taking both from one Snapshot pins a query to one snapshot
+    * even if a commit lands while it runs. */
+  final class Snapshot private[IcebergLite] (private[IcebergLite] val stamp: Stamp,
+                                             val manifest: Manifest, resolve: () => DataFrame) {
+    lazy val df: DataFrame = resolve()
+  }
+
+  /** [[current]], or None when the table has no committed snapshot. */
+  def currentOption(spark: SparkSession, table: String): Option[Snapshot] = {
+    val key = (spark, Paths.get(table).toAbsolutePath.normalize.toString)
+    snapshotStamp(table).map { stamp =>
+      val slots = slotsOf(spark.sparkContext)
+      val hit = slots.get(key)
+      if (hit != null && hit.stamp == stamp) hit
+      else {
+        val m = readSnapshot(table, stamp.id)
+          .getOrElse(throw new IllegalStateException(s"snapshot ${stamp.id} of $table vanished"))
+        val snap = new Snapshot(stamp, m, () => load(spark, table, m))
+        slots.put(key, snap)
+        snap
+      }
+    }
+  }
+
+  /** The current snapshot of `table`, resolved once per (session, table). */
+  def current(spark: SparkSession, table: String): Snapshot =
+    currentOption(spark, table)
+      .getOrElse(throw new IllegalStateException(s"no committed snapshot at $table"))
+
+  /** What identifies a committed snapshot on disk: the id in CURRENT plus
+    * its manifest file's mtime and size. A commit moves CURRENT to a new
+    * id; a table deleted and re-created at the same path rewrites the
+    * manifest file, so a reused id still gets a new stamp. */
+  private[IcebergLite] final case class Stamp(id: Long, mtime: FileTime, size: Long)
+
+  private def snapshotStamp(table: String): Option[Stamp] =
+    try {
+      val id = Files.readString(currentPtr(table)).trim.toLong
+      val a = Files.readAttributes(manifestDir(table).resolve(s"snap-$id.tsv"),
+        classOf[BasicFileAttributes])
+      Some(Stamp(id, a.lastModifiedTime, a.size))
+    } catch { case _: NoSuchFileException => None }
+
+  // one slot per (session, table), replaced on every new snapshot, so the
+  // cache is bounded by the number of tables a session has read. A hit is
+  // exact: a committed snapshot's files are immutable and are not expired
+  // while it is current. Slots hold DataFrames, which hold their session,
+  // so a context's slots are dropped when it stops (one listener per
+  // context, installed with its map).
+  private val slotsByContext =
+    new ConcurrentHashMap[SparkContext, ConcurrentHashMap[(SparkSession, String), Snapshot]]()
+
+  private def slotsOf(sc: SparkContext) = {
+    val slots = slotsByContext.computeIfAbsent(sc, _ => {
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          slotsByContext.remove(sc)
+      })
+      new ConcurrentHashMap[(SparkSession, String), Snapshot]()
+    })
+    // a context that stopped before its listener was installed never
+    // delivers the end event
+    if (sc.isStopped) slotsByContext.remove(sc)
+    slots
+  }
+
+  /** Number of cached slots held for a context (0 once it has stopped). */
+  private[data] def slotCount(sc: SparkContext): Int =
+    Option(slotsByContext.get(sc)).map(_.size).getOrElse(0)
 
   /** Compact: rewrite the table's visible content as ONE new snapshot (one
     * entry and one file set per partition). Streaming ingest creates a

@@ -220,12 +220,13 @@ object AnnOps {
     * to [[annIvf]] for the same parameters. */
   def annIvfIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
                     dim: Int, nQueries: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val manifest = graft.data.IcebergLite.readManifest(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
+    // manifest and scan from ONE snapshot (see IcebergLite.current)
+    val snap = graft.data.IcebergLite.current(spark, table)
+    val manifest = snap.manifest
     val nCentroids = manifest.properties("ivf.n_centroids").toInt
     val idCol = manifest.properties("ivf.id_col")
     val embCol = manifest.properties("ivf.emb_col")
-    val tbl = graft.data.IcebergLite.read(spark, table)
+    val tbl = snap.df
     // centroid vectors come from the manifest when the index recorded them
     // (writeIvfIndex does) — zero table scan for probe selection; tables
     // written before that property existed fall back to the bounded scan

@@ -401,16 +401,23 @@ object SpatialOps {
                  prefixCol: String, prefixBits: Int,
                  lonCol: String, latCol: String,
                  qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val manifest = graft.data.IcebergLite.readManifest(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
-    // sum across snapshots: appended partitions have one entry per snapshot
-    val rowsByPartition: Map[String, Long] = graft.data.IcebergLite.rowsByPartition(manifest)
-    def scan(cells: Seq[Long]): DataFrame =
-      graft.data.IcebergLite.read(spark, table)
-        .where(col(prefixCol).isin(cells: _*))
+    val t = new PinnedTable(spark, table, prefixCol)
     knnExpand(spark, lonCol, latCol, qLon, qLat, k, prefixBits, tieCol,
-      scan, cells => cells.map(c => rowsByPartition.getOrElse(c.toString, 0L)).sum,
-      () => rowsByPartition.values.sum, Some(rowsByPartition.values.sum))
+      t.scan, t.count, () => t.total, Some(t.total))
+  }
+
+  /** One committed snapshot of an indexed table as the manifest-count kNNs
+    * see it: per-cell row counts from its manifest (no Spark job) and
+    * prefix-pruned scans of its resolved DataFrame. Counts and every scan
+    * come from the same snapshot, so a commit landing mid-query cannot mix
+    * two snapshots into one exact answer. */
+  private final class PinnedTable(spark: SparkSession, table: String, prefixCol: String) {
+    private val snap = graft.data.IcebergLite.current(spark, table)
+    // sum across snapshots: appended partitions have one entry per snapshot
+    private val rows = graft.data.IcebergLite.rowsByPartition(snap.manifest)
+    val total: Long = rows.values.sum
+    def count(cells: Seq[Long]): Long = cells.map(c => rows.getOrElse(c.toString, 0L)).sum
+    def scan(cells: Seq[Long]): DataFrame = snap.df.where(col(prefixCol).isin(cells: _*))
   }
 
   /** [[knnIndexed]] against an H3-TILED table ([[graft.data.IcebergLite
@@ -421,20 +428,13 @@ object SpatialOps {
                    prefixCol: String, prefixRes: Int,
                    lonCol: String, latCol: String,
                    qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val manifest = graft.data.IcebergLite.readManifest(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
-    val rowsByPartition: Map[String, Long] = graft.data.IcebergLite.rowsByPartition(manifest)
+    val t = new PinnedTable(spark, table, prefixCol)
     val center = graft.core.H3U.latLngToCell(qLat, qLon, prefixRes)
     val h3Ring = frontierRings(center)
     val cellMinDeg = math.toDegrees(graft.core.H3U.maxPitchRad(prefixRes)) * 0.6
     val maxRings = (math.Pi / (graft.core.H3U.maxPitchRad(prefixRes) * 0.6)).toLong + 2
-    def scan(cells: Seq[Long]): DataFrame =
-      graft.data.IcebergLite.read(spark, table)
-        .where(col(prefixCol).isin(cells: _*))
     knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-      h3Ring, cellMinDeg, maxRings,
-      scan, cells => cells.map(c => rowsByPartition.getOrElse(c.toString, 0L)).sum,
-      () => rowsByPartition.values.sum, Some(rowsByPartition.values.sum))
+      h3Ring, cellMinDeg, maxRings, t.scan, t.count, () => t.total, Some(t.total))
   }
 
   /** [[knnIndexedH3]] on an S2-TILED table ([[graft.data.IcebergLite
@@ -449,9 +449,7 @@ object SpatialOps {
                    prefixCol: String, prefixLevel: Int,
                    lonCol: String, latCol: String,
                    qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val manifest = graft.data.IcebergLite.readManifest(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
-    val rowsByPartition: Map[String, Long] = graft.data.IcebergLite.rowsByPartition(manifest)
+    val t = new PinnedTable(spark, table, prefixCol)
     val cellMinDeg = graft.core.S2U.minCellWidthDeg(prefixLevel)
     // "ring" r = the SOUND covering of the degree-metric box of half-width
     // r·cellMin around the query (coverBox is property-tested to contain
@@ -477,13 +475,8 @@ object SpatialOps {
       cells.toSeq
     }
     val maxRings = (360.0 / cellMinDeg).toLong + 2
-    def scan(cells: Seq[Long]): DataFrame =
-      graft.data.IcebergLite.read(spark, table)
-        .where(col(prefixCol).isin(cells: _*))
     knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-      s2Ring, cellMinDeg, maxRings,
-      scan, cells => cells.map(c => rowsByPartition.getOrElse(c.toString, 0L)).sum,
-      () => rowsByPartition.values.sum, Some(rowsByPartition.values.sum))
+      s2Ring, cellMinDeg, maxRings, t.scan, t.count, () => t.total, Some(t.total))
   }
 
   /** Dense raster of per-cell counts over a box — the engine equivalent of

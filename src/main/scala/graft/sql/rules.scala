@@ -1,5 +1,6 @@
 package graft.sql
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -250,33 +251,17 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] {
     case other => Cast(Literal(cell), other)
   }
 
-  // manifest cache keyed by table path, invalidated by the CURRENT
-  // pointer's mtime: the optimizer calls this rule on every fixed-point
-  // iteration for every Filter-over-parquet node, and re-parsing a
-  // streaming-ingested table's full entry list each time would make
-  // planning O(manifest size) per pass
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[graft.data.IcebergLite.Manifest])]()
-
-  private def cachedManifest(table: String): Option[graft.data.IcebergLite.Manifest] = {
-    val ptr = java.nio.file.Paths.get(table, "_manifests", "CURRENT")
-    if (!java.nio.file.Files.exists(ptr)) return None
-    val mtime = java.nio.file.Files.getLastModifiedTime(ptr).toMillis
-    val hit = manifestCache.get(table)
-    if (hit != null && hit._1 == mtime) hit._2
-    else {
-      val m = graft.data.IcebergLite.readManifest(table)
-      manifestCache.put(table, (mtime, m))
-      m
-    }
-  }
-
   /** The IcebergLite manifest backing this parquet relation, if its
     * properties record a tiling. [[graft.data.IcebergLite.read]] lists the
     * visible `<table>/data/snapid=<s>/<part>=<v>` leaf dirs as load paths
     * (constant-size visibility), so the table root is recovered from the
     * first path's `/data/snapid=` segment; a plain `<table>/data` root
-    * (direct parquet load of the whole layout) is also accepted. */
+    * (direct parquet load of the whole layout) is also accepted.
+    *
+    * The optimizer calls this on every fixed-point iteration for every
+    * Filter-over-parquet node, so the manifest comes from the session's
+    * snapshot slot ([[graft.data.IcebergLite.currentOption]]) rather than
+    * being re-parsed each pass; a new commit invalidates the slot. */
   private def manifestFor(l: LogicalRelation) = l.relation match {
     case fs: HadoopFsRelation =>
       fs.location.rootPaths.headOption
@@ -287,7 +272,9 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] {
           else if (p.endsWith("/data")) Some(p.stripSuffix("/data"))
           else None
         }
-        .flatMap(cachedManifest)
+        .flatMap(t => SparkSession.getActiveSession
+          .flatMap(graft.data.IcebergLite.currentOption(_, t)))
+        .map(_.manifest)
         .flatMap(m => m.properties.get(graft.data.IcebergLite.PropPrefixBits)
           .map(b => (m, b.toInt)))
     case _ => None

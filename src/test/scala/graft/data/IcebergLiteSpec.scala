@@ -1,0 +1,151 @@
+package graft.data
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.CyclicBarrier
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.BBox
+import graft.engine.SpatialOps
+import graft.sql.{GraftSpark, functions => gf}
+
+/** The per-session snapshot slot behind [[IcebergLite.read]]: every commit
+  * shape is seen by the next read, the covering-prune rule follows the
+  * same slot, concurrent readers agree with a serial one, and a stopped
+  * context's slots are dropped. */
+class IcebergLiteSpec extends AnyFunSuite {
+  lazy val spark = GraftSpark.session("local[4]", appName = "iceberg-lite-spec")
+  import spark.implicits._
+
+  private def tmp(name: String) = Files.createTempDirectory(name).toString
+
+  /** Keys [from, until) at their derived positions. */
+  private def pts(from: Long, until: Long): DataFrame =
+    SpatialOps.withDerivedPosition(spark.range(from, until).toDF("c_custkey"), "c_custkey")
+
+  /** Rows at explicit positions, tiled like writeTiled(…, 30, 6). */
+  private def tiledRows(rows: (Long, Double, Double)*): DataFrame =
+    rows.toDF("c_custkey", "lon", "lat")
+      .withColumn("tile", gf.gh_encode($"lon", $"lat", 30))
+      .withColumn("tile_p", gf.gh_parent($"tile", 30, 6))
+
+  private def ranked(df: DataFrame): Seq[(Int, Long)] =
+    df.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+
+  private def knnGh(table: String, qx: Double, qy: Double): Seq[(Int, Long)] =
+    ranked(SpatialOps.knnIndexed(spark, table, "tile_p", 6, "lon", "lat", qx, qy, 10, "c_custkey"))
+
+  private def brute(points: DataFrame, qx: Double, qy: Double): Seq[(Int, Long)] =
+    ranked(SpatialOps.knnBrute(points.select("c_custkey", "lon", "lat"), "lon", "lat",
+      Seq((0, qx, qy)), 10, "c_custkey"))
+
+  private def keys(df: DataFrame): Seq[Long] =
+    df.select("c_custkey").collect().map(_.getLong(0)).sorted.toSeq
+
+  private def inBox(b: BBox): Column =
+    $"lon" >= b.minLon && $"lon" <= b.maxLon && $"lat" >= b.minLat && $"lat" <= b.maxLat
+
+  private val (qx, qy) = (-0.75, 51.25)
+
+  test("after extend, a read returns the new rows and knnIndexed matches brute force") {
+    val t = s"${tmp("slot_extend")}/t"
+    IcebergLite.writeTiled(pts(1, 2001), t, "lon", "lat", 30, 6)
+    assert(IcebergLite.read(spark, t).count() == 2000)
+    assert(knnGh(t, qx, qy) == brute(pts(1, 2001), qx, qy))
+    // two rows at the query point: the answer must change
+    val extra = tiledRows((900001L, qx, qy), (900002L, qx + 1e-4, qy))
+    IcebergLite.extend(extra, t, "tile_p")
+    assert(IcebergLite.read(spark, t).count() == 2002)
+    val got = knnGh(t, qx, qy)
+    assert(got.take(2) == Seq((1, 900001L), (2, 900002L)), got)
+    assert(got == brute(pts(1, 2001).unionByName(extra.select("c_custkey", "lon", "lat")), qx, qy))
+    // time travel bypasses the slot and still sees the first snapshot
+    assert(IcebergLite.read(spark, t, asOfSnapshot = 0).count() == 2000)
+  }
+
+  test("a table deleted and re-written at the same path returns the new rows") {
+    val t = s"${tmp("slot_rewrite")}/t"
+    IcebergLite.writeTiled(pts(1, 501), t, "lon", "lat", 30, 6)
+    assert(keys(IcebergLite.read(spark, t)) == (1L until 501L))
+    scala.util.Using.resource(Files.walk(Paths.get(t))) { s =>
+      s.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    }
+    // same snapshot id (0), same layout, different rows
+    IcebergLite.writeTiled(pts(1001, 1301), t, "lon", "lat", 30, 6)
+    assert(IcebergLite.readManifest(t).get.snapshotId == 0)
+    assert(keys(IcebergLite.read(spark, t)) == (1001L until 1301L))
+    assert(knnGh(t, qx, qy) == brute(pts(1001, 1301), qx, qy))
+  }
+
+  test("after compact + expireSnapshots, reads and indexed kNN still succeed") {
+    val t = s"${tmp("slot_compact")}/t"
+    IcebergLite.writeTiled(pts(1, 1001), t, "lon", "lat", 30, 6)
+    IcebergLite.extend(tiledRows((900001L, qx, qy)), t, "tile_p")
+    IcebergLite.extend(tiledRows((900002L, 10.0, 10.0)), t, "tile_p")
+    val all = pts(1, 1001).unionByName(Seq((900001L, qx, qy), (900002L, 10.0, 10.0))
+      .toDF("c_custkey", "lon", "lat"))
+    assert(IcebergLite.read(spark, t).count() == 1002)
+    assert(knnGh(t, qx, qy) == brute(all, qx, qy))
+    IcebergLite.compact(spark, t)
+    assert(IcebergLite.expireSnapshots(t).nonEmpty)
+    assert(keys(IcebergLite.read(spark, t)) == keys(all))
+    assert(knnGh(t, qx, qy) == brute(all, qx, qy))
+  }
+
+  test("two threads reading and querying one table get the serial results") {
+    val t = s"${tmp("slot_threads")}/t"
+    IcebergLite.writeTiledH3(pts(1, 1501), t, "lon", "lat", 7, 2)
+    val queries = Seq((qx, qy), (139.75, 35.5), (10.0, 10.0))
+    def run(): Seq[Seq[Any]] = queries.flatMap { case (x, y) =>
+      Seq(
+        ranked(SpatialOps.knnIndexedH3(spark, t, "tile_p", 2, "lon", "lat", x, y, 10, "c_custkey")),
+        keys(IcebergLite.read(spark, t).where(inBox(BBox(x - 5, y - 5, x + 5, y + 5)))))
+    }
+    // both threads start on a cold slot
+    val start = new CyclicBarrier(2)
+    val concurrent = (0 until 2).map(_ => Future { start.await(); run() })
+      .map(Await.result(_, 5.minutes))
+    val serial = run()
+    assert(serial.forall(_.nonEmpty))
+    concurrent.foreach(r => assert(r == serial))
+  }
+
+  test("DeriveCoveringPrune follows a new commit even when CURRENT's mtime is unchanged") {
+    val t = s"${tmp("slot_rule")}/t"
+    // a table WITHOUT tiling properties: the rule has nothing to derive
+    IcebergLite.write(pts(1, 1501)
+      .withColumn("tile", gf.gh_encode($"lon", $"lat", 30))
+      .withColumn("tile_p", gf.gh_parent($"tile", 30, 6)), t, "tile_p")
+    val box = BBox(-0.75, 51.0, 0.25, 52.0)
+    def query = IcebergLite.read(spark, t).where(inBox(box))
+    def pruned(df: DataFrame): Boolean = "PartitionFilters: \\[[^\\]]*tile_p#".r
+      .findFirstIn(df.queryExecution.executedPlan.toString).isDefined
+    assert(!pruned(query))
+    // commit the tiling properties as snapshot 1, then put CURRENT's mtime
+    // back: a cache keyed on that mtime would keep serving snapshot 0
+    val ptr = Paths.get(t, "_manifests", "CURRENT")
+    val before = Files.getLastModifiedTime(ptr)
+    IcebergLite.writeTiled(pts(1, 1501), t, "lon", "lat", 30, 6)
+    assert(IcebergLite.readManifest(t).get.snapshotId == 1)
+    Files.setLastModifiedTime(ptr, before)
+    assert(pruned(query), query.queryExecution.executedPlan.toString)
+    assert(keys(query) == keys(pts(1, 1501).where(inBox(box))))
+  }
+
+  // stops the suite's SparkContext: keep this test last
+  test("a stopped context's slots are dropped, so they cannot keep its session alive") {
+    val t = s"${tmp("slot_stop")}/t"
+    IcebergLite.writeTiled(pts(1, 101), t, "lon", "lat", 30, 6)
+    IcebergLite.read(spark, t)
+    val sc = spark.sparkContext
+    assert(IcebergLite.slotCount(sc) > 0)
+    spark.stop() // delivers the application-end event before returning
+    assert(IcebergLite.slotCount(sc) == 0)
+  }
+}

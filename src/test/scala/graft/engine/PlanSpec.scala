@@ -631,4 +631,36 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(planStr).size >= 2, planStr)
     assert(planStr.contains("Exchange hashpartitioning(tile"), planStr)
   }
+
+  /** An H3 table partitioned by res-0 cell: more partition directories
+    * than Spark's 32-path threshold, so listing them is a parallel job. */
+  private def res0Table(name: String): String = {
+    val t = s"${java.nio.file.Files.createTempDirectory(name)}/t"
+    val pts = SpatialOps.withDerivedPosition(spark.range(1, 1501).toDF("c_custkey"), "c_custkey")
+    graft.data.IcebergLite.writeTiledH3(pts, t, "lon", "lat", 7, 0)
+    val parts = graft.data.IcebergLite.readManifest(t).get.entries.size
+    assert(parts > 32, s"needs more than 32 partition directories, got $parts")
+    t
+  }
+
+  test("budget: a repeat IcebergLite.read of an unchanged table starts 0 jobs") {
+    val t = res0Table("read_budget")
+    val first = graft.JobCount.sites(spark)(graft.data.IcebergLite.read(spark, t))
+    assert(first.exists(_.contains("IcebergLite")), first.mkString("; "))
+    val again = graft.JobCount.sites(spark)(graft.data.IcebergLite.read(spark, t))
+    assert(again.isEmpty, again.mkString("; "))
+  }
+
+  test("budget: a repeat knnIndexedH3 starts no IcebergLite listing or schema job") {
+    val t = res0Table("knn_budget")
+    def knn(): Unit = SpatialOps.knnIndexedH3(
+      spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey").collect()
+    // the first query resolves the snapshot once: its two scans share it
+    val first = graft.JobCount.sites(spark)(knn())
+    assert(first.count(_.contains("IcebergLite")) == 2, first.mkString("; "))
+    val again = graft.JobCount.sites(spark)(knn())
+    assert(!again.exists(_.contains("IcebergLite")), again.mkString("; "))
+    // what is left is the k-th-distance job and the final top-k
+    assert(again.size <= 2, again.mkString("; "))
+  }
 }
