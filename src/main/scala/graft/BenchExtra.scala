@@ -51,18 +51,27 @@ object BenchExtra {
         val la0 = loadavg()
         val ts = (1 to iters).map { _ =>
           val t0 = System.nanoTime()
-          val err = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-                    catch { case e: Throwable => Some(e.getClass.getSimpleName + ": " + e.getMessage) }
-          err.foreach(m => System.err.println(s"[benchextra] $name FAILED: $m"))
-          (System.nanoTime() - t0) / 1e9
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Right((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable => Left(e.getClass.getSimpleName + ": " + e.getMessage) }
         }
         val la1 = loadavg()
         (name, ts, la0, la1)
       }
-    results.foreach { case (name, ts, la0, la1) =>
-      println(f"$name%-28s min=${ts.min}%8.3f med=${ts.sorted.apply(ts.length / 2)}%8.3f all=[${ts.map(t => f"$t%.3f").mkString(", ")}] load0=$la0 load1=$la1")
+    // a failed iteration's time-to-exception is no timing: its query is
+    // printed FAILED and left out of TOTAL
+    val timed = results.flatMap { case (name, ts, la0, la1) =>
+      val (errs, secs) = ts.partitionMap(identity)
+      if (errs.nonEmpty) {
+        println(f"$name%-28s FAILED ${errs.head.replaceAll("\\s+", " ")} load0=$la0 load1=$la1")
+        None
+      } else {
+        println(f"$name%-28s min=${secs.min}%8.3f med=${secs.sorted.apply(secs.length / 2)}%8.3f all=[${secs.map(t => f"$t%.3f").mkString(", ")}] load0=$la0 load1=$la1")
+        Some(secs.min)
+      }
     }
-    println(s"TOTAL(min) ${results.map(_._2.min).sum}")
+    println(s"TOTAL(min) ${timed.sum}")
     spark.stop()
   }
 }

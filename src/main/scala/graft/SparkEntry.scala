@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Geohash, BBox}
 import graft.engine.SpatialOps
-import graft.sql.{functions => gf, GraftFunctions}
+import graft.sql.{CellIndex, functions => gf, GraftFunctions}
 import graft.OracleSql._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -137,9 +137,9 @@ object SparkEntry {
     "q58_h3u_knn" -> gq { (s, dir) =>
       // ring-expansion kNN on the BIT-COMPATIBLE H3 index (gridDisk
       // shells) — exact, so it shares q07's brute-force oracle
-      SpatialOps.knnRingH3(
+      SpatialOps.knnRing(
         SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
-        "lon", "lat", 1, knnQueries.head._2, knnQueries.head._3, 10, 7, "c_custkey")
+        "lon", "lat", 1, knnQueries.head._2, knnQueries.head._3, 10, 7, "c_custkey", CellIndex.H3U)
         .withColumn("rnk", col("rank").cast("bigint"))
         .select("qid", "rnk", "c_custkey")
     },
@@ -189,13 +189,9 @@ object SparkEntry {
       // intersection, tighter than the bbox) prefilter candidates via a
       // broadcast equi-join; exact ray-cast refines — same semantics as
       // q08, different physical path
-      import s.implicits._
-      val rings = graft.core.GeoMath.parseWktPolygon(franceWkt)
-      val cells = graft.core.Geohash.polygonCovering(rings, 15).toSeq.toDF("__cell")
-      val pts = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      SpatialOps.withTile(pts, "lon", "lat", 15, "__cell")
-        .join(broadcast(cells), "__cell")
-        .where(gf.st_contains_wkt(lit(franceWkt), col("lon"), col("lat")))
+      SpatialOps.pipQuery(
+        SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
+        "lon", "lat", franceWkt, 15)
         .select("c_custkey", "lon", "lat")
     },
     "q09_neighbor_block" -> gq { (s, dir) =>
@@ -294,9 +290,9 @@ object SparkEntry {
       // covering (broadcast) + exact refine. The refine makes the result
       // exactly the box contents, so this is the H3 path's first
       // ORACLE-EXACT query (plain range WHERE in DuckDB).
-      SpatialOps.boxQueryH3(
+      SpatialOps.boxQuery(
         SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
-        "lon", "lat", londonBox, 7)
+        "lon", "lat", londonBox, 7, index = CellIndex.H3U)
         .select("c_custkey", "lon", "lat")
     },
     "q57_h3u_pip" -> gq { (s, dir) =>
@@ -304,16 +300,10 @@ object SparkEntry {
       // polyfill of the polygon's bbox prefilters via broadcast equi-join
       // on h3u_cell; exact ray-cast refines — q08 semantics, H3 physical
       // path (oracle-exact like q18)
-      import s.implicits._
-      val rings = graft.core.GeoMath.parseWktPolygon(franceWkt)
-      val outer = rings.head
-      val lons = outer.indices.collect { case i if i % 2 == 0 => outer(i) }
-      val lats = outer.indices.collect { case i if i % 2 == 1 => outer(i) }
-      val cells = graft.core.H3U.polyfillBox(lons.min, lats.min, lons.max, lats.max, 5)
-        .toSeq.toDF("__h3")
-      val pts = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pts.withColumn("__h3", gf.h3u_cell(col("lon"), col("lat"), 5))
-        .join(broadcast(cells), "__h3").drop("__h3")
+      val bbox = graft.core.GeoMath.polygonBBox(graft.core.GeoMath.parseWktPolygon(franceWkt))
+      SpatialOps.boxQuery(
+        SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
+        "lon", "lat", bbox, 5, refine = false, index = CellIndex.H3U)
         .where(gf.st_contains_wkt(lit(franceWkt), col("lon"), col("lat")))
         .select("c_custkey", "lon", "lat")
     },
@@ -348,15 +338,9 @@ object SparkEntry {
       // conservative coverBox prefilter via broadcast equi-join on
       // s2u_cell, exact range refine — q03/q56 semantics on the S2
       // physical path, so the plain SQL box oracle checks it
-      import s.implicits._
-      val cells = graft.core.S2U.coverBox(
-        londonBox.minLon, londonBox.minLat, londonBox.maxLon, londonBox.maxLat, 10)
-        .toSeq.toDF("__s2")
-      val pts = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pts.withColumn("__s2", gf.s2u_cell(col("lon"), col("lat"), 10))
-        .join(broadcast(cells), "__s2").drop("__s2")
-        .where(col("lon") >= londonBox.minLon && col("lon") <= londonBox.maxLon &&
-               col("lat") >= londonBox.minLat && col("lat") <= londonBox.maxLat)
+      SpatialOps.boxQuery(
+        SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
+        "lon", "lat", londonBox, 10, index = CellIndex.S2U)
         .select("c_custkey", "lon", "lat")
     },
     "q61_s2u_cells" -> gq { (s, dir) =>
@@ -379,13 +363,9 @@ object SparkEntry {
       // covering; the broadcast IN-join prefilters to the tight set and
       // the exact ray-cast refines — result is pure PIP, so the same
       // DuckDB oracle shape as q57 checks it
-      import s.implicits._
-      val rings = graft.core.GeoMath.parseWktPolygon(lShapeWkt)
-      val cells = graft.core.H3U.polyfillPoly(rings, 5).toSeq.toDF("__h3")
-      val pts = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pts.withColumn("__h3", gf.h3u_cell(col("lon"), col("lat"), 5))
-        .join(broadcast(cells), "__h3").drop("__h3")
-        .where(gf.st_contains_wkt(lit(lShapeWkt), col("lon"), col("lat")))
+      SpatialOps.pipQuery(
+        SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
+        "lon", "lat", lShapeWkt, 5, CellIndex.H3U)
         .select("c_custkey", "lon", "lat")
     },
     "q66_s2u_poly_pip" -> gq { (s, dir) =>
@@ -393,13 +373,9 @@ object SparkEntry {
       // minus cells whose conservative rect bound misses the polygon —
       // the s2u twin of q59's polyfillPoly path): broadcast prefilter on
       // s2u_cell, exact ray-cast refine — pure PIP, same oracle as q59
-      import s.implicits._
-      val rings = graft.core.GeoMath.parseWktPolygon(lShapeWkt)
-      val cells = graft.core.S2U.coverPolygon(rings, 9).toSeq.toDF("__s2")
-      val pts = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pts.withColumn("__s2", gf.s2u_cell(col("lon"), col("lat"), 9))
-        .join(broadcast(cells), "__s2").drop("__s2")
-        .where(gf.st_contains_wkt(lit(lShapeWkt), col("lon"), col("lat")))
+      SpatialOps.pipQuery(
+        SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey"),
+        "lon", "lat", lShapeWkt, 9, CellIndex.S2U)
         .select("c_custkey", "lon", "lat")
     },
     "q55_h3u_cells" -> gq { (s, dir) =>

@@ -156,4 +156,13 @@ object GeoMath {
     }
     rings.toArray
   }
+
+  /** The bounding box of a polygon's outer ring (rings as from
+    * [[parseWktPolygon]]). */
+  def polygonBBox(rings: Array[Array[Double]]): BBox = {
+    val outer = rings.head
+    val lons = outer.indices.collect { case i if i % 2 == 0 => outer(i) }
+    val lats = outer.indices.collect { case i if i % 2 == 1 => outer(i) }
+    BBox(lons.min, lats.min, lons.max, lats.max)
+  }
 }

@@ -193,10 +193,8 @@ object Geohash {
     * anti-meridian (coordinates are plain lon/lat plane values). */
   def polygonCovering(rings: Array[Array[Double]], bits: Int,
                       maxCells: Int = 1 << 20): Array[Long] = {
-    val outer = rings.head
-    val lons = outer.indices.collect { case i if i % 2 == 0 => outer(i) }
-    val lats = outer.indices.collect { case i if i % 2 == 1 => outer(i) }
-    covering(lons.min, lats.min, lons.max, lats.max, bits, maxCells).filter { c =>
+    val pb = GeoMath.polygonBBox(rings)
+    covering(pb.minLon, pb.minLat, pb.maxLon, pb.maxLat, bits, maxCells).filter { c =>
       val b = boundingBox(c, bits)
       GeoMath.rectIntersectsPolygon(b.minLon, b.minLat, b.maxLon, b.maxLat, rings)
     }

@@ -403,10 +403,8 @@ object S2U {
     * polygon are dropped. Non-wrapped polygons. */
   def coverPolygon(rings: Array[Array[Double]], level: Int,
                    maxCells: Int = 1 << 20): Array[Long] = {
-    val outer = rings.head
-    val lons = outer.indices.collect { case i if i % 2 == 0 => outer(i) }
-    val lats = outer.indices.collect { case i if i % 2 == 1 => outer(i) }
-    coverBox(lons.min, lats.min, lons.max, lats.max, level, maxCells).filter { c =>
+    val b = GeoMath.polygonBBox(rings)
+    coverBox(b.minLon, b.minLat, b.maxLon, b.maxLat, level, maxCells).filter { c =>
       val (lo, la, hi, lb) = cellRectBound(c)
       if (lo <= hi) GeoMath.rectIntersectsPolygon(lo, la, hi, lb, rings)
       else // wrapped cell rect: split at the antimeridian, keep if either side hits

@@ -10,6 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sql.CellIndex
+
 /** Iceberg-STYLE table layout (no Iceberg jar exists in this sandbox —
   * SURVEY.md §8 M3): partitioned Parquet + a snapshot manifest chain with
   * per-partition row counts and content checksums. Gives the pieces the
@@ -53,8 +55,8 @@ object IcebergLite {
   val PropPrefixBits = "tile.prefix.bits"
   val PropLonCol = "tile.lon.col"
   val PropLatCol = "tile.lat.col"
-  /** "gh" (Morton geohash, default) or "h3u" (Uber-H3-compatible cells);
-    * selects which covering DeriveCoveringPrune derives. */
+  /** The [[CellIndex.tag]] of the table's cell index (absent = geohash);
+    * read only through [[CellIndex.fromManifest]]. */
   val PropIndexType = "tile.index"
   /** Streaming-ingest hygiene: compact (+ expire) whenever the manifest
     * references this many distinct snapshots. Absent/0 = manual only. */
@@ -179,60 +181,43 @@ object IcebergLite {
     m
   }
 
-  /** Tile-aware write: assigns `tile` (at tileBits) and the partition prefix
-    * column (at prefixBits) from lon/lat, records the tiling as table
-    * properties so [[graft.sql.DeriveCoveringPrune]] can rewrite box/PIP
-    * filters into partition predicates. Rows are tile-sorted WITHIN each
-    * task before writing (no repartition — a hot prefix must not collapse
-    * into one task): locally clustered tile/lon/lat values give every
-    * parquet row group tight min/max stats, so refine predicates skip row
-    * groups inside the surviving partitions at 100 TB — a second pruning
-    * level under the partition IN-list. XOR checksums are order-
-    * insensitive, so manifests are unaffected. */
+  /** Tile-aware write: assigns `tile` (the `index` cell at tileLevel) and
+    * the partition prefix column (its ancestor at prefixLevel) from
+    * lon/lat, and records the tiling as table properties, which
+    * [[graft.sql.DeriveCoveringPrune]] and
+    * [[graft.engine.SpatialOps.knnIndexed]] read. Rows are tile-sorted
+    * WITHIN each task before writing (no repartition — a hot prefix must
+    * not collapse into one task): locally clustered tile/lon/lat values
+    * give every parquet row group tight min/max stats, so refine
+    * predicates skip row groups inside the surviving partitions — a
+    * second pruning level under the partition IN-list. XOR checksums are
+    * order-insensitive, so manifests are unaffected. */
   def writeTiled(df: DataFrame, table: String, lonCol: String, latCol: String,
-                 tileBits: Int, prefixBits: Int,
-                 prefixCol: String = "tile_p"): Manifest = {
+                 tileLevel: Int, prefixLevel: Int,
+                 prefixCol: String = "tile_p",
+                 index: CellIndex = CellIndex.Geohash): Manifest = {
     val tiled = df
-      .withColumn("tile", graft.sql.functions.gh_encode(col(lonCol), col(latCol), tileBits))
-      .withColumn(prefixCol, graft.sql.functions.gh_parent(col("tile"), tileBits, prefixBits))
+      .withColumn("tile", index.cell(col(lonCol), col(latCol), tileLevel))
+      .withColumn(prefixCol, index.parent(col("tile"), tileLevel, prefixLevel))
       .sortWithinPartitions(prefixCol, "tile")
-    write(tiled, table, prefixCol, properties = Map(
-      PropPrefixBits -> prefixBits.toString, PropLonCol -> lonCol, PropLatCol -> latCol,
-      PropIndexType -> "gh"))
+    write(tiled, table, prefixCol, properties = tilingProperties(index, prefixLevel, lonCol, latCol))
   }
 
-  /** [[writeTiled]] on the Uber-H3-compatible index: `tile` =
-    * h3u_cell(lon, lat, tileRes), partition prefix = its ancestor at
-    * prefixRes. DeriveCoveringPrune reads the recorded index type and
-    * derives an H3 polyfill IN-list for bare box / PIP filters, exactly as
-    * it derives a Morton covering for "gh" tables. */
+  /** [[writeTiled]] on the Uber-H3-compatible index. */
   def writeTiledH3(df: DataFrame, table: String, lonCol: String, latCol: String,
-                   tileRes: Int, prefixRes: Int,
-                   prefixCol: String = "tile_p"): Manifest = {
-    val tiled = df
-      .withColumn("tile", graft.sql.functions.h3u_cell(col(lonCol), col(latCol), tileRes))
-      .withColumn(prefixCol, graft.sql.functions.h3u_parent(col("tile"), prefixRes))
-      .sortWithinPartitions(prefixCol, "tile")
-    write(tiled, table, prefixCol, properties = Map(
-      PropPrefixBits -> prefixRes.toString, PropLonCol -> lonCol, PropLatCol -> latCol,
-      PropIndexType -> "h3u"))
-  }
+                   tileRes: Int, prefixRes: Int, prefixCol: String = "tile_p"): Manifest =
+    writeTiled(df, table, lonCol, latCol, tileRes, prefixRes, prefixCol, CellIndex.H3U)
 
-  /** [[writeTiled]] on the published-layout S2 index: `tile` =
-    * s2u_cell(lon, lat, tileLevel), partition prefix = its ancestor at
-    * prefixLevel. DeriveCoveringPrune's "s2u" arm derives a coverBox
-    * IN-list for bare box filters over the table. */
+  /** [[writeTiled]] on the published-layout S2 index. */
   def writeTiledS2(df: DataFrame, table: String, lonCol: String, latCol: String,
-                   tileLevel: Int, prefixLevel: Int,
-                   prefixCol: String = "tile_p"): Manifest = {
-    val tiled = df
-      .withColumn("tile", graft.sql.functions.s2u_cell(col(lonCol), col(latCol), tileLevel))
-      .withColumn(prefixCol, graft.sql.functions.s2u_parent(col("tile"), prefixLevel))
-      .sortWithinPartitions(prefixCol, "tile")
-    write(tiled, table, prefixCol, properties = Map(
-      PropPrefixBits -> prefixLevel.toString, PropLonCol -> lonCol, PropLatCol -> latCol,
-      PropIndexType -> "s2u"))
-  }
+                   tileLevel: Int, prefixLevel: Int, prefixCol: String = "tile_p"): Manifest =
+    writeTiled(df, table, lonCol, latCol, tileLevel, prefixLevel, prefixCol, CellIndex.S2U)
+
+  /** The table properties that record a tiling. */
+  def tilingProperties(index: CellIndex, prefixLevel: Int,
+                       lonCol: String, latCol: String): Map[String, String] =
+    Map(PropPrefixBits -> prefixLevel.toString, PropLonCol -> lonCol, PropLatCol -> latCol,
+      PropIndexType -> index.tag)
 
   /** Reference `GeoHash.update` (SURVEY.md §3.2 #16): REPLACE the contents
     * of every partition present in `df` (other partitions untouched), as a

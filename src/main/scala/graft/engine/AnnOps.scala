@@ -98,10 +98,11 @@ object AnnOps {
     rankTopK(perQuery, k)
   }
 
-  /** Collect the coarse quantizer: the first nCentroids vectors by id,
-    * widened float→double exactly as the in-plan cast does. Bounded — the
-    * quantizer always fits in driver memory (it is broadcast as literals
-    * into every probe/assignment expression). */
+  /** Collect the coarse quantizer: the vectors with id below nCentroids,
+    * widened float→double exactly as the in-plan cast does. A corpus with
+    * fewer such vectors gets that many centroids (one inverted list each).
+    * Bounded — the quantizer always fits in driver memory (it is broadcast
+    * as literals into every probe/assignment expression). */
   private def collectCentroids(emb: DataFrame, idCol: String, embCol: String,
                                nCentroids: Int): Array[(Long, Array[Double])] = {
     val cents = emb.where(col(idCol) < nCentroids)
@@ -109,7 +110,7 @@ object AnnOps {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    require(cents.length == nCentroids, s"expected $nCentroids centroid rows")
+    require(cents.nonEmpty, s"no vector with $idCol below $nCentroids to serve as a centroid")
     cents
   }
 
@@ -186,7 +187,7 @@ object AnnOps {
       .withColumn("cent_id", nearestCentId(embCol, centroids))
       .select(col(idCol), col(embCol), col("cent_id"))
     graft.data.IcebergLite.write(assigned, table, "cent_id",
-      properties = Map("ivf.n_centroids" -> nCentroids.toString,
+      properties = Map("ivf.n_centroids" -> centroids.length.toString,
                        "ivf.dim" -> dim.toString,
                        "ivf.id_col" -> idCol, "ivf.emb_col" -> embCol,
                        // centroid vectors in the manifest: probe selection

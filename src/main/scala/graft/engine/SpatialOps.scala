@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.OracleSql
-import graft.core.{Geohash, BBox}
-import graft.sql.{functions => gf}
+import graft.core.{BBox, GeoMath, Geohash}
+import graft.data.IcebergLite
+import graft.sql.{CellIndex, functions => gf}
 
 /** Distributed spatial operators — the engine generalization of the
   * reference's single primitive (`GeoHash.box`: covering → KV multi-get,
@@ -35,18 +36,16 @@ object SpatialOps {
                tileCol: String = "tile"): DataFrame =
     df.withColumn(tileCol, gf.gh_encode(col(lonCol), col(latCol), bits))
 
-  /** Box query = covering(box) ⋈ tiles, then exact refine — the reference's
+  /** Box query = covering(box) ⋈ cells, then exact refine — the reference's
     * E2 with an added exact filter (reference is cell-coarse; pass
-    * refine=false for row-parity with it). Covering cells are broadcast.
-    * Handles anti-meridian boxes (minLon > maxLon). */
+    * refine=false for row-parity with it). The covering is `index`'s
+    * conservative covering at `level` (geohash bits by default), broadcast
+    * against the points' cells, so a table bucketed by any index needs no
+    * other key column. Handles anti-meridian boxes (minLon > maxLon). */
   def boxQuery(points: DataFrame, lonCol: String, latCol: String,
-               box: BBox, bits: Int, refine: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val cells = Geohash.covering(box.minLon, box.minLat, box.maxLon, box.maxLat, bits)
-    val cellsDf = cells.toSeq.toDF("__cell")
-    val tiled = withTile(points, lonCol, latCol, bits, "__cell")
-    val joined = tiled.join(broadcast(cellsDf), "__cell").drop("__cell")
+               box: BBox, level: Int, refine: Boolean = true,
+               index: CellIndex = CellIndex.Geohash): DataFrame = {
+    val joined = cellJoin(points, lonCol, latCol, index.coverBox(box, level), level, index)
     if (!refine) joined
     else {
       val lonPred =
@@ -55,6 +54,35 @@ object SpatialOps {
       joined.where(lonPred && col(latCol) >= box.minLat && col(latCol) <= box.maxLat)
     }
   }
+
+  /** Point-in-polygon query = polygon covering ⋈ cells on `index` at
+    * `level`, then the exact ray-cast refine (`st_contains_wkt`). The
+    * covering is the polygon's own ([[CellIndex.coverPolygon]]), tighter
+    * than its bbox's for L-shaped or sparse polygons. */
+  def pipQuery(points: DataFrame, lonCol: String, latCol: String, wkt: String,
+               level: Int, index: CellIndex = CellIndex.Geohash): DataFrame =
+    cellJoin(points, lonCol, latCol,
+        index.coverPolygon(GeoMath.parseWktPolygon(wkt), level), level, index)
+      .where(gf.st_contains_wkt(lit(wkt), col(lonCol), col(latCol)))
+
+  /** The points whose `index` cell at `level` is in `cells` (broadcast). */
+  private def cellJoin(points: DataFrame, lonCol: String, latCol: String,
+                       cells: Array[Long], level: Int, index: CellIndex): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    points.withColumn("__cell", index.cell(col(lonCol), col(latCol), level))
+      .join(broadcast(cells.toSeq.toDF("__cell")), "__cell").drop("__cell")
+  }
+
+  /** [[boxQuery]] on the Uber-H3 index at resolution `res`. */
+  def boxQueryH3(points: DataFrame, lonCol: String, latCol: String,
+                 box: BBox, res: Int, refine: Boolean = true): DataFrame =
+    boxQuery(points, lonCol, latCol, box, res, refine, CellIndex.H3U)
+
+  /** [[boxQuery]] on the published-layout S2 index at `level`. */
+  def boxQueryS2(points: DataFrame, lonCol: String, latCol: String,
+                 box: BBox, level: Int, refine: Boolean = true): DataFrame =
+    boxQuery(points, lonCol, latCol, box, level, refine, CellIndex.S2U)
 
   /** Many-box query in ONE scan: the covering cells of every box (tagged
     * with box_id) form one broadcast side; candidates fall out of a single
@@ -79,57 +107,6 @@ object SpatialOps {
       .drop("__cell", "__minLon", "__minLat", "__maxLon", "__maxLat")
   }
 
-  /** Box query on the Uber-H3 index: conservative H3 covering (broadcast) ⋈
-    * h3u_cell(points), then exact refine — the same covering-join contract
-    * as [[boxQuery]] but keyed by hexagonal cells, so tables tiled/bucketed
-    * by H3 need no geohash column. Anti-meridian boxes (minLon > maxLon)
-    * split into two polyfills, like Geohash.covering's wrap handling. */
-  def boxQueryH3(points: DataFrame, lonCol: String, latCol: String,
-                 box: BBox, res: Int, refine: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val cells =
-      if (box.minLon <= box.maxLon)
-        graft.core.H3U.polyfillBox(box.minLon, box.minLat, box.maxLon, box.maxLat, res)
-      else
-        (graft.core.H3U.polyfillBox(box.minLon, box.minLat, 180.0, box.maxLat, res) ++
-         graft.core.H3U.polyfillBox(-180.0, box.minLat, box.maxLon, box.maxLat, res)).distinct
-    val cellsDf = cells.toSeq.toDF("__h3")
-    val keyed = points.withColumn("__h3", gf.h3u_cell(col(lonCol), col(latCol), res))
-    val joined = keyed.join(broadcast(cellsDf), "__h3").drop("__h3")
-    if (!refine) joined
-    else {
-      val lonPred =
-        if (box.minLon <= box.maxLon) col(lonCol) >= box.minLon && col(lonCol) <= box.maxLon
-        else col(lonCol) >= box.minLon || col(lonCol) <= box.maxLon
-      joined.where(lonPred && col(latCol) >= box.minLat && col(latCol) <= box.maxLat)
-    }
-  }
-
-  /** [[boxQueryH3]] on the published-layout S2 index ([[graft.core.S2U]]):
-    * coverBox cells broadcast against s2u_cell keys, exact refine. */
-  def boxQueryS2(points: DataFrame, lonCol: String, latCol: String,
-                 box: BBox, level: Int, refine: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val cells =
-      if (box.minLon <= box.maxLon)
-        graft.core.S2U.coverBox(box.minLon, box.minLat, box.maxLon, box.maxLat, level)
-      else
-        (graft.core.S2U.coverBox(box.minLon, box.minLat, 180.0, box.maxLat, level) ++
-         graft.core.S2U.coverBox(-180.0, box.minLat, box.maxLon, box.maxLat, level)).distinct
-    val cellsDf = cells.toSeq.toDF("__s2")
-    val keyed = points.withColumn("__s2", gf.s2u_cell(col(lonCol), col(latCol), level))
-    val joined = keyed.join(broadcast(cellsDf), "__s2").drop("__s2")
-    if (!refine) joined
-    else {
-      val lonPred =
-        if (box.minLon <= box.maxLon) col(lonCol) >= box.minLon && col(lonCol) <= box.maxLon
-        else col(lonCol) >= box.minLon || col(lonCol) <= box.maxLon
-      joined.where(lonPred && col(latCol) >= box.minLat && col(latCol) <= box.maxLat)
-    }
-  }
-
   /** Mixed-precision cell join (SURVEY.md §10.4 range join): every FINE-cell
     * row joins the COARSE-cell row whose prefix contains it. The
     * child-to-ancestor range predicate (coarse ≤ fine < coarse+1 in key
@@ -152,12 +129,9 @@ object SpatialOps {
     * reference's neighbor expansion (#3/#9) as a join predicate. */
   def neighborBlockQuery(points: DataFrame, lonCol: String, latCol: String,
                          qLon: Double, qLat: Double, bits: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val center = Geohash.encode(qLon, qLat, bits)
-    val block = (Geohash.neighbors(center, bits) :+ center).toSeq.toDF("__cell")
-    withTile(points, lonCol, latCol, bits, "__cell")
-      .join(broadcast(block), "__cell").drop("__cell")
+    cellJoin(points, lonCol, latCol, Geohash.neighbors(center, bits) :+ center, bits,
+      CellIndex.Geohash)
   }
 
   /** Exact brute-force kNN per query point (squared equirectangular degree
@@ -177,72 +151,12 @@ object SpatialOps {
       .drop("qlon", "qlat")
   }
 
-  /** Shared ring-expansion kNN core, parameterized by how candidate cells
-    * are scanned/counted. Expansion: grow rings until ≥k candidates exist,
-    * then include every ring intersecting the k-th-distance disc (rings ×
-    * cellMinDim ≥ d guarantees coverage), then exact top-k. */
-  private def knnExpand(spark: org.apache.spark.sql.SparkSession,
-                        lonCol: String, latCol: String,
-                        qLon: Double, qLat: Double, k: Int, bits: Int, tieCol: String,
-                        scanCells: Seq[Long] => DataFrame,
-                        countCells: Seq[Long] => Long,
-                        probeRows: () => Long,
-                        knownRows: Option[Long]): DataFrame = {
-    val center = Geohash.encode(qLon, qLat, bits)
-    val cellMin = math.min(Geohash.cellWidth(bits), Geohash.cellHeight(bits))
-    val cx = Geohash.cellX(center, bits); val cy = Geohash.cellY(center, bits)
-    val nx = 1L << Geohash.lonBitsOf(bits); val ny = 1L << Geohash.latBitsOf(bits)
-
-    def ringCells(r: Long): Seq[Long] = {
-      if (r == 0) return Seq(center)
-      val cells = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var dx = -r
-      while (dx <= r) {
-        var dy = -r
-        while (dy <= r) {
-          if (math.abs(dx) == r || math.abs(dy) == r) {
-            val yy = cy + dy
-            if (yy >= 0 && yy < ny) cells += Geohash.fromCellXY((cx + dx + nx * 4) % nx, yy, bits)
-          }
-          dy += 1
-        }
-        dx += 1
-      }
-      cells.toSeq
-    }
-
-    knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-      ringCells, cellMin, math.max(nx, ny), scanCells, countCells, probeRows, knownRows)
-  }
-
-  /** H3 gridDisk-shell generator for [[knnExpandCore]]: ring r = the cells
-    * at grid distance exactly r from `center`. FRONTIER BFS keeping only
-    * the last two disks: expanding neighbors of the frontier (not the
-    * whole disk) makes a full-lattice closure O(cells) work and O(cells)
-    * memory, where the old per-level disk list was O(rings x cells) both —
-    * a sphere-wide expansion at res 5+ (sparse antipodal rows) would
-    * otherwise hang the driver. Calls must come with non-decreasing r,
-    * which is knnExpandCore's access pattern. */
-  private def frontierRings(center: Long): Long => Seq[Long] = {
-    var prev = Set.empty[Long]
-    var cur = Set(center)
-    var curR = 0L
-    (r: Long) => {
-      require(r >= curR, s"ring calls must be non-decreasing (got $r after $curR)")
-      while (curR < r) {
-        val frontier = if (prev.isEmpty) cur else cur.diff(prev)
-        val next = cur ++ frontier.flatMap(graft.core.H3U.neighbors(_))
-        prev = cur; cur = next; curR += 1
-      }
-      if (r == 0) Seq(center) else cur.diff(prev).toSeq
-    }
-  }
-
   /** Index-agnostic ring-expansion kNN core: grow rings until ≥k candidates
     * exist, extend to every ring intersecting the k-th-distance disc
     * (ring × cellMinDeg ≥ d guarantees coverage), exact top-k. The ring
-    * generator and the per-ring minimum cell dimension (in the degree
-    * metric) come from the index (Morton grid rings or H3 gridDisk rings).
+    * generator, the per-ring minimum cell dimension (in the degree metric)
+    * and the ring count that covers the grid come from the index
+    * ([[CellIndex.rings]]).
     *
     * `knownRows`: a FREE total-row bound when the index has one (the
     * indexed variants sum the manifest's per-partition counts — zero Spark
@@ -254,15 +168,16 @@ object SpatialOps {
     * contiguous wrapped column/row range; H3 disks are neighbor-closure
     * fixpoints), so "no new cells" can only mean full coverage, and every
     * existing row is already a candidate. */
-  private def knnExpandCore(spark: org.apache.spark.sql.SparkSession,
-                            lonCol: String, latCol: String,
-                            qLon: Double, qLat: Double, k: Int, tieCol: String,
-                            ringCells: Long => Seq[Long], cellMin: Double, maxRings: Long,
-                            scanCells: Seq[Long] => DataFrame,
-                            countCells: Seq[Long] => Long,
-                            probeRows: () => Long,
-                            knownRows: Option[Long]): DataFrame = {
+  private def knnExpand(spark: SparkSession,
+                        lonCol: String, latCol: String,
+                        qLon: Double, qLat: Double, k: Int, tieCol: String,
+                        rings: CellIndex.Rings,
+                        scanCells: Seq[Long] => DataFrame,
+                        countCells: Seq[Long] => Long,
+                        probeRows: () => Long,
+                        knownRows: Option[Long]): DataFrame = {
     import spark.implicits._
+    val CellIndex.Rings(ringCells, cellMin, maxRings) = rings
     var r = 0L
     // insertion-ordered SET accumulator: per-ring `Seq ++ distinct` was
     // O(acc) per ring, which turns grid-exhaustion cases into O(rings^3)
@@ -344,66 +259,82 @@ object SpatialOps {
     topK.withColumn("rank", row_number().over(w))
   }
 
-  /** kNN via geohash cell-ring expansion (BASELINE.json north_star) over an
-    * in-plan DataFrame: candidates come from a broadcast cell join against
-    * the (cached) tiled points. Exact — see [[knnExpand]]. */
+  /** kNN via cell-ring expansion (BASELINE.json north_star) over an
+    * in-plan DataFrame: candidates come from a broadcast join of the ring
+    * cells against the points' cells on `index` at `level` (geohash bits
+    * by default). Exact — see [[knnExpand]]. */
   def knnRing(points: DataFrame, lonCol: String, latCol: String,
-              qid: Int, qLon: Double, qLat: Double, k: Int, bits: Int,
-              tieCol: String): DataFrame = {
+              qid: Int, qLon: Double, qLat: Double, k: Int, level: Int,
+              tieCol: String, index: CellIndex = CellIndex.Geohash): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     // NO cache: the doubling expansion needs only O(log rings) count jobs,
     // and each re-scan recomputes a codegen'd encode — far cheaper than
     // materializing the whole input (which a 100 TB table could not afford)
-    val tiled = withTile(points, lonCol, latCol, bits, "__cell")
+    val keyed = points.withColumn("__cell", index.cell(col(lonCol), col(latCol), level))
     def scan(cells: Seq[Long]): DataFrame =
-      tiled.join(broadcast(cells.toDF("__cell")), "__cell")
-    knnExpand(spark, lonCol, latCol, qLon, qLat, k, bits, tieCol,
+      keyed.join(broadcast(cells.toDF("__cell")), "__cell")
+    knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index.rings(qLon, qLat, level),
         scan, cells => scan(cells).count(), () => points.limit(k).count(), None)
       .withColumn("qid", lit(qid))
       .drop("__cell")
   }
 
-  /** [[knnRing]] on the Uber-H3 index: expansion rings are gridDisk shells
-    * around the query cell. The disc-coverage bound uses the index's
-    * minimum center-to-center pitch (0.6 × the face-center pitch — the
-    * gnomonic projection compresses spacing by at most 1/(1+tan²γ) ≈ 0.63
-    * toward face edges) converted to degrees, which only ever OVER-expands
-    * (degree-space distances are ≥ angular distances). Exact. */
-  def knnRingH3(points: DataFrame, lonCol: String, latCol: String,
-                qid: Int, qLon: Double, qLat: Double, k: Int, res: Int,
-                tieCol: String): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val center = graft.core.H3U.latLngToCell(qLat, qLon, res)
-    val h3Ring = frontierRings(center)
-    val cellMinDeg = math.toDegrees(graft.core.H3U.maxPitchRad(res)) * 0.6
-    val maxRings = (math.Pi / (graft.core.H3U.maxPitchRad(res) * 0.6)).toLong + 2
-    // no cache — see knnRing: O(log rings) count jobs re-encode in codegen
-    val keyed = points.withColumn("__cell", gf.h3u_cell(col(lonCol), col(latCol), res))
-    def scan(cells: Seq[Long]): DataFrame =
-      keyed.join(broadcast(cells.toDF("__cell")), "__cell")
-    knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-        h3Ring, cellMinDeg, maxRings, scan, cells => scan(cells).count(),
-        () => points.limit(k).count(), None)
-      .withColumn("qid", lit(qid))
-      .drop("__cell")
+  /** kNN against a PRE-TILED Iceberg-lite table ([[graft.data.IcebergLite
+    * .writeTiled]] on any index): each expansion step reads ONLY the
+    * partitions holding candidate cells (partition pruning on the prefix
+    * column), and the expansion COUNTS come from the manifest's
+    * per-partition row counts — zero Spark jobs until the final scan. At
+    * 10¹² rows each step touches a handful of partitions instead of the
+    * table. The index, prefix column, prefix level and lon/lat columns are
+    * the ones the current snapshot's manifest records. Exact — see
+    * [[knnExpand]]. */
+  def knnIndexed(spark: SparkSession, table: String,
+                 qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
+    val t = new PinnedTable(spark, table)
+    def recorded(key: String): String = t.manifest.properties.getOrElse(key,
+      throw new IllegalArgumentException(s"$table records no $key: not a tiled table"))
+    t.knn(t.index.getOrElse(throw new IllegalArgumentException(s"$table records an unknown index")),
+      recorded(IcebergLite.PropPrefixBits).toInt,
+      recorded(IcebergLite.PropLonCol), recorded(IcebergLite.PropLatCol), qLon, qLat, k, tieCol)
   }
 
-  /** kNN against a PRE-TILED Iceberg-lite table: each expansion step reads
-    * ONLY the partitions holding candidate cells (partition pruning on the
-    * tile-prefix partition column at `prefixBits`), and the expansion
-    * COUNTS come from the manifest's per-partition row counts — zero Spark
-    * jobs until the final scan. At 10¹² rows each step touches a handful
-    * of partitions instead of the table. The table needs `lon`, `lat` and
-    * the prefix partition column. Exact — see [[knnExpand]]. */
-  def knnIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-                 prefixCol: String, prefixBits: Int,
+  /** [[knnIndexed]] with the caller naming the layout — geohash here, H3
+    * and S2 below; see [[knnIndexedAs]]. */
+  def knnIndexed(spark: SparkSession, table: String, prefixCol: String, prefixBits: Int,
                  lonCol: String, latCol: String,
-                 qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val t = new PinnedTable(spark, table, prefixCol)
-    knnExpand(spark, lonCol, latCol, qLon, qLat, k, prefixBits, tieCol,
-      t.scan, t.count, () => t.total, Some(t.total))
+                 qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
+    knnIndexedAs(CellIndex.Geohash, spark, table, prefixCol, prefixBits, lonCol, latCol,
+      qLon, qLat, k, tieCol)
+
+  def knnIndexedH3(spark: SparkSession, table: String, prefixCol: String, prefixRes: Int,
+                   lonCol: String, latCol: String,
+                   qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
+    knnIndexedAs(CellIndex.H3U, spark, table, prefixCol, prefixRes, lonCol, latCol,
+      qLon, qLat, k, tieCol)
+
+  def knnIndexedS2(spark: SparkSession, table: String, prefixCol: String, prefixLevel: Int,
+                   lonCol: String, latCol: String,
+                   qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
+    knnIndexedAs(CellIndex.S2U, spark, table, prefixCol, prefixLevel, lonCol, latCol,
+      qLon, qLat, k, tieCol)
+
+  /** The named-layout kNNs: the layout a caller names must be the one the
+    * manifest records — a mismatched index or prefix would match no
+    * partition and answer with nothing instead of failing. A manifest that
+    * records no prefix level (a table written by plain
+    * [[graft.data.IcebergLite.write]]) takes the caller's. */
+  private def knnIndexedAs(index: CellIndex, spark: SparkSession, table: String,
+                           prefixCol: String, level: Int, lonCol: String, latCol: String,
+                           qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
+    val t = new PinnedTable(spark, table)
+    val m = t.manifest
+    require(t.index.contains(index) && m.partitionCol == prefixCol &&
+        m.properties.get(IcebergLite.PropPrefixBits).forall(_ == level.toString),
+      s"$table is tiled as ${t.index.fold("an unknown index")(_.tag)} on ${m.partitionCol} at " +
+      s"${m.properties.getOrElse(IcebergLite.PropPrefixBits, "an unrecorded level")}, " +
+      s"not ${index.tag} on $prefixCol at $level")
+    t.knn(index, level, lonCol, latCol, qLon, qLat, k, tieCol)
   }
 
   /** One committed snapshot of an indexed table as the manifest-count kNNs
@@ -411,72 +342,21 @@ object SpatialOps {
     * prefix-pruned scans of its resolved DataFrame. Counts and every scan
     * come from the same snapshot, so a commit landing mid-query cannot mix
     * two snapshots into one exact answer. */
-  private final class PinnedTable(spark: SparkSession, table: String, prefixCol: String) {
-    private val snap = graft.data.IcebergLite.current(spark, table)
+  private final class PinnedTable(spark: SparkSession, table: String) {
+    private val snap = IcebergLite.current(spark, table)
+    val manifest: IcebergLite.Manifest = snap.manifest
+    val index: Option[CellIndex] = CellIndex.fromManifest(manifest)
     // sum across snapshots: appended partitions have one entry per snapshot
-    private val rows = graft.data.IcebergLite.rowsByPartition(snap.manifest)
-    val total: Long = rows.values.sum
-    def count(cells: Seq[Long]): Long = cells.map(c => rows.getOrElse(c.toString, 0L)).sum
-    def scan(cells: Seq[Long]): DataFrame = snap.df.where(col(prefixCol).isin(cells: _*))
-  }
+    private val rows = IcebergLite.rowsByPartition(manifest)
+    private val total: Long = rows.values.sum
+    private def count(cells: Seq[Long]): Long = cells.map(c => rows.getOrElse(c.toString, 0L)).sum
+    private def scan(cells: Seq[Long]): DataFrame =
+      snap.df.where(col(manifest.partitionCol).isin(cells: _*))
 
-  /** [[knnIndexed]] against an H3-TILED table ([[graft.data.IcebergLite
-    * .writeTiledH3]]): gridDisk-shell expansion over the H3 partition
-    * prefix, counts from the manifest — zero Spark jobs until the final
-    * scan, partition pruning on the listed files. Exact. */
-  def knnIndexedH3(spark: org.apache.spark.sql.SparkSession, table: String,
-                   prefixCol: String, prefixRes: Int,
-                   lonCol: String, latCol: String,
-                   qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val t = new PinnedTable(spark, table, prefixCol)
-    val center = graft.core.H3U.latLngToCell(qLat, qLon, prefixRes)
-    val h3Ring = frontierRings(center)
-    val cellMinDeg = math.toDegrees(graft.core.H3U.maxPitchRad(prefixRes)) * 0.6
-    val maxRings = (math.Pi / (graft.core.H3U.maxPitchRad(prefixRes) * 0.6)).toLong + 2
-    knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-      h3Ring, cellMinDeg, maxRings, t.scan, t.count, () => t.total, Some(t.total))
-  }
-
-  /** [[knnIndexedH3]] on an S2-TILED table ([[graft.data.IcebergLite
-    * .writeTiledS2]]): "ring" r is the [[graft.core.S2U.coverBox]] covering
-    * of the degree-metric box of half-width r·cellMin around the query —
-    * face-edge crossings are handled by the covering property itself, not
-    * by lattice walking — with counts from the manifest, so there are zero
-    * Spark jobs until the final pruned scan. Exact: [[graft.core.S2U
-    * .minCellWidthDeg]] under-estimates every cell step, so the
-    * disc-coverage extension only ever over-expands. */
-  def knnIndexedS2(spark: org.apache.spark.sql.SparkSession, table: String,
-                   prefixCol: String, prefixLevel: Int,
-                   lonCol: String, latCol: String,
-                   qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val t = new PinnedTable(spark, table, prefixCol)
-    val cellMinDeg = graft.core.S2U.minCellWidthDeg(prefixLevel)
-    // "ring" r = the SOUND covering of the degree-metric box of half-width
-    // r·cellMin around the query (coverBox is property-tested to contain
-    // every in-box point's cell, face edges included) — so rings 0..R cover
-    // the degree-metric disc of radius R·cellMin, which is exactly the
-    // contract knnExpandCore's disc-coverage extension needs. Accumulation
-    // dedups, so returning the whole covering per ring is fine.
-    def s2Ring(r: Long): Seq[Long] = {
-      val h = math.max(cellMinDeg * r, cellMinDeg * 0.25)
-      val latLo = math.max(-90.0, qLat - h); val latHi = math.min(90.0, qLat + h)
-      val lo = qLon - h; val hi = qLon + h
-      val cells =
-        if (lo >= -180.0 && hi <= 180.0)
-          graft.core.S2U.coverBox(lo, latLo, hi, latHi, prefixLevel)
-        else if (hi - lo >= 360.0)
-          graft.core.S2U.coverBox(-180.0, latLo, 180.0, latHi, prefixLevel)
-        else if (lo < -180.0)
-          (graft.core.S2U.coverBox(-180.0, latLo, hi, latHi, prefixLevel) ++
-           graft.core.S2U.coverBox(lo + 360.0, latLo, 180.0, latHi, prefixLevel)).distinct
-        else
-          (graft.core.S2U.coverBox(lo, latLo, 180.0, latHi, prefixLevel) ++
-           graft.core.S2U.coverBox(-180.0, latLo, hi - 360.0, latHi, prefixLevel)).distinct
-      cells.toSeq
-    }
-    val maxRings = (360.0 / cellMinDeg).toLong + 2
-    knnExpandCore(spark, lonCol, latCol, qLon, qLat, k, tieCol,
-      s2Ring, cellMinDeg, maxRings, t.scan, t.count, () => t.total, Some(t.total))
+    def knn(index: CellIndex, level: Int, lonCol: String, latCol: String,
+            qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
+      knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index.rings(qLon, qLat, level),
+        scan, count, () => total, Some(total))
   }
 
   /** Dense raster of per-cell counts over a box — the engine equivalent of

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sql.CellIndex
+
 /** Structured Streaming operators. The reference is a batch library
   * (SURVEY.md §3.3: streaming absent); this is the engine extension that
   * makes the tiling pipeline incremental: the same tumbling-window
@@ -114,84 +116,31 @@ object StreamOps {
   }
 
   /** Incremental tiling ingest (round-2 roadmap #10): a file stream is
-    * tile-assigned batch-by-batch and APPENDED to an IcebergLite table via
-    * foreachBatch → [[graft.data.IcebergLite.extend]] (file-level appends:
-    * each micro-batch adds a snapshot, no partition rewrite). Because the
-    * per-partition checksums are XOR-accumulative, the stream-fed table's
-    * cumulative manifest state equals a one-shot batch write's — asserted in
+    * tile-assigned batch-by-batch on `index` (geohash by default; `tile`
+    * at `level`, partition prefix `tile_p` its ancestor at prefixLevel)
+    * and APPENDED to an IcebergLite table via foreachBatch →
+    * [[graft.data.IcebergLite.extend]] (file-level appends: each
+    * micro-batch adds a snapshot, no partition rewrite). The first batch
+    * CREATES the table with the tiling properties, so streamed tables are
+    * prune-aware like batch-written ones. Because the per-partition
+    * checksums are XOR-accumulative, the stream-fed table's cumulative
+    * manifest state equals a one-shot batch write's — asserted in
     * EngineOpsSpec. Returns the final per-tile counts read through the
     * manifest. */
   def streamedTileIngest(spark: SparkSession, parquetPath: String, table: String,
-                         keyCol: String, bits: Int, prefixBits: Int,
+                         keyCol: String, level: Int, prefixLevel: Int,
                          maxFilesPerTrigger: Int = 0,
-                         autoCompactEvery: Int = 0): DataFrame =
-    streamedIngest(spark, parquetPath, table, keyCol, maxFilesPerTrigger,
-      tile = pos => SpatialOps.withTile(pos, "lon", "lat", bits)
-        .withColumn("tile_p", graft.sql.functions.gh_parent(col("tile"), bits, prefixBits)),
-      properties = Map(
-        graft.data.IcebergLite.PropPrefixBits -> prefixBits.toString,
-        graft.data.IcebergLite.PropLonCol -> "lon",
-        graft.data.IcebergLite.PropLatCol -> "lat",
-        graft.data.IcebergLite.PropIndexType -> "gh"),
-      autoCompactEvery = autoCompactEvery)
-
-  /** [[streamedTileIngest]] on the Uber-H3-compatible index: tiles are
-    * h3u_cell at tileRes, partitions their ancestor at prefixRes; the first
-    * commit records the h3u tiling properties so DeriveCoveringPrune
-    * rewrites bare box/PIP filters over the STREAMED table too. */
-  def streamedTileIngestH3(spark: SparkSession, parquetPath: String, table: String,
-                           keyCol: String, tileRes: Int, prefixRes: Int,
-                           maxFilesPerTrigger: Int = 0,
-                           autoCompactEvery: Int = 0): DataFrame =
-    streamedIngest(spark, parquetPath, table, keyCol, maxFilesPerTrigger,
-      tile = pos => pos
-        .withColumn("tile", graft.sql.functions.h3u_cell(col("lon"), col("lat"), tileRes))
-        .withColumn("tile_p", graft.sql.functions.h3u_parent(col("tile"), prefixRes)),
-      properties = Map(
-        graft.data.IcebergLite.PropPrefixBits -> prefixRes.toString,
-        graft.data.IcebergLite.PropLonCol -> "lon",
-        graft.data.IcebergLite.PropLatCol -> "lat",
-        graft.data.IcebergLite.PropIndexType -> "h3u"),
-      autoCompactEvery = autoCompactEvery)
-
-  /** [[streamedTileIngest]] on the published-layout S2 index: tiles are
-    * s2u_cell at tileLevel, partitions their ancestor at prefixLevel; the
-    * recorded `tile.index=s2u` makes the streamed table prune-aware via
-    * DeriveCoveringPrune's coverBox arm. */
-  def streamedTileIngestS2(spark: SparkSession, parquetPath: String, table: String,
-                           keyCol: String, tileLevel: Int, prefixLevel: Int,
-                           maxFilesPerTrigger: Int = 0,
-                           autoCompactEvery: Int = 0): DataFrame =
-    streamedIngest(spark, parquetPath, table, keyCol, maxFilesPerTrigger,
-      tile = pos => pos
-        .withColumn("tile", graft.sql.functions.s2u_cell(col("lon"), col("lat"), tileLevel))
-        .withColumn("tile_p", graft.sql.functions.s2u_parent(col("tile"), prefixLevel)),
-      properties = Map(
-        graft.data.IcebergLite.PropPrefixBits -> prefixLevel.toString,
-        graft.data.IcebergLite.PropLonCol -> "lon",
-        graft.data.IcebergLite.PropLatCol -> "lat",
-        graft.data.IcebergLite.PropIndexType -> "s2u"),
-      autoCompactEvery = autoCompactEvery)
-
-  /** Shared micro-batch ingest loop: stream → derive position → tile →
-    * first batch CREATES the table (with the tiling properties — streamed
-    * tables are prune-aware like batch-written ones), later batches are
-    * FILE-LEVEL extends. Returns per-tile counts read through the manifest. */
-  private def streamedIngest(spark: SparkSession, parquetPath: String, table: String,
-                             keyCol: String, maxFilesPerTrigger: Int,
-                             tile: DataFrame => DataFrame,
-                             properties: Map[String, String],
-                             autoCompactEvery: Int = 0): DataFrame = {
+                         autoCompactEvery: Int = 0,
+                         index: CellIndex = CellIndex.Geohash): DataFrame = {
     import graft.data.IcebergLite
     val schema = sourceSchema(spark, parquetPath)
     val f = new java.io.File(parquetPath)
     val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
     var reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
     if (maxFilesPerTrigger > 0) reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val props =
-      if (autoCompactEvery > 0)
-        properties + (IcebergLite.PropAutoCompact -> autoCompactEvery.toString)
-      else properties
+    val props = IcebergLite.tilingProperties(index, prefixLevel, "lon", "lat") ++
+      (if (autoCompactEvery > 0) Map(IcebergLite.PropAutoCompact -> autoCompactEvery.toString)
+       else Map.empty)
     val stream = reader.parquet(dir).select(col("event_id"), col(keyCol))
     val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       if (!batch.isEmpty) {
@@ -201,7 +150,9 @@ object StreamOps {
         // checkpoint is bounded by micro-batch size — the increment, never
         // the table — so this is safe at any corpus scale (guide §5:
         // localCheckpoint as the cheap lineage/materialization cut).
-        val tiled = tile(SpatialOps.withDerivedPosition(batch, keyCol))
+        val tiled = SpatialOps.withDerivedPosition(batch, keyCol)
+          .withColumn("tile", index.cell(col("lon"), col("lat"), level))
+          .withColumn("tile_p", index.parent(col("tile"), level, prefixLevel))
           .localCheckpoint(true)
         val m =
           if (IcebergLite.readManifest(table).isEmpty)

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
 import graft.engine.SpatialOps
-import graft.sql.{GraftSpark, functions => gf}
+import graft.sql.{CellIndex, GraftSpark, functions => gf}
 
 /** The per-session snapshot slot behind [[IcebergLite.read]]: every commit
   * shape is seen by the next read, the covering-prune rule follows the
@@ -39,7 +39,7 @@ class IcebergLiteSpec extends AnyFunSuite {
     df.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
 
   private def knnGh(table: String, qx: Double, qy: Double): Seq[(Int, Long)] =
-    ranked(SpatialOps.knnIndexed(spark, table, "tile_p", 6, "lon", "lat", qx, qy, 10, "c_custkey"))
+    ranked(SpatialOps.knnIndexed(spark, table, qx, qy, 10, "c_custkey"))
 
   private def brute(points: DataFrame, qx: Double, qy: Double): Seq[(Int, Long)] =
     ranked(SpatialOps.knnBrute(points.select("c_custkey", "lon", "lat"), "lon", "lat",
@@ -100,11 +100,11 @@ class IcebergLiteSpec extends AnyFunSuite {
 
   test("two threads reading and querying one table get the serial results") {
     val t = s"${tmp("slot_threads")}/t"
-    IcebergLite.writeTiledH3(pts(1, 1501), t, "lon", "lat", 7, 2)
+    IcebergLite.writeTiled(pts(1, 1501), t, "lon", "lat", 7, 2, index = CellIndex.H3U)
     val queries = Seq((qx, qy), (139.75, 35.5), (10.0, 10.0))
     def run(): Seq[Seq[Any]] = queries.flatMap { case (x, y) =>
       Seq(
-        ranked(SpatialOps.knnIndexedH3(spark, t, "tile_p", 2, "lon", "lat", x, y, 10, "c_custkey")),
+        ranked(SpatialOps.knnIndexed(spark, t, x, y, 10, "c_custkey")),
         keys(IcebergLite.read(spark, t).where(inBox(BBox(x - 5, y - 5, x + 5, y + 5)))))
     }
     // both threads start on a cold slot

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.GraftSpark
+import graft.sql.{CellIndex, GraftSpark}
 
 class EngineOpsSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.session("local[4]", appName = "engine-spec")
@@ -138,7 +138,7 @@ class EngineOpsSpec extends AnyFunSuite {
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
     val am = graft.core.BBox(177.0, -50.0, -177.0, 50.0)
-    val viaH3 = SpatialOps.boxQueryH3(pts, "lon", "lat", am, 5).select("c_custkey")
+    val viaH3 = SpatialOps.boxQuery(pts, "lon", "lat", am, 5, index = CellIndex.H3U).select("c_custkey")
     val viaGh = SpatialOps.boxQuery(pts, "lon", "lat", am, 20).select("c_custkey")
     assert(viaH3.exceptAll(viaGh).isEmpty && viaGh.exceptAll(viaH3).isEmpty)
     assert(viaH3.count() > 0, "fixture should have rows near the anti-meridian")
@@ -147,12 +147,12 @@ class EngineOpsSpec extends AnyFunSuite {
   test("boxQueryS2 == boxQuery, incl. anti-meridian (S2/geohash physical-path parity)") {
     val pts = customers
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
-    val viaS2 = SpatialOps.boxQueryS2(pts, "lon", "lat", box, 10).select("c_custkey")
+    val viaS2 = SpatialOps.boxQuery(pts, "lon", "lat", box, 10, index = CellIndex.S2U).select("c_custkey")
     val viaGh = SpatialOps.boxQuery(pts, "lon", "lat", box, 20).select("c_custkey")
     assert(viaS2.exceptAll(viaGh).isEmpty && viaGh.exceptAll(viaS2).isEmpty)
     assert(viaS2.count() > 0)
     val am = graft.core.BBox(177.0, -50.0, -177.0, 50.0)
-    val amS2 = SpatialOps.boxQueryS2(pts, "lon", "lat", am, 8).select("c_custkey")
+    val amS2 = SpatialOps.boxQuery(pts, "lon", "lat", am, 8, index = CellIndex.S2U).select("c_custkey")
     val amGh = SpatialOps.boxQuery(pts, "lon", "lat", am, 20).select("c_custkey")
     assert(amS2.exceptAll(amGh).isEmpty && amGh.exceptAll(amS2).isEmpty)
     assert(amS2.count() > 0, "fixture should have rows near the anti-meridian")
@@ -167,11 +167,11 @@ class EngineOpsSpec extends AnyFunSuite {
     Thread.sleep(1100)
     events.where($"event_id" >= half).coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    StreamOps.streamedTileIngestS2(spark, s"$dir/in", s"$dir/t",
-      "user_id", 12, 7, maxFilesPerTrigger = 1)
-    IcebergLite.writeTiledS2(
+    StreamOps.streamedTileIngest(spark, s"$dir/in", s"$dir/t",
+      "user_id", 12, 7, maxFilesPerTrigger = 1, index = CellIndex.S2U)
+    IcebergLite.writeTiled(
       SpatialOps.withDerivedPosition(events, "user_id"), s"$dir/batch",
-      "lon", "lat", 12, 7)
+      "lon", "lat", 12, 7, index = CellIndex.S2U)
 
     val sm = IcebergLite.readManifest(s"$dir/t").get
     val bm = IcebergLite.readManifest(s"$dir/batch").get
@@ -194,11 +194,11 @@ class EngineOpsSpec extends AnyFunSuite {
     Thread.sleep(1100)
     events.where($"event_id" >= half).coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    StreamOps.streamedTileIngestH3(spark, s"$dir/in", s"$dir/t",
-      "user_id", 6, 3, maxFilesPerTrigger = 1)
-    IcebergLite.writeTiledH3(
+    StreamOps.streamedTileIngest(spark, s"$dir/in", s"$dir/t",
+      "user_id", 6, 3, maxFilesPerTrigger = 1, index = CellIndex.H3U)
+    IcebergLite.writeTiled(
       SpatialOps.withDerivedPosition(events, "user_id"), s"$dir/batch",
-      "lon", "lat", 6, 3)
+      "lon", "lat", 6, 3, index = CellIndex.H3U)
 
     val sm = IcebergLite.readManifest(s"$dir/t").get
     val bm = IcebergLite.readManifest(s"$dir/batch").get
@@ -430,9 +430,11 @@ class EngineOpsSpec extends AnyFunSuite {
 
   test("explain: box query pushes tile equi-join to broadcast hash join, no shuffle of big side") {
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
-    val plan = SpatialOps.boxQuery(customers, "lon", "lat", box, 20)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+    Seq(CellIndex.Geohash -> 20, CellIndex.H3U -> 7, CellIndex.S2U -> 10).foreach { case (index, level) =>
+      val plan = SpatialOps.boxQuery(customers, "lon", "lat", box, level, index = index)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"), s"$index: $plan")
+      assert(!plan.contains("SortMergeJoin"), s"$index: $plan")
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.{GraftSpark, functions => gf}
+import graft.sql.{CellIndex, GraftSpark, functions => gf}
 
 /** Plan-shape assertions: the properties that decide whether the engine
   * still works at 100 TB — column pruning to the parquet scan, predicate
@@ -225,8 +225,8 @@ class PlanSpec extends AnyFunSuite {
       spark.read.parquet("/root/testdata/sf0.001/customer.parquet").select("c_custkey"), "c_custkey")
     val base = java.nio.file.Files.createTempDirectory("prune_fuzz").toString
     graft.data.IcebergLite.writeTiled(pts, s"$base/gh", "lon", "lat", 30, 6)
-    graft.data.IcebergLite.writeTiledH3(pts, s"$base/h3", "lon", "lat", 6, 2)
-    graft.data.IcebergLite.writeTiledS2(pts, s"$base/s2", "lon", "lat", 10, 5)
+    graft.data.IcebergLite.writeTiled(pts, s"$base/h3", "lon", "lat", 6, 2, index = CellIndex.H3U)
+    graft.data.IcebergLite.writeTiled(pts, s"$base/s2", "lon", "lat", 10, 5, index = CellIndex.S2U)
     val tables = Seq(
       graft.data.IcebergLite.read(spark, s"$base/gh"),
       graft.data.IcebergLite.read(spark, s"$base/h3"),
@@ -256,6 +256,12 @@ class PlanSpec extends AnyFunSuite {
         val q = tbl.where(gf.st_contains_wkt(lit(wkt), $"lon", $"lat")).select("c_custkey")
         assert(q.exceptAll(expectP).isEmpty && expectP.exceptAll(q).isEmpty,
           s"polygon $wkt parity broke")
+      }
+      // the same polygon through the covering-join operator on each index
+      Seq(CellIndex.Geohash -> 12, CellIndex.H3U -> 3, CellIndex.S2U -> 6).foreach { case (index, level) =>
+        val q = SpatialOps.pipQuery(pts, "lon", "lat", wkt, level, index).select("c_custkey")
+        assert(q.exceptAll(expectP).isEmpty && expectP.exceptAll(q).isEmpty,
+          s"pipQuery on $index: polygon $wkt parity broke")
       }
     }
   }
@@ -297,7 +303,7 @@ class PlanSpec extends AnyFunSuite {
       // disc-coverage extension needs rings spanning that radius — fine
       // cells (res 7) would mean millions of ring cells for this k
       SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 12, "c_custkey").collect()
-      SpatialOps.knnRingH3(pts, "lon", "lat", 1, -0.75, 51.25, 10, 3, "c_custkey").collect()
+      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 3, "c_custkey", CellIndex.H3U).collect()
       // QueryExecutionListener delivery is async: wait for the queue to settle
       var last = -1
       var stable = 0
@@ -325,7 +331,7 @@ class PlanSpec extends AnyFunSuite {
       spark.read.parquet(s"$sf/customer.parquet").select("c_custkey").limit(3), "c_custkey")
     // res 3 keeps the worst case (rings close over the whole ~41k-cell
     // lattice before the probe-bounded target is met) driver-cheap
-    val got = SpatialOps.knnRingH3(three, "lon", "lat", 0, -0.75, 51.25, 50, 3, "c_custkey")
+    val got = SpatialOps.knnRing(three, "lon", "lat", 0, -0.75, 51.25, 50, 3, "c_custkey", CellIndex.H3U)
     assert(got.count() == 3)
   }
 
@@ -369,9 +375,9 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("knn_h3").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledH3(pts, s"$dir/t", "lon", "lat", 7, 4)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 7, 4, index = CellIndex.H3U)
     val (qx, qy) = (-0.75, 51.25)
-    val got = SpatialOps.knnIndexedH3(spark, s"$dir/t", "tile_p", 4, "lon", "lat", qx, qy, 10, "c_custkey")
+    val got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
     val brute = SpatialOps.knnBrute(pts, "lon", "lat", Seq((0, qx, qy)), 10, "c_custkey")
       .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
     val ring = got.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
@@ -386,16 +392,16 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("knn_s2").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledS2(pts, s"$dir/t", "lon", "lat", 12, 7)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 12, 7, index = CellIndex.S2U)
     // three query points incl. one near the +x/+y face edge (lon 45)
     Seq((-0.75, 51.25), (139.75, 35.5), (44.9, 10.0)).foreach { case (qx, qy) =>
-      val got = SpatialOps.knnIndexedS2(spark, s"$dir/t", "tile_p", 7, "lon", "lat", qx, qy, 10, "c_custkey")
+      val got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
       val brute = SpatialOps.knnBrute(pts, "lon", "lat", Seq((0, qx, qy)), 10, "c_custkey")
         .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
       val ring = got.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
       assert(ring.toSeq == brute.toSeq, s"mismatch at ($qx, $qy)")
     }
-    val got = SpatialOps.knnIndexedS2(spark, s"$dir/t", "tile_p", 7, "lon", "lat", -0.75, 51.25, 10, "c_custkey")
+    val got = SpatialOps.knnIndexed(spark, s"$dir/t", -0.75, 51.25, 10, "c_custkey")
     val pf = got.queryExecution.executedPlan.toString.linesIterator
       .find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("tile_p#"), pf)
@@ -405,7 +411,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("h3_prune").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledH3(pts, s"$dir/t", "lon", "lat", 7, 3)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 7, 3, index = CellIndex.H3U)
     val tbl = graft.data.IcebergLite.read(spark, s"$dir/t")
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
     val q = tbl.where($"lon" >= box.minLon && $"lon" <= box.maxLon &&
@@ -424,9 +430,9 @@ class PlanSpec extends AnyFunSuite {
     // ancestor-overhang soundness at the subtree level: every stored row's
     // partition is its tile's parent, and rows keep their partitions in the
     // derived covering (checked by the row-parity assert above); also the
-    // explicit boxQueryH3 path agrees
-    val viaJoin = SpatialOps.boxQueryH3(
-      pts, "lon", "lat", box, 7).select("c_custkey")
+    // explicit H3 boxQuery path agrees
+    val viaJoin = SpatialOps.boxQuery(
+      pts, "lon", "lat", box, 7, index = CellIndex.H3U).select("c_custkey")
     assert(q.select("c_custkey").exceptAll(viaJoin).isEmpty &&
            viaJoin.exceptAll(q.select("c_custkey")).isEmpty)
   }
@@ -465,7 +471,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("s2_prune").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledS2(pts, s"$dir/t", "lon", "lat", 12, 7)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 12, 7, index = CellIndex.S2U)
     val tbl = graft.data.IcebergLite.read(spark, s"$dir/t")
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
     val q = tbl.where($"lon" >= box.minLon && $"lon" <= box.maxLon &&
@@ -486,7 +492,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("h3_poly_prune").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledH3(pts, s"$dir/t", "lon", "lat", 7, 3)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 7, 3, index = CellIndex.H3U)
     val tbl = graft.data.IcebergLite.read(spark, s"$dir/t")
     val lWkt = "POLYGON ((-5.0 40.0, 10.0 40.0, 10.0 44.0, -1.0 44.0, -1.0 55.0, -5.0 55.0, -5.0 40.0))"
     val q = tbl.where(gf.st_contains_wkt(lit(lWkt), $"lon", $"lat"))
@@ -526,7 +532,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("s2_poly_prune").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledS2(pts, s"$dir/t", "lon", "lat", 12, 7)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 12, 7, index = CellIndex.S2U)
     val tbl = graft.data.IcebergLite.read(spark, s"$dir/t")
     val lWkt = "POLYGON ((-5.0 40.0, 10.0 40.0, 10.0 44.0, -1.0 44.0, -1.0 55.0, -5.0 55.0, -5.0 40.0))"
     val q = tbl.where(gf.st_contains_wkt(lit(lWkt), $"lon", $"lat"))
@@ -560,7 +566,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("h3_compact_prune").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledH3(pts, s"$dir/t", "lon", "lat", 7, 5)
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 7, 5, index = CellIndex.H3U)
     val tbl = graft.data.IcebergLite.read(spark, s"$dir/t")
     // Europe-sized box: its uniform res-5 polyfill exceeds MaxInCells
     // (pre-compaction this bailed to a FULL SCAN), the compacted
@@ -605,6 +611,19 @@ class PlanSpec extends AnyFunSuite {
     assert(got.count() == 30)
   }
 
+  test("annIvf: fewer vectors than nCentroids uses the centroids that exist") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").where($"vec_id" < 5)
+    def ranked(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("qid", "rnk", "vec_id").collect().map(_.toString).sorted.toSeq
+    // every list probed, so the IVF answer is exact
+    val brute = ranked(AnnOps.annBrute(emb, "vec_id", "embedding", 64, 2, 3))
+    assert(brute.size == 6)
+    assert(ranked(AnnOps.annIvf(emb, "vec_id", "embedding", 64, 2, 3, nCentroids = 8, nProbe = 8)) == brute)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_small").toString
+    AnnOps.writeIvfIndex(emb, "vec_id", "embedding", 64, s"$dir/ivf", nCentroids = 8)
+    assert(ranked(AnnOps.annIvfIndexed(spark, s"$dir/ivf", 64, 2, 3, nProbe = 8)) == brute)
+  }
+
   test("rangeJoinCells: mixed-precision prefix join plans as a broadcast equi-join") {
     val cust = SpatialOps.withTile(SpatialOps.withDerivedPosition(
       spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey"),
@@ -632,19 +651,20 @@ class PlanSpec extends AnyFunSuite {
     assert(planStr.contains("Exchange hashpartitioning(tile"), planStr)
   }
 
-  /** An H3 table partitioned by res-0 cell: more partition directories
-    * than Spark's 32-path threshold, so listing them is a parallel job. */
-  private def res0Table(name: String): String = {
+  /** A table tiled on `index` with more partition directories than
+    * Spark's 32-path threshold, so listing them is a parallel job. */
+  private def wideTable(name: String, index: CellIndex = CellIndex.H3U,
+                        tileLevel: Int = 7, prefixLevel: Int = 0): String = {
     val t = s"${java.nio.file.Files.createTempDirectory(name)}/t"
     val pts = SpatialOps.withDerivedPosition(spark.range(1, 1501).toDF("c_custkey"), "c_custkey")
-    graft.data.IcebergLite.writeTiledH3(pts, t, "lon", "lat", 7, 0)
+    graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", tileLevel, prefixLevel, index = index)
     val parts = graft.data.IcebergLite.readManifest(t).get.entries.size
     assert(parts > 32, s"needs more than 32 partition directories, got $parts")
     t
   }
 
   test("budget: a repeat IcebergLite.read of an unchanged table starts 0 jobs") {
-    val t = res0Table("read_budget")
+    val t = wideTable("read_budget")
     val first = graft.JobCount.sites(spark)(graft.data.IcebergLite.read(spark, t))
     assert(first.exists(_.contains("IcebergLite")), first.mkString("; "))
     val again = graft.JobCount.sites(spark)(graft.data.IcebergLite.read(spark, t))
@@ -652,15 +672,66 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("budget: a repeat knnIndexedH3 starts no IcebergLite listing or schema job") {
-    val t = res0Table("knn_budget")
-    def knn(): Unit = SpatialOps.knnIndexedH3(
-      spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey").collect()
-    // the first query resolves the snapshot once: its two scans share it
-    val first = graft.JobCount.sites(spark)(knn())
-    assert(first.count(_.contains("IcebergLite")) == 2, first.mkString("; "))
-    val again = graft.JobCount.sites(spark)(knn())
-    assert(!again.exists(_.contains("IcebergLite")), again.mkString("; "))
-    // what is left is the k-th-distance job and the final top-k
-    assert(again.size <= 2, again.mkString("; "))
+    // the same budget on every index family: H3 res 0, geohash 6 bits and
+    // S2 level 2 prefixes all give more than 32 partitions
+    Seq((CellIndex.H3U, 7, 0), (CellIndex.Geohash, 30, 6), (CellIndex.S2U, 12, 2)).foreach {
+      case (index, tileLevel, prefixLevel) =>
+        val t = wideTable(s"knn_budget_${index.tag}", index, tileLevel, prefixLevel)
+        def knn(): Unit = SpatialOps.knnIndexed(spark, t, -0.75, 51.25, 10, "c_custkey").collect()
+        // the first query resolves the snapshot once: its two scans share it
+        val first = graft.JobCount.sites(spark)(knn())
+        assert(first.count(_.contains("IcebergLite")) == 2, s"$index: ${first.mkString("; ")}")
+        val again = graft.JobCount.sites(spark)(knn())
+        assert(!again.exists(_.contains("IcebergLite")), s"$index: ${again.mkString("; ")}")
+        // what is left is the k-th-distance job and the final top-k
+        assert(again.size <= 2, s"$index: ${again.mkString("; ")}")
+    }
+  }
+
+  test("DeriveCoveringPrune: an unknown index tag leaves the filter unpruned") {
+    // H3 prefixes under a tag this engine does not know: a geohash IN-list
+    // would match no partition and drop every row
+    val t = s"${java.nio.file.Files.createTempDirectory("unknown_tag")}/t"
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
+    val tiled = pts.withColumn("tile", gf.h3u_cell($"lon", $"lat", 7))
+      .withColumn("tile_p", gf.h3u_parent($"tile", 3))
+    graft.data.IcebergLite.write(tiled, t, "tile_p",
+      properties = graft.data.IcebergLite.tilingProperties(CellIndex.H3U, 3, "lon", "lat") +
+        (graft.data.IcebergLite.PropIndexType -> "h3"))
+    val box = BBox(-0.75, 51.0, 0.25, 52.0)
+    val inBox = $"lon" >= box.minLon && $"lon" <= box.maxLon &&
+                $"lat" >= box.minLat && $"lat" <= box.maxLat
+    val q = graft.data.IcebergLite.read(spark, t).where(inBox).select("c_custkey")
+    val prefixIns = q.queryExecution.optimizedPlan.collect {
+      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
+        cond.collect {
+          case e @ (_: org.apache.spark.sql.catalyst.expressions.In |
+                    _: org.apache.spark.sql.catalyst.expressions.InSet)
+            if e.references.exists(_.name == "tile_p") => e
+        }
+    }.flatten
+    assert(prefixIns.isEmpty, s"derived a prune for an unknown index: $prefixIns")
+    val expect = pts.where(inBox).select("c_custkey")
+    assert(q.count() > 0)
+    assert(q.exceptAll(expect).isEmpty && expect.exceptAll(q).isEmpty)
+  }
+
+  test("knnIndexed: a layout that disagrees with the manifest throws, not an empty answer") {
+    val t = wideTable("knn_mismatch")
+    // geohash named over an H3-tiled table: no partition matches a geohash
+    // cell, so an unchecked call would close over the grid and return nothing
+    intercept[IllegalArgumentException] {
+      SpatialOps.knnIndexed(spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey")
+    }
+    intercept[IllegalArgumentException] {
+      SpatialOps.knnIndexedS2(spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey")
+    }
+    // the right index at the wrong prefix level
+    intercept[IllegalArgumentException] {
+      SpatialOps.knnIndexedH3(spark, t, "tile_p", 2, "lon", "lat", -0.75, 51.25, 10, "c_custkey")
+    }
+    assert(SpatialOps.knnIndexedH3(
+      spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey").count() == 10)
   }
 }
