@@ -1,8 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.OracleSql
 import graft.core.{BBox, GeoMath, Geohash}
@@ -151,144 +154,152 @@ object SpatialOps {
       .drop("qlon", "qlat")
   }
 
-  /** Index-agnostic ring-expansion kNN core: grow rings until ≥k candidates
-    * exist, extend to every ring intersecting the k-th-distance disc
-    * (ring × cellMinDeg ≥ d guarantees coverage), exact top-k. The ring
-    * generator, the per-ring minimum cell dimension (in the degree metric)
-    * and the ring count that covers the grid come from the index
+  /** Cell lists longer than this are probed as one unfiltered pass: an
+    * IN-list that long is plan bloat (a 65k-cell probe spent about a
+    * second before its job ran), and the pass is exact all the same. */
+  private val MaxProbeCells = 4096
+
+  /** A probe's top-k rows in rank order, each with its distance as the last
+    * column; `sawAll` when the probe read every row (no cell filter). */
+  private final case class Probe(rows: Array[Row], schema: StructType, sawAll: Boolean)
+
+  /** Index-agnostic ring-expansion kNN core. Rings grow (in doubling
+    * batches) until at least k candidates exist; the ring generator and the
+    * ring count that covers the grid come from the index
     * ([[CellIndex.rings]]).
     *
-    * `knownRows`: a FREE total-row bound when the index has one (the
-    * indexed variants sum the manifest's per-partition counts — zero Spark
-    * jobs). The in-plan variants pass None — a whole-corpus `count()` for
-    * a k-row answer would be a full 100 TB scan, so they rely on lattice
-    * exhaustion instead: when a doubling batch of rings adds NO new cells,
-    * the accumulated set has closed over the whole (wrapped/clipped) grid
-    * — both ring generators are monotone closures (geohash rings extend a
-    * contiguous wrapped column/row range; H3 disks are neighbor-closure
-    * fixpoints), so "no new cells" can only mean full coverage, and every
-    * existing row is already a candidate. */
-  private def knnExpand(spark: SparkSession,
-                        lonCol: String, latCol: String,
+    * A probe collects `orderBy(dist, tieCol).limit(k)` over the candidate
+    * cells: one TakeOrderedAndProject job, at most k rows on the driver.
+    * Its row count is the candidate count and its last row's distance the
+    * k-th distance d. Every true neighbour then lies in the disc of radius
+    * √d, so in the box `(qLon ± √d, qLat ± √d)` clipped to the globe (the
+    * degree metric does not wrap) and in that box's conservative
+    * [[CellIndex.coverBox]]. The answer is the last probe's rows when that
+    * covering is a subset of the probed cells, or when the probe saw every
+    * row (the rings cover the grid, the cells hold fewer than k rows, or
+    * the listed cells outgrew [[MaxProbeCells]] and the probe was
+    * unfiltered); otherwise it is one more probe over the covering —
+    * unfiltered when the covering overflows [[MaxProbeCells]]. The answer
+    * comes back as a local DataFrame with `rank`, so collecting it starts
+    * no job.
+    *
+    * `manifestRows`: per-cell row counts a table records (the indexed
+    * variant, from the manifest — zero Spark jobs); the loop counts with
+    * them and probes once, after it. The in-plan variant passes None and
+    * counts each batch's probe rows; a whole-corpus `count()` for a k-row
+    * answer would be a full 100 TB scan, so when expansion stalls below k
+    * it re-bounds the target with ONE capped existence probe
+    * (`limit(k).count()`, reading at most k rows per partition) instead.
+    * A batch that adds no cell is not the end of the grid (consecutive S2
+    * rings can share their cells); it skips its probe. */
+  private def knnExpand(spark: SparkSession, lonCol: String, latCol: String,
                         qLon: Double, qLat: Double, k: Int, tieCol: String,
-                        rings: CellIndex.Rings,
-                        scanCells: Seq[Long] => DataFrame,
-                        countCells: Seq[Long] => Long,
-                        probeRows: () => Long,
-                        knownRows: Option[Long]): DataFrame = {
-    import spark.implicits._
-    val CellIndex.Rings(ringCells, cellMin, maxRings) = rings
-    var r = 0L
+                        index: CellIndex, level: Int,
+                        scan: Option[Seq[Long]] => DataFrame,
+                        manifestRows: Option[Map[Long, Long]]): DataFrame = {
+    require(k >= 1, s"k = $k: a kNN answers k >= 1 neighbours")
+    val CellIndex.Rings(ringCells, maxRings) = index.rings(qLon, qLat, level)
+    val dist = (col(lonCol) - qLon) * (col(lonCol) - qLon) +
+               (col(latCol) - qLat) * (col(latCol) - qLat)
+    // the cells a probe must read: the manifest path skips cells that hold
+    // no rows, so a sparse table keeps its list short
+    def listed(cells: collection.Set[Long]): collection.Set[Long] =
+      manifestRows.fold(cells)(m => cells.filter(m.contains))
+    // None, or more than MaxProbeCells listed cells: read every row
+    def probe(cells: Option[collection.Set[Long]]): Probe = {
+      val list = cells.map(listed).filter(_.size <= MaxProbeCells)
+      val df = scan(list.map(_.toSeq)).withColumn("__d", dist)
+        .orderBy(col("__d").asc, col(tieCol).asc).limit(k)
+      Probe(df.collect(), df.schema, list.isEmpty)
+    }
     // insertion-ordered SET accumulator: per-ring `Seq ++ distinct` was
     // O(acc) per ring, which turns grid-exhaustion cases into O(rings^3)
     val acc = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var found = 0L
-    // stop as soon as every existing row is found (k may exceed the table —
-    // without this bound an empty table would expand ring-by-ring to the
-    // whole grid, one count job per ring). knownRows bounds it for FREE on
-    // the indexed variants; the in-plan variants start unbounded and
-    // re-bound via probeRows (<= k rows read) only if expansion stalls.
-    var target = knownRows.map(t => math.min(k.toLong, t)).getOrElse(k.toLong)
-    var probed = knownRows.isDefined
-    // ring batches DOUBLE between counts: for the in-plan variants each
-    // count is a Spark job over the candidate scan, so growth must cost
-    // O(log rings) jobs, not one job per ring (the over-expansion is at
-    // most one doubling — extra cells only widen the exact final scan)
+    var r = 0L
+    // ring batches DOUBLE between counts, so growth costs O(log rings)
+    // probes, not one per ring (the over-expansion is at most one doubling)
     var step = 1L
-    var exhausted = false
-    val dist = (col(lonCol) - qLon) * (col(lonCol) - qLon) +
-               (col(latCol) - qLat) * (col(latCol) - qLat)
-    // FUSED probe for the in-plan variants: candidate count (capped at k —
-    // all the loop compares against) AND the running k-th distance from ONE
-    // TakeOrdered job per expansion batch, so the loop's exit knowledge
-    // already contains the disc radius and the old standalone k-th-distance
-    // job disappears (guide §1.2: fewer passes). The indexed variants keep
-    // their zero-job manifest counts and pay the one k-th job at the end.
-    var kthD: Option[Double] = None
-    def fusedProbe(cells: Seq[Long]): Long = {
-      val row = scanCells(cells).select(dist.as("d")).orderBy($"d".asc).limit(k)
-        .agg(count(lit(1)), max($"d")).head()
-      kthD = if (row.isNullAt(1)) None else Some(row.getDouble(1))
-      row.getLong(0)
-    }
-    while (found < target && r < maxRings && !exhausted) {
+    var target = manifestRows.fold(k.toLong)(m => math.min(k.toLong, m.values.sum))
+    var bounded = manifestRows.isDefined
+    var found = 0L
+    var last: Probe = null
+    while (found < target && r < maxRings && (last == null || !last.sawAll)) {
       val rEnd = math.min(r + step, maxRings)
       val sizeBefore = acc.size
       while (r < rEnd) {
         acc ++= ringCells(r)
         r += 1
       }
-      if (acc.size == sizeBefore) exhausted = true // grid closed over itself
-      else {
+      if (acc.size > sizeBefore) {
         val prevFound = found
-        found = if (knownRows.isDefined) countCells(acc.toSeq) else fusedProbe(acc.toSeq)
-        if (!probed && found == prevFound && found < target) {
-          // expansion stalled below k: re-bound the target with ONE capped
-          // existence probe (LocalLimit reads at most k rows per partition
-          // and stops - never a whole-corpus count). If the table really
-          // has >= k rows the target is unchanged and this never re-fires;
-          // if it has fewer (incl. zero), the loop now exits as soon as
-          // every existing row is covered instead of walking the grid.
-          target = math.min(target, probeRows())
-          probed = true
+        found = manifestRows match {
+          case Some(m) => acc.iterator.map(m.getOrElse(_, 0L)).sum
+          case None => last = probe(Some(acc)); last.rows.length
+        }
+        if (!bounded && sizeBefore > 0 && found == prevFound && found < target) {
+          // expansion stalled below k (an empty first probe is no stall:
+          // sparse rows are the common case): if the table really has >= k
+          // rows the target is unchanged and this never re-fires; if it
+          // has fewer (incl. zero), the loop now exits as soon as every
+          // existing row is a candidate instead of walking the grid
+          target = math.min(target, scan(None).limit(k).count())
+          bounded = true
         }
       }
       step *= 2
     }
-    if (knownRows.isDefined) {
-      val kthRow = scanCells(acc.toSeq).select(dist.as("d")).orderBy($"d".asc).limit(k)
-        .agg(max($"d")).head()
-      kthD = if (kthRow.isNullAt(0)) None else Some(kthRow.getDouble(0))
-    }
-    // no k-th distance = no candidate rows at all (empty table / k > rows):
-    // nothing more to find, skip the disc-coverage extension
-    val needRings = kthD match {
-      case None => r - 1
-      case Some(d) => math.ceil(math.sqrt(d) / cellMin).toLong + 1
-    }
-    while (r <= needRings && r < maxRings) {
-      acc ++= ringCells(r); r += 1
-    }
-    // top-k as orderBy.limit(k) → TakeOrderedAndProject: a distributed
-    // bounded heap per partition, NOT a single-partition window sort over
-    // the full candidate scan (ring 0 of a hot-spot cell can hold millions
-    // of rows at scale). The rank window then runs over ≤k survivors.
-    val topK = scanCells(acc.toSeq)
-      .orderBy(dist.asc, col(tieCol).asc).limit(k)
-    val w = Window.partitionBy(lit(1)).orderBy(dist.asc, col(tieCol).asc)
-    topK.withColumn("rank", row_number().over(w))
+    if (manifestRows.isDefined) last = probe(Some(acc))
+    val answer =
+      if (last.sawAll || last.rows.length < k || r >= maxRings) last
+      else {
+        // widened by a rounding margin: the covering must hold every row
+        // whose computed distance is <= d
+        val kth = last.rows.last
+        val reach = math.sqrt(kth.getDouble(kth.length - 1)) * (1 + 1e-9) + 1e-9
+        val disc = BBox(math.max(-180.0, qLon - reach), math.max(-90.0, qLat - reach),
+                        math.min(180.0, qLon + reach), math.min(90.0, qLat + reach))
+        val cover =
+          try Some(index.coverBox(disc, level).toSet)
+          catch { case _: IllegalArgumentException => None }
+        if (cover.exists(listed(_).forall(acc.contains))) last else probe(cover)
+      }
+    val ranked = answer.rows.iterator.zipWithIndex
+      .map { case (row, i) => Row.fromSeq(row.toSeq.init :+ (i + 1)) }.toSeq
+    spark.createDataFrame(ranked.asJava,
+      StructType(answer.schema.fields.init :+ StructField("rank", IntegerType, nullable = false)))
   }
 
   /** kNN via cell-ring expansion (BASELINE.json north_star) over an
-    * in-plan DataFrame: candidates come from a broadcast join of the ring
-    * cells against the points' cells on `index` at `level` (geohash bits
-    * by default). Exact — see [[knnExpand]]. */
+    * in-plan DataFrame: each probe filters the points whose cell on `index`
+    * at `level` (geohash bits by default) is in the probed set — over an
+    * IcebergLite table tiled on the same index at a prefix level ≤ `level`,
+    * [[graft.sql.DeriveCoveringPrune]] derives `prefix IN (parents)` from
+    * that filter, so a probe reads only its partitions. Exact, answered as
+    * a local DataFrame with `rank` and `qid` — see [[knnExpand]]. */
   def knnRing(points: DataFrame, lonCol: String, latCol: String,
               qid: Int, qLon: Double, qLat: Double, k: Int, level: Int,
               tieCol: String, index: CellIndex = CellIndex.Geohash): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    // NO cache: the doubling expansion needs only O(log rings) count jobs,
-    // and each re-scan recomputes a codegen'd encode — far cheaper than
+    // NO cache: the doubling expansion needs only O(log rings) probes, and
+    // each re-scan recomputes a codegen'd encode — far cheaper than
     // materializing the whole input (which a 100 TB table could not afford)
-    val keyed = points.withColumn("__cell", index.cell(col(lonCol), col(latCol), level))
-    def scan(cells: Seq[Long]): DataFrame =
-      keyed.join(broadcast(cells.toDF("__cell")), "__cell")
-    knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index.rings(qLon, qLat, level),
-        scan, cells => scan(cells).count(), () => points.limit(k).count(), None)
+    val cell = index.cell(col(lonCol), col(latCol), level)
+    knnExpand(points.sparkSession, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
+        cells => cells.fold(points)(cs => points.where(cell.isin(cs: _*))), None)
       .withColumn("qid", lit(qid))
-      .drop("__cell")
   }
 
   /** kNN against a PRE-TILED Iceberg-lite table ([[graft.data.IcebergLite
-    * .writeTiled]] on any index): each expansion step reads ONLY the
-    * partitions holding candidate cells (partition pruning on the prefix
-    * column), and the expansion COUNTS come from the manifest's
-    * per-partition row counts — zero Spark jobs until the final scan. At
-    * 10¹² rows each step touches a handful of partitions instead of the
-    * table. The index, prefix column, prefix level and lon/lat columns are
-    * the ones the current snapshot's manifest records. Exact — see
-    * [[knnExpand]]. */
+    * .writeTiled]] on any index): rings grow over the prefix cells, and
+    * the expansion COUNTS come from the manifest's per-partition row
+    * counts — zero Spark jobs. Then one probe collects the top-k rows of
+    * the candidate partitions, and the answer is those rows when the
+    * covering of the k-th-distance disc at the prefix level lies inside
+    * them; otherwise one more probe reads just the covering's partitions.
+    * At 10¹² rows each probe touches a handful of partitions instead of
+    * the table. The index, prefix column, prefix level and lon/lat columns
+    * are the ones the current snapshot's manifest records. Exact, answered
+    * as a local DataFrame with `rank` — see [[knnExpand]]; a table with no
+    * rows records no schema, and answers with an empty `rank` column. */
   def knnIndexed(spark: SparkSession, table: String,
                  qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
     val t = new PinnedTable(spark, table)
@@ -346,17 +357,17 @@ object SpatialOps {
     private val snap = IcebergLite.current(spark, table)
     val manifest: IcebergLite.Manifest = snap.manifest
     val index: Option[CellIndex] = CellIndex.fromManifest(manifest)
-    // sum across snapshots: appended partitions have one entry per snapshot
-    private val rows = IcebergLite.rowsByPartition(manifest)
-    private val total: Long = rows.values.sum
-    private def count(cells: Seq[Long]): Long = cells.map(c => rows.getOrElse(c.toString, 0L)).sum
-    private def scan(cells: Seq[Long]): DataFrame =
-      snap.df.where(col(manifest.partitionCol).isin(cells: _*))
 
     def knn(index: CellIndex, level: Int, lonCol: String, latCol: String,
-            qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
-      knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index.rings(qLon, qLat, level),
-        scan, count, () => total, Some(total))
+            qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
+      // sum across snapshots: appended partitions have one entry per snapshot
+      val rows = IcebergLite.rowsByPartition(manifest)
+        .flatMap { case (p, n) => p.toLongOption.map(_ -> n) }
+      if (rows.values.sum == 0) spark.emptyDataFrame.withColumn("rank", lit(0))
+      else knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
+        cells => cells.fold(snap.df)(cs => snap.df.where(col(manifest.partitionCol).isin(cs: _*))),
+        Some(rows))
+    }
   }
 
   /** Dense raster of per-cell counts over a box — the engine equivalent of

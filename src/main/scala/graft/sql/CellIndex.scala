@@ -9,8 +9,9 @@ import graft.core.{BBox, GeoMath}
 /** The cell index of a tiled table — geohash (Morton), Uber-H3-compatible
   * (H3U) or published-layout S2 (S2U) — and the one place that decides how
   * its cells are made and covered: which cell a row lands in, which cells
-  * cover a box or polygon, how kNN rings grow around a query, and which
-  * partition predicate a covering becomes. Every tiled operator
+  * cover a box or polygon, how kNN rings grow around a query, which
+  * partition predicate a covering becomes, and which prefix cells a set of
+  * its finer cells falls in ([[parentOf]]). Every tiled operator
   * ([[graft.engine.SpatialOps]], [[graft.data.IcebergLite.writeTiled]],
   * [[graft.engine.StreamOps.streamedTileIngest]], [[DeriveCoveringPrune]])
   * has one body parameterised by `(CellIndex, level)`, where `level` is
@@ -27,6 +28,13 @@ sealed trait CellIndex {
 
   /** The ancestor at `toLevel` of a cell column at `fromLevel`. */
   def parent(cell: Column, fromLevel: Int, toLevel: Int): Column
+
+  /** The ancestor at `toLevel` of `cell` at `fromLevel`. */
+  def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long
+
+  /** (lon, lat, level) of a Catalyst expression that is this index's
+    * [[cell]] at a literal level, as [[DeriveCoveringPrune]] matches it. */
+  private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)]
 
   /** Covering of a box with minLon <= maxLon; throws
     * IllegalArgumentException past `maxCells`. */
@@ -78,9 +86,8 @@ sealed trait CellIndex {
 
 object CellIndex {
   /** A kNN ring expansion: `cells(r)` is ring r (called with
-    * non-decreasing r; rings 0..R cover every point within R · `cellMinDeg`
-    * of the query in the degree metric); `maxRings` rings cover the grid. */
-  final case class Rings(cells: Long => Seq[Long], cellMinDeg: Double, maxRings: Long)
+    * non-decreasing r); `maxRings` rings cover the grid. */
+  final case class Rings(cells: Long => Seq[Long], maxRings: Long)
 
   /** The index a manifest records: geohash when untagged, None for a tag
     * this engine does not know (its cells are not ours to cover). */
@@ -104,6 +111,11 @@ object CellIndex {
     def cell(lon: Column, lat: Column, level: Int): Column = functions.gh_encode(lon, lat, level)
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column =
       functions.gh_parent(cell, fromLevel, toLevel)
+    def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = G.parent(cell, fromLevel, toLevel)
+    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
+      case GhEncode(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
+      case _ => None
+    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       G.covering(minLon, minLat, maxLon, maxLat, level, maxCells)
@@ -140,7 +152,7 @@ object CellIndex {
           dys.map(cy + _).filter(yy => yy >= 0 && yy < ny)
             .map(G.fromCellXY((cx + dx + nx * 4) % nx, _, level))
         }
-      Rings(ringCells, math.min(G.cellWidth(level), G.cellHeight(level)), math.max(nx, ny))
+      Rings(ringCells, math.max(nx, ny))
     }
   }
 
@@ -150,6 +162,11 @@ object CellIndex {
     val tag = "h3u"
     def cell(lon: Column, lat: Column, level: Int): Column = functions.h3u_cell(lon, lat, level)
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column = functions.h3u_parent(cell, toLevel)
+    def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = H.cellToParent(cell, toLevel)
+    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
+      case H3UCell(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
+      case _ => None
+    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       H.polyfillBox(minLon, minLat, maxLon, maxLat, level, maxCells)
@@ -182,13 +199,12 @@ object CellIndex {
           else In(H3UParent(asLong, Literal(r)), cs.toSeq.map(Literal(_)))
         }.reduce(Or(_, _))
       }
-    // gridDisk shells around the query cell. The coverage step is 0.6 × the
-    // face-center pitch (the gnomonic projection compresses spacing by at
-    // most 1/(1+tan²γ) ≈ 0.63 toward face edges) in degrees, which only
-    // over-expands (degree distances are ≥ angular ones)
+    // gridDisk shells around the query cell. Each shell steps at least
+    // 0.6 × the face-center pitch (the gnomonic projection compresses
+    // spacing by at most 1/(1+tan²γ) ≈ 0.63 toward face edges), so π over
+    // that step covers the sphere
     def rings(qLon: Double, qLat: Double, level: Int): Rings =
       Rings(frontierRings(H.latLngToCell(qLat, qLon, level)),
-        math.toDegrees(H.maxPitchRad(level)) * 0.6,
         (math.Pi / (H.maxPitchRad(level) * 0.6)).toLong + 2)
     // ring r = the cells at grid distance exactly r from `center`, by a
     // frontier BFS keeping only the last two disks: a full-lattice closure
@@ -215,6 +231,11 @@ object CellIndex {
     val tag = "s2u"
     def cell(lon: Column, lat: Column, level: Int): Column = functions.s2u_cell(lon, lat, level)
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column = functions.s2u_parent(cell, toLevel)
+    def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = S.parent(cell, toLevel)
+    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
+      case S2UCell(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
+      case _ => None
+    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       S.coverBox(minLon, minLat, maxLon, maxLat, level, maxCells)
@@ -224,6 +245,7 @@ object CellIndex {
     // r · cellMin around the query, so face-edge crossings are the
     // covering's business, not a lattice walk's; accumulation dedups.
     // minCellWidthDeg under-estimates every cell step: over-expands only
+    // (and consecutive rings may share all their cells)
     def rings(qLon: Double, qLat: Double, level: Int): Rings = {
       val cellMin = S.minCellWidthDeg(level)
       def ring(r: Long): Seq[Long] = {
@@ -238,7 +260,7 @@ object CellIndex {
           else coverBox(BBox(lo, latLo, if (hi > 180.0) hi - 360.0 else hi, latHi), level)
         cells.toSeq
       }
-      Rings(ring, cellMin, (360.0 / cellMin).toLong + 2)
+      Rings(ring, (360.0 / cellMin).toLong + 2)
     }
   }
 }

@@ -73,6 +73,12 @@ private[sql] object LiteralPip {
   * An anti-meridian box's canonical filter shape — a top-level
   * `lon >= a OR lon <= b` (a > b) disjunct — derives the two-sided wrapped
   * covering; other OR shapes are left alone (soundness).
+  *
+  * A cell set is a bound too: a top-level `index.cell(lon, lat, L) IN (…)`
+  * or `= c` on the recorded index and lon/lat columns, with L at or finer
+  * than the prefix level, derives `prefix IN (distinct parents of the
+  * cells)` — the plan-time case of pushing a data-induced predicate
+  * (the ring kNN's probes have this shape).
   * Idempotent: skips when an IN on the prefix column is already present.
   */
 object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
@@ -95,8 +101,9 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
             // already derived (fixed-point idempotency) — covers the plain
             // IN, the compacted OR-of-INs, and INs over h3u_parent(prefix)
             if !conjuncts.exists(isPrefixInShape(_, prefixAttr))
-            box <- boundsOf(conjuncts, lonAttr, latAttr)
-            cells <- coveringCells(index, box, bits, pipRingsOf(conjuncts, lonAttr, latAttr))
+            cells <- cellSetParents(conjuncts, index, lonAttr, latAttr, bits).orElse(
+              boundsOf(conjuncts, lonAttr, latAttr).flatMap(box =>
+                coveringCells(index, box, bits, pipRingsOf(conjuncts, lonAttr, latAttr))))
           } yield Filter(And(cond, index.prunePredicate(cells, bits, prefixAttr)), l)).getOrElse(f)
         case None => f
       }
@@ -105,22 +112,53 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
   // covering memo: the optimizer re-plans the same Filter shape repeatedly
   // (fixed-point batches × repeated queries in a session), and an h3u
   // polygon polyfill costs tens of ms of lattice BFS — cache by the
-  // geometry+index key, bounded (coverings are ≤ MaxInCells longs each)
+  // geometry+index key, bounded (coverings are ≤ MaxInCells longs each);
+  // a full memo is cleared, so geometry that repeats after a run of fresh
+  // geometry is admitted again
   private val coveringCache =
     new java.util.concurrent.ConcurrentHashMap[(CellIndex, BBox, Int, Seq[Seq[Double]]),
       Option[Array[Long]]]()
+  private val MaxMemoEntries = 256
 
   /** The partition-prefix covering of the box under the table's recorded
     * index ([[CellIndex.pruneCovering]]); None when it would exceed
     * [[MaxInCells]]. */
-  private def coveringCells(index: CellIndex, box: BBox, bits: Int,
-                            pipRings: Option[Array[Array[Double]]]): Option[Array[Long]] = {
+  private[sql] def coveringCells(index: CellIndex, box: BBox, bits: Int,
+                                 pipRings: Option[Array[Array[Double]]]): Option[Array[Long]] = {
     val key = (index, box, bits, pipRings.map(_.toSeq.map(_.toSeq)).getOrElse(Seq.empty))
     val hit = coveringCache.get(key)
     if (hit != null) return hit
     val computed = index.pruneCovering(box, bits, pipRings, MaxInCells)
-    if (coveringCache.size < 256) coveringCache.put(key, computed)
+    if (coveringCache.size >= MaxMemoEntries) coveringCache.clear()
+    coveringCache.put(key, computed)
     computed
+  }
+
+  /** The prefix cells a top-level cell-set conjunct allows: the distinct
+    * parents at the prefix level `bits` of the cells of an
+    * `index.cell(lon, lat, L) IN (…)` or `= c` over the recorded lon/lat,
+    * L ≥ bits. Every row the conjunct keeps has one of those cells, so its
+    * prefix is one of their parents. None when there is no such conjunct
+    * or its parents exceed [[MaxInCells]]. */
+  private def cellSetParents(conjuncts: Seq[Expression], index: CellIndex,
+                             lon: AttributeReference, lat: AttributeReference,
+                             bits: Int): Option[Array[Long]] = {
+    def level(e: Expression): Option[Int] = index.cellArgs(e).collect {
+      case (lonE, latE, l) if l >= bits && lonE.semanticEquals(lon) && latE.semanticEquals(lat) => l
+    }
+    conjuncts.iterator.flatMap {
+      case In(e, list) if list.forall(_.isInstanceOf[Literal]) =>
+        level(e).map(_ -> list.map(_.asInstanceOf[Literal].value))
+      case InSet(e, set) => level(e).map(_ -> set.toSeq)
+      case EqualTo(e, Literal(v, _)) => level(e).map(_ -> Seq(v))
+      case EqualTo(Literal(v, _), e) => level(e).map(_ -> Seq(v))
+      case _ => None
+    }.map { case (l, cells) =>
+      // a NULL, or a value that is no cell at level l (parentOf rejects
+      // it), keeps no row
+      cells.collect { case c: Long => scala.util.Try(index.parentOf(c, l, bits)).toOption }
+        .flatten.distinct.toArray
+    }.find(_.length <= MaxInCells)
   }
 
   private def attrOf(l: LogicalRelation, name: String): Option[AttributeReference] =

@@ -41,9 +41,9 @@ class IcebergLiteSpec extends AnyFunSuite {
   private def knnGh(table: String, qx: Double, qy: Double): Seq[(Int, Long)] =
     ranked(SpatialOps.knnIndexed(spark, table, qx, qy, 10, "c_custkey"))
 
-  private def brute(points: DataFrame, qx: Double, qy: Double): Seq[(Int, Long)] =
+  private def brute(points: DataFrame, qx: Double, qy: Double, k: Int = 10): Seq[(Int, Long)] =
     ranked(SpatialOps.knnBrute(points.select("c_custkey", "lon", "lat"), "lon", "lat",
-      Seq((0, qx, qy)), 10, "c_custkey"))
+      Seq((0, qx, qy)), k, "c_custkey"))
 
   private def keys(df: DataFrame): Seq[Long] =
     df.select("c_custkey").collect().map(_.getLong(0)).sorted.toSeq
@@ -136,6 +136,41 @@ class IcebergLiteSpec extends AnyFunSuite {
     Files.setLastModifiedTime(ptr, before)
     assert(pruned(query), query.queryExecution.executedPlan.toString)
     assert(keys(query) == keys(pts(1, 1501).where(inBox(box))))
+  }
+
+  test("knnIndexed == brute force at the edges of the disc finish, on geohash, H3U and S2U") {
+    // six rows exactly 0.5 deg from the last query, two sharing a position:
+    // k = 3 cuts through the tie, which the key breaks
+    val rows = pts(1, 1501).unionByName(Seq((900001L, -29.5, -60.0), (900002L, -30.5, -60.0),
+      (900003L, -30.0, -59.5), (900004L, -30.0, -60.5), (900005L, -29.5, -60.0),
+      (900006L, -30.5, -60.0)).toDF("c_custkey", "lon", "lat"))
+    // a prefix-cell edge and corner, within one k-th distance of ±180° and
+    // of each pole, and the tie
+    val queries = Seq((0.0, 0.0), (45.0, 22.5), (179.99, 5.0), (-179.99, -5.0), (30.0, 89.99),
+      (-60.0, -89.99), (-30.0, -60.0))
+    val want = (for (q <- queries; k <- Seq(3, 10)) yield (q, k) -> brute(rows, q._1, q._2, k)).toMap
+    val three = pts(1, 4)
+    // the coarse prefixes tiled_serve serves from, and finer ones
+    Seq((CellIndex.Geohash, 30, 4), (CellIndex.Geohash, 30, 8), (CellIndex.H3U, 7, 0),
+        (CellIndex.H3U, 7, 2), (CellIndex.S2U, 12, 1), (CellIndex.S2U, 12, 5)).foreach {
+      case (index, tileLevel, prefixLevel) =>
+        val t = s"${tmp(s"edges_${index.tag}")}/t"
+        IcebergLite.writeTiled(rows, t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        for (q <- queries; k <- Seq(3, 10)) {
+          val got = ranked(SpatialOps.knnIndexed(spark, t, q._1, q._2, k, "c_custkey"))
+          assert(got == want((q, k)), s"$index/$prefixLevel at $q, k = $k")
+        }
+        // k larger than the row count
+        val small = s"${tmp(s"three_${index.tag}")}/t"
+        IcebergLite.writeTiled(three, small, "lon", "lat", tileLevel, prefixLevel, index = index)
+        assert(ranked(SpatialOps.knnIndexed(spark, small, qx, qy, 10, "c_custkey")) ==
+          brute(three, qx, qy), s"$index/$prefixLevel: k > rows")
+        // an empty table answers with no rows
+        val empty = s"${tmp(s"empty_${index.tag}")}/t"
+        IcebergLite.writeTiled(three.where($"c_custkey" < 0), empty, "lon", "lat", tileLevel,
+          prefixLevel, index = index)
+        assert(SpatialOps.knnIndexed(spark, empty, qx, qy, 10, "c_custkey").isEmpty)
+    }
   }
 
   // stops the suite's SparkContext: keep this test last

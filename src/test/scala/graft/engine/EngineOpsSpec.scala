@@ -14,6 +14,13 @@ class EngineOpsSpec extends AnyFunSuite {
   def customers = SpatialOps.withDerivedPosition(
     spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
 
+  /** Six rows exactly 0.5 deg from [[TieQuery]] (two sharing a position):
+    * k = 3 cuts through the tie, which the key breaks. */
+  val TieQuery = (-30.0, -60.0)
+  def ties = Seq((900001L, -29.5, -60.0), (900002L, -30.5, -60.0), (900003L, -30.0, -59.5),
+    (900004L, -30.0, -60.5), (900005L, -29.5, -60.0), (900006L, -30.5, -60.0))
+    .toDF("c_custkey", "lon", "lat")
+
   test("h3u SQL surface: functions callable from SQL text, consistent with core") {
     val r = spark.sql(
       """SELECT h3u_cell(-122.0553238, 37.3615593, 5) AS c,
@@ -32,22 +39,40 @@ class EngineOpsSpec extends AnyFunSuite {
   }
 
   test("knnRing == knnBrute for several query points, ks and precisions") {
-    val pts = Seq((-0.75, 51.25), (139.75, 35.5), (10.0, -40.0), (-120.5, 60.25))
-    for (((qx, qy), qi) <- pts.zipWithIndex; k <- Seq(3, 10); bits <- Seq(16, 20)) {
-      val brute = SpatialOps.knnBrute(customers, "lon", "lat", Seq((qi, qx, qy)), k, "c_custkey")
+    val table = customers.unionByName(ties)
+    def check(index: CellIndex, level: Int, qi: Int, qx: Double, qy: Double, k: Int): Unit = {
+      val brute = SpatialOps.knnBrute(table, "lon", "lat", Seq((qi, qx, qy)), k, "c_custkey")
         .select("qid", "rank", "c_custkey").collect().map(r => (r.getInt(1), r.getLong(2))).sorted
-      val ring = SpatialOps.knnRing(customers, "lon", "lat", qi, qx, qy, k, bits, "c_custkey")
+      val ring = SpatialOps.knnRing(table, "lon", "lat", qi, qx, qy, k, level, "c_custkey", index)
         .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-      assert(ring.toSeq == brute.toSeq, s"q=($qx,$qy) k=$k bits=$bits")
+      assert(ring.toSeq == brute.toSeq, s"$index q=($qx,$qy) k=$k level=$level")
+    }
+    val pts = Seq((-0.75, 51.25), (139.75, 35.5), (10.0, -40.0), (-120.5, 60.25))
+    for (((qx, qy), qi) <- pts.zipWithIndex; k <- Seq(3, 10); bits <- Seq(16, 20))
+      check(CellIndex.Geohash, bits, qi, qx, qy, k)
+    // the edges of the disc finish on every index: a cell edge and corner
+    // (lon 0 / 45, lat 0 / 22.5), within one k-th distance of ±180° and of
+    // each pole, and neighbours that tie in distance
+    val edges = Seq((0.0, 0.0), (45.0, 22.5), (179.99, 5.0), (-179.99, -5.0), (30.0, 89.99),
+      (-60.0, -89.99))
+    for ((index, level) <- Seq(CellIndex.Geohash -> 16, CellIndex.H3U -> 2, CellIndex.S2U -> 5)) {
+      for (((qx, qy), qi) <- edges.zipWithIndex) check(index, level, qi, qx, qy, 10)
+      for (k <- Seq(3, 10)) check(index, level, 9, TieQuery._1, TieQuery._2, k)
     }
   }
 
   test("knnRing: empty table and k > rows return what exists, no NPE") {
     val empty = customers.where($"c_custkey" < 0)
-    assert(SpatialOps.knnRing(empty, "lon", "lat", 0, -0.75, 51.25, 5, 20, "c_custkey").count() == 0)
     val three = customers.limit(3)
-    val got = SpatialOps.knnRing(three, "lon", "lat", 0, -0.75, 51.25, 10, 16, "c_custkey")
-    assert(got.count() == 3, "k > rows should return all rows")
+    val all3 = three.select("c_custkey").collect().map(_.getLong(0)).sorted.toSeq
+    Seq(CellIndex.Geohash -> 16, CellIndex.Geohash -> 20, CellIndex.H3U -> 2, CellIndex.S2U -> 5).foreach {
+      case (index, level) =>
+        assert(SpatialOps.knnRing(empty, "lon", "lat", 0, -0.75, 51.25, 5, level, "c_custkey", index)
+          .count() == 0, s"$index")
+        val got = SpatialOps.knnRing(three, "lon", "lat", 0, -0.75, 51.25, 10, level, "c_custkey", index)
+        assert(got.select("c_custkey").collect().map(_.getLong(0)).sorted.toSeq == all3,
+          s"$index: k > rows should return all rows")
+    }
   }
 
   test("image hot-spot rows spread across all 5 planted cluster centers") {

@@ -1,10 +1,14 @@
 package graft.engine
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.{CellIndex, GraftSpark, functions => gf}
+import graft.sql.{CellIndex, GraftSpark, GhEncode, H3UCell, S2UCell, functions => gf}
 
 /** Plan-shape assertions: the properties that decide whether the engine
   * still works at 100 TB — column pruning to the parquet scan, predicate
@@ -15,6 +19,45 @@ class PlanSpec extends AnyFunSuite {
   import spark.implicits._
 
   val sf = "/root/testdata/sf0.001"
+  /** The ten-times-larger fixture beside it. */
+  private val sf01 = s"${java.nio.file.Paths.get(sf).getParent}/sf0.01"
+
+  /** The kNN probes (TakeOrderedAndProject plans) among the queries `body` runs. */
+  private def probes(body: => Any): Seq[SparkPlan] =
+    graft.QueryPlans.of(spark)(body).filter(_.isInstanceOf[TakeOrderedAndProjectExec])
+
+  /** The parquet scans of `plan`. */
+  private def scans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    plan.collect { case s: FileSourceScanExec => s }
+
+  /** Does every parquet scan of `plan` carry a partition filter on `col`? */
+  private def prunesOn(plan: SparkPlan, col: String): Boolean =
+    scans(plan).nonEmpty &&
+      scans(plan).forall(_.partitionFilters.exists(_.references.exists(_.name == col)))
+
+  /** Does a Filter of `plan` test a cell expression against a cell set? */
+  private def cellFiltered(plan: SparkPlan): Boolean = {
+    def isCell(e: Expression) = e match {
+      case _: GhEncode | _: H3UCell | _: S2UCell => true
+      case _ => false
+    }
+    // a one-cell IN is optimized into an equality
+    plan.collect { case f: FilterExec => f.condition }.exists(_.find {
+      case In(e, _) => isCell(e)
+      case InSet(e, _) => isCell(e)
+      case EqualTo(e, _: Literal) => isCell(e)
+      case _ => false
+    }.isDefined)
+  }
+
+  private def ranked(df: DataFrame): Seq[(Int, Long)] =
+    df.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+
+  /** Parquet files under an IcebergLite table's data directory. */
+  private def dataFiles(table: String): Long =
+    scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(table, "data"))) {
+      _.filter(_.toString.endsWith(".parquet")).count()
+    }
 
   test("column pruning: tile assignment reads only the key column") {
     val df = SpatialOps.withTile(
@@ -115,17 +158,15 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("tile_p", graft.sql.functions.gh_parent($"tile", 30, 8))
     graft.data.IcebergLite.write(tiled, s"$dir/t", "tile_p")
     val (qx, qy) = (-0.75, 51.25)
-    val got = SpatialOps.knnIndexed(spark, s"$dir/t", "tile_p", 8, "lon", "lat", qx, qy, 10, "c_custkey")
+    var got: DataFrame = null
+    val probed = probes {
+      got = SpatialOps.knnIndexed(spark, s"$dir/t", "tile_p", 8, "lon", "lat", qx, qy, 10, "c_custkey")
+    }
     // exactness vs brute force
     val brute = SpatialOps.knnBrute(pts, "lon", "lat", Seq((0, qx, qy)), 10, "c_custkey")
-      .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    val ring = got.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    assert(ring.toSeq == brute.toSeq)
-    // partition pruning visible in the FINAL (post-AQE) plan: the snapshot
-    // visibility filter and the candidate-cell filter both hit tile_p
-    val planStr = got.queryExecution.executedPlan.toString
-    val pf = planStr.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("tile_p#"), planStr)
+    assert(ranked(got) == ranked(brute))
+    // every probe's scan reads only candidate-cell partitions
+    assert(probed.nonEmpty && probed.forall(prunesOn(_, "tile_p")), probed.mkString("\n"))
   }
 
   test("DeriveCoveringPrune: bare box/PIP filters over a tiled table prune partitions") {
@@ -269,60 +310,138 @@ class PlanSpec extends AnyFunSuite {
   test("knnRing: final top-k is TakeOrderedAndProject, not a full-scan global window") {
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
-    val df = SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 20, "c_custkey")
-    val planStr = df.queryExecution.executedPlan.toString
-    assert(planStr.contains("TakeOrderedAndProject"), planStr)
-    // the rank window must rank the ≤k TakeOrderedAndProject survivors, not
-    // sort the whole candidate scan in one partition (ring 0 of a hot-spot
-    // cell holds millions of rows at 100× scale)
-    val windowIdx = planStr.indexOf("Window")
-    val takeIdx = planStr.indexOf("TakeOrderedAndProject")
-    assert(windowIdx >= 0 && takeIdx > windowIdx,
-      "window must sit ABOVE the TakeOrderedAndProject candidate top-k")
+    val plans = graft.QueryPlans.of(spark)(
+      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 20, "c_custkey"))
+    // every probe is a distributed bounded heap; nothing sorts the whole
+    // candidate scan in one partition (ring 0 of a hot-spot cell holds
+    // millions of rows at 100× scale) — the answer is ranked on the driver
+    // from the last probe's ≤ k rows
+    val probePlans = plans.filter(_.isInstanceOf[TakeOrderedAndProjectExec])
+    assert(probePlans.nonEmpty, plans.mkString("\n"))
+    plans.foreach(p => assert(p.collect { case w: WindowExec => w }.isEmpty, s"window in a probe:\n$p"))
   }
 
   test("knnRing/knnRingH3: expansion runs NO unfiltered whole-table count job") {
     // at 100 TB a bare points.count() is a full-corpus scan for a k-row
-    // answer; every count the expansion runs must be over the broadcast
-    // cell join (candidate cells only), with at most a LIMIT-capped
-    // existence probe (reads <= k rows) as the stall fallback
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    // answer; every query the expansion runs must be a probe over the
+    // candidate cells, with at most a LIMIT-capped existence probe (reads
+    // <= k rows) as the stall fallback
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
+    // res/bits chosen for the fixture's density: sf0.001 has 150 rows and
+    // the 10th-nearest neighbor is ~25 deg out, so the rings must span that
+    // radius — fine cells (res 7) would mean millions of ring cells
+    val plans = graft.QueryPlans.of(spark) {
+      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 12, "c_custkey")
+      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 3, "c_custkey", CellIndex.H3U)
     }
-    spark.listenerManager.register(listener)
-    try {
-      val pts = SpatialOps.withDerivedPosition(
-        spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
-      // res/bits chosen for the fixture's density: sf0.001 has 150 rows,
-      // the 10th-nearest neighbor is ~25 deg out, so the exact
-      // disc-coverage extension needs rings spanning that radius — fine
-      // cells (res 7) would mean millions of ring cells for this k
-      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 12, "c_custkey").collect()
-      SpatialOps.knnRing(pts, "lon", "lat", 1, -0.75, 51.25, 10, 3, "c_custkey", CellIndex.H3U).collect()
-      // QueryExecutionListener delivery is async: wait for the queue to settle
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(200)
-        if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
-      }
-      import scala.jdk.CollectionConverters._
-      val captured = plans.iterator().asScala.toSeq
-      assert(captured.nonEmpty, "listener captured no plans")
-      val countPlans = captured.filter(p => p.contains("count(1)") || p.contains("count(L)"))
-      assert(countPlans.nonEmpty, "expansion should run at least one count job")
-      countPlans.foreach { p =>
-        val filteredByCells = p.contains("BroadcastHashJoin") && p.contains("__cell")
-        val cappedProbe = p.contains("Limit") || p.contains("CollectLimit")
-        assert(filteredByCells || cappedProbe,
-          s"unfiltered whole-table count in kNN expansion:\n$p")
-      }
-    } finally spark.listenerManager.unregister(listener)
+    assert(plans.count(_.isInstanceOf[TakeOrderedAndProjectExec]) >= 2, plans.mkString("\n"))
+    plans.foreach { p =>
+      val capped = p.toString.contains("Limit")
+      assert(p.isInstanceOf[TakeOrderedAndProjectExec] || capped, s"not a probe:\n$p")
+      assert(p.collect { case w: WindowExec => w }.isEmpty, s"window in a probe:\n$p")
+      assert(cellFiltered(p) || capped, s"unfiltered whole-table scan in kNN expansion:\n$p")
+    }
+  }
+
+  test("knnRing over a tiled table: every probe reads only its partitions, on all three indexes") {
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")
+    // (index, tile level, prefix level, kNN level)
+    Seq((CellIndex.Geohash, 30, 6, 20), (CellIndex.H3U, 7, 0, 5), (CellIndex.S2U, 12, 2, 9)).foreach {
+      case (index, tileLevel, prefixLevel, level) =>
+        val t = s"${java.nio.file.Files.createTempDirectory(s"ring_${index.tag}")}/t"
+        graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        val tbl = graft.data.IcebergLite.read(spark, t)
+        val files = dataFiles(t)
+        Seq((-0.75, 51.25), (139.75, 35.5)).foreach { case (qx, qy) =>
+          var got: DataFrame = null
+          val probed = probes {
+            got = SpatialOps.knnRing(tbl, "lon", "lat", 1, qx, qy, 10, level, "c_custkey", index)
+          }
+          assert(ranked(got) == ranked(SpatialOps.knnBrute(pts, "lon", "lat", Seq((1, qx, qy)), 10,
+            "c_custkey")), s"$index at ($qx, $qy)")
+          assert(probed.nonEmpty)
+          probed.foreach { p =>
+            assert(prunesOn(p, "tile_p"), s"$index: probe scan without a tile_p filter:\n$p")
+            scans(p).foreach { s =>
+              val read = s.metrics("numFiles").value
+              assert(read < files, s"$index: a probe read $read of $files files")
+            }
+          }
+        }
+    }
+  }
+
+  test("DeriveCoveringPrune: a cell-set conjunct prunes only on the recorded index at or below the cell level") {
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")
+    val t = s"${java.nio.file.Files.createTempDirectory("cellset_prune")}/t"
+    graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", 30, 6)
+    val tbl = graft.data.IcebergLite.read(spark, t)
+    val cells20 = CellIndex.Geohash.coverBox(BBox(-1.0, 51.0, 0.5, 52.0), 20).toSeq
+    val cell4 = graft.core.Geohash.encode(-0.75, 51.25, 4)
+    def derives(cond: org.apache.spark.sql.Column): Boolean =
+      tbl.where(cond).queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) =>
+          c.find {
+            case In(a, _) => a.references.exists(_.name == "tile_p")
+            case InSet(a, _) => a.references.exists(_.name == "tile_p")
+            case _ => false
+          }
+      }.flatten.nonEmpty
+    def same(cond: org.apache.spark.sql.Column): Unit = {
+      val q = tbl.where(cond).select("c_custkey"); val e = pts.where(cond).select("c_custkey")
+      assert(q.exceptAll(e).isEmpty && e.exceptAll(q).isEmpty, s"rows changed under $cond")
+    }
+    val in20 = gf.gh_encode($"lon", $"lat", 20).isin(cells20: _*)
+    val eq20 = gf.gh_encode($"lon", $"lat", 20) === cells20.head
+    val in4 = gf.gh_encode($"lon", $"lat", 4) === cell4 // coarser than the 6-bit prefix
+    val otherIndex = gf.s2u_cell($"lon", $"lat", 9).isin(
+      CellIndex.S2U.coverBox(BBox(-1.0, 51.0, 0.5, 52.0), 9).toSeq: _*)
+    val swapped = gf.gh_encode($"lat", $"lon", 20).isin(cells20: _*)
+    assert(derives(in20) && derives(eq20))
+    assert(!derives(in4) && !derives(otherIndex) && !derives(swapped))
+    Seq(in20, eq20, in4, otherIndex, swapped).foreach(same)
+    assert(tbl.where(in20).count() > 0)
+    // on H3U: a listed value that is no cell at the conjunct's resolution
+    // (here a res-0 cell, coarser than the prefix) keeps no row and is
+    // dropped from the derived list instead of failing the plan
+    val small = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
+    val h3 = s"${java.nio.file.Files.createTempDirectory("cellset_prune_h3")}/t"
+    graft.data.IcebergLite.writeTiled(small, h3, "lon", "lat", 7, 1, index = CellIndex.H3U)
+    val h3Cells = CellIndex.H3U.coverBox(BBox(-1.0, 51.0, 0.5, 52.0), 5).toSeq :+
+      graft.core.H3U.latLngToCell(51.25, -0.75, 0)
+    val inH3 = gf.h3u_cell($"lon", $"lat", 5).isin(h3Cells: _*)
+    val q = graft.data.IcebergLite.read(spark, h3).where(inH3)
+    assert(prunesOn(q.queryExecution.executedPlan, "tile_p"), q.queryExecution.executedPlan.toString)
+    val e = small.where(inH3)
+    assert(q.count() > 0 && q.select("c_custkey").exceptAll(e.select("c_custkey")).isEmpty &&
+      e.select("c_custkey").exceptAll(q.select("c_custkey")).isEmpty)
+  }
+
+  test("budget: a knnRing probe is one job with no broadcast, and a contained indexed kNN one job") {
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")
+    // a probe is one TakeOrderedAndProject collect: the jobs are the probes
+    var sites: Seq[String] = Nil
+    val plans = graft.QueryPlans.of(spark) {
+      sites = graft.JobCount.sites(spark)(
+        SpatialOps.knnRing(pts, "lon", "lat", 1, 139.75, 35.5, 10, 16, "c_custkey").collect())
+    }
+    val probePlans = plans.filter(_.isInstanceOf[TakeOrderedAndProjectExec])
+    assert(probePlans.nonEmpty && sites.size == probePlans.size,
+      s"${sites.mkString("; ")}\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.toString.contains("BroadcastExchange")), plans.mkString("\n"))
+    // geohash prefix 4 (90x45 degree partitions): the Tokyo disc lies inside
+    // its probed partition, so the candidate probe is the answer
+    val t = s"${java.nio.file.Files.createTempDirectory("knn_one_job")}/t"
+    graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", 30, 4)
+    def knn() = SpatialOps.knnIndexed(spark, t, 139.75, 35.5, 10, "c_custkey").collect()
+    knn() // resolves the snapshot
+    val again = graft.JobCount.sites(spark)(knn())
+    assert(again.size == 1, again.mkString("; "))
   }
 
   test("knnRing: k > table rows terminates via capped probe and returns all rows") {
@@ -377,15 +496,14 @@ class PlanSpec extends AnyFunSuite {
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
     graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 7, 4, index = CellIndex.H3U)
     val (qx, qy) = (-0.75, 51.25)
-    val got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
+    var got: DataFrame = null
+    val probed = probes {
+      got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
+    }
     val brute = SpatialOps.knnBrute(pts, "lon", "lat", Seq((0, qx, qy)), 10, "c_custkey")
-      .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    val ring = got.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    assert(ring.toSeq == brute.toSeq)
-    // partition pruning visible in the final plan
-    val pf = got.queryExecution.executedPlan.toString.linesIterator
-      .find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("tile_p#"), pf)
+    assert(ranked(got) == ranked(brute))
+    // partition pruning on every probe
+    assert(probed.nonEmpty && probed.forall(prunesOn(_, "tile_p")), probed.mkString("\n"))
   }
 
   test("knnIndexedS2: manifest-count expansion on an S2-tiled table matches brute force") {
@@ -395,16 +513,14 @@ class PlanSpec extends AnyFunSuite {
     graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 12, 7, index = CellIndex.S2U)
     // three query points incl. one near the +x/+y face edge (lon 45)
     Seq((-0.75, 51.25), (139.75, 35.5), (44.9, 10.0)).foreach { case (qx, qy) =>
-      val got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
+      var got: DataFrame = null
+      val probed = probes {
+        got = SpatialOps.knnIndexed(spark, s"$dir/t", qx, qy, 10, "c_custkey")
+      }
       val brute = SpatialOps.knnBrute(pts, "lon", "lat", Seq((0, qx, qy)), 10, "c_custkey")
-        .select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-      val ring = got.select("rank", "c_custkey").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-      assert(ring.toSeq == brute.toSeq, s"mismatch at ($qx, $qy)")
+      assert(ranked(got) == ranked(brute), s"mismatch at ($qx, $qy)")
+      assert(probed.nonEmpty && probed.forall(prunesOn(_, "tile_p")), probed.mkString("\n"))
     }
-    val got = SpatialOps.knnIndexed(spark, s"$dir/t", -0.75, 51.25, 10, "c_custkey")
-    val pf = got.queryExecution.executedPlan.toString.linesIterator
-      .find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("tile_p#"), pf)
   }
 
   test("DeriveCoveringPrune: H3-tiled table derives a polyfill IN-list prune") {
@@ -683,7 +799,7 @@ class PlanSpec extends AnyFunSuite {
         assert(first.count(_.contains("IcebergLite")) == 2, s"$index: ${first.mkString("; ")}")
         val again = graft.JobCount.sites(spark)(knn())
         assert(!again.exists(_.contains("IcebergLite")), s"$index: ${again.mkString("; ")}")
-        // what is left is the k-th-distance job and the final top-k
+        // what is left is the candidate probe and at most one covering probe
         assert(again.size <= 2, s"$index: ${again.mkString("; ")}")
     }
   }
@@ -702,19 +818,21 @@ class PlanSpec extends AnyFunSuite {
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
     val inBox = $"lon" >= box.minLon && $"lon" <= box.maxLon &&
                 $"lat" >= box.minLat && $"lat" <= box.maxLat
-    val q = graft.data.IcebergLite.read(spark, t).where(inBox).select("c_custkey")
-    val prefixIns = q.queryExecution.optimizedPlan.collect {
-      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
-        cond.collect {
-          case e @ (_: org.apache.spark.sql.catalyst.expressions.In |
-                    _: org.apache.spark.sql.catalyst.expressions.InSet)
-            if e.references.exists(_.name == "tile_p") => e
-        }
-    }.flatten
-    assert(prefixIns.isEmpty, s"derived a prune for an unknown index: $prefixIns")
-    val expect = pts.where(inBox).select("c_custkey")
-    assert(q.count() > 0)
-    assert(q.exceptAll(expect).isEmpty && expect.exceptAll(q).isEmpty)
+    // a box, and a cell set of that index's own cells, derive nothing
+    val inCells = gf.h3u_cell($"lon", $"lat", 7).isin(CellIndex.H3U.coverBox(box, 7).toSeq: _*)
+    Seq(inBox, inCells).foreach { cond =>
+      val q = graft.data.IcebergLite.read(spark, t).where(cond).select("c_custkey")
+      val prefixIns = q.queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) =>
+          c.collect {
+            case e @ (_: In | _: InSet) if e.references.exists(_.name == "tile_p") => e
+          }
+      }.flatten
+      assert(prefixIns.isEmpty, s"derived a prune for an unknown index: $prefixIns")
+      val expect = pts.where(cond).select("c_custkey")
+      assert(q.count() > 0)
+      assert(q.exceptAll(expect).isEmpty && expect.exceptAll(q).isEmpty)
+    }
   }
 
   test("knnIndexed: a layout that disagrees with the manifest throws, not an empty answer") {

@@ -243,4 +243,12 @@ class SqlFunctionsSpec extends AnyFunSuite {
       conv(substring(md5(col("s")), 1, 15), 16, 10).cast("bigint").as("ref")).collect()
     hof.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }
+
+  test("DeriveCoveringPrune: a covering planned after 300 distinct ones is served from the memo") {
+    def plan(b: graft.core.BBox) = DeriveCoveringPrune.coveringCells(CellIndex.Geohash, b, 12, None)
+    (1 to 300).foreach(i => plan(graft.core.BBox(i * 0.1, 0.0, i * 0.1 + 0.05, 0.05)))
+    val repeat = graft.core.BBox(50.0, 10.0, 51.0, 11.0)
+    // the memo returns the instance it stored; a recomputed covering is new
+    assert(plan(repeat) eq plan(repeat), "a full memo no longer admits a new covering")
+  }
 }
