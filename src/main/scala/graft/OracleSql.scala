@@ -107,7 +107,7 @@ object OracleSql {
     s"CAST(('0x' || substring(md5($s), 1, 15)) AS BIGINT)"
 
   // ---- cube-face Morton quadkey (S2-style faces, SQL-expressible ordering;
-  //      the Hilbert variant lives in graft.core.S2Quad and is checked by
+  //      the Hilbert variant lives in graft.core.S2U and is checked by
   //      Scala tests — Hilbert needs a loop, which SQL can't express) ----
 
   /** Ordered (column, expression) steps computing the quadkey; expressions

@@ -252,17 +252,18 @@ object SparkEntry {
         case (df, (c, e)) => df.withColumn(c, expr(e))
       }.select("c_custkey", "quad")
     },
-    "q15_s2_cells" -> gq { (s, dir) => // Hilbert S2-style ids (no SQL oracle: loop)
-      // dual path (VERDICT r1 #7): the decode→encode round trip re-derives
-      // every id through the inverse pipeline; rt_ok must be all-true
-      // (asserted in DualPathSpec)
+    "q15_s2_cells" -> gq { (s, dir) =>
+      // published-layout S2 ids (graft.core.S2U) at level 12 with their
+      // level-8 parent and token; no SQL oracle, DuckDB has no S2. Dual
+      // path: the decode→encode round trip re-derives every id through
+      // the inverse pipeline; rt_ok must be all-true (DualPathSpec)
       val pos = SpatialOps.withDerivedPosition(
         ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pos.withColumn("s2", gf.s2_cell(col("lon"), col("lat"), 12))
-        .withColumn("s2_parent", gf.s2_parent(col("s2"), 12, 8))
-        .withColumn("s2_token", gf.s2_token(col("s2"), 12))
-        .withColumn("_c", gf.s2_center(col("s2"), 12))
-        .withColumn("rt_ok", gf.s2_cell(col("_c.lon"), col("_c.lat"), 12) === col("s2"))
+      pos.withColumn("s2", gf.s2u_cell(col("lon"), col("lat"), 12))
+        .withColumn("s2_parent", gf.s2u_parent(col("s2"), 8))
+        .withColumn("s2_token", gf.s2u_token(col("s2")))
+        .withColumn("_c", gf.s2u_center(col("s2")))
+        .withColumn("rt_ok", gf.s2u_cell(col("_c.lon"), col("_c.lat"), 12) === col("s2"))
         .select("c_custkey", "s2", "s2_parent", "s2_token", "rt_ok")
     },
     "q19_hex_cells" -> gq { (s, dir) =>
@@ -272,17 +273,18 @@ object SparkEntry {
         .select("c_custkey", "hex")
     },
     "q47_h3_cells" -> gq { (s, dir) =>
-      // icosahedral aperture-7 H3-style cells (graft.core.H3Ico; iterative
-      // digit extraction — no SQL oracle; H3IcoSpec is the property oracle).
-      // rt_ok: center re-encodes to the same cell (exact in face interiors)
+      // Uber-H3 bit-compatible cells (graft.core.H3U) at res 5 with their
+      // res-3 parent and pentagon flag; no SQL oracle, DuckDB has no H3.
+      // rt_ok: the decoded center re-encodes to the same cell, on every
+      // row (DualPathSpec)
       val pos = SpatialOps.withDerivedPosition(
         ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-      pos.withColumn("h3", gf.h3_cell(col("lon"), col("lat"), 5))
-        .withColumn("h3_parent", gf.h3_parent(col("h3"), 3))
-        .withColumn("is_vertex", gf.h3_is_vertex(col("h3")))
-        .withColumn("h3_center", gf.h3_center(col("h3")))
+      pos.withColumn("h3", gf.h3u_cell(col("lon"), col("lat"), 5))
+        .withColumn("h3_parent", gf.h3u_parent(col("h3"), 3))
+        .withColumn("is_vertex", gf.h3u_is_pentagon(col("h3")))
+        .withColumn("h3_center", gf.h3u_center(col("h3")))
         .withColumn("rt_ok",
-          gf.h3_cell(col("h3_center.lon"), col("h3_center.lat"), 5) === col("h3"))
+          gf.h3u_cell(col("h3_center.lon"), col("h3_center.lat"), 5) === col("h3"))
         .select("c_custkey", "h3", "h3_parent", "is_vertex", "rt_ok")
     },
     "q56_h3u_box" -> gq { (s, dir) =>
@@ -382,8 +384,8 @@ object SparkEntry {
       // Uber-H3 BIT-COMPATIBLE cells (graft.core.H3U; published golden
       // vectors pin the id layout in H3USpec — no SQL oracle is possible,
       // DuckDB has no H3). rt_ok: decode center re-encodes EXACTLY (the
-      // cross-face overage decode makes this hold for every row, unlike
-      // the structural twin q47's 99%)
+      // cross-face overage decode makes this hold for every row, as it
+      // does for q47 at res 5)
       val pos = SpatialOps.withDerivedPosition(
         ld(s, dir, "customer").select("c_custkey"), "c_custkey")
       pos.withColumn("h3", gf.h3u_cell(col("lon"), col("lat"), 7))
@@ -395,12 +397,13 @@ object SparkEntry {
         .select("c_custkey", "h3", "h3_parent", "token", "is_pent", "rt_ok")
     },
     "q48_h3_cell_join" -> gq { (s, dir) =>
-      // H3 cells as the distributed join key (q05's shape on the hex index)
+      // bit-compatible H3 cells (H3U, res 4) as the distributed join key
+      // (q05's shape on the hex index); no SQL oracle, DuckDB has no H3
       val c = SpatialOps.withDerivedPosition(ld(s, dir, "customer").select("c_custkey"), "c_custkey")
-        .withColumn("h3", gf.h3_cell(col("lon"), col("lat"), 4))
+        .withColumn("h3", gf.h3u_cell(col("lon"), col("lat"), 4))
         .groupBy("h3").agg(count(lit(1)).as("n_cust"))
       val p = SpatialOps.withDerivedPosition(ld(s, dir, "supplier").select("s_suppkey"), "s_suppkey")
-        .withColumn("h3", gf.h3_cell(col("lon"), col("lat"), 4))
+        .withColumn("h3", gf.h3u_cell(col("lon"), col("lat"), 4))
         .groupBy("h3").agg(count(lit(1)).as("n_supp"))
       c.join(p, "h3").select("h3", "n_cust", "n_supp")
     },

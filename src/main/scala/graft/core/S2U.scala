@@ -9,10 +9,11 @@ package graft.core
   * Derivation vs transcription (same policy as [[H3U]]): the only
   * transcribed data are the two CANONICAL 4-entry Hilbert traversal tables
   * (kPosToIJ row 0 and kPosToOrientation — the mathematical definition of
-  * the Hilbert sub-cell order) and the 6 published face uv frames (shared
-  * with [[S2Quad]]); the 4-bit-block lookup tables are DERIVED at class
-  * load by the published recursive construction, and the other kPosToIJ
-  * rows are derived from row 0 by applying swap/invert.
+  * the Hilbert sub-cell order) and the 6 published face uv frames, which
+  * live here with the other sphere ↔ cube-face helpers; the 4-bit-block
+  * lookup tables are DERIVED at class load by the published recursive
+  * construction, and the other kPosToIJ rows are derived from row 0 by
+  * applying swap/invert.
   *
   * Bit-compatibility caveat, stated honestly: this sandbox has no S2
   * library and no network, so official golden VECTORS cannot be checked
@@ -77,6 +78,51 @@ object S2U {
   require(posToIJ.forall(_.sorted.sameElements(Array(0, 1, 2, 3))),
     "derived posToIJ rows are not permutations")
 
+  // ---- sphere ↔ cube-face (u,v): the six published face frames ----
+
+  def xyzFromLonLat(lon: Double, lat: Double): (Double, Double, Double) = {
+    val phi = math.toRadians(lat); val theta = math.toRadians(lon)
+    val cosphi = math.cos(phi)
+    (cosphi * math.cos(theta), cosphi * math.sin(theta), math.sin(phi))
+  }
+
+  def lonLatFromXyz(x: Double, y: Double, z: Double): (Double, Double) = {
+    val lon = math.toDegrees(math.atan2(y, x))
+    val lat = math.toDegrees(math.atan2(z, math.sqrt(x * x + y * y)))
+    (lon, lat)
+  }
+
+  /** Face 0..5: axis of largest |component|; +3 when negative. */
+  def faceOf(x: Double, y: Double, z: Double): Int = {
+    val ax = math.abs(x); val ay = math.abs(y); val az = math.abs(z)
+    if (ax >= ay && ax >= az) { if (x >= 0) 0 else 3 }
+    else if (ay >= az) { if (y >= 0) 1 else 4 }
+    else { if (z >= 0) 2 else 5 }
+  }
+
+  /** (u, v) on the given face (central projection). */
+  def uvOnFace(face: Int, x: Double, y: Double, z: Double): (Double, Double) = face match {
+    case 0 => (y / x, z / x)
+    case 1 => (-x / y, z / y)
+    case 2 => (-x / z, -y / z)
+    case 3 => (z / x, y / x)
+    case 4 => (z / y, -x / y)
+    case 5 => (-y / z, -x / z)
+    case _ => throw new IllegalArgumentException(s"face $face")
+  }
+
+  /** Direction vector of face-plane point (u, v) — valid for |u|,|v| > 1
+    * too, i.e. for a point past the face's edge. */
+  def xyzFromFaceUv(face: Int, u: Double, v: Double): (Double, Double, Double) = face match {
+    case 0 => (1, u, v)
+    case 1 => (-u, 1, v)
+    case 2 => (-u, -v, 1)
+    case 3 => (-1, -v, -u)
+    case 4 => (v, -1, -u)
+    case 5 => (v, u, -1)
+    case _ => throw new IllegalArgumentException(s"face $face")
+  }
+
   // ---- quadratic st ↔ uv (published S2_QUADRATIC_PROJECTION) ----
   def stToUv(s: Double): Double =
     if (s >= 0.5) (1.0 / 3.0) * (4.0 * s * s - 1.0)
@@ -91,9 +137,9 @@ object S2U {
   // ---- encode ----
   /** Leaf (level-30) cell id of a lon/lat point. */
   def lonLatToCell(lonDeg: Double, latDeg: Double): Long = {
-    val (x, y, z) = S2Quad.xyzFromLonLat(lonDeg, latDeg)
-    val face = S2Quad.faceOf(x, y, z)
-    val (u, v) = S2Quad.uvOnFace(face, x, y, z)
+    val (x, y, z) = xyzFromLonLat(lonDeg, latDeg)
+    val face = faceOf(x, y, z)
+    val (u, v) = uvOnFace(face, x, y, z)
     fromFaceIj(face, stToIj(uvToSt(u)), stToIj(uvToSt(v)))
   }
 
@@ -190,8 +236,8 @@ object S2U {
     val ti = 2L * j + delta
     val u = stToUv(si.toDouble / (1L << (MaxLevel + 1)))
     val v = stToUv(ti.toDouble / (1L << (MaxLevel + 1)))
-    val (x, y, z) = S2Quad.xyzFromFaceUv(face, u, v)
-    S2Quad.lonLatFromXyz(x, y, z)
+    val (x, y, z) = xyzFromFaceUv(face, u, v)
+    lonLatFromXyz(x, y, z)
   }
 
   /** A LOWER bound (degrees) on the angular width of any level-`level`
@@ -287,9 +333,9 @@ object S2U {
       g += 45.0
     }
     samples.toSeq.map { case (lo, la) =>
-      val (x, y, z) = S2Quad.xyzFromLonLat(lo, la)
-      val face = S2Quad.faceOf(x, y, z)
-      val (u, v) = S2Quad.uvOnFace(face, x, y, z)
+      val (x, y, z) = xyzFromLonLat(lo, la)
+      val face = faceOf(x, y, z)
+      val (u, v) = uvOnFace(face, x, y, z)
       (face, stToIj(uvToSt(u)) >> shift, stToIj(uvToSt(v)) >> shift)
     }.groupBy(_._1).map { case (face, pts) =>
       face -> (pts.map(_._2).min, pts.map(_._2).max,
@@ -354,8 +400,8 @@ object S2U {
     val vLo = stToUv(j0.toDouble / (1L << MaxLevel))
     val vHi = stToUv((j0 + size).toDouble / (1L << MaxLevel))
     Array((uLo, vLo), (uHi, vLo), (uHi, vHi), (uLo, vHi)).map { case (u, v) =>
-      val (x, y, z) = S2Quad.xyzFromFaceUv(face, u, v)
-      S2Quad.lonLatFromXyz(x, y, z)
+      val (x, y, z) = xyzFromFaceUv(face, u, v)
+      lonLatFromXyz(x, y, z)
     }
   }
 

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sql.CellIndex
 
@@ -47,9 +48,12 @@ import graft.sql.CellIndex
   */
 object IcebergLite {
   final case class PartitionEntry(partition: String, rows: Long, checksum: Long, snapshotId: Long)
+  /** `schema` is what a read of the snapshot returns; it lets a snapshot
+    * with no entries load as a typed empty table. */
   final case class Manifest(snapshotId: Long, parentSnapshotId: Long,
                             partitionCol: String, properties: Map[String, String],
-                            entries: Seq[PartitionEntry])
+                            entries: Seq[PartitionEntry],
+                            schema: Option[StructType] = None)
 
   /** Property keys consumed by the optimizer rule. */
   val PropPrefixBits = "tile.prefix.bits"
@@ -77,7 +81,7 @@ object IcebergLite {
     val p = manifestDir(table).resolve(s"snap-$snap.tsv")
     if (!Files.exists(p)) return None
     val lines = Files.readAllLines(p).asScala.toSeq
-    val header = lines.head.split("\t", -1) // id parentId partitionCol props
+    val header = lines.head.split("\t", -1) // id parentId partitionCol props schema
     val props =
       if (header.length < 4 || header(3).isEmpty) Map.empty[String, String]
       else header(3).split(";").map { kv =>
@@ -87,13 +91,19 @@ object IcebergLite {
       val f = l.split("\t")
       PartitionEntry(f(0), f(1).toLong, f(2).toLong, f(3).toLong)
     }
-    Some(Manifest(header(0).toLong, header(1).toLong, header(2), props, entries))
+    // the schema has its own field: its JSON may hold the ';' and '='
+    // that separate properties
+    val schema =
+      if (header.length < 5 || header(4).isEmpty) None
+      else Some(DataType.fromJson(header(4)).asInstanceOf[StructType])
+    Some(Manifest(header(0).toLong, header(1).toLong, header(2), props, entries, schema))
   }
 
   private def commitManifest(table: String, m: Manifest): Unit = {
     Files.createDirectories(manifestDir(table))
     val props = m.properties.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";")
-    val body = (s"${m.snapshotId}\t${m.parentSnapshotId}\t${m.partitionCol}\t$props" +:
+    val schema = m.schema.fold("")(_.json)
+    val body = (s"${m.snapshotId}\t${m.parentSnapshotId}\t${m.partitionCol}\t$props\t$schema" +:
       m.entries.sortBy(e => (e.partition, e.snapshotId))
         .map(e => s"${e.partition}\t${e.rows}\t${e.checksum}\t${e.snapshotId}"))
       .mkString("\n")
@@ -117,6 +127,13 @@ object IcebergLite {
     require(rows.length <= (1 << 20),
       s"${rows.length} partitions exceed the manifest guard (2^20); use a coarser prefix")
     rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+  }
+
+  /** The schema a read of `df`'s table returns: data columns, then the
+    * partition column (a parquet read puts directory columns last). */
+  private def tableSchema(df: DataFrame, partitionCol: String): StructType = {
+    val (part, data) = df.schema.fields.partition(_.name == partitionCol)
+    StructType((data ++ part).map(_.copy(nullable = true)))
   }
 
   private def snapDir(table: String, snapshotId: Long) = s"$table/data/snapid=$snapshotId"
@@ -164,7 +181,8 @@ object IcebergLite {
         case None =>
           // brand-new table from an empty DataFrame: commit an explicit empty
           // snapshot-0 (with properties) instead of NoSuchElementException
-          val m = Manifest(snapshotId, -1L, partitionCol, properties, Nil)
+          val m = Manifest(snapshotId, -1L, partitionCol, properties, Nil,
+            Some(tableSchema(df, partitionCol)))
           commitManifest(table, m); m
       }
     }
@@ -174,7 +192,7 @@ object IcebergLite {
     val newEntries = todo.map(p => PartitionEntry(p, all(p)._1, all(p)._2, snapshotId))
     val m = Manifest(snapshotId, prior.map(_.snapshotId).getOrElse(-1L), partitionCol,
       prior.map(_.properties).getOrElse(Map.empty) ++ properties,
-      prior.map(_.entries).getOrElse(Nil) ++ newEntries)
+      prior.map(_.entries).getOrElse(Nil) ++ newEntries, Some(tableSchema(df, partitionCol)))
     commitManifest(table, m)
     if (injected) throw new RuntimeException(
       s"[injected] crashed after $failAfterPartitions partitions (snapshot $snapshotId committed)")
@@ -231,7 +249,8 @@ object IcebergLite {
     writeSnapshotFiles(df, table, partitionCol, snapshotId, incoming.keys.toSeq)
     val kept = prior.entries.filterNot(e => incoming.contains(e.partition))
     val m = Manifest(snapshotId, prior.snapshotId, partitionCol, prior.properties,
-      kept ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) })
+      kept ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
+      Some(tableSchema(df, partitionCol)))
     commitManifest(table, m)
     m
   }
@@ -248,7 +267,8 @@ object IcebergLite {
     val incoming = stats(df, partitionCol)
     writeSnapshotFiles(df, table, partitionCol, snapshotId, incoming.keys.toSeq)
     val m = Manifest(snapshotId, prior.snapshotId, partitionCol, prior.properties,
-      prior.entries ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) })
+      prior.entries ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
+      Some(tableSchema(df, partitionCol)))
     commitManifest(table, m)
     m
   }
@@ -278,8 +298,10 @@ object IcebergLite {
       .getOrElse(throw new IllegalStateException(s"no committed snapshot at $table")))
 
   private def load(spark: SparkSession, table: String, m: Manifest): DataFrame = {
-    if (m.entries.isEmpty) throw new IllegalStateException(
-      s"table $table snapshot ${m.snapshotId} has no data partitions")
+    if (m.entries.isEmpty) return m.schema
+      .map(spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
+      .getOrElse(throw new IllegalStateException(
+        s"table $table snapshot ${m.snapshotId} has no data partitions"))
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
     val dirs = m.entries.map(e =>
       s"$table/data/snapid=${e.snapshotId}/${esc(m.partitionCol)}=${esc(e.partition)}")
@@ -381,7 +403,8 @@ object IcebergLite {
     val incoming = stats(current, prior.partitionCol)
     writeSnapshotFiles(current, table, prior.partitionCol, snapshotId, incoming.keys.toSeq)
     val m = Manifest(snapshotId, prior.snapshotId, prior.partitionCol, prior.properties,
-      incoming.toSeq.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) })
+      incoming.toSeq.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
+      Some(tableSchema(current, prior.partitionCol)))
     commitManifest(table, m)
     m
   }

@@ -363,8 +363,7 @@ object SpatialOps {
       // sum across snapshots: appended partitions have one entry per snapshot
       val rows = IcebergLite.rowsByPartition(manifest)
         .flatMap { case (p, n) => p.toLongOption.map(_ -> n) }
-      if (rows.values.sum == 0) spark.emptyDataFrame.withColumn("rank", lit(0))
-      else knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
+      knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
         cells => cells.fold(snap.df)(cs => snap.df.where(col(manifest.partitionCol).isin(cs: _*))),
         Some(rows))
     }

@@ -17,17 +17,6 @@ import graft.sql.CellIndex
   * Streaming makes.
   */
 object StreamOps {
-  /** Scale-adaptive stateful-shuffle sizing: a streaming query's state /
-    * aggregation partition count is pinned at query start from
-    * `spark.sql.shuffle.partitions` (AQE is disabled in streaming), so a
-    * constant tuned for either local mode or the cluster is wrong at the
-    * other scale. Derive it from the INPUT volume — ≈64 MB of source per
-    * partition, floored at 1, capped at the session's parallelism: a
-    * 100 TB stream saturates to cluster parallelism (production behavior
-    * unchanged), while a small micro-batch stops paying one state-store
-    * commit + task per configured partition per trigger (guide §2.2).
-    * These one-shot queries use fresh checkpoints, so the per-run choice
-    * never conflicts with a prior run's pinned partitioning. */
   /** Source schema with a per-JVM (path, mtime) cache: six streaming
     * operators each re-read the same static source's parquet footers just
     * to declare the stream schema — metadata only, invalidated on file
@@ -41,6 +30,17 @@ object StreamOps {
     schemaCache.computeIfAbsent((path, mtime), _ => spark.read.parquet(path).schema)
   }
 
+  /** Scale-adaptive stateful-shuffle sizing: a streaming query's state /
+    * aggregation partition count is pinned at query start from
+    * `spark.sql.shuffle.partitions` (AQE is disabled in streaming), so a
+    * constant tuned for either local mode or the cluster is wrong at the
+    * other scale. Derive it from the INPUT volume — ≈64 MB of source per
+    * partition, floored at 1, capped at the session's parallelism: a
+    * 100 TB stream saturates to cluster parallelism (production behavior
+    * unchanged), while a small micro-batch stops paying one state-store
+    * commit + task per configured partition per trigger (guide §2.2).
+    * These one-shot queries use fresh checkpoints, so the per-run choice
+    * never conflicts with a prior run's pinned partitioning. */
   private def withInputSizedShuffle[T](spark: SparkSession, path: String)(body: => T): T = {
     def sizeOf(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(sizeOf).sum else f.length()

@@ -262,201 +262,6 @@ case class StContainsWkt(first: Expression, second: Expression, third: Expressio
     copy(first = f, second = s, third = t)
 }
 
-/** s2_cell(lon, lat, level) → LONG — S2-style cube-face + Hilbert cell id
-  * (extension per BASELINE.json north_star; see graft.core.S2Quad). */
-case class S2CellId(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "s2_cell"
-
-  override def nullSafeEval(lon: Any, lat: Any, level: Any): Any = {
-    val lo = lon.asInstanceOf[Double]; val la = lat.asInstanceOf[Double]
-    if (lo.isNaN || la.isNaN) null
-    else graft.core.S2Quad.cellId(lo, la, level.asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lon, lat, level) => s"""
-      if (${ghExpr.nanGuard2.format(lon, lat)}) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.core.S2Quad.cellId($lon, $lat, $level); }""")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** s2_parent(id, level, parent_level) → LONG (quadtree zoom-out). */
-case class S2Parent(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "s2_parent"
-  override def nullSafeEval(id: Any, level: Any, plevel: Any): Any =
-    graft.core.S2Quad.parent(id.asInstanceOf[Long], level.asInstanceOf[Int], plevel.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (i, l, p) => s"graft.core.S2Quad.parent($i, $l, $p)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** s2_center(id, level) → STRUCT<lon, lat>. */
-case class S2Center(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType =
-    StructType(Seq(StructField("lon", DoubleType, false), StructField("lat", DoubleType, false)))
-  override def prettyName: String = "s2_center"
-  override def nullSafeEval(id: Any, level: Any): Any = {
-    val (lon, lat) = graft.core.S2Quad.center(id.asInstanceOf[Long], level.asInstanceOf[Int])
-    InternalRow(lon, lat)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** s2_neighbors(id, level) → ARRAY<LONG> — ≤8 edge/corner neighbors,
-  * cross-face aware. */
-case class S2Neighbors(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "s2_neighbors"
-  override def nullSafeEval(id: Any, level: Any): Any =
-    new GenericArrayData(graft.core.S2Quad.neighbors(id.asInstanceOf[Long], level.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** s2_token(id, level) → STRING — display/interop form. */
-case class S2Token(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "s2_token"
-  override def nullSafeEval(id: Any, level: Any): Any =
-    UTF8String.fromString(graft.core.S2Quad.token(id.asInstanceOf[Long], level.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (i, l) =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.core.S2Quad.token($i, $l))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** h3_cell(lon, lat, res) → LONG — icosahedral aperture-7 hex cell id
-  * (H3-style, graft.core.H3Ico; honestly NOT Uber-H3-bit-compatible —
-  * see that object's doc). Codegen: static call in the per-row loop. */
-case class H3Cell(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell"
-  override def nullSafeEval(lon: Any, lat: Any, res: Any): Any = {
-    val lo = lon.asInstanceOf[Double]; val la = lat.asInstanceOf[Double]
-    if (lo.isNaN || la.isNaN) null
-    else graft.core.H3Ico.cellId(lo, la, res.asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lon, lat, res) => s"""
-      if (${ghExpr.nanGuard2.format(lon, lat)}) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.core.H3Ico.cellId($lon, $lat, $res); }""")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** h3_parent(id, parent_res) → LONG — digit truncation (exact hierarchy). */
-case class H3Parent(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "h3_parent"
-  override def nullSafeEval(id: Any, pres: Any): Any =
-    graft.core.H3Ico.parent(id.asInstanceOf[Long], pres.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (i, p) => s"graft.core.H3Ico.parent($i, $p)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** h3_center(id) → STRUCT<lon, lat>. */
-case class H3Center(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType =
-    StructType(Seq(StructField("lon", DoubleType, false), StructField("lat", DoubleType, false)))
-  override def prettyName: String = "h3_center"
-  override def nullSafeEval(id: Any): Any = {
-    val (lon, lat) = graft.core.H3Ico.center(id.asInstanceOf[Long])
-    InternalRow(lon, lat)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** h3_neighbors(id) → ARRAY<LONG> — ≤6 adjacent cells, cross-face aware. */
-case class H3Neighbors(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_neighbors"
-  override def nullSafeEval(id: Any): Any =
-    new GenericArrayData(graft.core.H3Ico.neighbors(id.asInstanceOf[Long]))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** h3_ring(id, k) → ARRAY<LONG> — cells at hex distance exactly k. */
-case class H3RingExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_ring"
-  override def nullSafeEval(id: Any, k: Any): Any =
-    new GenericArrayData(graft.core.H3Ico.ring(id.asInstanceOf[Long], k.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** h3_disk(id, k) → ARRAY<LONG> — all cells within hex distance k (H3's
-  * gridDisk). */
-case class H3Disk(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_disk"
-  override def nullSafeEval(id: Any, k: Any): Any =
-    new GenericArrayData(graft.core.H3Ico.disk(id.asInstanceOf[Long], k.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** h3_token(id) → STRING — display/interop form (face.base.res:digits). */
-case class H3TokenExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "h3_token"
-  override def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(graft.core.H3Ico.token(id.asInstanceOf[Long]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, i =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.core.H3Ico.token($i))")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** h3_children(id) → ARRAY<LONG> — the 7 aperture-7 children. */
-case class H3Children(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_children"
-  override def nullSafeEval(id: Any): Any =
-    new GenericArrayData(graft.core.H3Ico.children(id.asInstanceOf[Long]))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** h3_is_vertex(id) → BOOLEAN — pentagon-analog (icosahedron-vertex) flag. */
-case class H3IsVertex(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_is_vertex"
-  override def nullSafeEval(id: Any): Any =
-    graft.core.H3Ico.isVertexCell(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, i => s"graft.core.H3Ico.isVertexCell($i)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** h3_resolution(id) → INT. */
-case class H3Resolution(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "h3_resolution"
-  override def nullSafeEval(id: Any): Any = graft.core.H3Ico.resolution(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, i => s"graft.core.H3Ico.resolution($i)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** rolling_hash(text) → LONG — streaming polynomial fingerprint
   * (graft.core.TextHash; per-char loop, so no SQL oracle form). */
 case class RollingHash(child: Expression) extends UnaryExpression {

@@ -53,36 +53,6 @@ object GraftFunctions {
       (e: Seq[Expression]) => { require(e.length == 4, "haversine_m(lon1, lat1, lon2, lat2)"); HaversineM(cD(e(0)), cD(e(1)), cD(e(2)), cD(e(3))) }),
     ("st_contains_wkt", "st_contains_wkt(wkt, lon, lat) - point in WKT polygon",
       (e: Seq[Expression]) => { require(e.length == 3, "st_contains_wkt(wkt, lon, lat)"); StContainsWkt(cS(e(0)), cD(e(1)), cD(e(2))) }),
-    ("s2_cell", "s2_cell(lon, lat, level) - S2-style cube-face+Hilbert cell id",
-      (e: Seq[Expression]) => { require(e.length == 3, "s2_cell(lon, lat, level)"); S2CellId(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("s2_parent", "s2_parent(id, level, parent_level) - quadtree zoom out",
-      (e: Seq[Expression]) => { require(e.length == 3, "s2_parent(id, level, parent_level)"); S2Parent(cL(e(0)), cI(e(1)), cI(e(2))) }),
-    ("s2_center", "s2_center(id, level) - cell center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2_center(id, level)"); S2Center(cL(e(0)), cI(e(1))) }),
-    ("s2_neighbors", "s2_neighbors(id, level) - adjacent cells (cross-face aware)",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2_neighbors(id, level)"); S2Neighbors(cL(e(0)), cI(e(1))) }),
-    ("s2_token", "s2_token(id, level) - display token",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2_token(id, level)"); S2Token(cL(e(0)), cI(e(1))) }),
-    ("h3_cell", "h3_cell(lon, lat, res) - icosahedral aperture-7 hex cell id (H3-style)",
-      (e: Seq[Expression]) => { require(e.length == 3, "h3_cell(lon, lat, res)"); H3Cell(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("h3_parent", "h3_parent(id, parent_res) - zoom out by digit truncation",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3_parent(id, parent_res)"); H3Parent(cL(e(0)), cI(e(1))) }),
-    ("h3_center", "h3_center(id) - cell center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_center(id)"); H3Center(cL(e(0))) }),
-    ("h3_neighbors", "h3_neighbors(id) - adjacent cells (cross-face aware)",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_neighbors(id)"); H3Neighbors(cL(e(0))) }),
-    ("h3_ring", "h3_ring(id, k) - cells at hex distance exactly k",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3_ring(id, k)"); H3RingExpr(cL(e(0)), cI(e(1))) }),
-    ("h3_disk", "h3_disk(id, k) - all cells within hex distance k (gridDisk)",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3_disk(id, k)"); H3Disk(cL(e(0)), cI(e(1))) }),
-    ("h3_token", "h3_token(id) - display token (face.base.res:digits)",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_token(id)"); H3TokenExpr(cL(e(0))) }),
-    ("h3_children", "h3_children(id) - the 7 aperture-7 children",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_children(id)"); H3Children(cL(e(0))) }),
-    ("h3_is_vertex", "h3_is_vertex(id) - icosahedron-vertex (pentagon-analog) flag",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_is_vertex(id)"); H3IsVertex(cL(e(0))) }),
-    ("h3_resolution", "h3_resolution(id) - resolution of a cell id",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3_resolution(id)"); H3Resolution(cL(e(0))) }),
     ("rolling_hash", "rolling_hash(text) - streaming polynomial fingerprint",
       (e: Seq[Expression]) => { require(e.length == 1, "rolling_hash(text)"); RollingHash(cS(e(0))) }),
     ("rolling_hash_alt", "rolling_hash_alt(text) - dual-path twin of rolling_hash",
@@ -201,30 +171,11 @@ object functions {
     call_function("haversine_m", lon1, lat1, lon2, lat2)
   def st_contains_wkt(wkt: Column, lon: Column, lat: Column): Column =
     call_function("st_contains_wkt", wkt, lon, lat)
-  def s2_cell(lon: Column, lat: Column, level: Int): Column =
-    call_function("s2_cell", lon, lat, lit(level))
-  def s2_parent(id: Column, level: Int, parentLevel: Int): Column =
-    call_function("s2_parent", id, lit(level), lit(parentLevel))
-  def s2_center(id: Column, level: Int): Column = call_function("s2_center", id, lit(level))
-  def s2_neighbors(id: Column, level: Int): Column = call_function("s2_neighbors", id, lit(level))
-  def s2_token(id: Column, level: Int): Column = call_function("s2_token", id, lit(level))
   def hex_cell(lon: Column, lat: Column, size: Double): Column =
     call_function("hex_cell", lon, lat, lit(size))
   def hex_center(id: Column, size: Double): Column = call_function("hex_center", id, lit(size))
   def hex_neighbors(id: Column): Column = call_function("hex_neighbors", id)
   def hex_ring(id: Column, k: Int): Column = call_function("hex_ring", id, lit(k))
-  def h3_cell(lon: Column, lat: Column, res: Int): Column =
-    call_function("h3_cell", lon, lat, lit(res))
-  def h3_parent(id: Column, parentRes: Int): Column =
-    call_function("h3_parent", id, lit(parentRes))
-  def h3_center(id: Column): Column = call_function("h3_center", id)
-  def h3_neighbors(id: Column): Column = call_function("h3_neighbors", id)
-  def h3_ring(id: Column, k: Int): Column = call_function("h3_ring", id, lit(k))
-  def h3_disk(id: Column, k: Int): Column = call_function("h3_disk", id, lit(k))
-  def h3_token(id: Column): Column = call_function("h3_token", id)
-  def h3_children(id: Column): Column = call_function("h3_children", id)
-  def h3_is_vertex(id: Column): Column = call_function("h3_is_vertex", id)
-  def h3_resolution(id: Column): Column = call_function("h3_resolution", id)
   def derive_lon(imageId: Column): Column = call_function("derive_lon", imageId)
   def derive_lat(imageId: Column): Column = call_function("derive_lat", imageId)
   def caption_of(imageId: Column): Column = call_function("caption_of", imageId)

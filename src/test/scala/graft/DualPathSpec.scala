@@ -23,6 +23,14 @@ class DualPathSpec extends AnyFunSuite with PropHelper {
     val rows = q("q15_s2_cells").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[Boolean]("rt_ok")), "s2 round-trip violation")
+    rows.foreach { r =>
+      val s2 = r.getAs[Long]("s2"); val p = r.getAs[Long]("s2_parent")
+      assert(graft.core.S2U.parent(s2, 8) == p)
+      assert(graft.core.S2U.level(p) == 8 && graft.core.S2U.level(s2) == 12)
+      assert(graft.core.S2U.contains(p, s2))
+      assert(r.getAs[String]("s2_token") == graft.core.S2U.token(s2))
+      assert(graft.core.S2U.isValid(s2))
+    }
   }
 
   test("q20 image tiles: every point inside its tile's decoded bbox") {
@@ -61,17 +69,38 @@ class DualPathSpec extends AnyFunSuite with PropHelper {
     }
   }
 
-  test("q47 h3 cells: center round trip ≥99% (face-edge cells documented); parents consistent") {
+  test("q47 h3 cells: EXACT center round trip on every row; parents bit-compatible") {
     val rows = q("q47_h3_cells").collect()
     assert(rows.nonEmpty)
-    val rtRate = rows.count(_.getAs[Boolean]("rt_ok")).toDouble / rows.length
-    assert(rtRate >= 0.99, s"h3 center round-trip rate $rtRate")
+    assert(rows.forall(_.getAs[Boolean]("rt_ok")), "h3 center round-trip must be exact")
     rows.foreach { r =>
       val h3 = r.getAs[Long]("h3"); val p = r.getAs[Long]("h3_parent")
-      assert(graft.core.H3Ico.parent(h3, 3) == p)
-      assert(graft.core.H3Ico.resolution(p) == 3)
+      assert(graft.core.H3U.cellToParent(h3, 3) == p)
+      assert(graft.core.H3U.resolution(p) == 3 && graft.core.H3U.resolution(h3) == 5)
+      assert(graft.core.H3U.isValid(h3) && graft.core.H3U.isValid(p))
+      assert(r.getAs[Boolean]("is_vertex") == graft.core.H3U.isPentagon(h3))
     }
-    assert(q("q48_h3_cell_join").count() > 0)
+  }
+
+  test("q48 h3 cell join: keys are res-4 H3U cells; counts equal a driver-side group-by") {
+    val rows = q("q48_h3_cell_join").collect()
+    assert(rows.nonEmpty)
+    def cellCounts(table: String, key: String): Map[Long, Long] =
+      graft.engine.SpatialOps.withDerivedPosition(
+        spark.read.parquet(s"$sf/$table.parquet").select(key), key)
+        .collect().toSeq
+        .groupBy(r => graft.core.H3U.latLngToCell(r.getDouble(2), r.getDouble(1), 4))
+        .map { case (h, rs) => h -> rs.length.toLong }
+    val cust = cellCounts("customer", "c_custkey")
+    val supp = cellCounts("supplier", "s_suppkey")
+    val expect = (cust.keySet intersect supp.keySet).map(h => (h, cust(h), supp(h)))
+    rows.foreach { r =>
+      val h3 = r.getAs[Long]("h3")
+      assert(graft.core.H3U.isValid(h3) && graft.core.H3U.resolution(h3) == 4)
+    }
+    val got = rows.map(r => (r.getAs[Long]("h3"), r.getAs[Long]("n_cust"), r.getAs[Long]("n_supp")))
+    assert(got.length == expect.size && got.toSet == expect,
+      s"extra=${got.toSet -- expect} missing=${expect -- got.toSet}")
   }
 
   test("q55 h3u cells: EXACT center round trip on every row; goldens + parents bit-compatible") {

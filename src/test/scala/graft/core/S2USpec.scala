@@ -1,6 +1,8 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.Gen
+import graft.PropHelper
 
 /** Validation of [[S2U]] against the PUBLISHED S2 cell-id scheme. No S2
   * library exists in this sandbox, so official golden vectors cannot be
@@ -9,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * algebra), and derived landmark goldens whose regional prefixes match
   * publicly cited S2 tokens (NYC 89c2…, London 4876…, Paris 47e6…) and
   * the s2sphere-documented id of (0°, 0°). */
-class S2USpec extends AnyFunSuite {
+class S2USpec extends AnyFunSuite with PropHelper {
 
   test("documented layout: six level-0 face cells are tokens 1,3,5,7,9,b") {
     val tokens = (0 until 6).map(f => S2U.token(S2U.parent(S2U.fromFaceIj(f, 0, 0), 0)))
@@ -25,6 +27,36 @@ class S2USpec extends AnyFunSuite {
     assert(S2U.token(S2U.lonLatToCellAt(-0.1276, 51.5074, 12)) == "487604d") // London
     assert(S2U.token(S2U.lonLatToCellAt(2.3522, 48.8566, 12)) == "47e66e1")  // Paris
     assert(S2U.token(S2U.lonLatToCellAt(139.6917, 35.6895, 12)) == "60188cd") // Tokyo
+  }
+
+  test("xyz/face/uv round-trips to the same direction") {
+    forAll(Gen.choose(-180.0, 179.999999), Gen.choose(-89.9, 89.9)) { (lon, lat) =>
+      val (x, y, z) = S2U.xyzFromLonLat(lon, lat)
+      val f = S2U.faceOf(x, y, z)
+      val (u, v) = S2U.uvOnFace(f, x, y, z)
+      assert(u >= -1.0000001 && u <= 1.0000001 && v >= -1.0000001 && v <= 1.0000001,
+        s"uv out of face range: $u $v at ($lon,$lat) face $f")
+      val (lon2, lat2) = S2U.lonLatFromXyz(S2U.xyzFromFaceUv(f, u, v)._1,
+        S2U.xyzFromFaceUv(f, u, v)._2, S2U.xyzFromFaceUv(f, u, v)._3)
+      assert(math.abs(lat2 - lat) < 1e-9)
+      assert(math.abs(Geohash.normLon(lon2 - lon + 180.0) - 0.0 + 180.0) % 360.0 < 1e-9 ||
+             math.abs(lon2 - lon) < 1e-9)
+    }
+  }
+
+  test("six faces partition the sphere: every point gets exactly one cell") {
+    // counts per face over a lat/lon grid are all nonzero and sum to total
+    var total = 0
+    val perFace = new Array[Int](6)
+    for (lon <- -175 to 175 by 7; lat <- -85 to 85 by 7) {
+      val id = S2U.lonLatToCell(lon.toDouble, lat.toDouble)
+      val (x, y, z) = S2U.xyzFromLonLat(lon.toDouble, lat.toDouble)
+      assert(S2U.isValid(id) && S2U.faceOf(id) == S2U.faceOf(x, y, z))
+      perFace(S2U.faceOf(id)) += 1
+      total += 1
+    }
+    assert(perFace.forall(_ > 0), perFace.mkString(","))
+    assert(perFace.sum == total)
   }
 
   test("(face,i,j) <-> leaf id round trips exactly") {

@@ -173,6 +173,21 @@ class IcebergLiteSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty write reads back as a typed empty table, and knnIndexed answers its schema plus rank") {
+    import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+    def fields(df: DataFrame): Seq[(String, DataType)] = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val source = Seq("c_custkey" -> LongType, "lon" -> DoubleType, "lat" -> DoubleType,
+      "tile" -> LongType, "tile_p" -> LongType)
+    val t = s"${tmp("empty_typed")}/t"
+    IcebergLite.writeTiled(pts(1, 4).where($"c_custkey" < 0), t, "lon", "lat", 30, 6)
+    val back = IcebergLite.read(spark, t)
+    assert(fields(back) == source)
+    assert(back.count() == 0)
+    val knn = SpatialOps.knnIndexed(spark, t, 2.35, 48.86, 10, "c_custkey")
+    assert(fields(knn) == source :+ ("rank" -> IntegerType))
+    assert(knn.isEmpty)
+  }
+
   // stops the suite's SparkContext: keep this test last
   test("a stopped context's slots are dropped, so they cannot keep its session alive") {
     val t = s"${tmp("slot_stop")}/t"

@@ -119,35 +119,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(dyn.map(_.getBoolean(0)).toSeq == got.map(_.getBoolean(2)).toSeq)
   }
 
-  test("h3_* expressions match graft.core.H3Ico (Column API and SQL)") {
-    import graft.core.H3Ico
-    val got = pts
-      .withColumn("h3", gf.h3_cell($"lon", $"lat", 5))
-      .withColumn("p3", gf.h3_parent($"h3", 3))
-      .withColumn("vx", gf.h3_is_vertex($"h3"))
-      .withColumn("res", gf.h3_resolution($"h3"))
-      .withColumn("c", gf.h3_center($"h3"))
-      .withColumn("nbrs", gf.h3_neighbors($"h3"))
-      .withColumn("disk", gf.h3_disk($"h3", 2))
-      .withColumn("tok", gf.h3_token($"h3"))
-      .orderBy("id").collect()
-    got.foreach { r =>
-      val expect = H3Ico.cellId(r.getDouble(1), r.getDouble(2), 5)
-      assert(r.getLong(3) == expect)
-      assert(r.getLong(4) == H3Ico.parent(expect, 3))
-      assert(r.getBoolean(5) == H3Ico.isVertexCell(expect))
-      assert(r.getInt(6) == 5)
-      val (clon, clat) = H3Ico.center(expect)
-      assert(r.getStruct(7).getDouble(0) == clon && r.getStruct(7).getDouble(1) == clat)
-      assert(r.getSeq[Long](8) == H3Ico.neighbors(expect).toSeq)
-      assert(r.getSeq[Long](9) == H3Ico.disk(expect, 2).toSeq)
-      assert(r.getString(10) == H3Ico.token(expect))
-    }
-    pts.createOrReplaceTempView("h3pts")
-    val sql = spark.sql("SELECT id, h3_cell(lon, lat, 5) AS h3 FROM h3pts ORDER BY id").collect()
-    sql.zip(got).foreach { case (s, g) => assert(s.getLong(1) == g.getLong(3)) }
-  }
-
   test("s2u_* / h3u_polyfill_wkt expressions match the core library") {
     import graft.core.{S2U, H3U, GeoMath}
     val got = pts
