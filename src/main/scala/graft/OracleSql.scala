@@ -191,13 +191,23 @@ object OracleSql {
        | _sh AS (SELECT DISTINCT $idCol, sh FROM
        |   (SELECT $idCol, unnest(list_distinct(${shingles3Duck("w")})) AS sh FROM _w WHERE len(w) >= 3))""".stripMargin.replace("\n", " ")
 
+  /** The oracle's MinHash+LSH definition: [[MinhashK]] affine hashes
+    * `h_i = (h & AffineMask)·(2i+1) + i` of one md5, minimized per doc and
+    * banded [[Bands]] × [[MinhashK]]/[[Bands]]. Every h_i is strictly
+    * monotone in `h & AffineMask`, so each s_i is a function of the masked
+    * minimum alone and the bands collide iff that minimum does: the
+    * engine's one-key candidate stage ([[graft.engine.TextOps.lshCandidates]])
+    * must match this explicit form exactly. */
+  val MinhashK = 16
+  val Bands = 4
+
   /** Full MinHash+LSH near-dup pair query (TextOps.minhashLshPairs),
-    * including the band-bucket frequency cap (TextOps.BandBucketCap):
-    * bands are unpivoted to (id, band, key) rows exactly like the Spark
-    * side, oversized buckets are filtered out, candidates equi-join. */
+    * including the bucket frequency cap (TextOps.BandBucketCap): bands
+    * are unpivoted to (id, band, key) rows, oversized buckets are filtered
+    * out, candidates equi-join. */
   def minhashLshDuck(table: String, idCol: String, textCol: String,
-                     k: Int, bands: Int, threshold: Double, bucketCap: Int): String = {
-    val (ctes, sel) = minhashLshParts(table, idCol, textCol, k, bands, threshold, bucketCap)
+                     threshold: Double, bucketCap: Int): String = {
+    val (ctes, sel) = minhashLshParts(table, idCol, textCol, threshold, bucketCap)
     s"WITH $ctes $sel"
   }
 
@@ -205,8 +215,8 @@ object OracleSql {
     * transitive closure by recursive CTE (fine at oracle scale — clusters
     * are band-bucket-capped), min reachable id as the representative. */
   def dedupClustersDuck(table: String, idCol: String, textCol: String,
-                        k: Int, bands: Int, threshold: Double, bucketCap: Int): String = {
-    val (ctes, sel) = minhashLshParts(table, idCol, textCol, k, bands, threshold, bucketCap)
+                        threshold: Double, bucketCap: Int): String = {
+    val (ctes, sel) = minhashLshParts(table, idCol, textCol, threshold, bucketCap)
     s"""WITH RECURSIVE $ctes,
        | _p AS ($sel),
        | _nodes AS (SELECT doc_a AS v FROM _p UNION SELECT doc_b FROM _p),
@@ -222,8 +232,8 @@ object OracleSql {
     * the LSH pair set): every doc whose transitive-closure min is itself
     * (or which is in no pair) survives. */
   def dedupKeepDuck(table: String, idCol: String, textCol: String,
-                    k: Int, bands: Int, threshold: Double, bucketCap: Int): String = {
-    val (ctes, sel) = minhashLshParts(table, idCol, textCol, k, bands, threshold, bucketCap)
+                    threshold: Double, bucketCap: Int): String = {
+    val (ctes, sel) = minhashLshParts(table, idCol, textCol, threshold, bucketCap)
     s"""WITH RECURSIVE $ctes,
        | _p AS ($sel),
        | _nodes AS (SELECT doc_a AS v FROM _p UNION SELECT doc_b FROM _p),
@@ -240,15 +250,15 @@ object OracleSql {
   /** (CTE chain, final SELECT) of the LSH pair query — shared by
     * [[minhashLshDuck]] and the closure wrapper [[dedupClustersDuck]]. */
   def minhashLshParts(table: String, idCol: String, textCol: String,
-                     k: Int, bands: Int, threshold: Double, bucketCap: Int): (String, String) = {
-    val rows = k / bands
-    val mins = (0 until k).map(i =>
+                     threshold: Double, bucketCap: Int): (String, String) = {
+    val rows = MinhashK / Bands
+    val mins = (0 until MinhashK).map(i =>
       s"min(${graft.engine.TextOps.affineHashSql("_h", i)}) AS s$i").mkString(", ")
-    val bandExprs = (0 until bands).map { b =>
+    val bandExprs = (0 until Bands).map { b =>
       (0 until rows).map(r => s"CAST(s${b * rows + r} AS VARCHAR)")
         .mkString("(", " || '_' || ", s") AS b$b")
     }.mkString(", ")
-    val unpivot = (0 until bands).map(b =>
+    val unpivot = (0 until Bands).map(b =>
       s"SELECT $idCol, $b AS band, b$b AS key FROM _b").mkString(" UNION ALL ")
     val ctes = s"""${shingleCtes(table, idCol, textCol).stripPrefix("WITH ")},
        | _shh AS (SELECT $idCol, sh, ${hash60DuckSql("sh")} AS _h FROM _sh),

@@ -428,11 +428,11 @@ object SparkEntry {
       graft.engine.TextOps.minhashLshPairs(ld(s, dir, "documents"), "doc_id", "text")
     },
     "q67_stream_neardup" -> gq { (s, dir) =>
-      // ingest-time LSH near-dup: band-bucket keyed flatMapGroupsWithState
-      // emits candidate pairs as documents stream in (capped per-bucket
-      // state, first-seen-wins); exact jaccard then verifies against the
-      // stored corpus — over one static batch this equals q32, so the
-      // same DuckDB oracle checks it
+      // ingest-time near-dup: flatMapGroupsWithState keyed on the one
+      // min-hash key emits candidate pairs as documents stream in (capped
+      // per-bucket state, first-seen-wins); exact jaccard then verifies
+      // against the stored corpus — over one static batch this equals
+      // q32, so the same DuckDB oracle checks it
       val docs = ld(s, dir, "documents")
       val pairs = graft.engine.StreamOps.streamedNearDupCandidates(
         s, s"$dir/documents.parquet", "doc_id", "text")
@@ -832,19 +832,15 @@ object SparkEntry {
            | FROM documents GROUP BY 1""".stripMargin.replace("\n", " "),
       "q32_minhash_lsh" ->
         minhashLshDuck("documents", "doc_id", "text",
-          graft.engine.TextOps.MinhashK, graft.engine.TextOps.Bands,
           graft.engine.TextOps.JaccardThreshold, graft.engine.TextOps.BandBucketCap),
-      "q67_stream_neardup" -> // one static batch == the batch LSH pipeline
+      "q67_stream_neardup" -> // one static batch == the batch near-dup pipeline
         minhashLshDuck("documents", "doc_id", "text",
-          graft.engine.TextOps.MinhashK, graft.engine.TextOps.Bands,
           graft.engine.TextOps.JaccardThreshold, graft.engine.TextOps.BandBucketCap),
       "q65_dedup_clusters" ->
         dedupClustersDuck("documents", "doc_id", "text",
-          graft.engine.TextOps.MinhashK, graft.engine.TextOps.Bands,
           graft.engine.TextOps.JaccardThreshold, graft.engine.TextOps.BandBucketCap),
       "q68_dedup_keep" ->
         dedupKeepDuck("documents", "doc_id", "text",
-          graft.engine.TextOps.MinhashK, graft.engine.TextOps.Bands,
           graft.engine.TextOps.JaccardThreshold, graft.engine.TextOps.BandBucketCap),
       "q33_simhash" -> simhashDuck("documents", "doc_id", "text"),
       "q35_lang_id" -> {

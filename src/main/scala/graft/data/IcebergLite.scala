@@ -9,7 +9,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.sql.CellIndex
 
@@ -306,7 +306,12 @@ object IcebergLite {
     val dirs = m.entries.map(e =>
       s"$table/data/snapid=${e.snapshotId}/${esc(m.partitionCol)}=${esc(e.partition)}")
       .distinct
-    spark.read.option("basePath", s"$table/data").parquet(dirs: _*).drop("snapid")
+    // the recorded schema types the partition column as written: inferred
+    // from directory names, a bigint prefix whose values fit an int reads
+    // back as int. It also spares the footer read that infers the rest.
+    val reader = spark.read.option("basePath", s"$table/data")
+    m.schema.fold(reader)(s => reader.schema(s.add("snapid", LongType)))
+      .parquet(dirs: _*).drop("snapid")
   }
 
   /** The snapshot CURRENT points at, as one session sees it: its manifest

@@ -52,33 +52,45 @@ object StreamOps {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** A parquet file stream over `path`, a file or a directory, with its
+    * cached schema. The file source needs a directory, so a file is read
+    * as its parent directory filtered to its name. `maxFilesPerTrigger > 0`
+    * splits the input into micro-batches of that many files. */
+  private def fileStream(spark: SparkSession, path: String,
+                         maxFilesPerTrigger: Int = 0): DataFrame = {
+    val f = new java.io.File(path)
+    val (dir, glob) = if (f.isDirectory) (path, "*") else (f.getParent, f.getName)
+    val reader = spark.readStream.schema(sourceSchema(spark, path)).option("pathGlobFilter", glob)
+    (if (maxFilesPerTrigger > 0) reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
+     else reader).parquet(dir)
+  }
+
+  /** Runs `stream` over the input at `path` to completion into a memory
+    * sink and returns `project` of the sink's table, materialized. The
+    * sink's view is then dropped: repeated invocations (bench loops,
+    * verify reruns) must not accumulate result tables in driver memory
+    * for the session's lifetime. */
+  private def drain[T](spark: SparkSession, path: String, stream: Dataset[_],
+                       outputMode: String)(project: DataFrame => Dataset[T]): Dataset[T] = {
+    val name = s"stream_out_${System.nanoTime()}"
+    withInputSizedShuffle(spark, path) {
+      val q = stream.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    val out = project(spark.table(name)).localCheckpoint(true)
+    spark.catalog.dropTempView(name)
+    out
+  }
+
   /** Tumbling-window event aggregation, streaming end-to-end, returned as a
     * finished DataFrame. Decimal sums keep parity with the DuckDB oracle. */
   def streamedWindowAgg(spark: SparkSession, parquetPath: String): DataFrame = {
-    val schema = sourceSchema(spark, parquetPath)
-    val name = s"q50_out_${System.nanoTime()}"
-    // the file source needs a directory: stream the parent dir, filtered to
-    // this one file (works for both a file and a directory input)
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
+    val stream = fileStream(spark, parquetPath)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
            expr("CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)").as("sum_val"))
-    withInputSizedShuffle(spark, parquetPath) {
-      val q = stream.writeStream
-        .format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    // materialize, then drop the memory-sink view: repeated invocations
-    // (bench loops, verify reruns) must not accumulate result tables in
-    // driver memory for the session's lifetime
-    val out = spark.table(name)
-      .select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_val"))
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
+    drain(spark, parquetPath, stream, "complete")(
+      _.select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_val")))
   }
 
   /** Watermarked tumbling-window aggregation in APPEND mode: a window's row
@@ -89,12 +101,7 @@ object StreamOps {
     * oracle reproduces with a HAVING clause. */
   def streamedWatermarkAgg(spark: SparkSession, parquetPath: String,
                            delay: String = "2 hours"): DataFrame = {
-    val schema = sourceSchema(spark, parquetPath)
-    val name = s"q53_out_${System.nanoTime()}"
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
+    val stream = fileStream(spark, parquetPath)
       // watermark requires TIMESTAMP; the session runs UTC so NTZ↔TZ casts
       // preserve wall-clock values (output window start is cast back)
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -102,17 +109,9 @@ object StreamOps {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
            expr("CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)").as("sum_val"))
-    withInputSizedShuffle(spark, parquetPath) {
-      val q = stream.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = spark.table(name)
-      .select(col("w.start").cast("timestamp_ntz").as("ws"),
-        col("event_type"), col("n"), col("sum_val"))
-      .localCheckpoint(true) // see streamedWindowAgg: drop the sink view
-    spark.catalog.dropTempView(name)
-    out
+    drain(spark, parquetPath, stream, "append")(
+      _.select(col("w.start").cast("timestamp_ntz").as("ws"),
+        col("event_type"), col("n"), col("sum_val")))
   }
 
   /** Incremental tiling ingest (round-2 roadmap #10): a file stream is
@@ -133,15 +132,11 @@ object StreamOps {
                          autoCompactEvery: Int = 0,
                          index: CellIndex = CellIndex.Geohash): DataFrame = {
     import graft.data.IcebergLite
-    val schema = sourceSchema(spark, parquetPath)
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    var reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0) reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     val props = IcebergLite.tilingProperties(index, prefixLevel, "lon", "lat") ++
       (if (autoCompactEvery > 0) Map(IcebergLite.PropAutoCompact -> autoCompactEvery.toString)
        else Map.empty)
-    val stream = reader.parquet(dir).select(col("event_id"), col(keyCol))
+    val stream = fileStream(spark, parquetPath, maxFilesPerTrigger)
+      .select(col("event_id"), col(keyCol))
     val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       if (!batch.isEmpty) {
         // materialize the tiled INCREMENT once: IcebergLite.write evaluates
@@ -204,15 +199,7 @@ object StreamOps {
                     stateTtl: String = ""): DataFrame = {
     val deduped = streamedDedupStream(spark, parquetPath, idCol, textCol,
       maxFilesPerTrigger, stateTtl)
-    val name = s"q64_out_${System.nanoTime()}"
-    withInputSizedShuffle(spark, parquetPath) {
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = spark.table(name).localCheckpoint(true) // see streamedWindowAgg
-    spark.catalog.dropTempView(name)
-    out
+    drain(spark, parquetPath, deduped, "append")(identity)
   }
 
   /** The unsunk streaming Dataset behind [[streamedDedup]] — exposed so
@@ -224,12 +211,8 @@ object StreamOps {
                           maxFilesPerTrigger: Int = 0,
                           stateTtl: String = ""): Dataset[DedupRow] = {
     import spark.implicits._
-    val schema = sourceSchema(spark, parquetPath)
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    var reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0) reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val docs = reader.parquet(dir).select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val docs = fileStream(spark, parquetPath, maxFilesPerTrigger)
+      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val fps = TextOps.fingerprint(docs, "doc_id", "text").as[(Long, Long)]
     val timeout =
       if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout
@@ -256,20 +239,20 @@ object StreamOps {
     }
 
   final case class NearDupCand(doc_a: Long, doc_b: Long)
-  /** Per-band-bucket LSH state: `alive = false` marks a bucket that
+  /** Per-min-hash-bucket state: `alive = false` marks a bucket that
     * overflowed the cap (boilerplate signal — permanently muted, matching
     * the batch BandBucketCap exclusion from the overflowing batch on). */
   final case class BucketState(alive: Boolean, members: List[Long])
 
-  /** The per-(band, key) bucket handler behind
-    * [[streamedNearDupCandidates]] — named for TestGroupState unit tests
-    * of the TTL branches. Bounded-state mode: a bucket idle past the TTL
-    * (incl. a muted one) is dropped; near-dups separated by more than the
-    * TTL window stop pairing — the stated windowed tradeoff.
-    * setTimeoutDuration follows each update (the state must be defined
-    * when a timeout is armed). */
+  /** The per-min-hash-key bucket handler behind
+    * [[streamedNearDupCandidates]]; rows are (doc_id, key). Named for
+    * TestGroupState unit tests of the TTL branches. Bounded-state mode: a
+    * bucket idle past the TTL (incl. a muted one) is dropped; near-dups
+    * separated by more than the TTL window stop pairing — the stated
+    * windowed tradeoff. setTimeoutDuration follows each update (the state
+    * must be defined when a timeout is armed). */
   private[engine] def nearDupHandler(bucketCap: Int, stateTtl: String)(
-      key: (Int, String), rows: Iterator[(Int, String, Long)],
+      key: Long, rows: Iterator[(Long, Long)],
       state: GroupState[BucketState]): Iterator[NearDupCand] =
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
@@ -279,7 +262,7 @@ object StreamOps {
       // count) and emit a self-pair via the cross product — which the
       // batch lshCandidates op never produces (ADVICE r5)
       val seen = st.members.toSet
-      val newIds = rows.map(_._3).filterNot(seen).toArray.distinct.sorted
+      val newIds = rows.map(_._1).filterNot(seen).toArray.distinct.sorted
       if (!st.alive) {
         if (stateTtl.nonEmpty) state.setTimeoutDuration(stateTtl)
         Iterator.empty
@@ -302,73 +285,44 @@ object StreamOps {
 
 
   /** Streaming NEAR-dup candidate detection — the ingest-time form of the
-    * batch MinHash+LSH pipeline (q32): each arriving document's minhash
-    * signature is computed PER ROW (array_min over the affine hash family
-    * of its distinct shingles — no stateful aggregation), its band keys
-    * are exploded, and a per-(band, key) state holds the bucket's earlier
-    * members (capped at `bucketCap`, first-seen-wins). A new member emits
-    * candidate pairs against the stored members plus its same-batch bucket
-    * peers; a bucket that overflows the cap is muted permanently (the
-    * batch op EXCLUDES over-cap buckets as boilerplate — the streaming
-    * prefix keeps pairs already emitted, the honest incremental analogue).
+    * batch min-hash candidate stage (q32): each arriving document's
+    * min-hash key ([[TextOps.AffineMask]]) is computed PER ROW (array_min
+    * over its distinct shingles — no stateful aggregation), and a per-key
+    * state holds the bucket's earlier members (capped at `bucketCap`,
+    * first-seen-wins). A new member emits candidate pairs against the
+    * stored members plus its same-batch bucket peers; a bucket that
+    * overflows the cap is muted permanently (the batch op EXCLUDES
+    * over-cap buckets as boilerplate — the streaming prefix keeps pairs
+    * already emitted, the honest incremental analogue).
     *
-    * 100-TB posture: state is partitioned by (band, key) — each
-    * micro-batch shuffles only its own band rows, costs O(batch · bands)
-    * and holds ≤ cap ids per active bucket; no corpus re-scan, no
-    * unbounded state. Over a SINGLE static batch the emitted pair set
-    * equals [[TextOps.lshCandidates]] exactly (verified in
-    * EngineOpsSpec); exact-jaccard verification is a downstream batch
-    * join against the stored corpus (see q67). */
+    * 100-TB posture: state is partitioned by the key — each micro-batch
+    * shuffles one row per doc, costs O(batch) and holds ≤ cap ids per
+    * active bucket; no corpus re-scan, no unbounded state. Over a SINGLE
+    * static batch the emitted pair set equals [[TextOps.lshCandidates]]
+    * exactly (verified in EngineOpsSpec); exact-jaccard verification is a
+    * downstream batch join against the stored corpus (see q67). */
   def streamedNearDupCandidates(spark: SparkSession, parquetPath: String,
                                 idCol: String, textCol: String,
                                 bucketCap: Int = TextOps.BandBucketCap,
                                 maxFilesPerTrigger: Int = 0,
                                 stateTtl: String = ""): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.Column
-    val schema = sourceSchema(spark, parquetPath)
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    var reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0) reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val docs = reader.parquet(dir).select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    // per-row signature: the same affine family as minhashSignatures, but
-    // computed per row instead of via a groupBy — the signature needs no
-    // shuffle, only the band buckets do. Every s_i derives from the SINGLE
-    // masked minimum (affineHash is strictly monotone in h & mask, see
-    // TextOps.sigFromMaskedMin): one array pass per doc, not MinhashK.
-    val withShingles = docs
-      .withColumn("_w", TextOps.tokens(col("text")))
+    val keyed = fileStream(spark, parquetPath, maxFilesPerTrigger)
+      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("_w"))
       .where(size(col("_w")) >= 3)
-      .withColumn("_m", array_min(transform(array_distinct(TextOps.shingles3(col("_w"))),
-        sh => TextOps.hash60(sh).bitwiseAND(lit(TextOps.AffineMask)))))
-    val sigs: Seq[Column] = (0 until TextOps.MinhashK).map(i =>
-      TextOps.sigFromMaskedMin(col("_m"), i).as(s"s$i"))
-    val rowsPerBand = TextOps.MinhashK / TextOps.Bands
-    val signed = withShingles.select(col("doc_id") +: sigs: _*)
-    val bandKey = (b: Int) => concat_ws("_",
-      (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}").cast("string")): _*)
-    val bands = signed.select(col("doc_id"),
-      explode(array((0 until TextOps.Bands).map(b =>
-        struct(lit(b).as("band"), bandKey(b).as("key"))): _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc_id"))
-      .as[(Int, String, Long)]
+      .select(col("doc_id"),
+        array_min(transform(array_distinct(TextOps.shingles3(col("_w"))),
+          sh => TextOps.maskedHash60(sh))).as("_m"))
+      .as[(Long, Long)]
     val timeout =
       if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout
       else GroupStateTimeout.ProcessingTimeTimeout
-    val cands = bands.groupByKey { case (band, key, _) => (band, key) }
+    val cands = keyed.groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, timeout)(
         nearDupHandler(bucketCap, stateTtl))
-    val name = s"q67_out_${System.nanoTime()}"
-    withInputSizedShuffle(spark, parquetPath) {
-      val q = cands.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = spark.table(name).distinct() // a pair may surface from several bands
-      .localCheckpoint(true) // see streamedWindowAgg: drop the sink view
-    spark.catalog.dropTempView(name)
-    out
+    // a doc id is not unique in a stream: one id under two keys can
+    // surface the same pair twice
+    drain(spark, parquetPath, cands, "append")(_.distinct())
   }
 
   // TIMESTAMP_NTZ columns (parquet timestamps without tz) map to
@@ -394,12 +348,8 @@ object StreamOps {
   def sessionize(spark: SparkSession, parquetPath: String,
                  gapUs: Long, maxFilesPerTrigger: Int = 0): Dataset[Session] = {
     import spark.implicits._
-    val schema = sourceSchema(spark, parquetPath)
-    val f = new java.io.File(parquetPath)
-    val (dir, glob) = if (f.isDirectory) (parquetPath, "*") else (f.getParent, f.getName)
-    var reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0) reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val events = reader.parquet(dir).select($"user_id", $"ts").as[Ev]
+    val events = fileStream(spark, parquetPath, maxFilesPerTrigger)
+      .select($"user_id", $"ts").as[Ev]
 
     val sessions = events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -422,15 +372,6 @@ object StreamOps {
           out.iterator
         })
 
-    val name = s"q51_out_${System.nanoTime()}"
-    withInputSizedShuffle(spark, parquetPath) {
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = spark.table(name).as[Session]
-      .localCheckpoint(true) // see streamedWindowAgg: drop the sink view
-    spark.catalog.dropTempView(name)
-    out
+    drain(spark, parquetPath, sessions, "append")(_.as[Session])
   }
 }

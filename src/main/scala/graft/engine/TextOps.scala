@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
   * RFC 1321), truncated to 60 bits so values stay positive in BIGINT.
   */
 object TextOps {
-  val MinhashK = 16   // signature length
-  val Bands = 4       // LSH bands of 4 rows each
   val JaccardThreshold = 0.8
-  /** Band-bucket size cap: a band key shared by more than this many docs is
+  /** Min-hash bucket size cap: a key shared by more than this many docs is
     * boilerplate (e.g. a fixed header shingled into every page), not a
-    * near-dup signal, and would make the candidate join quadratic in that
+    * near-dup signal, and would make the candidate pairs quadratic in that
     * bucket at 100 TB. Oversized buckets are EXCLUDED from candidate
     * generation (documented overflow: exact duplicates are the exact-dedup
     * op's job, q30). The oracle SQL reproduces the same cap. */
@@ -48,111 +46,83 @@ object TextOps {
       .select(col(idCol), explode(array_distinct(shingles3(col("_w")))).as("sh"))
   }
 
-  /** Affine hash family over ONE base md5 hash: h_i = (h & 2^45-1) * a_i + i
-    * (odd multipliers; stays < 2^62 so no BIGINT overflow in either engine).
-    * One md5 per shingle instead of k — md5 dominates signature cost. */
+  /** The min-hash key of a document is the minimum over its distinct
+    * shingles of `hash60(sh) & AffineMask`.
+    *
+    * The oracle ([[graft.OracleSql.minhashLshParts]]) states the same key
+    * as 16 affine hashes `h_i = (h & AffineMask)·(2i+1) + i` banded 4 × 4.
+    * Each h_i is strictly monotone in `h & AffineMask`, so every band key
+    * collides exactly when this one key does, and grouping by it yields
+    * the oracle's candidate set. With one hash, a pair becomes a candidate
+    * with probability ≈ its shingle Jaccard (Broder 1997). */
   val AffineMask = 0x1FFFFFFFFFFFL
-  def affineHash(h: Column, i: Int): Column =
-    (h.bitwiseAND(lit(AffineMask)) * lit(2L * i + 1)) + lit(i.toLong)
+  private[engine] def maskedHash60(sh: Column): Column =
+    hash60(sh).bitwiseAND(lit(AffineMask))
+  /** The oracle's i-th affine hash in SQL (odd multiplier; stays < 2^62,
+    * so no BIGINT overflow in DuckDB). */
   def affineHashSql(h: String, i: Int): String =
     s"(($h & $AffineMask) * ${2L * i + 1} + $i)"
 
-  /** s_i from the single masked minimum: affineHash is STRICTLY MONOTONE in
-    * (h & mask) for every i (positive multiplier, added constant), so
-    * min over shingles of affine(h, i) == affine(min over shingles of
-    * (h & mask), i) — one min instead of [[MinhashK]] of them, bit-identical
-    * signature values (the oracle keeps the explicit per-i min SQL). */
-  private[engine] def sigFromMaskedMin(m: Column, i: Int): Column =
-    m * lit(2L * i + 1) + lit(i.toLong)
-
-  /** MinHash signature columns s0..s{k-1}: per member i of the affine hash
-    * family, min over the doc's shingles — computed via ONE `min(h & mask)`
-    * aggregate (see [[sigFromMaskedMin]]): the aggregation buffer and the
-    * shuffle carry one long per doc instead of MinhashK. */
-  def minhashSignatures(shingleDf: DataFrame, idCol: String): DataFrame = {
-    val base = shingleDf.withColumn("_h", hash60(col("sh")))
-    val m = base.groupBy(col(idCol))
-      .agg(min(col("_h").bitwiseAND(lit(AffineMask))).as("_m"))
-    val sigs = (0 until MinhashK).map(i => sigFromMaskedMin(col("_m"), i).as(s"s$i"))
-    m.select(col(idCol) +: sigs: _*)
-  }
-
-  /** LSH candidate pairs (doc_a, doc_b) from banded minhash signatures of a
-    * shingle-set DataFrame, with the [[BandBucketCap]] frequency guard.
+  /** Min-hash candidate pairs (doc_a, doc_b), doc_a < doc_b, of a
+    * shingle-set DataFrame: docs sharing one min-hash key
+    * ([[AffineMask]]) pair up, and a key shared by more than `bucketCap`
+    * docs is dropped ([[BandBucketCap]]).
     *
-    * FUSED candidate stage: ONE aggregation pass per (band, key) bucket
-    * gathers the member list with [[graft.sql.CollectCapped]], whose
-    * buffer stops growing at cap+1 elements — so the frequency guard and
-    * the member collection are the same pass, a degenerate hot bucket
-    * (boilerplate band key shared by 10⁹ docs at 100 TB) costs O(cap)
-    * memory and comes back NULL, and in-bucket pairs fall out of a bounded
-    * array expansion (≤ cap(cap-1)/2 per bucket) instead of a self-join.
-    * The previous shape (count keys → join survivors back → self-join) did
-    * the same work in three shuffles and two scans of the band rows. Sorted
-    * member lists + slice-after-self yield each unordered pair exactly once
-    * with doc_a < doc_b. */
+    * ONE aggregation pass per key gathers the member list with
+    * [[graft.sql.CollectCapped]], whose buffer stops growing at cap+1
+    * elements — so the frequency guard and the member collection are the
+    * same pass, a degenerate hot bucket (boilerplate shared by 10⁹ docs at
+    * 100 TB) costs O(cap) memory and comes back NULL, and in-bucket pairs
+    * fall out of a bounded array expansion (≤ cap(cap-1)/2 per bucket)
+    * instead of a self-join. Each doc sits in one bucket and member lists
+    * are sorted, so slice-after-self yields each pair exactly once. */
   def lshCandidates(sh: DataFrame, idCol: String,
-                    bucketCap: Int = BandBucketCap): DataFrame = {
-    val sig = minhashSignatures(sh, idCol)
-    bucketsToPairs(bandRowsOfSignatures(sig, idCol), idCol, bucketCap)
-  }
-
-  /** (idCol, band, key) rows from a signature table (one row per doc with
-    * columns s0..s{k-1}). */
-  private def bandRowsOfSignatures(sig: DataFrame, idCol: String): DataFrame = {
-    val rowsPerBand = MinhashK / Bands
-    val bandKey = (b: Int) => concat_ws("_",
-      (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}").cast("string")): _*)
-    sig.select(col(idCol),
-      explode(array((0 until Bands).map(b =>
-        struct(lit(b).as("band"), bandKey(b).as("key"))): _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
-  /** Shared bucket → unordered-pair expansion (see [[lshCandidates]]). */
-  private def bucketsToPairs(bands: DataFrame, idCol: String, bucketCap: Int): DataFrame = {
-    val buckets = bands.groupBy("band", "key")
+                    bucketCap: Int = BandBucketCap): DataFrame =
+    sh.groupBy(col(idCol)).agg(min(maskedHash60(col("sh"))).as("_m"))
+      .groupBy("_m")
       .agg(graft.sql.functions.collect_capped(col(idCol), bucketCap).as("ids"))
       .where(col("ids").isNotNull && size(col("ids")) >= 2)
-    buckets
       .select(posexplode(col("ids")).as(Seq("_i", "doc_a")), col("ids"))
       .select(col("doc_a"),
         explode(slice(col("ids"), col("_i") + lit(2), lit(bucketCap))).as("doc_b"))
-      .distinct()
+
+  /** Exact 3-shingle Jaccard of (doc_a, doc_b) pairs over the shingle set
+    * `sh`: `withInter` turns the shared-shingle counts of the pairs that
+    * share one into the rows to score, which are then joined to both
+    * docs' shingle counts. Output: (doc_a, doc_b, inter, n_a, n_b, jaccard). */
+  private def exactJaccard(sh: DataFrame, idCol: String, pairs: DataFrame)(
+      withInter: DataFrame => DataFrame): DataFrame = {
+    val cnt = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val inter = pairs
+      .join(sh.as("x"), col("doc_a") === col(s"x.$idCol"))
+      .join(sh.as("y"), col("doc_b") === col(s"y.$idCol") && col("y.sh") === col("x.sh"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
+    withInter(inter)
+      .join(cnt.select(col(idCol).as("doc_a"), col("n").as("n_a")), "doc_a")
+      .join(cnt.select(col(idCol).as("doc_b"), col("n").as("n_b")), "doc_b")
+      .withColumn("jaccard", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
+      .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
   }
 
-
-  /** MinHash + LSH near-duplicate pairs with exact-jaccard verification.
-    * Scale path: signatures explode into (band_idx, band_key) rows and
-    * candidates come from an equi-join on the band key — a plain shuffle
-    * hash join, no O(n²) compare (see [[lshCandidates]] for the bucket-size
-    * guard). Exact jaccard then filters candidates.
+  /** Near-duplicate pairs: min-hash candidates ([[lshCandidates]]: one
+    * min-hash key with a bucket cap, no O(n²) compare), then exact
+    * 3-shingle Jaccard keeps the pairs at or above `threshold`. Precision
+    * is 1 by construction; recall is one hash's (≈ the pair's Jaccard).
     * Output: (doc_a, doc_b, inter, n_a, n_b, jaccard). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double = JaccardThreshold,
                       bucketCap: Int = BandBucketCap): DataFrame = {
     // DISK_ONLY, not MEMORY_AND_DISK: the exploded (doc, shingle) set is
     // ~n_tokens rows per doc (≈10× the corpus in row count, comparable in
-    // bytes) and is consumed 3× (signatures, counts, intersection). At
+    // bytes) and is consumed 3× (min-hash keys, counts, intersection). At
     // 100 TB of documents the shingle set is another ~100 TB — memory
     // caching would evict/thrash every executor; serialized disk blocks
     // cost one local write + three sequential local reads, no recompute
     // of the explode, and zero executor-memory pressure.
     val sh = shingleSet(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val cand = lshCandidates(sh, idCol, bucketCap)
-    val cnt = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.as("x"), col("doc_a") === col(s"x.$idCol"))
-      .join(sh.as("y"), col("doc_b") === col(s"y.$idCol") && col("y.sh") === col("x.sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    val j = col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))
-    inter
-      .join(cnt.select(col(idCol).as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(cnt.select(col(idCol).as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jaccard", j)
+    exactJaccard(sh, idCol, lshCandidates(sh, idCol, bucketCap))(identity)
       .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
   }
 
   /** Near-dup CLUSTER RESOLUTION: connected components over candidate
@@ -347,8 +317,9 @@ object TextOps {
       hash60(array_join(array_sort(array_distinct(tokens(col(textCol)))), " ")).as("fp"))
 
   /** Exact n-gram (3-shingle) jaccard for given candidate pairs — the
-    * standalone n-gram-Jaccard dedup op (minhashLshPairs uses the same
-    * computation on LSH candidates). */
+    * standalone n-gram-Jaccard dedup op (minhashLshPairs runs the same
+    * [[exactJaccard]] on its min-hash candidates). Pairs that share no
+    * shingle score 0. */
   /** `prefilterDocs`: semi-join `docs` to the pair set's doc ids BEFORE
     * shingling (guide §3.2 — reduce the big side early). Only docs that
     * appear in `pairs` contribute to any output column, so results are
@@ -367,19 +338,8 @@ object TextOps {
           .unionAll(pairs.select(col("doc_b").as(idCol)))
           .distinct(),
         Seq(idCol), "left_semi")
-    val sh = shingleSet(pruned, idCol, textCol)
-    val cnt = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.as("x"), col("doc_a") === col(s"x.$idCol"))
-      .join(sh.as("y"), col("doc_b") === col(s"y.$idCol") && col("y.sh") === col("x.sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(cnt.select(col(idCol).as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(cnt.select(col(idCol).as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jaccard", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
-      .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
+    exactJaccard(shingleSet(pruned, idCol, textCol), idCol, pairs)(inter =>
+      pairs.join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("inter")))
   }
 
   /** BPE-ish regex token count: letter runs, digit runs, and single

@@ -462,10 +462,10 @@ case class GhCoveringCells(children: Seq[Expression])
   * the group has more than `cap` members. The ONE-PASS form of "count each
   * bucket, keep only small buckets, then gather their members": the
   * aggregation buffer stops growing at cap+1 elements, so a degenerate hot
-  * bucket (a boilerplate LSH band key shared by 10⁹ docs at 100 TB) costs
+  * bucket (a boilerplate min-hash key shared by 10⁹ docs at 100 TB) costs
   * O(cap) memory per group — unlike collect_list, which would materialize
   * the whole bucket before any size filter could run. Drives the fused
-  * LSH candidate stage ([[graft.engine.TextOps.lshCandidates]]).
+  * min-hash candidate stage ([[graft.engine.TextOps.lshCandidates]]).
   * Children limited to STRING / BIGINT / INT (id-like columns). */
 case class CollectCapped(
     child: Expression, cap: Int,

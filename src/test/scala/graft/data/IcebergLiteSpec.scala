@@ -188,6 +188,25 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(knn.isEmpty)
   }
 
+  test("a read returns the written column types, partition column included") {
+    import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
+    def fields(df: DataFrame): Seq[(String, DataType)] = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val tiled = Seq("c_custkey" -> LongType, "lon" -> DoubleType, "lat" -> DoubleType,
+      "tile" -> LongType, "tile_p" -> LongType)
+    // geohash prefixes fit an int, so directory-name inference types them int
+    Seq((CellIndex.Geohash, 30, 6), (CellIndex.H3U, 7, 0), (CellIndex.S2U, 12, 2)).foreach {
+      case (index, tileLevel, prefixLevel) =>
+        val t = s"${tmp(s"types_${index.tag}")}/t"
+        IcebergLite.writeTiled(pts(1, 201), t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        assert(fields(IcebergLite.read(spark, t)) == tiled, index.tag)
+    }
+    val t = s"${tmp("types_plain")}/t"
+    IcebergLite.write(Seq((1L, "a", 3L), (2L, "b", 4L)).toDF("k", "v", "p"), t, "p")
+    assert(fields(IcebergLite.read(spark, t)) == Seq("k" -> LongType, "v" -> StringType, "p" -> LongType))
+    assert(IcebergLite.read(spark, t).as[(Long, String, Long)].collect().sorted
+      .sameElements(Seq((1L, "a", 3L), (2L, "b", 4L))))
+  }
+
   // stops the suite's SparkContext: keep this test last
   test("a stopped context's slots are dropped, so they cannot keep its session alive") {
     val t = s"${tmp("slot_stop")}/t"

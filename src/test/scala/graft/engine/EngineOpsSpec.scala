@@ -343,16 +343,16 @@ class EngineOpsSpec extends AnyFunSuite {
     // near-dup bucket: members arm the TTL; a muted bucket keeps its TTL
     // (so it eventually expires instead of living forever); expiry drops it
     val b1 = state[StreamOps.BucketState](None)
-    val pairs = StreamOps.nearDupHandler(50, ttl)((0, "k"),
-      Iterator((0, "k", 2L), (0, "k", 5L)), b1).toSeq
+    val pairs = StreamOps.nearDupHandler(50, ttl)(0L,
+      Iterator((2L, 0L), (5L, 0L)), b1).toSeq
     assert(pairs == Seq(StreamOps.NearDupCand(2L, 5L)))
     assert(b1.getTimeoutTimestampMs.isPresent)
     val b2 = state[StreamOps.BucketState](Some(StreamOps.BucketState(alive = false, Nil)))
-    assert(StreamOps.nearDupHandler(50, ttl)((0, "k"), Iterator((0, "k", 9L)), b2).isEmpty)
+    assert(StreamOps.nearDupHandler(50, ttl)(0L, Iterator((9L, 0L)), b2).isEmpty)
     assert(b2.getTimeoutTimestampMs.isPresent, "muted bucket must still expire")
     val b3 = state[StreamOps.BucketState](
       Some(StreamOps.BucketState(alive = true, List(2L, 5L))), timedOut = true)
-    assert(StreamOps.nearDupHandler(50, ttl)((0, "k"), Iterator.empty, b3).isEmpty)
+    assert(StreamOps.nearDupHandler(50, ttl)(0L, Iterator.empty, b3).isEmpty)
     assert(b3.isRemoved)
     // and with NO ttl, no timeout is ever armed (NoTimeout contract)
     val s5 = TestGroupState.create[Boolean](Optional.absent[Boolean](),
@@ -365,8 +365,8 @@ class EngineOpsSpec extends AnyFunSuite {
     // only the genuinely new id pairs against the stored members
     val b4 = state[StreamOps.BucketState](
       Some(StreamOps.BucketState(alive = true, List(2L, 5L))))
-    val rePairs = StreamOps.nearDupHandler(50, ttl)((0, "k"),
-      Iterator((0, "k", 2L), (0, "k", 7L)), b4).toSeq
+    val rePairs = StreamOps.nearDupHandler(50, ttl)(0L,
+      Iterator((2L, 0L), (7L, 0L)), b4).toSeq
     assert(rePairs.toSet == Set(StreamOps.NearDupCand(2L, 7L), StreamOps.NearDupCand(5L, 7L)),
       s"re-arrival must not self-pair or re-pair: $rePairs")
     assert(b4.get.members == List(2L, 5L, 7L), b4.get.members.toString)

@@ -794,9 +794,11 @@ class PlanSpec extends AnyFunSuite {
       case (index, tileLevel, prefixLevel) =>
         val t = wideTable(s"knn_budget_${index.tag}", index, tileLevel, prefixLevel)
         def knn(): Unit = SpatialOps.knnIndexed(spark, t, -0.75, 51.25, 10, "c_custkey").collect()
-        // the first query resolves the snapshot once: its two scans share it
+        // the first query resolves the snapshot once and its two scans
+        // share it: one listing job, and the manifest's schema needs no
+        // footer-reading schema job
         val first = graft.JobCount.sites(spark)(knn())
-        assert(first.count(_.contains("IcebergLite")) == 2, s"$index: ${first.mkString("; ")}")
+        assert(first.count(_.contains("IcebergLite")) == 1, s"$index: ${first.mkString("; ")}")
         val again = graft.JobCount.sites(spark)(knn())
         assert(!again.exists(_.contains("IcebergLite")), s"$index: ${again.mkString("; ")}")
         // what is left is the candidate probe and at most one covering probe
@@ -851,5 +853,33 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(SpatialOps.knnIndexedH3(
       spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey").count() == 10)
+  }
+
+  test("budget: minhashLshPairs shuffles at most 5 times and explodes no band structs") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.StructType
+    // every node of an executed plan, through adaptive query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val plans = graft.QueryPlans.of(spark)(
+      TextOps.minhashLshPairs(docs, "doc_id", "text").collect())
+    val all = plans.flatMap(nodes)
+    val shuffles = all.count(_.isInstanceOf[ShuffleExchangeExec])
+    info(s"${plans.size} queries, $shuffles shuffle exchanges")
+    assert(plans.nonEmpty)
+    // the per-doc key, the per-key buckets, the per-pair intersection and
+    // two doc-id sides of the shingle counts; the other joins broadcast
+    // at this size
+    assert(shuffles <= 5, plans.mkString("\n"))
+    val structGenerates = all.collect {
+      case g: GenerateExec if g.generator.elementSchema.fields
+        .exists(_.dataType.isInstanceOf[StructType]) => g
+    }
+    assert(structGenerates.isEmpty, structGenerates.mkString("\n"))
   }
 }

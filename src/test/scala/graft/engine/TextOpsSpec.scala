@@ -37,9 +37,53 @@ class TextOpsSpec extends AnyFunSuite {
     assert(truth.nonEmpty, "fixture should contain planted near-dup pairs")
     // precision is 1.0 by construction (candidates are exact-jaccard verified)
     assert((got -- truth).isEmpty, s"false positives: ${got -- truth}")
-    // LSH recall: P[miss] = (1-s^4)^4 ≈ 1.4% at s=0.9; deterministic here
+    // one min-hash key: a pair with Jaccard s is missed with probability
+    // ≈ 1 - s; deterministic here
     val recall = got.size.toDouble / truth.size
     assert(recall >= 0.85, s"recall $recall (${got.size}/${truth.size})")
+  }
+
+  test("lshCandidates == a plain-Scala min-hash bucketing of the same docs") {
+    // each doc's key is the min over its distinct 3-shingles of md5's top
+    // 60 bits & AffineMask; docs sharing a key pair up unless more than
+    // BandBucketCap docs share it
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    def top60(s: String): Long =
+      java.nio.ByteBuffer.wrap(md5.digest(s.getBytes("UTF-8"))).getLong >>> 4
+    val keys = docs.select("doc_id", "text").collect().flatMap { r =>
+      val w = r.getString(1).trim.split("\\s+").filter(_.nonEmpty)
+      if (w.length < 3) None
+      else Some(r.getLong(0) -> (0 to w.length - 3)
+        .map(i => top60(s"${w(i)} ${w(i + 1)} ${w(i + 2)}") & TextOps.AffineMask).min)
+    }
+    val expected = keys.groupBy(_._2).values
+      .map(_.map(_._1).sorted)
+      .filter(_.length <= TextOps.BandBucketCap)
+      .flatMap(ids => ids.combinations(2).map(p => (p(0), p(1))))
+      .toSet
+    val got = TextOps.lshCandidates(TextOps.shingleSet(docs, "doc_id", "text"), "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(expected.nonEmpty, "fixture should share min-hash keys")
+    assert(got.length == got.toSet.size, "each candidate pair must come out once")
+    assert(got.toSet == expected,
+      s"extra=${got.toSet -- expected} missing=${expected -- got.toSet}")
+  }
+
+  test("minhashLshPairs recall and precision vs brute force, thresholds 0.5-0.9") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val rows = Seq(0.5, 0.6, 0.7, 0.8, 0.9).map { t =>
+      val got = TextOps.minhashLshPairs(docs, "doc_id", "text", threshold = t)
+        .select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val truth = brutePairs(t)
+      (t, truth.size, got.size, (got & truth).size)
+    }
+    info("threshold | true pairs | found | recall | precision")
+    rows.foreach { case (t, nTrue, nGot, hit) =>
+      info(f"$t%.1f | $nTrue | $nGot | ${hit.toDouble / nTrue}%.3f | ${hit.toDouble / nGot}%.3f")
+      assert(nTrue > 0 && hit == nGot, s"threshold $t: false positives or no true pairs")
+    }
   }
 
   test("collect_capped: sorted members, NULL past cap, bounded merge across partitions") {
