@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper bench (guide §1.4/§1.5): NOT the driver
   * contract — Bench.scala stays the frozen harness. This main
   *  - times individual queries with the noop sink (same action as Bench),
@@ -27,15 +25,7 @@ object BenchExtra {
       else SparkEntry.queries.keySet
     val explainDir = if (args.length > 1 && args(1).nonEmpty && args(1) != "-") Some(args(1)) else None
     val iters = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sql.GraftFunctions.register(spark)
+    val spark = graft.sql.GraftSpark.session(s"local[$cpus]")
 
     explainDir.foreach(d => new java.io.File(d).mkdirs())
     val results = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -98,11 +98,8 @@ object OracleSql {
        | FROM _g2 LEFT JOIN _cnt ON _g2.tile = _cnt.tile""".stripMargin.replace("\n", " ")
   }
 
-  /** md5-derived 60-bit positive hash of a string expression — identical in
-    * Spark (`conv`) and DuckDB (`'0x' || hex` cast). Spark form uses conv();
-    * use [[hash60DuckSql]] for the oracle side. */
-  def hash60SparkSql(s: String): String =
-    s"CAST(conv(substring(md5($s), 1, 15), 16, 10) AS BIGINT)"
+  /** md5-derived 60-bit positive hash of a string expression, as DuckDB
+    * SQL (`'0x' || hex` cast) — the oracle side of the engine's hash60. */
   def hash60DuckSql(s: String): String =
     s"CAST(('0x' || substring(md5($s), 1, 15)) AS BIGINT)"
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-efficiency evidence (BASELINE.json north_rule: ≥0.8 from N to 4N
   * executors). No real cluster exists in this sandbox, so the same headline
@@ -12,15 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
   def run(cores: Int, rows: Long, calibRows: Long): Map[String, Double] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sql.GraftFunctions.register(spark)
+    val spark = graft.sql.GraftSpark.session(s"local[$cores]")
     try {
       BenchWork.headline(spark, rows / 10) // JIT warmup at smaller size
       BenchWork.headline(spark, rows).toMap +

@@ -3,8 +3,6 @@ package graft.core
 /** Cell bounding box in degrees, lon-first like the reference's
   * boost::geometry Box (pangeo-geohash `geometry.hpp`, SURVEY.md §2). */
 final case class BBox(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double) {
-  def containsPoint(lon: Double, lat: Double): Boolean =
-    lon >= minLon && lon < maxLon && lat >= minLat && lat < maxLat
   def intersects(o: BBox): Boolean =
     minLon < o.maxLon && maxLon > o.minLon && minLat < o.maxLat && maxLat > o.minLat
 }

@@ -696,21 +696,6 @@ object H3U {
     }
     id
   }
-  private def rotatePent60cw(id0: Long): Long = {
-    var id = id0
-    val res = resolution(id)
-    var foundFirst = false
-    var r = 1
-    while (r <= res) {
-      id = withDigit(id, r, digitRotCw(digit(id, r)))
-      if (!foundFirst && digit(id, r) != 0) {
-        foundFirst = true
-        if (leadingNonZeroDigit(id) == 1) id = rotate60cw(id) // skip deleted K axes
-      }
-      r += 1
-    }
-    id
-  }
 
   // ----------------------------------------------------------------- decode
   /** Published _h3ToFaceIjk: digit walk from the base cell's home, then
@@ -913,27 +898,6 @@ object H3U {
       }
     }
     (lookup, cw)
-  }
-
-  private[core] def cwOffsetDebug: Set[(Int, Int)] = cwOffset
-
-  private[core] def debugLanding(latDeg: Double, lngDeg: Double, res: Int): String = {
-    val lat = math.toRadians(latDeg); val lng = math.toRadians(lngDeg)
-    val (face, x, y) = geoToHex2d(lat, lng, res)
-    val c = new IJK(0, 0, 0)
-    hex2dToCoordIJK(x, y, c)
-    val digits = new Array[Int](res + 1)
-    var r = res
-    while (r >= 1) {
-      val last = c.copyIJK; val lastCenter = c.copyIJK
-      if (isClassIII(r)) { upAp7(c); lastCenter.setFrom(c); downAp7(lastCenter) }
-      else { upAp7r(c); lastCenter.setFrom(c); downAp7r(lastCenter) }
-      val diff = new IJK(0, 0, 0); ijkSub(last, lastCenter, diff); ijkNormalize(diff)
-      digits(r) = unitIjkToDigit(diff); r -= 1
-    }
-    val key = (face, c.i, c.j, c.k)
-    s"landing $key raw ${digits.drop(1).toSeq} lookup ${posLookup.get(key)} " +
-      s"cw ${posLookup.get(key).map(e => cwOffset((e._1, face)))}"
   }
 
   // Flat hot-path forms of the calibrated lookup: index = ((face*3+i)*3+j)*3+k

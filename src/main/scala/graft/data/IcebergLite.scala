@@ -18,6 +18,10 @@ import graft.sql.CellIndex
   * per-partition row counts and content checksums. Gives the pieces the
   * north_rule asks for without the dependency:
   *
+  *  - ONE commit: [[write]], [[update]], [[extend]] and [[compact]] choose
+  *    the prior entries to keep and the partitions to write; `commit` writes
+  *    them as the next snapshot, with the table schema, under the table's
+  *    own partition column (another one is rejected before any write);
   *  - FILE-LEVEL appends: every snapshot writes its data files under its own
   *    `data/snapid=<id>/` directory, so `extend` ADDS files and never
   *    rewrites an existing partition (at 100 TB an append that re-reads and
@@ -36,7 +40,12 @@ import graft.sql.CellIndex
   *  - table properties in the manifest header (tile precision, lon/lat
   *    column names) drive the [[graft.sql.DeriveCoveringPrune]] optimizer
   *    rule: a bare box / point-in-polygon filter over a manifest-backed
-  *    table is rewritten into a partition-prefix IN-list automatically.
+  *    table is rewritten into a partition-prefix IN-list automatically;
+  *  - the table's compaction policy ([[PropAutoCompact]]) is applied by
+  *    [[extend]].
+  *
+  * Only this object knows the directory layout; [[snapshotAt]] maps a load
+  * path back to its table.
   *
   * Checksums are order-independent (bit_xor of xxhash64 over all columns), so
   * they are stable across parallelism levels; a partition touched by several
@@ -52,8 +61,7 @@ object IcebergLite {
     * with no entries load as a typed empty table. */
   final case class Manifest(snapshotId: Long, parentSnapshotId: Long,
                             partitionCol: String, properties: Map[String, String],
-                            entries: Seq[PartitionEntry],
-                            schema: Option[StructType] = None)
+                            entries: Seq[PartitionEntry], schema: StructType)
 
   /** Property keys consumed by the optimizer rule. */
   val PropPrefixBits = "tile.prefix.bits"
@@ -62,19 +70,17 @@ object IcebergLite {
   /** The [[CellIndex.tag]] of the table's cell index (absent = geohash);
     * read only through [[CellIndex.fromManifest]]. */
   val PropIndexType = "tile.index"
-  /** Streaming-ingest hygiene: compact (+ expire) whenever the manifest
-    * references this many distinct snapshots. Absent/0 = manual only. */
+  /** The table's compaction policy: an [[extend]] whose manifest
+    * references this many distinct snapshots runs [[compact]] and then
+    * [[expireSnapshots]] (a long-lived stream must not grow one snapshot
+    * dir per micro-batch forever). Absent/0 = manual only. */
   val PropAutoCompact = "compact.auto.snapshots"
 
   private def manifestDir(table: String) = Paths.get(table, "_manifests")
   private def currentPtr(table: String) = Paths.get(table, "_manifests", "CURRENT")
 
-  def readManifest(table: String): Option[Manifest] = {
-    val ptr = currentPtr(table)
-    if (!Files.exists(ptr)) return None
-    val snap = Files.readString(ptr).trim.toLong
-    readSnapshot(table, snap)
-  }
+  def readManifest(table: String): Option[Manifest] =
+    snapshotStamp(table).flatMap(s => readSnapshot(table, s.id))
 
   /** Any committed snapshot by id (time travel). */
   def readSnapshot(table: String, snap: Long): Option[Manifest] = {
@@ -82,8 +88,12 @@ object IcebergLite {
     if (!Files.exists(p)) return None
     val lines = Files.readAllLines(p).asScala.toSeq
     val header = lines.head.split("\t", -1) // id parentId partitionCol props schema
+    // the schema has its own field: its JSON may hold the ';' and '='
+    // that separate properties
+    if (header.length < 5 || header(4).isEmpty) throw new IllegalStateException(
+      s"table $table snapshot $snap records no schema")
     val props =
-      if (header.length < 4 || header(3).isEmpty) Map.empty[String, String]
+      if (header(3).isEmpty) Map.empty[String, String]
       else header(3).split(";").map { kv =>
         val Array(k, v) = kv.split("=", 2); k -> v
       }.toMap
@@ -91,19 +101,14 @@ object IcebergLite {
       val f = l.split("\t")
       PartitionEntry(f(0), f(1).toLong, f(2).toLong, f(3).toLong)
     }
-    // the schema has its own field: its JSON may hold the ';' and '='
-    // that separate properties
-    val schema =
-      if (header.length < 5 || header(4).isEmpty) None
-      else Some(DataType.fromJson(header(4)).asInstanceOf[StructType])
-    Some(Manifest(header(0).toLong, header(1).toLong, header(2), props, entries, schema))
+    Some(Manifest(header(0).toLong, header(1).toLong, header(2), props, entries,
+      DataType.fromJson(header(4)).asInstanceOf[StructType]))
   }
 
   private def commitManifest(table: String, m: Manifest): Unit = {
     Files.createDirectories(manifestDir(table))
     val props = m.properties.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";")
-    val schema = m.schema.fold("")(_.json)
-    val body = (s"${m.snapshotId}\t${m.parentSnapshotId}\t${m.partitionCol}\t$props\t$schema" +:
+    val body = (s"${m.snapshotId}\t${m.parentSnapshotId}\t${m.partitionCol}\t$props\t${m.schema.json}" +:
       m.entries.sortBy(e => (e.partition, e.snapshotId))
         .map(e => s"${e.partition}\t${e.rows}\t${e.checksum}\t${e.snapshotId}"))
       .mkString("\n")
@@ -136,66 +141,64 @@ object IcebergLite {
     StructType((data ++ part).map(_.copy(nullable = true)))
   }
 
-  private def snapDir(table: String, snapshotId: Long) = s"$table/data/snapid=$snapshotId"
+  private def dataDir(table: String) = s"$table/data"
+  private def snapDir(table: String, snapshotId: Long) = s"${dataDir(table)}/snapid=$snapshotId"
 
-  private def writeSnapshotFiles(df: DataFrame, table: String, partitionCol: String,
-                                 snapshotId: Long, partitions: Seq[String]): Unit = {
+  /** The one snapshot commit: writes `df`'s `partitions` as the snapshot
+    * after `prior`, whose manifest holds the `kept` entries plus one entry
+    * per written partition. Zero partitions commit entries and properties
+    * only (e.g. the empty first snapshot of an empty DataFrame's table). */
+  private def commit(table: String, prior: Option[Manifest], df: DataFrame,
+                     partitionCol: String, stats: Map[String, (Long, Long)],
+                     partitions: Seq[String], kept: Seq[PartitionEntry],
+                     properties: Map[String, String]): Manifest = {
+    prior.foreach(p => require(p.partitionCol == partitionCol,
+      s"table $table is partitioned by ${p.partitionCol}, not $partitionCol"))
+    val snapshotId = prior.fold(0L)(_.snapshotId + 1)
     // dynamic overwrite INSIDE the new snapshot dir: a re-attempt after a
     // crash (same snapshot id) replaces its own partial files and never
     // touches a committed snapshot's files. Per-write option, not a session
     // conf mutation — the session's overwrite semantics outside IcebergLite
     // must stay whatever the user set.
-    df.where(col(partitionCol).cast("string").isin(partitions: _*))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(snapDir(table, snapshotId))
+    if (partitions.nonEmpty)
+      df.where(col(partitionCol).cast("string").isin(partitions: _*))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCol)
+        .parquet(snapDir(table, snapshotId))
+    val m = Manifest(snapshotId, prior.fold(-1L)(_.snapshotId), partitionCol,
+      prior.fold(Map.empty[String, String])(_.properties) ++ properties,
+      kept ++ partitions.map(p => PartitionEntry(p, stats(p)._1, stats(p)._2, snapshotId)),
+      tableSchema(df, partitionCol))
+    commitManifest(table, m)
+    m
   }
+
+  /** The committed manifest that `op` builds on. */
+  private def committed(table: String, op: String): Manifest =
+    readManifest(table).getOrElse(throw new IllegalStateException(s"$op on uninitialized table $table"))
 
   /** Write (or resume writing) `df` partitioned by `partitionCol`.
     * Returns the committed manifest. Idempotent: rerunning after any crash
     * converges to the same committed state. `failAfterPartitions` injects a
     * crash for the resume test (kills the job after K partitions committed).
     * `properties` become table properties in the manifest header (see
-    * [[writeTiled]] for the tile-aware convenience form). */
+    * [[writeTiled]] for the tile-aware convenience form); new properties
+    * commit even when no partition is left to write. */
   def write(df: DataFrame, table: String, partitionCol: String,
             failAfterPartitions: Int = Int.MaxValue,
             properties: Map[String, String] = Map.empty): Manifest = {
     val prior = readManifest(table)
-    val done = prior.map(_.entries.map(_.partition).toSet).getOrElse(Set.empty)
-    val snapshotId = prior.map(_.snapshotId + 1).getOrElse(0L)
-
+    val done = prior.fold(Set.empty[String])(_.entries.map(_.partition).toSet)
     val all = stats(df, partitionCol)
-    var todo = all.keys.filterNot(done).toSeq.sorted
-    val injected = todo.size > failAfterPartitions
-    if (injected) todo = todo.take(failAfterPartitions)
-    if (todo.isEmpty) {
-      return prior match {
-        // no data to write, but NEW table properties must still land (e.g.
-        // writeTiled registering the tiling on an already-written table)
-        case Some(p) if properties.nonEmpty && (p.properties ++ properties) != p.properties =>
-          val m = p.copy(snapshotId = p.snapshotId + 1, parentSnapshotId = p.snapshotId,
-            properties = p.properties ++ properties)
-          commitManifest(table, m); m
-        case Some(p) => p
-        case None =>
-          // brand-new table from an empty DataFrame: commit an explicit empty
-          // snapshot-0 (with properties) instead of NoSuchElementException
-          val m = Manifest(snapshotId, -1L, partitionCol, properties, Nil,
-            Some(tableSchema(df, partitionCol)))
-          commitManifest(table, m); m
-      }
-    }
-
-    writeSnapshotFiles(df, table, partitionCol, snapshotId, todo)
-
-    val newEntries = todo.map(p => PartitionEntry(p, all(p)._1, all(p)._2, snapshotId))
-    val m = Manifest(snapshotId, prior.map(_.snapshotId).getOrElse(-1L), partitionCol,
-      prior.map(_.properties).getOrElse(Map.empty) ++ properties,
-      prior.map(_.entries).getOrElse(Nil) ++ newEntries, Some(tableSchema(df, partitionCol)))
-    commitManifest(table, m)
-    if (injected) throw new RuntimeException(
-      s"[injected] crashed after $failAfterPartitions partitions (snapshot $snapshotId committed)")
+    val todo = all.keys.filterNot(done).toSeq.sorted
+    val partitions = todo.take(failAfterPartitions)
+    if (partitions.isEmpty && prior.exists(p => p.properties ++ properties == p.properties))
+      return prior.get
+    val m = commit(table, prior, df, partitionCol, all, partitions,
+      prior.fold(Seq.empty[PartitionEntry])(_.entries), properties)
+    if (partitions.size < todo.size) throw new RuntimeException(
+      s"[injected] crashed after $failAfterPartitions partitions (snapshot ${m.snapshotId} committed)")
     m
   }
 
@@ -242,35 +245,35 @@ object IcebergLite {
     * new snapshot. Old files are not deleted — they stay reachable through
     * the parent manifest (snapshot isolation) and merely invisible here. */
   def update(df: DataFrame, table: String, partitionCol: String): Manifest = {
-    val prior = readManifest(table).getOrElse(
-      throw new IllegalStateException(s"update on uninitialized table $table"))
-    val snapshotId = prior.snapshotId + 1
+    val prior = committed(table, "update")
     val incoming = stats(df, partitionCol)
-    writeSnapshotFiles(df, table, partitionCol, snapshotId, incoming.keys.toSeq)
-    val kept = prior.entries.filterNot(e => incoming.contains(e.partition))
-    val m = Manifest(snapshotId, prior.snapshotId, partitionCol, prior.properties,
-      kept ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
-      Some(tableSchema(df, partitionCol)))
-    commitManifest(table, m)
-    m
+    commit(table, Some(prior), df, partitionCol, incoming, incoming.keys.toSeq.sorted,
+      prior.entries.filterNot(e => incoming.contains(e.partition)), Map.empty)
   }
 
   /** Reference `GeoHash.extend` (#17): APPEND rows to their partitions.
     * FILE-LEVEL: the batch lands as new files under the new snapshot's own
     * directory and the manifest gains one entry per touched partition; no
     * existing file is read or rewritten, which is the only append shape that
-    * works at 100 TB. */
+    * works at 100 TB. On a table recording [[PropAutoCompact]], an append
+    * that makes the manifest reference that many snapshots is followed by
+    * [[compact]] and [[expireSnapshots]], and the compacted manifest is
+    * returned. */
   def extend(df: DataFrame, table: String, partitionCol: String): Manifest = {
-    val prior = readManifest(table).getOrElse(
-      throw new IllegalStateException(s"extend on uninitialized table $table"))
-    val snapshotId = prior.snapshotId + 1
+    val prior = committed(table, "extend")
     val incoming = stats(df, partitionCol)
-    writeSnapshotFiles(df, table, partitionCol, snapshotId, incoming.keys.toSeq)
-    val m = Manifest(snapshotId, prior.snapshotId, partitionCol, prior.properties,
-      prior.entries ++ incoming.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
-      Some(tableSchema(df, partitionCol)))
-    commitManifest(table, m)
-    m
+    val m = commit(table, Some(prior), df, partitionCol, incoming, incoming.keys.toSeq.sorted,
+      prior.entries, Map.empty)
+    val every = m.properties.get(PropAutoCompact).fold(0)(_.toInt)
+    if (every <= 0 || m.entries.map(_.snapshotId).distinct.size < every) m
+    else {
+      // not through the session's snapshot slot: `df`'s session may be a
+      // stream's short-lived clone, which would keep its slot until the
+      // context stops
+      val compacted = rewrite(table, m, load(df.sparkSession, table, m))
+      expireSnapshots(table)
+      compacted
+    }
   }
 
   /** Read through a manifest: only committed (snapshot, partition) pairs are
@@ -298,20 +301,28 @@ object IcebergLite {
       .getOrElse(throw new IllegalStateException(s"no committed snapshot at $table")))
 
   private def load(spark: SparkSession, table: String, m: Manifest): DataFrame = {
-    if (m.entries.isEmpty) return m.schema
-      .map(spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
-      .getOrElse(throw new IllegalStateException(
-        s"table $table snapshot ${m.snapshotId} has no data partitions"))
+    if (m.entries.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
     val dirs = m.entries.map(e =>
-      s"$table/data/snapid=${e.snapshotId}/${esc(m.partitionCol)}=${esc(e.partition)}")
+      s"${snapDir(table, e.snapshotId)}/${esc(m.partitionCol)}=${esc(e.partition)}")
       .distinct
     // the recorded schema types the partition column as written: inferred
     // from directory names, a bigint prefix whose values fit an int reads
     // back as int. It also spares the footer read that infers the rest.
-    val reader = spark.read.option("basePath", s"$table/data")
-    m.schema.fold(reader)(s => reader.schema(s.add("snapid", LongType)))
+    spark.read.option("basePath", dataDir(table))
+      .schema(m.schema.add("snapid", LongType))
       .parquet(dirs: _*).drop("snapid")
+  }
+
+  /** The current snapshot of the table that `path` belongs to: a load path
+    * of [[load]] (`<table>/data/snapid=<s>/<part>=<v>`) or a `<table>/data`
+    * root (a direct parquet load of the whole layout). */
+  def snapshotAt(spark: SparkSession, path: String): Option[Snapshot] = {
+    val i = path.indexOf("/data/snapid=")
+    val table = if (i >= 0) Some(path.substring(0, i))
+      else Some(path.stripSuffix("/data")).filter(_ != path)
+    table.flatMap(currentOption(spark, _))
   }
 
   /** The snapshot CURRENT points at, as one session sees it: its manifest
@@ -392,12 +403,18 @@ object IcebergLite {
     * classic cost, and compaction is the standard rewrite-by-design answer.
     * Old snapshots stay readable until [[expireSnapshots]]. */
   def compact(spark: SparkSession, table: String): Manifest = {
-    val prior = readManifest(table).getOrElse(
-      throw new IllegalStateException(s"compact on uninitialized table $table"))
-    val snapshotId = prior.snapshotId + 1
+    // manifest and content from ONE snapshot, whose file listing the
+    // session may already hold (see current)
+    val snap = current(spark, table)
+    rewrite(table, snap.manifest, snap.df)
+  }
+
+  /** Commits `content`, the visible content of snapshot `prior`, as one
+    * new snapshot that keeps none of `prior`'s entries. */
+  private def rewrite(table: String, prior: Manifest, content: DataFrame): Manifest = {
     // materialize before writing: the new snapshot dir is separate, but the
     // plan must not lazily re-list data/ mid-write
-    val current0 = read(spark, table).localCheckpoint(true)
+    val current0 = content.localCheckpoint(true)
     // restore tile clustering lost to micro-batch appends: tiled tables get
     // tight per-row-group min/max stats back after compaction (see
     // writeTiled; XOR checksums are order-insensitive)
@@ -406,12 +423,8 @@ object IcebergLite {
         current0.sortWithinPartitions(col(prior.partitionCol), col("tile"))
       else current0
     val incoming = stats(current, prior.partitionCol)
-    writeSnapshotFiles(current, table, prior.partitionCol, snapshotId, incoming.keys.toSeq)
-    val m = Manifest(snapshotId, prior.snapshotId, prior.partitionCol, prior.properties,
-      incoming.toSeq.map { case (p, (r, c)) => PartitionEntry(p, r, c, snapshotId) },
-      Some(tableSchema(current, prior.partitionCol)))
-    commitManifest(table, m)
-    m
+    commit(table, Some(prior), current, prior.partitionCol, incoming, incoming.keys.toSeq.sorted,
+      Nil, Map.empty)
   }
 
   /** Delete data directories of snapshots no longer referenced by the
@@ -421,9 +434,9 @@ object IcebergLite {
   def expireSnapshots(table: String): Seq[Long] = {
     val m = readManifest(table).getOrElse(return Nil)
     val live = m.entries.map(_.snapshotId).toSet
-    val dataDir = Paths.get(table, "data")
-    if (!Files.exists(dataDir)) return Nil
-    val victims = scala.util.Using.resource(Files.list(dataDir)) { s =>
+    val data = Paths.get(dataDir(table))
+    if (!Files.exists(data)) return Nil
+    val victims = scala.util.Using.resource(Files.list(data)) { s =>
       s.iterator().asScala
         .filter(p => p.getFileName.toString.startsWith("snapid="))
         .map(p => (p, p.getFileName.toString.stripPrefix("snapid=").toLong))

@@ -11,12 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object MediaGen {
   final val AudioRate = 16000
 
-  /** Samples per clip — kept as the single source of truth for the
-    * q62 oracle: n = floor((1600 + 16·(id mod 100)) / 16000 · 16000)
-    * with IEEE double division/multiplication in BOTH engines. */
-  def audioSamples(id: Long): Int =
-    (((1600 + 16 * (id % 100)) / 16000.0) * AudioRate).toInt
-
   /** (media_id, bytes) — seeded sine + noise WAV clips. */
   def audioTable(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._

@@ -79,7 +79,8 @@ object AnnOps {
     * SRP bucket matches the query's bucket (approximate recall, no full
     * scan). Output (qid, rnk, vec_id, cosine). */
   def annLsh(emb: DataFrame, idCol: String, embCol: String,
-             dim: Int, nQueries: Int, k: Int, nPlanes: Int = 8): DataFrame = {
+             dim: Int, nQueries: Int, k: Int): DataFrame = {
+    val nPlanes = 8
     val bucketed = emb.withColumn("_bucket", srpBucket(embCol, dim, nPlanes))
       .withColumn("_n", sqrt(norm2(embCol, dim)))
     val perQuery = (0 until nQueries).map { q =>
@@ -224,24 +225,13 @@ object AnnOps {
     // manifest and scan from ONE snapshot (see IcebergLite.current)
     val snap = graft.data.IcebergLite.current(spark, table)
     val manifest = snap.manifest
-    val nCentroids = manifest.properties("ivf.n_centroids").toInt
     val idCol = manifest.properties("ivf.id_col")
     val embCol = manifest.properties("ivf.emb_col")
-    val tbl = snap.df
-    // centroid vectors come from the manifest when the index recorded them
-    // (writeIvfIndex does) — zero table scan for probe selection; tables
-    // written before that property existed fall back to the bounded scan
-    val centroids: Array[(Long, Array[Double])] =
-      manifest.properties.get("ivf.centroids") match {
-        case Some(s) => parseCentroids(s)
-        case None => tbl.where(col(idCol) < nCentroids)
-          .select(col(idCol).cast("long"), col(embCol).cast("array<double>"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-      }
-    require(centroids.length == nCentroids, s"expected $nCentroids centroid rows")
-    val withNorm = tbl.withColumn("_n", sqrt(norm2(embCol, dim)))
+    // centroid vectors come from the manifest (writeIvfIndex records them):
+    // zero table scan for probe selection
+    val centroids = parseCentroids(manifest.properties.getOrElse("ivf.centroids",
+      throw new IllegalStateException(s"IVF table $table records no ivf.centroids")))
+    val withNorm = snap.df.withColumn("_n", sqrt(norm2(embCol, dim)))
     val perQuery = (0 until nQueries).map { q =>
       val qv = queryVec(q, dim)
       val qn = math.sqrt(qv.map(x => x * x).sum)
@@ -262,19 +252,18 @@ object AnnOps {
 
   /** Embedding near-duplicate pairs, label-blocked (compare only within the
     * same `label` block — the blocking pattern that avoids O(n²) at scale).
-    * Oversized blocks (> subBlockCap rows) are further split by SRP bucket
-    * ([[srpBucket]]), trading recall on merely-similar pairs for bounded
+    * Oversized blocks (> [[SubBlockCap]] rows) are further split by SRP
+    * bucket ([[srpBucket]] over [[SubPlanes]] planes), trading recall on merely-similar pairs for bounded
     * candidate counts — true near-dups agree on sign bits with high
     * probability. The sub-bucket is part of the JOIN KEY (not a post-join
     * filter), so the quadratic blow-up never materializes.
     * Output (vec_a, vec_b, cosine ≥ threshold). */
   def blockedNearDup(emb: DataFrame, idCol: String, embCol: String, labelCol: String,
-                     dim: Int, threshold: Double,
-                     subBlockCap: Int = SubBlockCap, subPlanes: Int = SubPlanes): DataFrame = {
+                     dim: Int, threshold: Double): DataFrame = {
     val cnt = emb.groupBy(col(labelCol)).agg(count(lit(1)).as("_ln"))
     val keyed = emb.join(cnt, labelCol) // AQE broadcasts the tiny count side
-      .withColumn("_jb", when(col("_ln") > subBlockCap,
-        srpBucket(embCol, dim, subPlanes)).otherwise(lit(-1L)))
+      .withColumn("_jb", when(col("_ln") > SubBlockCap,
+        srpBucket(embCol, dim, SubPlanes)).otherwise(lit(-1L)))
     // norms computed once per ROW (not per pair): sqrt hoisted above the join
     val a = keyed.select(col(labelCol).as("_l"), col("_jb"),
         col(idCol).as("vec_a"), col(embCol).as("_ea"))

@@ -116,16 +116,14 @@ object SpatialOps {
     * space) is re-expressed as an EQUI-join on gh_parent(fine, fineBits,
     * coarseBits) — prefix nesting makes them identical — so Catalyst plans a
     * plain hash join instead of needing a custom range-join SparkStrategy.
-    * The coarse side is bounded by 2^coarseBits cells; broadcast it unless
-    * the caller says otherwise. */
+    * The coarse side is bounded by 2^coarseBits cells, so it is broadcast. */
   def rangeJoinCells(fine: DataFrame, fineTileCol: String, fineBits: Int,
-                     coarse: DataFrame, coarseTileCol: String, coarseBits: Int,
-                     broadcastCoarse: Boolean = true): DataFrame = {
+                     coarse: DataFrame, coarseTileCol: String, coarseBits: Int): DataFrame = {
     require(coarseBits >= 1 && coarseBits <= fineBits,
       s"coarseBits $coarseBits !in 1..$fineBits")
     val withAncestor = fine.withColumn(
       coarseTileCol, gf.gh_parent(col(fineTileCol), fineBits, coarseBits))
-    withAncestor.join(if (broadcastCoarse) broadcast(coarse) else coarse, coarseTileCol)
+    withAncestor.join(broadcast(coarse), coarseTileCol)
   }
 
   /** Points whose cell lies in the 3×3 block around (qLon, qLat) — the
@@ -299,7 +297,7 @@ object SpatialOps {
     * the table. The index, prefix column, prefix level and lon/lat columns
     * are the ones the current snapshot's manifest records. Exact, answered
     * as a local DataFrame with `rank` — see [[knnExpand]]; a table with no
-    * rows records no schema, and answers with an empty `rank` column. */
+    * rows answers with an empty frame of its recorded schema plus `rank`. */
   def knnIndexed(spark: SparkSession, table: String,
                  qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
     val t = new PinnedTable(spark, table)

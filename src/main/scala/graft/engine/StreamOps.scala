@@ -121,7 +121,9 @@ object StreamOps {
     * [[graft.data.IcebergLite.extend]] (file-level appends: each
     * micro-batch adds a snapshot, no partition rewrite). The first batch
     * CREATES the table with the tiling properties, so streamed tables are
-    * prune-aware like batch-written ones. Because the per-partition
+    * prune-aware like batch-written ones; `autoCompactEvery > 0` records
+    * it as the table's [[graft.data.IcebergLite.PropAutoCompact]] policy,
+    * which the appends then apply. Because the per-partition
     * checksums are XOR-accumulative, the stream-fed table's cumulative
     * manifest state equals a one-shot batch write's — asserted in
     * EngineOpsSpec. Returns the final per-tile counts read through the
@@ -149,20 +151,9 @@ object StreamOps {
           .withColumn("tile", index.cell(col("lon"), col("lat"), level))
           .withColumn("tile_p", index.parent(col("tile"), level, prefixLevel))
           .localCheckpoint(true)
-        val m =
-          if (IcebergLite.readManifest(table).isEmpty)
-            IcebergLite.write(tiled, table, "tile_p", properties = props)
-          else IcebergLite.extend(tiled, table, "tile_p")
-        // snapshots-per-compact hygiene: a long-lived stream must not grow
-        // one snapshot dir per micro-batch forever — when the manifest
-        // references >= N distinct snapshots, fold them into one and drop
-        // the superseded dirs (readers of the PRIOR manifest are unaffected:
-        // compact writes a NEW snapshot, expire only removes unreferenced)
-        if (autoCompactEvery > 0 &&
-            m.entries.iterator.map(_.snapshotId).toSet.size >= autoCompactEvery) {
-          IcebergLite.compact(spark, table)
-          IcebergLite.expireSnapshots(table)
-        }
+        if (IcebergLite.readManifest(table).isEmpty)
+          IcebergLite.write(tiled, table, "tile_p", properties = props)
+        else IcebergLite.extend(tiled, table, "tile_p")
       }
       ()
     }

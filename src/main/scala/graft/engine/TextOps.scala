@@ -147,7 +147,6 @@ object TextOps {
     * (singletons never enter the pair set; their rep is trivially
     * themselves — left-join the corpus against this result downstream). */
   def dedupClusters(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
     // edges oriented big → small (u > v), self-loops dropped
     var e = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
@@ -157,25 +156,12 @@ object TextOps {
       .localCheckpoint(true)
     var prevSig = (-1L, -1L)
     var converged = e.isEmpty
-    var edgeCount = -1L // unknown until the first convergence signature
     var rounds = 0
-    // Scale-adaptive round sizing: each round is 2 joins + 2 distincts over
-    // the CURRENT edge set, whose count comes FREE from the previous
-    // round's convergence signature (no extra job). Size the round's
-    // shuffle partitions from it (~4M 16-byte edges ≈ 64 MB per partition,
-    // capped at the session's parallelism) instead of inheriting a
-    // constant: at 100 TB the edge set saturates the cap, while the
-    // converged tail of a small graph stops paying a full task wave per
-    // stage (guide §2.2). The FIRST round, whose size is unknown, runs
-    // under the caller's configuration. Restored after the loop.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    def roundParts(n: Long): String =
-      math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-        n / 4000000L + 1)).toString
-    try {
+    // each round's shuffles run under the session's configuration: AQE
+    // coalesces their post-shuffle partitions from the round's edge-set
+    // size, so the converged tail of a small graph does not pay a full
+    // task wave per stage
     while (!converged && rounds < 64) {
-      if (edgeCount >= 0)
-        spark.conf.set("spark.sql.shuffle.partitions", roundParts(edgeCount))
       // LARGE-STAR: for every node u (adjacency in BOTH directions),
       // m = min(N(u) ∪ {u}); link every LARGER neighbor to m.
       val adj = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -200,11 +186,9 @@ object TextOps {
       val sig = (sigRow.getLong(0), sigRow.getLong(1))
       converged = sig == prevSig
       prevSig = sig
-      edgeCount = sig._1
       e = next
       rounds += 1
     }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     // converged edge set is a star forest: (member, component-min)
     val members = e.select(col("u").as("doc_id"), col("v").as("cluster_rep"))
     val roots = e.select(col("v").as("doc_id")).distinct()

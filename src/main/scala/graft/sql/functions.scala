@@ -220,19 +220,17 @@ object functions {
   * defaults (shuffle partitions sized to cores, AQE + skew-join on). */
 object GraftSpark {
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = -1,
               appName: String = "graft"): SparkSession = {
     val cores = master match {
       case m if m.startsWith("local[") && !m.contains("*") =>
         m.stripPrefix("local[").stripSuffix("]").toInt
       case _ => Runtime.getRuntime.availableProcessors()
     }
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -175,11 +175,9 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** The IcebergLite manifest backing this parquet relation, if its
-    * properties record a tiling. [[graft.data.IcebergLite.read]] lists the
-    * visible `<table>/data/snapid=<s>/<part>=<v>` leaf dirs as load paths
-    * (constant-size visibility), so the table root is recovered from the
-    * first path's `/data/snapid=` segment; a plain `<table>/data` root
-    * (direct parquet load of the whole layout) is also accepted.
+    * properties record a tiling. The table is the one
+    * [[graft.data.IcebergLite.snapshotAt]] finds for the relation's first
+    * root path.
     *
     * The optimizer calls this on every fixed-point iteration for every
     * Filter-over-parquet node, so the manifest comes from the session's
@@ -188,15 +186,8 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
   private def manifestFor(l: LogicalRelation) = l.relation match {
     case fs: HadoopFsRelation =>
       fs.location.rootPaths.headOption
-        .map(_.toUri.getPath)
-        .flatMap { p =>
-          val i = p.indexOf("/data/snapid=")
-          if (i >= 0) Some(p.substring(0, i))
-          else if (p.endsWith("/data")) Some(p.stripSuffix("/data"))
-          else None
-        }
-        .flatMap(t => SparkSession.getActiveSession
-          .flatMap(graft.data.IcebergLite.currentOption(_, t)))
+        .flatMap(p => SparkSession.getActiveSession
+          .flatMap(graft.data.IcebergLite.snapshotAt(_, p.toUri.getPath)))
         .map(_.manifest)
         .flatMap(m => m.properties.get(graft.data.IcebergLite.PropPrefixBits)
           .map(b => (m, b.toInt)))

@@ -207,6 +207,56 @@ class IcebergLiteSpec extends AnyFunSuite {
       .sameElements(Seq((1L, "a", 3L), (2L, "b", 4L))))
   }
 
+  private def snapDirs(t: String): Set[Long] =
+    scala.util.Using.resource(Files.list(Paths.get(t, "data"))) { s =>
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("snapid="))
+        .map(_.stripPrefix("snapid=").toLong).toSet
+    }
+
+  test("extend, update and write under another partition column throw and leave the table readable") {
+    val t = s"${tmp("other_part")}/t"
+    val before = Seq((1L, "a", 3L), (2L, "b", 4L))
+    IcebergLite.write(before.toDF("k", "v", "p"), t, "p")
+    val other = Seq((5L, "c", 6L)).toDF("k", "v", "q")
+    Seq[(String, () => Any)](
+      "extend" -> (() => IcebergLite.extend(other, t, "q")),
+      "update" -> (() => IcebergLite.update(other, t, "q")),
+      "write" -> (() => IcebergLite.write(other, t, "q"))).foreach { case (op, commit) =>
+        val e = intercept[IllegalArgumentException](commit())
+        assert(e.getMessage.contains("partitioned by p"), op)
+        assert(IcebergLite.readManifest(t).get.snapshotId == 0, op)
+        assert(snapDirs(t) == Set(0L), s"$op wrote data before failing")
+        assert(IcebergLite.read(spark, t).as[(Long, String, Long)].collect().sorted.toSeq == before, op)
+    }
+  }
+
+  test("extend applies the table's compaction policy: at most 3 snapshots, none left unreferenced") {
+    val t = s"${tmp("auto_compact")}/t"
+    def rows(from: Long, until: Long): DataFrame =
+      spark.range(from, until).toDF("k").withColumn("p", $"k" % 3)
+    IcebergLite.write(rows(0, 10), t, "p", properties = Map(IcebergLite.PropAutoCompact -> "3"))
+    (1 to 5).foreach { i =>
+      val m = IcebergLite.extend(rows(i * 10L, i * 10L + 10), t, "p")
+      val live = m.entries.map(_.snapshotId).toSet
+      assert(live.size <= 3, s"after extend $i the manifest references ${live.toSeq.sorted}")
+      assert(IcebergLite.readManifest(t).get.snapshotId == m.snapshotId,
+        s"extend $i returned a manifest other than the committed one")
+      assert(snapDirs(t) == live, s"after extend $i the data dir holds ${snapDirs(t).toSeq.sorted}")
+    }
+    assert(keys(IcebergLite.read(spark, t).withColumnRenamed("k", "c_custkey")) == (0L until 60L))
+  }
+
+  test("a manifest without the schema field fails the read, naming the table") {
+    val t = s"${tmp("no_schema")}/t"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$t/data/snapid=0/p=3")
+    Files.createDirectories(Paths.get(t, "_manifests"))
+    Files.writeString(Paths.get(t, "_manifests", "snap-0.tsv"), "0\t-1\tp\t\n3\t1\t0\t0")
+    Files.writeString(Paths.get(t, "_manifests", "CURRENT"), "0")
+    val e = intercept[IllegalStateException](IcebergLite.read(spark, t))
+    assert(e.getMessage.contains(t) && e.getMessage.contains("snapshot 0"), e.getMessage)
+  }
+
   // stops the suite's SparkContext: keep this test last
   test("a stopped context's slots are dropped, so they cannot keep its session alive") {
     val t = s"${tmp("slot_stop")}/t"
