@@ -11,14 +11,25 @@ by cell (floats bit-exact via struct pack, like a hash would be).
 
 With --against, every query dumped in either directory (not only the
 oracle ones) is compared with the same-named dump of another graft.Verify
-run, with the same comparator: a row-identity check between two builds.
+run: first the parquet schemas (column name, arrow type and nullability,
+sorted by name), then the rows with the same comparator. Both sides are
+Spark, so a type drift between two builds is a failure even where DuckDB's
+EXCEPT ALL would coerce it away (int vs bigint). Oracle mode compares rows
+only: DuckDB's and Spark's types legitimately differ there.
 """
 import sys, json, glob, os
 import duckdb
+import pyarrow.parquet as pq
 
 
 def read_dump(con, dump):
     return con.execute(f"SELECT * FROM read_parquet('{dump}/*.parquet')").fetch_arrow_table()
+
+
+def dump_schema(dump):
+    """(name, arrow type, nullable) of each column of a Spark dump, by name."""
+    part = sorted(glob.glob(os.path.join(dump, "*.parquet")))[0]
+    return sorted((f.name, str(f.type), f.nullable) for f in pq.read_schema(part))
 
 
 def compare(con, a, b, a_name, b_name):
@@ -71,6 +82,10 @@ def check_against(con, other, out, subset):
         mine, theirs = os.path.join(out, q), os.path.join(other, q)
         if not os.path.isdir(mine) or not os.path.isdir(theirs):
             yield q, f"MISSING dump in {other if os.path.isdir(mine) else out}", 0; continue
+        sa, sb = dump_schema(mine), dump_schema(theirs)
+        if sa != sb:
+            yield q, (f"TYPE mismatch this={[f for f in sa if f not in sb]}"
+                      f" other={[f for f in sb if f not in sa]}"), 0; continue
         a = read_dump(con, mine)
         yield q, compare(con, a, read_dump(con, theirs), "this", "other"), a.num_rows
 

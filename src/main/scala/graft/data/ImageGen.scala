@@ -39,7 +39,7 @@ object ImageGen {
   /** Stable 64-bit hash of an image_id (FNV-1a over UTF-8 bytes). The
     * UTF8String overload is canonical: it reads bytes in place with zero
     * allocation, which is what Catalyst codegen calls on the headline
-    * 10¹²-row tile-assign path (graft.sql.DeriveLon/DeriveLat). Image ids
+    * 10¹²-row tile-assign path (derive_lon/derive_lat). Image ids
     * are ASCII ("img%012d"), so the char-walking String overload is
     * byte-identical for every id this table can contain.
     */
@@ -89,8 +89,9 @@ object ImageGen {
     } else unit(r2) * 170.0 - 85.0
   }
 
-  /** Zero-allocation overloads for Catalyst codegen (graft.sql.DeriveLon /
-    * DeriveLat): hash the UTF8String's bytes in place — no per-row
+  /** Zero-allocation overloads for Catalyst codegen
+    * ([[graft.sql.GraftKernels.derive_lon]] / `derive_lat`): hash the
+    * UTF8String's bytes in place — no per-row
     * String materialization. */
   def posLonOf(id: org.apache.spark.unsafe.types.UTF8String): Double = lonOfHash(idHash(id))
   def posLatOf(id: org.apache.spark.unsafe.types.UTF8String): Double = latOfHash(idHash(id))
@@ -117,7 +118,7 @@ object ImageGen {
   private val capColonU8 = org.apache.spark.unsafe.types.UTF8String.fromString(": ")
   private val capSpaceU8 = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
 
-  /** Codegen overload of [[captionOf]] (graft.sql.CaptionOf): hashes the id
+  /** Codegen overload of [[captionOf]] ([[graft.sql.GraftKernels.caption_of]]): hashes the id
     * bytes in place and assembles the caption with UTF8String.concat —
     * byte-identical output, no input String materialization. */
   def captionOf(id: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {

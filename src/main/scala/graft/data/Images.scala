@@ -33,7 +33,7 @@ object Images {
       generate(spark, n).toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** lat/lon are derived, never stored (input_hint): append them via the
-    * codegen'd [[graft.sql.DeriveLon]]/[[graft.sql.DeriveLat]] expressions —
+    * codegen'd derive_lon/derive_lat functions ([[graft.sql.GraftKernels]]) —
     * this is the headline tile-assign path, so it must stay inside
     * WholeStageCodegen (a Scala UDF here boxes every row). */
   def withPosition(df: DataFrame): DataFrame =

@@ -31,7 +31,7 @@ object AnnOps {
   }
 
   /** Left-to-right squared norm of the embedding column. */
-  def norm2(embCol: String, dim: Int): Column =
+  def norm2(embCol: String): Column =
     aggregate(col(embCol).cast("array<double>"), lit(0.0), (acc, x) => acc + x * x)
 
   /** Rank the per-query branches: each branch is cut to its exact top-k by
@@ -57,7 +57,7 @@ object AnnOps {
   def annBrute(emb: DataFrame, idCol: String, embCol: String,
                dim: Int, nQueries: Int, k: Int): DataFrame = {
     // hoist the row norm out of the per-query branches: one sqrt per row
-    val withNorm = emb.withColumn("_n", sqrt(norm2(embCol, dim)))
+    val withNorm = emb.withColumn("_n", sqrt(norm2(embCol)))
     val perQuery = (0 until nQueries).map { q =>
       val qv = queryVec(q, dim)
       val qn = math.sqrt(qv.map(x => x * x).sum)
@@ -82,7 +82,7 @@ object AnnOps {
              dim: Int, nQueries: Int, k: Int): DataFrame = {
     val nPlanes = 8
     val bucketed = emb.withColumn("_bucket", srpBucket(embCol, dim, nPlanes))
-      .withColumn("_n", sqrt(norm2(embCol, dim)))
+      .withColumn("_n", sqrt(norm2(embCol)))
     val perQuery = (0 until nQueries).map { q =>
       val qv = queryVec(q, dim)
       val qn = math.sqrt(qv.map(x => x * x).sum)
@@ -162,7 +162,7 @@ object AnnOps {
     val assigned = emb
       .withColumn("cent_id", nearestCentId(embCol, centroids))
       .select(col(idCol), col(embCol), col("cent_id"))
-      .withColumn("_n", sqrt(norm2(embCol, dim)))
+      .withColumn("_n", sqrt(norm2(embCol)))
     val perQuery = (0 until nQueries).map { q =>
       val qv = queryVec(q, dim)
       val qn = math.sqrt(qv.map(x => x * x).sum)
@@ -231,7 +231,7 @@ object AnnOps {
     // zero table scan for probe selection
     val centroids = parseCentroids(manifest.properties.getOrElse("ivf.centroids",
       throw new IllegalStateException(s"IVF table $table records no ivf.centroids")))
-    val withNorm = snap.df.withColumn("_n", sqrt(norm2(embCol, dim)))
+    val withNorm = snap.df.withColumn("_n", sqrt(norm2(embCol)))
     val perQuery = (0 until nQueries).map { q =>
       val qv = queryVec(q, dim)
       val qn = math.sqrt(qv.map(x => x * x).sum)
@@ -267,10 +267,10 @@ object AnnOps {
     // norms computed once per ROW (not per pair): sqrt hoisted above the join
     val a = keyed.select(col(labelCol).as("_l"), col("_jb"),
         col(idCol).as("vec_a"), col(embCol).as("_ea"))
-      .withColumn("_na", sqrt(norm2("_ea", dim)))
+      .withColumn("_na", sqrt(norm2("_ea")))
     val b = keyed.select(col(labelCol).as("_l"), col("_jb"),
         col(idCol).as("vec_b"), col(embCol).as("_eb"))
-      .withColumn("_nb", sqrt(norm2("_eb", dim)))
+      .withColumn("_nb", sqrt(norm2("_eb")))
     val dot = aggregate(
       zip_with(col("_ea").cast("array<double>"), col("_eb").cast("array<double>"), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)

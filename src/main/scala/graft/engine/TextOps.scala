@@ -31,7 +31,7 @@ object TextOps {
       concat_ws(" ", element_at(words, i), element_at(words, i + 1), element_at(words, i + 2)))
 
   /** 60-bit md5 hash — identical to DuckDB `CAST('0x'||substring(md5(s),1,15) AS BIGINT)`.
-    * Computed by the [[graft.sql.Md5Prefix60]] expression straight from the
+    * Computed by the md5_prefix60 function ([[graft.sql.GraftKernels]]) straight from the
     * digest bytes: the md5→hex-string→substring→base-16-parse chain this
     * replaces allocated three strings per shingle in the dedup family's
     * innermost loop (same 60-bit value — the first 15 hex chars of the

@@ -185,7 +185,9 @@ object CellIndex {
       H.polyfillPoly(rings, level, maxCells)
     // a compacted covering mixes resolutions: an OR of per-resolution INs,
     // coarser cells testing h3u_parent(prefix, res) (a function of the
-    // partition column alone, so it still prunes at listing)
+    // partition column alone, so it still prunes at listing). This runs
+    // after the optimizer replaced KernelCalls, so it builds the replacement
+    // (`H3UParent.invoke`, the StaticInvoke) itself
     override def prunePredicate(cells: Array[Long], level: Int,
                                 prefix: AttributeReference): Expression =
       if (cells.isEmpty) super.prunePredicate(cells, level, prefix)
@@ -196,7 +198,7 @@ object CellIndex {
         }
         cells.groupBy(H.resolution).toSeq.sortBy(_._1).map { case (r, cs) =>
           if (r == level) super.prunePredicate(cs, level, prefix)
-          else In(H3UParent(asLong, Literal(r)), cs.toSeq.map(Literal(_)))
+          else In(GraftFunctions.H3UParent.invoke(Seq(asLong, Literal(r))), cs.toSeq.map(Literal(_)))
         }.reduce(Or(_, _))
       }
     // gridDisk shells around the query cell. Each shell steps at least

@@ -3,10 +3,12 @@ package graft.sql
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types._
 
-/** Registration + column API for the graft spatial functions.
+/** Registration of the graft SQL functions: one table row per function,
+  * from which come its name, usage string, argument count and input casts.
   *
   * Functions are registered into the session's FunctionRegistry so they work
   * from both SQL text and the Column API (via `call_function`), and flow
@@ -14,119 +16,136 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   * null propagation, WholeStageCodegen inlining.
   */
 object GraftFunctions {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.sql", "", name, usage, "", "", "", "", "", "", "built-in")
+  /** A row of the function table. `sig` is the SQL signature,
+    * `name(param, ...)`; with `doc` it is the usage string. The builder
+    * checks the argument count against the parameters `sig` names, then
+    * builds the node. */
+  sealed trait Fn {
+    def sig: String
+    def doc: String
+    protected def node(args: Seq[Expression]): Expression
+    final def name: String = sig.takeWhile(_ != '(')
+    final def arity: Int = sig.drop(name.length + 1).takeWhile(_ != ')').split(',').count(_.trim.nonEmpty)
+    final def build(args: Seq[Expression]): Expression = {
+      require(args.length == arity, s"$sig takes $arity arguments, got ${args.length}")
+      node(args)
+    }
+  }
 
-  // Implicit input coercion (ExpectsInputTypes is private[sql] in Spark 4,
-  // so the builders cast instead; no-op casts fold away in the optimizer).
-  private def cD(e: Expression) = Cast(e, DoubleType)
-  private def cI(e: Expression) = Cast(e, IntegerType)
-  private def cL(e: Expression) = Cast(e, LongType)
-  private def cS(e: Expression) = Cast(e, StringType)
+  /** A scalar function: a [[KernelCall]] over its arguments, each cast to
+    * its declared input type, which the optimizer replaces with [[invoke]].
+    * The casts are the builder's because the replacement is only built
+    * after analysis, so Spark's type coercion never sees it; casts to the
+    * argument's own type fold away in the optimizer. The result is NULL on
+    * a NULL argument and, with `nullOnNaN`, on a NaN coordinate. */
+  final case class Scalar(sig: String, doc: String, inputs: Seq[DataType], output: DataType,
+                          nullOnNaN: Boolean = false) extends Fn {
+    require(inputs.length == arity, s"$sig declares ${inputs.length} input types")
+    protected def node(args: Seq[Expression]): Expression =
+      KernelCall(this, args.lazyZip(inputs).map(Cast(_, _)))
+    /** The codegen'd static call of the [[GraftKernels]] method `name`. */
+    def invoke(args: Seq[Expression]): Expression =
+      StaticInvoke(GraftKernels.getClass, output, name, args, inputs, returnNullable = nullOnNaN)
+  }
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("gh_encode", "gh_encode(lon, lat, bits) - int64 geohash at bits precision",
-      (e: Seq[Expression]) => { require(e.length == 3, "gh_encode(lon, lat, bits)"); GhEncode(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("gh_encode_str", "gh_encode_str(lon, lat, chars) - base32 geohash string",
-      (e: Seq[Expression]) => { require(e.length == 3, "gh_encode_str(lon, lat, chars)"); GhEncodeString(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("gh_decode", "gh_decode(code, bits) - cell center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_decode(code, bits)"); GhDecode(cL(e(0)), cI(e(1))) }),
-    ("gh_decode_str", "gh_decode_str(code) - cell center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 1, "gh_decode_str(code)"); GhDecodeString(cS(e(0))) }),
-    ("gh_bbox", "gh_bbox(code, bits) - struct(min_lon, min_lat, max_lon, max_lat)",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_bbox(code, bits)"); GhBoundingBox(cL(e(0)), cI(e(1))) }),
-    ("gh_neighbors", "gh_neighbors(code, bits) - array of adjacent cells",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_neighbors(code, bits)"); GhNeighbors(cL(e(0)), cI(e(1))) }),
-    ("gh_neighbors_str", "gh_neighbors_str(code) - array of adjacent cells (string)",
-      (e: Seq[Expression]) => { require(e.length == 1, "gh_neighbors_str(code)"); GhNeighborsString(cS(e(0))) }),
-    ("gh_parent", "gh_parent(code, bits, parent_bits) - zoom out",
-      (e: Seq[Expression]) => { require(e.length == 3, "gh_parent(code, bits, parent_bits)"); GhParent(cL(e(0)), cI(e(1)), cI(e(2))) }),
-    ("gh_children", "gh_children(code, bits, child_bits) - zoom in",
-      (e: Seq[Expression]) => { require(e.length == 3, "gh_children(code, bits, child_bits)"); GhChildren(cL(e(0)), cI(e(1)), cI(e(2))) }),
-    ("gh_to_str", "gh_to_str(code, chars) - base32 of int64 code",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_to_str(code, chars)"); GhToString(cL(e(0)), cI(e(1))) }),
-    ("gh_from_str", "gh_from_str(s) - int64 code of base32 geohash",
-      (e: Seq[Expression]) => { require(e.length == 1, "gh_from_str(s)"); GhFromString(cS(e(0))) }),
-    ("gh_area", "gh_area(code, bits) - spherical cell area m^2",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_area(code, bits)"); GhArea(cL(e(0)), cI(e(1))) }),
-    ("haversine_m", "haversine_m(lon1, lat1, lon2, lat2) - great-circle meters",
-      (e: Seq[Expression]) => { require(e.length == 4, "haversine_m(lon1, lat1, lon2, lat2)"); HaversineM(cD(e(0)), cD(e(1)), cD(e(2)), cD(e(3))) }),
-    ("st_contains_wkt", "st_contains_wkt(wkt, lon, lat) - point in WKT polygon",
-      (e: Seq[Expression]) => { require(e.length == 3, "st_contains_wkt(wkt, lon, lat)"); StContainsWkt(cS(e(0)), cD(e(1)), cD(e(2))) }),
-    ("rolling_hash", "rolling_hash(text) - streaming polynomial fingerprint",
-      (e: Seq[Expression]) => { require(e.length == 1, "rolling_hash(text)"); RollingHash(cS(e(0))) }),
-    ("rolling_hash_alt", "rolling_hash_alt(text) - dual-path twin of rolling_hash",
-      (e: Seq[Expression]) => { require(e.length == 1, "rolling_hash_alt(text)"); RollingHashAlt(cS(e(0))) }),
-    ("md5_prefix60", "md5_prefix60(text) - top 60 md5 digest bits as BIGINT (= conv(substring(md5(s),1,15),16,10))",
-      (e: Seq[Expression]) => { require(e.length == 1, "md5_prefix60(text)"); Md5Prefix60(cS(e(0))) }),
-    ("hex_cell", "hex_cell(lon, lat, size) - packed axial hex id (planar lattice)",
-      (e: Seq[Expression]) => { require(e.length == 3, "hex_cell(lon, lat, size)"); HexCell(cD(e(0)), cD(e(1)), cD(e(2))) }),
-    ("hex_center", "hex_center(id, size) - hex center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 2, "hex_center(id, size)"); HexCenter(cL(e(0)), cD(e(1))) }),
-    ("hex_neighbors", "hex_neighbors(id) - the 6 adjacent hexes",
-      (e: Seq[Expression]) => { require(e.length == 1, "hex_neighbors(id)"); HexNeighbors(cL(e(0))) }),
-    ("hex_ring", "hex_ring(id, k) - the 6k hexes at distance exactly k",
-      (e: Seq[Expression]) => { require(e.length == 2, "hex_ring(id, k)"); HexRing(cL(e(0)), cI(e(1))) }),
-    ("derive_lon", "derive_lon(image_id) - deterministic derived longitude of a generated image row",
-      (e: Seq[Expression]) => { require(e.length == 1, "derive_lon(image_id)"); DeriveLon(cS(e(0))) }),
-    ("derive_lat", "derive_lat(image_id) - deterministic derived latitude of a generated image row",
-      (e: Seq[Expression]) => { require(e.length == 1, "derive_lat(image_id)"); DeriveLat(cS(e(0))) }),
-    ("caption_of", "caption_of(image_id) - expected caption of a generated image row",
-      (e: Seq[Expression]) => { require(e.length == 1, "caption_of(image_id)"); CaptionOf(cS(e(0))) }),
-    ("gh_covering", "gh_covering(min_lon, min_lat, max_lon, max_lat, bits) - array of covering cells",
-      (e: Seq[Expression]) => GhCoveringArray(e.take(4).map(cD) :+ cI(e(4)))),
-    ("gh_covering_polygon", "gh_covering_polygon(wkt, bits) - cells intersecting a WKT polygon",
-      (e: Seq[Expression]) => { require(e.length == 2, "gh_covering_polygon(wkt, bits)"); GhCoveringPolygon(cS(e(0)), cI(e(1))) }),
-    ("gh_covering_cells", "gh_covering_cells(min_lon, min_lat, max_lon, max_lat, bits) - generator: one row per covering cell",
-      (e: Seq[Expression]) => GhCoveringCells(e.take(4).map(cD) :+ cI(e(4)))),
-    ("h3u_cell", "h3u_cell(lon, lat, res) - Uber-H3 bit-compatible cell id",
-      (e: Seq[Expression]) => { require(e.length == 3, "h3u_cell(lon, lat, res)"); H3UCell(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("h3u_center", "h3u_center(id) - cell center struct(lon, lat)",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_center(id)"); H3UCenter(cL(e(0))) }),
-    ("h3u_parent", "h3u_parent(id, parent_res) - bit-compatible cellToParent",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3u_parent(id, parent_res)"); H3UParent(cL(e(0)), cI(e(1))) }),
-    ("h3u_polyfill_wkt", "h3u_polyfill_wkt(wkt, res) - polygonToCells covering",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3u_polyfill_wkt(wkt, res)"); H3UPolyfillWkt(e(0), cI(e(1))) }),
-    ("s2u_cell", "s2u_cell(lon, lat, level) - S2 cell id (published layout)",
-      (e: Seq[Expression]) => { require(e.length == 3, "s2u_cell(lon, lat, level)"); S2UCell(cD(e(0)), cD(e(1)), cI(e(2))) }),
-    ("s2u_token", "s2u_token(id) - S2 hex token, trailing zeros stripped",
-      (e: Seq[Expression]) => { require(e.length == 1, "s2u_token(id)"); S2UToken(cL(e(0))) }),
-    ("s2u_parent", "s2u_parent(id, level) - ancestor cell at level",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2u_parent(id, level)"); S2UParent(cL(e(0)), cI(e(1))) }),
-    ("s2u_level", "s2u_level(id) - cell level from the sentinel bit",
-      (e: Seq[Expression]) => { require(e.length == 1, "s2u_level(id)"); S2ULevel(cL(e(0))) }),
-    ("s2u_center", "s2u_center(id) - cell center STRUCT<lon, lat>",
-      (e: Seq[Expression]) => { require(e.length == 1, "s2u_center(id)"); S2UCenter(cL(e(0))) }),
-    ("s2u_boundary_wkt", "s2u_boundary_wkt(id) - cell corner polygon as WKT",
-      (e: Seq[Expression]) => { require(e.length == 1, "s2u_boundary_wkt(id)"); S2UBoundaryWkt(cL(e(0))) }),
-    ("s2u_children", "s2u_children(id) - the 4 children in Hilbert order",
-      (e: Seq[Expression]) => { require(e.length == 1, "s2u_children(id)"); S2UChildren(cL(e(0))) }),
-    ("s2u_contains", "s2u_contains(ancestor, cell) - leaf-range containment",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2u_contains(ancestor, cell)"); S2UContains(cL(e(0)), cL(e(1))) }),
-    ("s2u_cover_wkt", "s2u_cover_wkt(wkt, level) - polygon-tightened S2 covering",
-      (e: Seq[Expression]) => { require(e.length == 2, "s2u_cover_wkt(wkt, level)"); S2UCoverWkt(cS(e(0)), cI(e(1))) }),
-    ("h3u_compact", "h3u_compact(cells) - fold complete sibling sets into parents",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_compact(cells)"); H3UCompact(e(0)) }),
-    ("h3u_uncompact", "h3u_uncompact(cells, res) - expand a mixed-res set to res",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3u_uncompact(cells, res)"); H3UUncompact(e(0), cI(e(1))) }),
-    ("h3u_token", "h3u_token(id) - canonical lowercase-hex H3 index string",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_token(id)"); H3UToken(cL(e(0))) }),
-    ("h3u_is_pentagon", "h3u_is_pentagon(id) - true for the 12 pentagon lineages",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_is_pentagon(id)"); H3UIsPentagon(cL(e(0))) }),
-    ("h3u_disk", "h3u_disk(id, k) - cells within grid distance k (canonical gridDisk order)",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3u_disk(id, k)"); H3UDisk(cL(e(0)), cI(e(1))) }),
-    ("h3u_boundary_wkt", "h3u_boundary_wkt(id) - cell corner polygon as WKT",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_boundary_wkt(id)"); H3UBoundaryWkt(cL(e(0))) }),
-    ("h3u_children", "h3u_children(id, child_res) - bit-compatible cellToChildren",
-      (e: Seq[Expression]) => { require(e.length == 2, "h3u_children(id, child_res)"); H3UChildren(cL(e(0)), cI(e(1))) }),
-    ("h3u_resolution", "h3u_resolution(id) - resolution of a cell id",
-      (e: Seq[Expression]) => { require(e.length == 1, "h3u_resolution(id)"); H3UResolution(cL(e(0))) }),
-    ("collect_capped", "collect_capped(v, cap) - agg: sorted group values, NULL when the group exceeds cap",
-      (e: Seq[Expression]) => {
-        require(e.length == 2 && e(1).foldable, "collect_capped(v, literal cap)")
+  /** A function with its own node class: one the engine matches, or one
+    * that is not a scalar; `make` casts the arguments it needs to. */
+  private final case class Explicit(sig: String, doc: String)(
+      make: Seq[Expression] => Expression) extends Fn {
+    protected def node(args: Seq[Expression]): Expression = make(args)
+  }
+
+  private val D = DoubleType
+  private val I = IntegerType
+  private val L = LongType
+  private val S = StringType
+  private val LonLat = StructType(Seq(StructField("lon", D, false), StructField("lat", D, false)))
+  private val Box = StructType(Seq("min_lon", "min_lat", "max_lon", "max_lat").map(StructField(_, D, false)))
+  private val Cells = ArrayType(LongType, containsNull = false)
+  private val CellsIn = ArrayType(LongType) // any array of integers casts to it
+
+  /** h3u_parent's row, which [[CellIndex.H3U]]'s prune predicate calls. */
+  private[sql] val H3UParent = Scalar("h3u_parent(id, parent_res)", "bit-compatible cellToParent", Seq(L, I), L)
+
+  private[sql] val scalars: Seq[Scalar] = Seq(
+    Scalar("gh_encode_str(lon, lat, chars)", "base32 geohash string", Seq(D, D, I), S, nullOnNaN = true),
+    Scalar("gh_decode(code, bits)", "cell center struct(lon, lat)", Seq(L, I), LonLat),
+    Scalar("gh_decode_str(code)", "cell center struct(lon, lat)", Seq(S), LonLat),
+    Scalar("gh_bbox(code, bits)", "struct(min_lon, min_lat, max_lon, max_lat)", Seq(L, I), Box),
+    Scalar("gh_neighbors(code, bits)", "array of adjacent cells", Seq(L, I), Cells),
+    Scalar("gh_neighbors_str(code)", "array of adjacent cells (string)", Seq(S),
+      ArrayType(StringType, containsNull = false)),
+    Scalar("gh_parent(code, bits, parent_bits)", "zoom out", Seq(L, I, I), L),
+    Scalar("gh_children(code, bits, child_bits)", "zoom in", Seq(L, I, I), Cells),
+    Scalar("gh_to_str(code, chars)", "base32 of int64 code", Seq(L, I), S),
+    Scalar("gh_from_str(s)", "int64 code of base32 geohash", Seq(S), L),
+    Scalar("gh_area(code, bits)", "spherical cell area m^2", Seq(L, I), D),
+    Scalar("haversine_m(lon1, lat1, lon2, lat2)", "great-circle meters", Seq(D, D, D, D), D),
+    Scalar("rolling_hash(text)", "streaming polynomial fingerprint", Seq(S), L),
+    Scalar("rolling_hash_alt(text)", "dual-path twin of rolling_hash", Seq(S), L),
+    Scalar("md5_prefix60(text)",
+      "top 60 md5 digest bits as BIGINT (= conv(substring(md5(s),1,15),16,10))", Seq(S), L),
+    Scalar("hex_cell(lon, lat, size)", "packed axial hex id (planar lattice)", Seq(D, D, D), L,
+      nullOnNaN = true),
+    Scalar("hex_center(id, size)", "hex center struct(lon, lat)", Seq(L, D), LonLat),
+    Scalar("hex_neighbors(id)", "the 6 adjacent hexes", Seq(L), Cells),
+    Scalar("hex_ring(id, k)", "the 6k hexes at distance exactly k", Seq(L, I), Cells),
+    Scalar("derive_lon(image_id)", "deterministic derived longitude of a generated image row", Seq(S), D),
+    Scalar("derive_lat(image_id)", "deterministic derived latitude of a generated image row", Seq(S), D),
+    Scalar("caption_of(image_id)", "expected caption of a generated image row", Seq(S), S),
+    Scalar("gh_covering(min_lon, min_lat, max_lon, max_lat, bits)", "array of covering cells",
+      Seq(D, D, D, D, I), Cells),
+    Scalar("gh_covering_polygon(wkt, bits)", "cells intersecting a WKT polygon", Seq(S, I), Cells),
+    Scalar("h3u_center(id)", "cell center struct(lon, lat)", Seq(L), LonLat),
+    H3UParent,
+    Scalar("h3u_polyfill_wkt(wkt, res)", "polygonToCells covering", Seq(S, I), Cells),
+    Scalar("s2u_token(id)", "S2 hex token, trailing zeros stripped", Seq(L), S),
+    Scalar("s2u_parent(id, level)", "ancestor cell at level", Seq(L, I), L),
+    Scalar("s2u_level(id)", "cell level from the sentinel bit", Seq(L), I),
+    Scalar("s2u_center(id)", "cell center STRUCT<lon, lat>", Seq(L), LonLat),
+    Scalar("s2u_boundary_wkt(id)", "cell corner polygon as WKT", Seq(L), S),
+    Scalar("s2u_children(id)", "the 4 children in Hilbert order", Seq(L), Cells),
+    Scalar("s2u_contains(ancestor, cell)", "leaf-range containment", Seq(L, L), BooleanType),
+    Scalar("s2u_cover_wkt(wkt, level)", "polygon-tightened S2 covering", Seq(S, I), Cells),
+    Scalar("h3u_compact(cells)", "fold complete sibling sets into parents", Seq(CellsIn), Cells),
+    Scalar("h3u_uncompact(cells, res)", "expand a mixed-res set to res", Seq(CellsIn, I), Cells),
+    Scalar("h3u_token(id)", "canonical lowercase-hex H3 index string", Seq(L), S),
+    Scalar("h3u_is_pentagon(id)", "true for the 12 pentagon lineages", Seq(L), BooleanType),
+    Scalar("h3u_disk(id, k)", "cells within grid distance k (canonical gridDisk order)", Seq(L, I), Cells),
+    Scalar("h3u_boundary_wkt(id)", "cell corner polygon as WKT", Seq(L), S),
+    Scalar("h3u_children(id, child_res)", "bit-compatible cellToChildren", Seq(L, I), Cells),
+    Scalar("h3u_resolution(id)", "resolution of a cell id", Seq(L), I),
+  )
+
+  private def cD(e: Expression) = Cast(e, D)
+  private def cI(e: Expression) = Cast(e, I)
+  private def cS(e: Expression) = Cast(e, S)
+
+  private val explicit: Seq[Fn] = Seq(
+    Explicit("gh_encode(lon, lat, bits)", "int64 geohash at bits precision")(
+      e => GhEncode(cD(e(0)), cD(e(1)), cI(e(2)))),
+    Explicit("h3u_cell(lon, lat, res)", "Uber-H3 bit-compatible cell id")(
+      e => H3UCell(cD(e(0)), cD(e(1)), cI(e(2)))),
+    Explicit("s2u_cell(lon, lat, level)", "S2 cell id (published layout)")(
+      e => S2UCell(cD(e(0)), cD(e(1)), cI(e(2)))),
+    Explicit("st_contains_wkt(wkt, lon, lat)", "point in WKT polygon")(
+      e => StContainsWkt(cS(e(0)), cD(e(1)), cD(e(2)))),
+    Explicit("gh_covering_cells(min_lon, min_lat, max_lon, max_lat, bits)",
+      "generator: one row per covering cell")(
+      e => GhCoveringCells(e.take(4).map(cD) :+ cI(e(4)))),
+    Explicit("collect_capped(v, cap)",
+      "agg: sorted group values, NULL when the group exceeds cap (a literal)")({ e =>
+        require(e(1).foldable, "collect_capped(v, cap): cap must be a literal")
         CollectCapped(e(0), e(1).eval(null).asInstanceOf[Number].intValue())
       }),
-  ).map { case (n, u, b) => (new FunctionIdentifier(n), info(n, u), b) }
+  )
+
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    (explicit ++ scalars).map { f =>
+      (new FunctionIdentifier(f.name),
+       new ExpressionInfo("graft.sql", "", f.name, s"${f.sig} - ${f.doc}", "", "", "", "", "", "", "built-in"),
+       f.build _)
+    }
 
   /** Idempotent registration into an existing session. */
   def register(spark: SparkSession): Unit = {

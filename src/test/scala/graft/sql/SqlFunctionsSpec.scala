@@ -215,6 +215,27 @@ class SqlFunctionsSpec extends AnyFunSuite {
     hof.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }
 
+  test("a wrong argument count is an analysis-time usage error") {
+    val sig = "(min_lon, min_lat, max_lon, max_lat, bits)"
+    Seq(
+      "SELECT gh_covering(-5.7D, 42.5D, -5.5D, 42.7D, 25, 99)" -> s"gh_covering$sig",
+      "SELECT gh_covering(-5.7D, 42.5D, -5.5D, 42.7D)" -> s"gh_covering$sig",
+      "SELECT cell FROM (SELECT 1) LATERAL VIEW gh_covering_cells(-5.7D, 42.5D, -5.5D, 42.7D, 25, 99) t AS cell" ->
+        s"gh_covering_cells$sig",
+      "SELECT h3u_parent(1L)" -> "h3u_parent(id, parent_res)",
+    ).foreach { case (q, usage) =>
+      // spark.sql analyzes eagerly: nothing is executed
+      val e = intercept[Exception](spark.sql(q))
+      assert(Option(e.getMessage).exists(_.contains(usage)), s"$q: $e")
+    }
+  }
+
+  test("an array<int> cell argument is cast like every other argument") {
+    def one(q: String) = spark.sql(q).collect()(0).toSeq
+    assert(one("SELECT h3u_compact(array(1, 2)), h3u_uncompact(array(1, 2), 3)") ==
+           one("SELECT h3u_compact(array(1L, 2L)), h3u_uncompact(array(1L, 2L), 3)"))
+  }
+
   test("DeriveCoveringPrune: a covering planned after 300 distinct ones is served from the memo") {
     def plan(b: graft.core.BBox) = DeriveCoveringPrune.coveringCells(CellIndex.Geohash, b, 12, None)
     (1 to 300).foreach(i => plan(graft.core.BBox(i * 0.1, 0.0, i * 0.1 + 0.05, 0.05)))
