@@ -5,7 +5,10 @@ package graft
   *  - times individual queries with the noop sink (same action as Bench),
   *  - records /proc/loadavg before/after each query so a contaminated
   *    window is identifiable from the artifact alone,
-  *  - optionally dumps .explain("formatted") per query to a directory.
+  *  - optionally dumps, per query, .explain("formatted") to
+  *    `<explainDir>/<name>.txt` and, after one more run that collects the
+  *    rows, the AQE-final executed plan to `<name>.executed.txt`
+  *    (`scripts/plan_diff.py` compares two such directories).
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
@@ -28,16 +31,16 @@ object BenchExtra {
     val spark = graft.sql.GraftSpark.session(s"local[$cpus]")
 
     explainDir.foreach(d => new java.io.File(d).mkdirs())
+    def dump(file: String, text: => String): Unit = explainDir.foreach { d =>
+      val body = try text catch { case e: Throwable => s"failed: $e" }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, file), body)
+    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.contains(name) }
       .map { case (name, fn) =>
         spark.sparkContext.setJobDescription(name)
-        explainDir.foreach { d =>
-          val plan = try fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          catch { case e: Throwable => s"explain failed: $e" }
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"$name.txt"), plan)
-        }
+        dump(s"$name.txt",
+          fn(spark, sfDir).queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
         val la0 = loadavg()
         val ts = (1 to iters).map { _ =>
           val t0 = System.nanoTime()
@@ -47,6 +50,11 @@ object BenchExtra {
           } catch { case e: Throwable => Left(e.getClass.getSimpleName + ": " + e.getMessage) }
         }
         val la1 = loadavg()
+        dump(s"$name.executed.txt", {
+          val df = fn(spark, sfDir)
+          df.collect()
+          df.queryExecution.executedPlan.treeString
+        })
         (name, ts, la0, la1)
       }
     // a failed iteration's time-to-exception is no timing: its query is

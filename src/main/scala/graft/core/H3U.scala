@@ -700,28 +700,18 @@ object H3U {
   // ----------------------------------------------------------------- decode
   /** Published _h3ToFaceIjk: digit walk from the base cell's home, then
     * overage adjustment onto the true containing face. */
-  private def h3ToFaceIjk(id0: Long): FaceIJK = {
-    var id = id0
+  private def h3ToFaceIjk(id: Long): FaceIJK = {
+    val fijk = digitFrameFaceIjk(id)
     val bc = baseCellOf(id)
-    if (isPentagonBase(bc) && leadingNonZeroDigit(id) == 5)
-      id = rotate60cw(id)
-    val bcd = baseCells(bc)
-    val fijk = new FaceIJK(bcd.homeFace, bcd.homeIJK.copyIJK)
+    val home = baseCells(bc).homeIJK
     val res = resolution(id)
     val possibleOverage =
-      isPentagonBase(bc) || !(res == 0 ||
-        (fijk.coord.i == 0 && fijk.coord.j == 0 && fijk.coord.k == 0))
-    var r = 1
-    while (r <= res) {
-      if (isClassIII(r)) downAp7(fijk.coord) else downAp7r(fijk.coord)
-      neighborMove(fijk.coord, digit(id, r))
-      r += 1
-    }
+      isPentagonBase(bc) || !(res == 0 || (home.i == 0 && home.j == 0 && home.k == 0))
     if (!possibleOverage) return fijk
     val orig = fijk.coord.copyIJK
     var res2 = res
     if (isClassIII(res2)) { downAp7r(fijk.coord); res2 += 1 }
-    val pentLeading4 = isPentagonBase(bc) && leadingNonZeroDigit(id) == 4
+    val pentLeading4 = isPentagonBase(bc) && leadingNonZeroDigit(walkedId(id)) == 4
     if (adjustOverage(fijk, res2, pentLeading4) != NoOverage) {
       if (isPentagonBase(bc))
         while (adjustOverage(fijk, res2, pentLeading4 = false) != NoOverage) {}
@@ -1062,22 +1052,7 @@ object H3U {
     val base = h3ToFaceIjk(id)
     var d = 1
     while (d < 7) {
-      val f = new FaceIJK(base.face, new IJK(base.coord.i, base.coord.j, base.coord.k))
-      neighborMove(f.coord, d)
-      // same class-II substrate dance as decode for the face crossing
-      var r2 = res
-      if (isClassIII(r2)) { downAp7r(f.coord); r2 += 1 }
-      while (adjustOverage(f, r2, pentLeading4 = false) != NoOverage) {}
-      if (r2 != res) upAp7r(f.coord)
-      // lattice-only re-encode (no trig); the geo round-trip is the
-      // fallback for the rare up-walk landing outside the calibrated table
-      val n =
-        try encodeFromIjk(f.face, f.coord.copyIJK, res)
-        catch {
-          case _: IllegalStateException =>
-            val g = faceIjkToGeo(f, res)
-            latLngToCell(math.toDegrees(g(0)), math.toDegrees(g(1)), res)
-        }
+      val n = cellAtStep(base, d, res)
       if (n != id && !out.contains(n)) out += n
       d += 1
     }
@@ -1096,7 +1071,8 @@ object H3U {
   }
 
   /** BFS gridDisk (SET semantics, insertion order) — the pentagon-safe
-    * fallback; also what the kNN ring expansion uses (sets only). */
+    * fallback. (The kNN rings keep only the last two disks instead:
+    * `graft.sql.CellIndex.H3U.frontierRings`.) */
   def gridDiskBfs(id: Long, k: Int): Array[Long] = {
     require(k >= 0, s"k must be >= 0, got $k")
     val seen = scala.collection.mutable.LinkedHashSet(id)
@@ -1115,16 +1091,18 @@ object H3U {
   private val SpiralDirections = Array(2, 3, 1, 5, 4, 6) // J,JK,K,IK,I,IJ
   private final val NextRingDirection = 4                // I
 
+  /** The id whose digits the decode walk reads: a pentagon cell whose
+    * leading non-zero digit is IK (5) rotated 60° cw, as published. */
+  private def walkedId(id: Long): Long =
+    if (isPentagonBase(baseCellOf(id)) && leadingNonZeroDigit(id) == 5) rotate60cw(id) else id
+
   /** Digit-frame FaceIJK: the decode walk WITHOUT the final overage
     * adjustment — coordinates on the base cell's home face, the frame the
     * index digits are expressed in. Directions stepped here are exactly
     * H3's digit-space directions. */
   private def digitFrameFaceIjk(id0: Long): FaceIJK = {
-    var id = id0
-    val bc = baseCellOf(id)
-    if (isPentagonBase(bc) && leadingNonZeroDigit(id) == 5)
-      id = rotate60cw(id)
-    val bcd = baseCells(bc)
+    val id = walkedId(id0)
+    val bcd = baseCells(baseCellOf(id))
     val fijk = new FaceIJK(bcd.homeFace, bcd.homeIJK.copyIJK)
     val res = resolution(id)
     var r = 1
@@ -1136,12 +1114,13 @@ object H3U {
     fijk
   }
 
-  /** The neighbor of `id` in DIGIT-FRAME direction `dir` (1..6): one
-    * lattice step on the home-face frame, then the same overage
-    * canonicalization + re-encode as decode. */
-  private def stepDigitFrame(id: Long, dir: Int): Long = {
-    val res = resolution(id)
-    val f = digitFrameFaceIjk(id)
+  /** The cell one lattice step in direction `dir` from `from` (a cell's
+    * FaceIJK at `res`, left as is): the step, decode's class-II substrate
+    * and overage canonicalization for a face crossing, then a lattice-only
+    * re-encode (no trig), with the geo round trip as the fallback for the
+    * rare up-walk landing outside the calibrated table. */
+  private def cellAtStep(from: FaceIJK, dir: Int, res: Int): Long = {
+    val f = new FaceIJK(from.face, from.coord.copyIJK)
     neighborMove(f.coord, dir)
     var r2 = res
     if (isClassIII(r2)) { downAp7r(f.coord); r2 += 1 }
@@ -1154,6 +1133,11 @@ object H3U {
         latLngToCell(math.toDegrees(g(0)), math.toDegrees(g(1)), res)
     }
   }
+
+  /** The neighbor of `id` in DIGIT-FRAME direction `dir` (1..6): one
+    * lattice step on the home-face frame ([[cellAtStep]]). */
+  private def stepDigitFrame(id: Long, dir: Int): Long =
+    cellAtStep(digitFrameFaceIjk(id), dir, resolution(id))
 
   /** h3NeighborRotations equivalent: step from `origin` in direction
     * `dirIn` expressed in the WALK's base frame, carrying `rot` — the

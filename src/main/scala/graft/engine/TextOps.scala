@@ -20,9 +20,10 @@ object TextOps {
   val BandBucketCap = 50
 
   /** Whitespace tokens, empties dropped (trim + split — the exact same
-    * semantics as the oracle's string_split_regex). */
+    * semantics as the oracle's string_split_regex); built-ins only, so a
+    * projection that tokenizes stays whole-stage codegen'd. */
   def tokens(text: Column): Column =
-    filter(split(trim(text), "\\s+"), t => t =!= "")
+    array_remove(split(trim(text), "\\s+"), "")
 
   /** 3-word shingles, 1-based positions i=1..n-2 (mirrors the oracle's
     * list_transform(range(...)) form). Caller guards size >= 3. */
@@ -298,7 +299,7 @@ object TextOps {
     * token sequence — an order-insensitive exact-dedup key. */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
-      hash60(array_join(array_sort(array_distinct(tokens(col(textCol)))), " ")).as("fp"))
+      hash60(array_join(sort_array(array_distinct(tokens(col(textCol)))), " ")).as("fp"))
 
   /** Exact n-gram (3-shingle) jaccard for given candidate pairs — the
     * standalone n-gram-Jaccard dedup op (minhashLshPairs runs the same

@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expression, In, Literal, Or}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
@@ -23,8 +24,12 @@ sealed trait CellIndex {
   /** The `tile.index` manifest tag a table written on this index records. */
   def tag: String
 
+  /** The row of this index's cell function, `f(lon, lat, level)`. */
+  private[sql] def cellFn: GraftFunctions.Scalar
+
   /** The cell of (lon, lat) at `level`, as a codegen'd column. */
-  def cell(lon: Column, lat: Column, level: Int): Column
+  final def cell(lon: Column, lat: Column, level: Int): Column =
+    call_function(cellFn.name, lon, lat, lit(level))
 
   /** The ancestor at `toLevel` of a cell column at `fromLevel`. */
   def parent(cell: Column, fromLevel: Int, toLevel: Int): Column
@@ -34,7 +39,10 @@ sealed trait CellIndex {
 
   /** (lon, lat, level) of a Catalyst expression that is this index's
     * [[cell]] at a literal level, as [[DeriveCoveringPrune]] matches it. */
-  private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)]
+  private[graft] final def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
+    case KernelCall(f, Seq(lon, lat, Literal(level: Int, _))) if f == cellFn => Some((lon, lat, level))
+    case _ => None
+  }
 
   /** Covering of a box with minLon <= maxLon; throws
     * IllegalArgumentException past `maxCells`. */
@@ -108,14 +116,10 @@ object CellIndex {
   case object Geohash extends CellIndex {
     import graft.core.{Geohash => G}
     val tag = "gh"
-    def cell(lon: Column, lat: Column, level: Int): Column = functions.gh_encode(lon, lat, level)
+    private[sql] def cellFn = GraftFunctions.GhEncode
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column =
       functions.gh_parent(cell, fromLevel, toLevel)
     def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = G.parent(cell, fromLevel, toLevel)
-    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
-      case GhEncode(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
-      case _ => None
-    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       G.covering(minLon, minLat, maxLon, maxLat, level, maxCells)
@@ -160,13 +164,9 @@ object CellIndex {
   case object H3U extends CellIndex {
     import graft.core.{H3U => H}
     val tag = "h3u"
-    def cell(lon: Column, lat: Column, level: Int): Column = functions.h3u_cell(lon, lat, level)
+    private[sql] def cellFn = GraftFunctions.H3UCell
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column = functions.h3u_parent(cell, toLevel)
     def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = H.cellToParent(cell, toLevel)
-    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
-      case H3UCell(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
-      case _ => None
-    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       H.polyfillBox(minLon, minLat, maxLon, maxLat, level, maxCells)
@@ -185,9 +185,7 @@ object CellIndex {
       H.polyfillPoly(rings, level, maxCells)
     // a compacted covering mixes resolutions: an OR of per-resolution INs,
     // coarser cells testing h3u_parent(prefix, res) (a function of the
-    // partition column alone, so it still prunes at listing). This runs
-    // after the optimizer replaced KernelCalls, so it builds the replacement
-    // (`H3UParent.invoke`, the StaticInvoke) itself
+    // partition column alone, so it still prunes at listing)
     override def prunePredicate(cells: Array[Long], level: Int,
                                 prefix: AttributeReference): Expression =
       if (cells.isEmpty) super.prunePredicate(cells, level, prefix)
@@ -198,7 +196,7 @@ object CellIndex {
         }
         cells.groupBy(H.resolution).toSeq.sortBy(_._1).map { case (r, cs) =>
           if (r == level) super.prunePredicate(cs, level, prefix)
-          else In(GraftFunctions.H3UParent.invoke(Seq(asLong, Literal(r))), cs.toSeq.map(Literal(_)))
+          else In(GraftFunctions.H3UParent.build(Seq(asLong, Literal(r))), cs.toSeq.map(Literal(_)))
         }.reduce(Or(_, _))
       }
     // gridDisk shells around the query cell. Each shell steps at least
@@ -231,13 +229,9 @@ object CellIndex {
   case object S2U extends CellIndex {
     import graft.core.{S2U => S}
     val tag = "s2u"
-    def cell(lon: Column, lat: Column, level: Int): Column = functions.s2u_cell(lon, lat, level)
+    private[sql] def cellFn = GraftFunctions.S2UCell
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column = functions.s2u_parent(cell, toLevel)
     def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = S.parent(cell, toLevel)
-    private[sql] def cellArgs(e: Expression): Option[(Expression, Expression, Int)] = e match {
-      case S2UCell(lon, lat, Literal(level: Int, _)) => Some((lon, lat, level))
-      case _ => None
-    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       S.coverBox(minLon, minLat, maxLon, maxLat, level, maxCells)

@@ -2,115 +2,81 @@ package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, CodegenFallback}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{Geohash, GeoMath}
+import graft.core.GeoMath
 
-/** Catalyst expressions for the graft SQL functions — the Spark-native
+/* Catalyst expressions for the graft SQL functions — the Spark-native
   * re-expression of pangeo-geohash's vectorized C++ kernels (SURVEY.md
   * §3.1). The reference vectorizes by looping over NumPy buffers with the
   * GIL released; here the same effect falls out of WholeStageCodegen: each
   * scalar function emits a static call into [[graft.core]] inside the
   * generated per-row loop, with no virtual dispatch.
   *
-  * Most functions are one row of [[GraftFunctions.scalars]] and share one
-  * node, [[KernelCall]], which the optimizer replaces with a `StaticInvoke`
-  * of the [[GraftKernels]] method named after the function. The classes
-  * below stay explicit: the engine matches the three cell encoders
-  * ([[CellIndex]] `cellArgs`) and [[StContainsWkt]] ([[DerivePipBBox]]),
-  * which also parses a foldable WKT once; [[CollectCapped]] is an
-  * aggregate and [[GhCoveringCells]] a generator.
-  *
-  * NaN coordinates yield NULL (the core library would otherwise quietly
-  * encode cell 0 — see GeohashCoreSpec).
+  * Every scalar is one row of [[GraftFunctions.scalars]] and one node,
+  * [[KernelCall]], which calls the [[GraftKernels]] method named after the
+  * function; the engine recognises a cell encoder by its row
+  * ([[CellIndex]] `cellArgs`). The other classes are [[StContainsWkt]]
+  * (matched by [[DerivePipBBox]]; parses a foldable WKT once), the
+  * generator [[GhCoveringCells]] and the aggregate [[CollectCapped]].
   */
-object ghExpr {
-  private[sql] val nanGuard2 = "java.lang.Double.isNaN(%s) || java.lang.Double.isNaN(%s)"
-}
 
 /** A scalar function of [[GraftFunctions.scalars]] over its (already cast)
-  * arguments. Analysis sees this node, its name and its declared type; the
-  * optimizer's "Finish Analysis" batch replaces it with `fn.invoke`, a
-  * codegen'd static call of the [[GraftKernels]] method named `fn.name`,
-  * so plans print `static_invoke(graft.sql.GraftKernels.<name>(...))`.
-  * A rule that runs later builds `fn.invoke` itself (as
-  * [[CellIndex.H3U]]'s prune predicate does): this node neither evaluates
-  * nor generates code. Spark's own `UrlEncode` is written the same way. */
-case class KernelCall(fn: GraftFunctions.Scalar, children: Seq[Expression])
-    extends RuntimeReplaceable {
-  override lazy val replacement: Expression = fn.invoke(children)
+  * arguments: a static call of the [[GraftKernels]] method `fn.name` in
+  * generated code, the same method called reflectively when interpreted.
+  * The result is NULL on a NULL argument and, for a `nullOnNaN` row, when
+  * lon or lat (the first two arguments) is NaN — the core codecs would
+  * otherwise quietly encode cell 0 (see GeohashCoreSpec). Any caller,
+  * analysis or a later rule, builds it through its row's `build`. */
+case class KernelCall(fn: GraftFunctions.Scalar, children: Seq[Expression]) extends Expression {
+  override def dataType: DataType = fn.output
+  override def nullable: Boolean = fn.nullOnNaN || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def nullIntolerant: Boolean = true
   override def prettyName: String = fn.name
   override protected def stringArgs: Iterator[Any] = children.iterator
+
+  @transient private lazy val kernel =
+    GraftKernels.getClass.getMethods.find(_.getName == fn.name).get
+
+  override def eval(input: InternalRow): Any = {
+    val args = children.map(_.eval(input).asInstanceOf[AnyRef])
+    if (args.contains(null) || fn.nullOnNaN && args.take(2).exists(_.asInstanceOf[Double].isNaN)) null
+    else try kernel.invoke(GraftKernels, args: _*)
+    catch { case e: java.lang.reflect.InvocationTargetException if e.getCause != null => throw e.getCause }
+  }
+
+  // each argument evaluated once, a NULL test only after a nullable one
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = children.map(_.genCode(ctx))
+    val vs = args.map(_.value)
+    val call = s"graft.sql.GraftKernels.${fn.name}(${vs.mkString(", ")})"
+    val javaType = CodeGenerator.javaType(dataType)
+    if (!nullable)
+      ev.copy(code = code"""
+        ${args.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $call;""", isNull = FalseLiteral)
+    else {
+      val result = s"${ev.isNull} = false; ${ev.value} = $call;"
+      val guarded =
+        if (fn.nullOnNaN) s"if (!java.lang.Double.isNaN(${vs(0)}) && !java.lang.Double.isNaN(${vs(1)})) { $result }"
+        else result
+      val body = children.zip(args).foldRight(guarded) { case ((c, a), inner) =>
+        if (c.nullable) s"${a.code}\nif (!${a.isNull}) {\n$inner\n}" else s"${a.code}\n$inner"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    }
+  }
+
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
     copy(children = cs)
-}
-
-/** gh_encode(lon, lat, bits) → LONG — right-justified Morton geohash.
-  * Reference: int64.encode (`int64.hpp`, SURVEY.md §3.1 #1). */
-case class GhEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "gh_encode"
-
-  override def nullSafeEval(lon: Any, lat: Any, bits: Any): Any = {
-    val lo = lon.asInstanceOf[Double]; val la = lat.asInstanceOf[Double]
-    if (lo.isNaN || la.isNaN) null
-    else Geohash.encode(lo, la, bits.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lon, lat, bits) => s"""
-      if (${ghExpr.nanGuard2.format(lon, lat)}) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.core.Geohash.encode($lon, $lat, $bits); }""")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** h3u_cell(lon, lat, res) → LONG — Uber-H3 BIT-COMPATIBLE cell id
-  * ([[graft.core.H3U]]; validated against published golden vectors in
-  * H3USpec). Note the lon-first argument order matches this library's other
-  * spatial functions; H3U itself is lat-first like the H3 API. */
-case class H3UCell(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3u_cell"
-  override def nullSafeEval(lon: Any, lat: Any, res: Any): Any = {
-    val lo = lon.asInstanceOf[Double]; val la = lat.asInstanceOf[Double]
-    if (lo.isNaN || la.isNaN) null
-    else graft.core.H3U.latLngToCell(la, lo, res.asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lon, lat, res) => s"""
-      if (${ghExpr.nanGuard2.format(lon, lat)}) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.core.H3U.latLngToCell($lat, $lon, $res); }""")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** s2u_cell(lon, lat, level) → LONG — S2 cell id in the published layout
-  * ([[graft.core.S2U]]: face ++ Hilbert position ++ sentinel). */
-case class S2UCell(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "s2u_cell"
-  override def nullSafeEval(lon: Any, lat: Any, level: Any): Any = {
-    val lo = lon.asInstanceOf[Double]; val la = lat.asInstanceOf[Double]
-    if (lo.isNaN || la.isNaN) null
-    else graft.core.S2U.lonLatToCellAt(lo, la, level.asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lon, lat, level) => s"""
-      if (${ghExpr.nanGuard2.format(lon, lat)}) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.core.S2U.lonLatToCellAt($lon, $lat, $level); }""")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
 }
 
 /** st_contains_wkt(wkt, lon, lat) → BOOLEAN — even-odd point-in-polygon
@@ -150,24 +116,15 @@ case class StContainsWkt(first: Expression, second: Expression, third: Expressio
 }
 
 /** gh_covering_cells(min_lon, min_lat, max_lon, max_lat, bits) — Generator
-  * form: one output row per covering cell (column `cell: LONG`). The
-  * distributed analogue of the reference's lattice walk (SURVEY.md §3.1 #8):
-  * LATERAL-explode boxes into cells, then equi-join on cell. */
-case class GhCoveringCells(children: Seq[Expression])
-    extends Expression with Generator with CodegenFallback {
+  * form: one output row per cell of `child`, the `gh_covering` call over
+  * the same arguments (column `cell: LONG`; a NULL argument gives no row).
+  * The distributed analogue of the reference's lattice walk (SURVEY.md
+  * §3.1 #8): LATERAL-explode boxes into cells, then equi-join on cell. */
+case class GhCoveringCells(child: Expression) extends ExplodeBase {
+  override val position: Boolean = false
   override def elementSchema: StructType = StructType(Seq(StructField("cell", LongType, false)))
   override def prettyName: String = "gh_covering_cells"
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return Nil
-    Geohash.covering(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Int])
-      .iterator.map(c => InternalRow(c))
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(children = cs)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** collect_capped(v, cap) → ARRAY — the group's values SORTED, or NULL when

@@ -3,7 +3,6 @@ package graft.sql
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
@@ -33,19 +32,15 @@ object GraftFunctions {
   }
 
   /** A scalar function: a [[KernelCall]] over its arguments, each cast to
-    * its declared input type, which the optimizer replaces with [[invoke]].
-    * The casts are the builder's because the replacement is only built
-    * after analysis, so Spark's type coercion never sees it; casts to the
-    * argument's own type fold away in the optimizer. The result is NULL on
-    * a NULL argument and, with `nullOnNaN`, on a NaN coordinate. */
+    * its declared input type, so the kernel sees exactly those types
+    * whoever builds the node; casts to the argument's own type fold away
+    * in the optimizer. The result is NULL on a NULL argument and, with
+    * `nullOnNaN`, on a NaN coordinate. */
   final case class Scalar(sig: String, doc: String, inputs: Seq[DataType], output: DataType,
                           nullOnNaN: Boolean = false) extends Fn {
     require(inputs.length == arity, s"$sig declares ${inputs.length} input types")
     protected def node(args: Seq[Expression]): Expression =
       KernelCall(this, args.lazyZip(inputs).map(Cast(_, _)))
-    /** The codegen'd static call of the [[GraftKernels]] method `name`. */
-    def invoke(args: Seq[Expression]): Expression =
-      StaticInvoke(GraftKernels.getClass, output, name, args, inputs, returnNullable = nullOnNaN)
   }
 
   /** A function with its own node class: one the engine matches, or one
@@ -64,10 +59,21 @@ object GraftFunctions {
   private val Cells = ArrayType(LongType, containsNull = false)
   private val CellsIn = ArrayType(LongType) // any array of integers casts to it
 
-  /** h3u_parent's row, which [[CellIndex.H3U]]'s prune predicate calls. */
+  // rows other code builds or matches: the cell encoders (CellIndex),
+  // h3u_parent (CellIndex.H3U's prune predicate), gh_covering (the
+  // gh_covering_cells generator)
+  private[sql] val GhEncode = Scalar("gh_encode(lon, lat, bits)", "int64 geohash at bits precision",
+    Seq(D, D, I), L, nullOnNaN = true)
+  private[sql] val H3UCell = Scalar("h3u_cell(lon, lat, res)", "Uber-H3 bit-compatible cell id",
+    Seq(D, D, I), L, nullOnNaN = true)
+  private[sql] val S2UCell = Scalar("s2u_cell(lon, lat, level)", "S2 cell id (published layout)",
+    Seq(D, D, I), L, nullOnNaN = true)
   private[sql] val H3UParent = Scalar("h3u_parent(id, parent_res)", "bit-compatible cellToParent", Seq(L, I), L)
+  private val GhCovering = Scalar("gh_covering(min_lon, min_lat, max_lon, max_lat, bits)",
+    "array of covering cells", Seq(D, D, D, D, I), Cells)
 
   private[sql] val scalars: Seq[Scalar] = Seq(
+    GhEncode,
     Scalar("gh_encode_str(lon, lat, chars)", "base32 geohash string", Seq(D, D, I), S, nullOnNaN = true),
     Scalar("gh_decode(code, bits)", "cell center struct(lon, lat)", Seq(L, I), LonLat),
     Scalar("gh_decode_str(code)", "cell center struct(lon, lat)", Seq(S), LonLat),
@@ -93,12 +99,13 @@ object GraftFunctions {
     Scalar("derive_lon(image_id)", "deterministic derived longitude of a generated image row", Seq(S), D),
     Scalar("derive_lat(image_id)", "deterministic derived latitude of a generated image row", Seq(S), D),
     Scalar("caption_of(image_id)", "expected caption of a generated image row", Seq(S), S),
-    Scalar("gh_covering(min_lon, min_lat, max_lon, max_lat, bits)", "array of covering cells",
-      Seq(D, D, D, D, I), Cells),
+    GhCovering,
     Scalar("gh_covering_polygon(wkt, bits)", "cells intersecting a WKT polygon", Seq(S, I), Cells),
+    H3UCell,
     Scalar("h3u_center(id)", "cell center struct(lon, lat)", Seq(L), LonLat),
     H3UParent,
     Scalar("h3u_polyfill_wkt(wkt, res)", "polygonToCells covering", Seq(S, I), Cells),
+    S2UCell,
     Scalar("s2u_token(id)", "S2 hex token, trailing zeros stripped", Seq(L), S),
     Scalar("s2u_parent(id, level)", "ancestor cell at level", Seq(L, I), L),
     Scalar("s2u_level(id)", "cell level from the sentinel bit", Seq(L), I),
@@ -117,22 +124,12 @@ object GraftFunctions {
     Scalar("h3u_resolution(id)", "resolution of a cell id", Seq(L), I),
   )
 
-  private def cD(e: Expression) = Cast(e, D)
-  private def cI(e: Expression) = Cast(e, I)
-  private def cS(e: Expression) = Cast(e, S)
-
   private val explicit: Seq[Fn] = Seq(
-    Explicit("gh_encode(lon, lat, bits)", "int64 geohash at bits precision")(
-      e => GhEncode(cD(e(0)), cD(e(1)), cI(e(2)))),
-    Explicit("h3u_cell(lon, lat, res)", "Uber-H3 bit-compatible cell id")(
-      e => H3UCell(cD(e(0)), cD(e(1)), cI(e(2)))),
-    Explicit("s2u_cell(lon, lat, level)", "S2 cell id (published layout)")(
-      e => S2UCell(cD(e(0)), cD(e(1)), cI(e(2)))),
     Explicit("st_contains_wkt(wkt, lon, lat)", "point in WKT polygon")(
-      e => StContainsWkt(cS(e(0)), cD(e(1)), cD(e(2)))),
+      e => StContainsWkt(Cast(e(0), S), Cast(e(1), D), Cast(e(2), D))),
     Explicit("gh_covering_cells(min_lon, min_lat, max_lon, max_lat, bits)",
       "generator: one row per covering cell")(
-      e => GhCoveringCells(e.take(4).map(cD) :+ cI(e(4)))),
+      e => GhCoveringCells(GhCovering.build(e))),
     Explicit("collect_capped(v, cap)",
       "agg: sorted group values, NULL when the group exceeds cap (a literal)")({ e =>
         require(e(1).foldable, "collect_capped(v, cap): cap must be a literal")

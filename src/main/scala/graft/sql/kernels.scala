@@ -8,13 +8,12 @@ import graft.core.{Base32, GeoMath, Geohash, H3U, HexGrid, S2U, TextHash}
 import graft.data.ImageGen
 
 /** The scalar SQL functions' bodies: one static method per row of
-  * [[GraftFunctions.scalars]], named after its function, which the
-  * optimizer calls through a codegen'd `StaticInvoke` (see [[KernelCall]]).
-  * Each is a thin adapter over [[graft.core]] that takes and returns
-  * Spark's internal types: `UTF8String` for STRING, `InternalRow` for a
-  * struct, `ArrayData` for an array. The NaN-guarded kernels return `null`
-  * for a NaN coordinate (the core codecs would quietly encode cell 0 — see
-  * GeohashCoreSpec), hence their boxed result. */
+  * [[GraftFunctions.scalars]], named after its function, which
+  * [[KernelCall]] calls in generated code. Each is a thin adapter over
+  * [[graft.core]] that takes and returns Spark's internal types:
+  * `UTF8String` for STRING, `InternalRow` for a struct, `ArrayData` for an
+  * array. The node answers NULL and NaN arguments itself, so a kernel
+  * never sees either and returns a primitive where its type has one. */
 object GraftKernels {
   private def lonLat(lon: Double, lat: Double): InternalRow = InternalRow(lon, lat)
   private def longs(a: Array[Long]): ArrayData = new GenericArrayData(a)
@@ -25,8 +24,9 @@ object GraftKernels {
       .mkString("POLYGON ((", ", ", "))"))
 
   // geohash codec & cell algebra (SURVEY.md §3.1 numbers in brackets)
+  def gh_encode(lon: Double, lat: Double, bits: Int): Long = Geohash.encode(lon, lat, bits) // [1]
   def gh_encode_str(lon: Double, lat: Double, chars: Int): UTF8String = // [5]
-    if (lon.isNaN || lat.isNaN) null else str(Geohash.encodeString(lon, lat, chars))
+    str(Geohash.encodeString(lon, lat, chars))
   def gh_decode(code: Long, bits: Int): InternalRow = { // [2]
     val (lon, lat) = Geohash.decodeCenter(code, bits); lonLat(lon, lat)
   }
@@ -59,8 +59,7 @@ object GraftKernels {
   def md5_prefix60(text: UTF8String): Long = TextHash.md5Prefix60(text.getBytes)
 
   // planar hex lattice (not H3-compatible)
-  def hex_cell(lon: Double, lat: Double, size: Double): java.lang.Long =
-    if (lon.isNaN || lat.isNaN) null else HexGrid.cell(lon, lat, size)
+  def hex_cell(lon: Double, lat: Double, size: Double): Long = HexGrid.cell(lon, lat, size)
   def hex_center(id: Long, size: Double): InternalRow = {
     val (lon, lat) = HexGrid.center(id, size); lonLat(lon, lat)
   }
@@ -73,6 +72,7 @@ object GraftKernels {
   def caption_of(imageId: UTF8String): UTF8String = ImageGen.captionOf(imageId)
 
   // Uber-H3-compatible cells (H3U is lat-first; SQL is lon-first)
+  def h3u_cell(lon: Double, lat: Double, res: Int): Long = H3U.latLngToCell(lat, lon, res)
   def h3u_center(id: Long): InternalRow = {
     val (lat, lon) = H3U.cellToLatLng(id); lonLat(lon, lat)
   }
@@ -90,6 +90,7 @@ object GraftKernels {
     longs(H3U.uncompactCells(cells.toLongArray(), res))
 
   // published-layout S2 cells
+  def s2u_cell(lon: Double, lat: Double, level: Int): Long = S2U.lonLatToCellAt(lon, lat, level)
   def s2u_token(id: Long): UTF8String = str(S2U.token(id))
   def s2u_parent(id: Long, level: Int): Long = S2U.parent(id, level)
   def s2u_level(id: Long): Int = S2U.level(id)

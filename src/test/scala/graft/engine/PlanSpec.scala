@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.{CellIndex, GraftSpark, GhEncode, H3UCell, S2UCell, functions => gf}
+import graft.sql.{CellIndex, GraftSpark, functions => gf}
 
 /** Plan-shape assertions: the properties that decide whether the engine
   * still works at 100 TB — column pruning to the parquet scan, predicate
@@ -37,10 +37,8 @@ class PlanSpec extends AnyFunSuite {
 
   /** Does a Filter of `plan` test a cell expression against a cell set? */
   private def cellFiltered(plan: SparkPlan): Boolean = {
-    def isCell(e: Expression) = e match {
-      case _: GhEncode | _: H3UCell | _: S2UCell => true
-      case _ => false
-    }
+    def isCell(e: Expression) =
+      Seq(CellIndex.Geohash, CellIndex.H3U, CellIndex.S2U).exists(_.cellArgs(e).isDefined)
     // a one-cell IN is optimized into an equality
     plan.collect { case f: FilterExec => f.condition }.exists(_.find {
       case In(e, _) => isCell(e)

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sql.GraftSpark
 
@@ -221,5 +222,18 @@ class TextOpsSpec extends AnyFunSuite {
     val randMean = randHam.sum.toDouble / randHam.size
     assert(dupHam.max < 10, s"dup hamming too high: ${dupHam.max}")
     assert(randMean > dupMean + 5.0, s"no separation: dup=$dupMean rand=$randMean")
+  }
+
+  test("fingerprint's tokenizing projection runs inside a whole-stage codegen stage") {
+    val docs = spark.range(0, 8)
+      .selectExpr("id AS doc_id", "concat(' b  a ', cast(id % 2 AS STRING), ' a') AS text")
+    val plan = TextOps.fingerprint(docs, "doc_id", "text").queryExecution.executedPlan
+    assert(plan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.child.find(_.isInstanceOf[ProjectExec]).isDefined), plan)
+    // order-insensitive over distinct tokens: ' b  a 0 a' and '0 a b' agree
+    val fps = TextOps.fingerprint(docs, "doc_id", "text").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val same = TextOps.fingerprint(spark.range(1).selectExpr("0L AS doc_id", "'0 a b' AS text"), "doc_id", "text")
+    assert(fps(0L) == same.collect()(0).getLong(1))
+    assert(fps(0L) != fps(1L))
   }
 }

@@ -1,8 +1,11 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.testcolumn.ColumnOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{H3U, HexGrid, S2U}
@@ -104,6 +107,10 @@ class FunctionTableSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
 
+  /** Does a whole-stage codegen stage of `plan` hold an operator `op` picks? */
+  private def fusedIn(plan: SparkPlan)(op: SparkPlan => Boolean): Boolean =
+    plan.collect { case w: WholeStageCodegenExec => w }.exists(_.child.find(op).isDefined)
+
   private def collectOut(name: String, codegen: Boolean): Seq[Any] =
     withCodegen(codegen)(call(name).select("out").collect().map(_.get(0)).toSeq)
 
@@ -155,5 +162,35 @@ class FunctionTableSpec extends AnyFunSuite {
         assert(out.count(r => r.isNullAt(0) && r.isNullAt(1)) == 1, s"$name codegen=$cg")
       }
     }
+  }
+
+  test("a row built outside analysis evaluates, and stays in the executed plan codegen'd") {
+    val c = H3U.latLngToCell(57.64911, 10.40744, 7)
+    assert(GraftFunctions.H3UParent.build(Seq(Literal(c), Literal(3))).eval() == H3U.cellToParent(c, 3))
+    val df = spark.range(0, 8).selectExpr(s"$h3r5 AS c")
+      .select(ColumnOf(GraftFunctions.H3UParent.build(Seq(UnresolvedAttribute("c"), Literal(3)))).as("p"))
+    val plan = df.queryExecution.executedPlan
+    assert(fusedIn(plan) {
+      case p: ProjectExec => p.projectList.exists(_.find {
+        case KernelCall(fn, _) => fn == GraftFunctions.H3UParent
+        case _ => false
+      }.isDefined)
+      case _ => false
+    }, plan)
+    assert(df.collect().map(_.getLong(0)).toSet ==
+      places.map { case (x, y) => H3U.cellToParent(H3U.latLngToCell(y, x, 5), 3) }.toSet)
+  }
+
+  test("gh_covering_cells is a codegen'd generator with interpreted-equal rows") {
+    def cells = spark.range(0, 16).selectExpr(
+      s"gh_covering_cells($lon, $lat, $lon + 0.3, $lat + 0.2, 20)", "id")
+    assert(cells.columns.toSeq == Seq("cell", "id"))
+    val plan = cells.queryExecution.executedPlan
+    assert(fusedIn(plan)(_.isInstanceOf[GenerateExec]), plan)
+    assert(plan.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e })).isEmpty, plan)
+    def rows(codegen: Boolean) =
+      withCodegen(codegen)(cells.collect().map(r => (r.getLong(1), r.getLong(0))).toSeq)
+    assert(rows(codegen = true).nonEmpty)
+    assert(rows(codegen = true) == rows(codegen = false))
   }
 }
