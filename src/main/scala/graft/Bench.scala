@@ -54,7 +54,6 @@ object Bench {
 object BenchWork {
   import graft.core.BBox
   import graft.engine.SpatialOps
-  import graft.sql.{functions => gf}
 
   def positions(spark: SparkSession, rows: Long) = {
     import spark.implicits._

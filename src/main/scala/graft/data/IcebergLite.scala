@@ -37,10 +37,10 @@ import graft.sql.CellIndex
   *    partition is replaced, not doubled;
   *  - per-partition lineage + metrics: every snapshot records
   *    (partition, rows, checksum, snapshot that introduced it);
-  *  - table properties in the manifest header (tile precision, lon/lat
-  *    column names) drive the [[graft.sql.DeriveCoveringPrune]] optimizer
-  *    rule: a bare box / point-in-polygon filter over a manifest-backed
-  *    table is rewritten into a partition-prefix IN-list automatically;
+  *  - a tiled table records its layout ([[Tiling]]) in the manifest
+  *    header, where the [[graft.sql.DeriveCoveringPrune]] rule reads it to
+  *    rewrite a bare box / point-in-polygon filter into a partition-prefix
+  *    IN-list, and the indexed kNNs and compaction read it too;
   *  - the table's compaction policy ([[PropAutoCompact]]) is applied by
   *    [[extend]].
   *
@@ -63,13 +63,45 @@ object IcebergLite {
                             partitionCol: String, properties: Map[String, String],
                             entries: Seq[PartitionEntry], schema: StructType)
 
-  /** Property keys consumed by the optimizer rule. */
-  val PropPrefixBits = "tile.prefix.bits"
-  val PropLonCol = "tile.lon.col"
-  val PropLatCol = "tile.lat.col"
-  /** The [[CellIndex.tag]] of the table's cell index (absent = geohash);
-    * read only through [[CellIndex.fromManifest]]. */
-  val PropIndexType = "tile.index"
+  /** A tiled table's layout: each row's [[Tiling.TileCol]] is its `index`
+    * cell of (`lonCol`, `latCol`), and the partition column
+    * [[Tiling.PrefixCol]] that cell's ancestor at `prefixLevel`. Recorded
+    * as four table properties, which only [[properties]] writes and only
+    * [[Tiling.of]] reads. */
+  final case class Tiling(index: CellIndex, prefixLevel: Int, lonCol: String, latCol: String) {
+    /** The table properties that record this tiling. */
+    def properties: Map[String, String] =
+      Map(Tiling.PropPrefixBits -> prefixLevel.toString, Tiling.PropLonCol -> lonCol,
+        Tiling.PropLatCol -> latCol, Tiling.PropIndexType -> index.tag)
+
+    /** `df` with the tile column (the cell of lon/lat at `tileLevel`) and
+      * the prefix column (its ancestor at [[prefixLevel]]). */
+    def assign(df: DataFrame, tileLevel: Int): DataFrame =
+      df.withColumn(Tiling.TileCol, index.cell(col(lonCol), col(latCol), tileLevel))
+        .withColumn(Tiling.PrefixCol, index.parent(col(Tiling.TileCol), tileLevel, prefixLevel))
+  }
+
+  object Tiling {
+    val TileCol = "tile"
+    val PrefixCol = "tile_p"
+    val PropPrefixBits = "tile.prefix.bits"
+    val PropLonCol = "tile.lon.col"
+    val PropLatCol = "tile.lat.col"
+    /** The [[CellIndex.tag]] of the table's cell index. */
+    val PropIndexType = "tile.index"
+
+    /** The tiling `m` records: None unless all four properties are present
+      * and the index tag is one this engine knows (another index's cells
+      * are not ours to cover). */
+    def of(m: Manifest): Option[Tiling] = for {
+      bits <- m.properties.get(PropPrefixBits)
+      lon <- m.properties.get(PropLonCol)
+      lat <- m.properties.get(PropLatCol)
+      tag <- m.properties.get(PropIndexType)
+      index <- Seq(CellIndex.Geohash, CellIndex.H3U, CellIndex.S2U).find(_.tag == tag)
+    } yield Tiling(index, bits.toInt, lon, lat)
+  }
+
   /** The table's compaction policy: an [[extend]] whose manifest
     * references this many distinct snapshots runs [[compact]] and then
     * [[expireSnapshots]] (a long-lived stream must not grow one snapshot
@@ -202,43 +234,31 @@ object IcebergLite {
     m
   }
 
-  /** Tile-aware write: assigns `tile` (the `index` cell at tileLevel) and
-    * the partition prefix column (its ancestor at prefixLevel) from
-    * lon/lat, and records the tiling as table properties, which
-    * [[graft.sql.DeriveCoveringPrune]] and
-    * [[graft.engine.SpatialOps.knnIndexed]] read. Rows are tile-sorted
-    * WITHIN each task before writing (no repartition — a hot prefix must
-    * not collapse into one task): locally clustered tile/lon/lat values
-    * give every parquet row group tight min/max stats, so refine
-    * predicates skip row groups inside the surviving partitions — a
-    * second pruning level under the partition IN-list. XOR checksums are
-    * order-insensitive, so manifests are unaffected. */
+  /** Tile-aware write: assigns the [[Tiling]]'s tile and prefix columns
+    * from lon/lat and records the tiling as table properties. Rows are
+    * tile-sorted WITHIN each task before writing (no repartition — a hot
+    * prefix must not collapse into one task): locally clustered
+    * tile/lon/lat values give every parquet row group tight min/max stats,
+    * so refine predicates skip row groups inside the surviving partitions
+    * — a second pruning level under the partition IN-list. XOR checksums
+    * are order-insensitive, so manifests are unaffected. */
   def writeTiled(df: DataFrame, table: String, lonCol: String, latCol: String,
                  tileLevel: Int, prefixLevel: Int,
-                 prefixCol: String = "tile_p",
                  index: CellIndex = CellIndex.Geohash): Manifest = {
-    val tiled = df
-      .withColumn("tile", index.cell(col(lonCol), col(latCol), tileLevel))
-      .withColumn(prefixCol, index.parent(col("tile"), tileLevel, prefixLevel))
-      .sortWithinPartitions(prefixCol, "tile")
-    write(tiled, table, prefixCol, properties = tilingProperties(index, prefixLevel, lonCol, latCol))
+    val tiling = Tiling(index, prefixLevel, lonCol, latCol)
+    write(tiling.assign(df, tileLevel).sortWithinPartitions(Tiling.PrefixCol, Tiling.TileCol),
+      table, Tiling.PrefixCol, properties = tiling.properties)
   }
 
   /** [[writeTiled]] on the Uber-H3-compatible index. */
   def writeTiledH3(df: DataFrame, table: String, lonCol: String, latCol: String,
-                   tileRes: Int, prefixRes: Int, prefixCol: String = "tile_p"): Manifest =
-    writeTiled(df, table, lonCol, latCol, tileRes, prefixRes, prefixCol, CellIndex.H3U)
+                   tileRes: Int, prefixRes: Int): Manifest =
+    writeTiled(df, table, lonCol, latCol, tileRes, prefixRes, CellIndex.H3U)
 
   /** [[writeTiled]] on the published-layout S2 index. */
   def writeTiledS2(df: DataFrame, table: String, lonCol: String, latCol: String,
-                   tileLevel: Int, prefixLevel: Int, prefixCol: String = "tile_p"): Manifest =
-    writeTiled(df, table, lonCol, latCol, tileLevel, prefixLevel, prefixCol, CellIndex.S2U)
-
-  /** The table properties that record a tiling. */
-  def tilingProperties(index: CellIndex, prefixLevel: Int,
-                       lonCol: String, latCol: String): Map[String, String] =
-    Map(PropPrefixBits -> prefixLevel.toString, PropLonCol -> lonCol, PropLatCol -> latCol,
-      PropIndexType -> index.tag)
+                   tileLevel: Int, prefixLevel: Int): Manifest =
+    writeTiled(df, table, lonCol, latCol, tileLevel, prefixLevel, CellIndex.S2U)
 
   /** Reference `GeoHash.update` (SURVEY.md §3.2 #16): REPLACE the contents
     * of every partition present in `df` (other partitions untouched), as a
@@ -332,6 +352,8 @@ object IcebergLite {
   final class Snapshot private[IcebergLite] (private[IcebergLite] val stamp: Stamp,
                                              val manifest: Manifest, resolve: () => DataFrame) {
     lazy val df: DataFrame = resolve()
+    /** The tiling the manifest records, parsed once per snapshot. */
+    lazy val tiling: Option[Tiling] = Tiling.of(manifest)
   }
 
   /** [[current]], or None when the table has no committed snapshot. */
@@ -419,8 +441,8 @@ object IcebergLite {
     // tight per-row-group min/max stats back after compaction (see
     // writeTiled; XOR checksums are order-insensitive)
     val current =
-      if (current0.columns.contains("tile"))
-        current0.sortWithinPartitions(col(prior.partitionCol), col("tile"))
+      if (Tiling.of(prior).isDefined)
+        current0.sortWithinPartitions(col(prior.partitionCol), col(Tiling.TileCol))
       else current0
     val incoming = stats(current, prior.partitionCol)
     commit(table, Some(prior), current, prior.partitionCol, incoming, incoming.keys.toSeq.sorted,

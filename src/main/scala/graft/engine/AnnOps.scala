@@ -34,15 +34,24 @@ object AnnOps {
   def norm2(embCol: String): Column =
     aggregate(col(embCol).cast("array<double>"), lit(0.0), (acc, x) => acc + x * x)
 
-  /** Rank the per-query branches: each branch is cut to its exact top-k by
-    * (cosine desc, id asc) BEFORE the union, which Spark plans as
+  /** The top-k of every query by cosine: query q's (qid, vec_id, cosine)
+    * rows come from `rowsFor(qv)` of its query vector, a frame carrying
+    * the row norm `_n`. Each branch is cut to its exact top-k by (cosine
+    * desc, id asc) BEFORE the union, which Spark plans as
     * TakeOrderedAndProject — a per-partition bounded heap + merge, never a
     * full shuffle of all rows×queries into per-qid sort partitions (the
     * global-window formulation puts the whole table in one partition per
     * query at 100 TB). The final row_number window then runs over ≤
     * nQueries·k survivor rows. */
-  private def rankTopK(perQuery: Seq[DataFrame], k: Int): DataFrame = {
-    val topped = perQuery.map(_.orderBy(col("cosine").desc, col("vec_id").asc).limit(k))
+  private def rankByCosine(idCol: String, embCol: String, dim: Int, nQueries: Int, k: Int)(
+      rowsFor: Array[Double] => DataFrame): DataFrame = {
+    val topped = (0 until nQueries).map { q =>
+      val qv = queryVec(q, dim)
+      val qn = math.sqrt(qv.map(x => x * x).sum)
+      val cos = (dotConst(embCol, qv) / (col("_n") * lit(qn))).as("cosine")
+      rowsFor(qv).select(lit(q).as("qid"), col(idCol).as("vec_id"), cos)
+        .orderBy(col("cosine").desc, col("vec_id").asc).limit(k)
+    }
     val all = topped.reduce(_ unionAll _)
     val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id").asc)
     all.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -53,18 +62,12 @@ object AnnOps {
   /** Brute-force exact top-k by cosine for nQueries fixed query vectors.
     * Output (qid, rnk, vec_id, cosine). Scale note: this is the baseline /
     * rerank primitive — a full scan per query batch with a distributed
-    * bounded-heap top-k (see [[rankTopK]]). */
+    * bounded-heap top-k (see [[rankByCosine]]). */
   def annBrute(emb: DataFrame, idCol: String, embCol: String,
                dim: Int, nQueries: Int, k: Int): DataFrame = {
     // hoist the row norm out of the per-query branches: one sqrt per row
     val withNorm = emb.withColumn("_n", sqrt(norm2(embCol)))
-    val perQuery = (0 until nQueries).map { q =>
-      val qv = queryVec(q, dim)
-      val qn = math.sqrt(qv.map(x => x * x).sum)
-      val cos = (dotConst(embCol, qv) / (col("_n") * lit(qn))).as("cosine")
-      withNorm.select(lit(q).as("qid"), col(idCol).as("vec_id"), cos)
-    }
-    rankTopK(perQuery, k)
+    rankByCosine(idCol, embCol, dim, nQueries, k)(_ => withNorm)
   }
 
   /** Sign-random-projection LSH bucket id (nPlanes fixed deterministic
@@ -83,20 +86,15 @@ object AnnOps {
     val nPlanes = 8
     val bucketed = emb.withColumn("_bucket", srpBucket(embCol, dim, nPlanes))
       .withColumn("_n", sqrt(norm2(embCol)))
-    val perQuery = (0 until nQueries).map { q =>
-      val qv = queryVec(q, dim)
-      val qn = math.sqrt(qv.map(x => x * x).sum)
+    rankByCosine(idCol, embCol, dim, nQueries, k) { qv =>
       val qBucket = // the query's own bucket, computed the same way
         (0 until nPlanes).map { p =>
           val plane = queryVec(100 + p, dim)
           val d = qv.indices.map(j => qv(j) * plane(j)).sum
           if (d >= 0) 1L << p else 0L
         }.sum
-      val cos = (dotConst(embCol, qv) / (col("_n") * lit(qn))).as("cosine")
       bucketed.where(col("_bucket") === qBucket)
-        .select(lit(q).as("qid"), col(idCol).as("vec_id"), cos)
     }
-    rankTopK(perQuery, k)
   }
 
   /** Collect the coarse quantizer: the vectors with id below nCentroids,
@@ -115,14 +113,16 @@ object AnnOps {
     cents
   }
 
-  /** Nearest-centroid id as ONE project-stage expression: per centroid the
+  /** `emb`'s id and embedding plus `cent_id`, the nearest centroid's id
+    * as ONE project-stage expression: per centroid the
     * squared-L2 fold (same element order as the oracle), argmin via
     * array_min over (d2, cent_id) structs — struct ordering IS the
     * (d2 asc, cent_id asc) tie-break. Replaces the previous
     * crossJoin(×nCentroids) + Window row_number argmin, which shuffled
     * corpus×nCentroids rows to pick a per-row minimum (guide §2.4: remove
     * shuffles outright — assignment is now map-only). */
-  private def nearestCentId(embCol: String, cents: Array[(Long, Array[Double])]): Column = {
+  private def withCentId(emb: DataFrame, idCol: String, embCol: String,
+                         cents: Array[(Long, Array[Double])]): DataFrame = {
     val branches = cents.map { case (cid, cv) =>
       val cvlit = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(cv.map(lit)): _*)
       val d2 = aggregate(
@@ -130,8 +130,10 @@ object AnnOps {
         lit(0.0), (acc, x) => acc + x)
       struct(d2.as("d2"), lit(cid).as("cent_id"))
     }
-    array_min(array(scala.collection.immutable.ArraySeq.unsafeWrapArray(branches): _*))
-      .getField("cent_id")
+    emb.withColumn("cent_id",
+        array_min(array(scala.collection.immutable.ArraySeq.unsafeWrapArray(branches): _*))
+          .getField("cent_id"))
+      .select(col(idCol), col(embCol), col("cent_id"))
   }
 
   /** The query's nProbe nearest centroids, driver-side (same sequential
@@ -159,19 +161,12 @@ object AnnOps {
   def annIvf(emb: DataFrame, idCol: String, embCol: String, dim: Int,
              nQueries: Int, k: Int, nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
     val centroids = collectCentroids(emb, idCol, embCol, nCentroids)
-    val assigned = emb
-      .withColumn("cent_id", nearestCentId(embCol, centroids))
-      .select(col(idCol), col(embCol), col("cent_id"))
+    val assigned = withCentId(emb, idCol, embCol, centroids)
       .withColumn("_n", sqrt(norm2(embCol)))
-    val perQuery = (0 until nQueries).map { q =>
-      val qv = queryVec(q, dim)
-      val qn = math.sqrt(qv.map(x => x * x).sum)
+    rankByCosine(idCol, embCol, dim, nQueries, k) { qv =>
       val probes = probesFor(qv, centroids, nProbe)
-      val cos = (dotConst(embCol, qv) / (col("_n") * lit(qn))).as("cosine")
       assigned.where(col("cent_id").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(probes.map(Long.box)): _*))
-        .select(lit(q).as("qid"), col(idCol).as("vec_id"), cos)
     }
-    rankTopK(perQuery, k)
   }
 
   /** Materialize the IVF layout: every embedding row lands in the
@@ -184,10 +179,7 @@ object AnnOps {
   def writeIvfIndex(emb: DataFrame, idCol: String, embCol: String, dim: Int,
                     table: String, nCentroids: Int = 8): Unit = {
     val centroids = collectCentroids(emb, idCol, embCol, nCentroids)
-    val assigned = emb
-      .withColumn("cent_id", nearestCentId(embCol, centroids))
-      .select(col(idCol), col(embCol), col("cent_id"))
-    graft.data.IcebergLite.write(assigned, table, "cent_id",
+    graft.data.IcebergLite.write(withCentId(emb, idCol, embCol, centroids), table, "cent_id",
       properties = Map("ivf.n_centroids" -> centroids.length.toString,
                        "ivf.dim" -> dim.toString,
                        "ivf.id_col" -> idCol, "ivf.emb_col" -> embCol,
@@ -232,15 +224,10 @@ object AnnOps {
     val centroids = parseCentroids(manifest.properties.getOrElse("ivf.centroids",
       throw new IllegalStateException(s"IVF table $table records no ivf.centroids")))
     val withNorm = snap.df.withColumn("_n", sqrt(norm2(embCol)))
-    val perQuery = (0 until nQueries).map { q =>
-      val qv = queryVec(q, dim)
-      val qn = math.sqrt(qv.map(x => x * x).sum)
+    rankByCosine(idCol, embCol, dim, nQueries, k) { qv =>
       val probes = probesFor(qv, centroids, nProbe)
-      val cos = (dotConst(embCol, qv) / (col("_n") * lit(qn))).as("cosine")
       withNorm.where(col("cent_id").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(probes.map(Long.box)): _*)) // partition-level prune
-        .select(lit(q).as("qid"), col(idCol).as("vec_id"), cos)
     }
-    rankTopK(perQuery, k)
   }
 
   /** A label block bigger than this gets SUB-BUCKETED by SRP sign bits: one

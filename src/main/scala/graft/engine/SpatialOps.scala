@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -294,77 +294,63 @@ object SpatialOps {
     * covering of the k-th-distance disc at the prefix level lies inside
     * them; otherwise one more probe reads just the covering's partitions.
     * At 10¹² rows each probe touches a handful of partitions instead of
-    * the table. The index, prefix column, prefix level and lon/lat columns
-    * are the ones the current snapshot's manifest records. Exact, answered
-    * as a local DataFrame with `rank` — see [[knnExpand]]; a table with no
-    * rows answers with an empty frame of its recorded schema plus `rank`. */
+    * the table. The layout is the [[graft.data.IcebergLite.Tiling]] the
+    * current snapshot's manifest records; a table that records none throws
+    * IllegalArgumentException. Exact, answered as a local DataFrame with
+    * `rank` — see [[knnExpand]]; a table with no rows answers with an
+    * empty frame of its recorded schema plus `rank`. */
   def knnIndexed(spark: SparkSession, table: String,
-                 qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val t = new PinnedTable(spark, table)
-    def recorded(key: String): String = t.manifest.properties.getOrElse(key,
-      throw new IllegalArgumentException(s"$table records no $key: not a tiled table"))
-    t.knn(t.index.getOrElse(throw new IllegalArgumentException(s"$table records an unknown index")),
-      recorded(IcebergLite.PropPrefixBits).toInt,
-      recorded(IcebergLite.PropLonCol), recorded(IcebergLite.PropLatCol), qLon, qLat, k, tieCol)
-  }
+                 qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
+    knnTiled(spark, table, None, qLon, qLat, k, tieCol)
 
   /** [[knnIndexed]] with the caller naming the layout — geohash here, H3
-    * and S2 below; see [[knnIndexedAs]]. */
+    * and S2 below. The named layout must be the one the manifest records:
+    * a mismatched index or prefix would match no partition and answer with
+    * nothing, and other lon/lat columns would rank by columns the tiles
+    * were not built from, so either throws IllegalArgumentException. */
   def knnIndexed(spark: SparkSession, table: String, prefixCol: String, prefixBits: Int,
                  lonCol: String, latCol: String,
                  qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
-    knnIndexedAs(CellIndex.Geohash, spark, table, prefixCol, prefixBits, lonCol, latCol,
+    knnTiled(spark, table,
+      Some((IcebergLite.Tiling(CellIndex.Geohash, prefixBits, lonCol, latCol), prefixCol)),
       qLon, qLat, k, tieCol)
 
   def knnIndexedH3(spark: SparkSession, table: String, prefixCol: String, prefixRes: Int,
                    lonCol: String, latCol: String,
                    qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
-    knnIndexedAs(CellIndex.H3U, spark, table, prefixCol, prefixRes, lonCol, latCol,
+    knnTiled(spark, table,
+      Some((IcebergLite.Tiling(CellIndex.H3U, prefixRes, lonCol, latCol), prefixCol)),
       qLon, qLat, k, tieCol)
 
   def knnIndexedS2(spark: SparkSession, table: String, prefixCol: String, prefixLevel: Int,
                    lonCol: String, latCol: String,
                    qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame =
-    knnIndexedAs(CellIndex.S2U, spark, table, prefixCol, prefixLevel, lonCol, latCol,
+    knnTiled(spark, table,
+      Some((IcebergLite.Tiling(CellIndex.S2U, prefixLevel, lonCol, latCol), prefixCol)),
       qLon, qLat, k, tieCol)
 
-  /** The named-layout kNNs: the layout a caller names must be the one the
-    * manifest records — a mismatched index or prefix would match no
-    * partition and answer with nothing instead of failing. A manifest that
-    * records no prefix level (a table written by plain
-    * [[graft.data.IcebergLite.write]]) takes the caller's. */
-  private def knnIndexedAs(index: CellIndex, spark: SparkSession, table: String,
-                           prefixCol: String, level: Int, lonCol: String, latCol: String,
-                           qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-    val t = new PinnedTable(spark, table)
-    val m = t.manifest
-    require(t.index.contains(index) && m.partitionCol == prefixCol &&
-        m.properties.get(IcebergLite.PropPrefixBits).forall(_ == level.toString),
-      s"$table is tiled as ${t.index.fold("an unknown index")(_.tag)} on ${m.partitionCol} at " +
-      s"${m.properties.getOrElse(IcebergLite.PropPrefixBits, "an unrecorded level")}, " +
-      s"not ${index.tag} on $prefixCol at $level")
-    t.knn(index, level, lonCol, latCol, qLon, qLat, k, tieCol)
-  }
-
-  /** One committed snapshot of an indexed table as the manifest-count kNNs
-    * see it: per-cell row counts from its manifest (no Spark job) and
-    * prefix-pruned scans of its resolved DataFrame. Counts and every scan
-    * come from the same snapshot, so a commit landing mid-query cannot mix
+  /** The indexed kNN over the current snapshot of `table`, checked against
+    * the caller's `named` (tiling, prefix column) when given. Per-cell row
+    * counts (from the manifest, no Spark job) and every prefix-pruned scan
+    * come from that one snapshot, so a commit landing mid-query cannot mix
     * two snapshots into one exact answer. */
-  private final class PinnedTable(spark: SparkSession, table: String) {
-    private val snap = IcebergLite.current(spark, table)
-    val manifest: IcebergLite.Manifest = snap.manifest
-    val index: Option[CellIndex] = CellIndex.fromManifest(manifest)
-
-    def knn(index: CellIndex, level: Int, lonCol: String, latCol: String,
-            qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
-      // sum across snapshots: appended partitions have one entry per snapshot
-      val rows = IcebergLite.rowsByPartition(manifest)
-        .flatMap { case (p, n) => p.toLongOption.map(_ -> n) }
-      knnExpand(spark, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
-        cells => cells.fold(snap.df)(cs => snap.df.where(col(manifest.partitionCol).isin(cs: _*))),
-        Some(rows))
+  private def knnTiled(spark: SparkSession, table: String,
+                       named: Option[(IcebergLite.Tiling, String)],
+                       qLon: Double, qLat: Double, k: Int, tieCol: String): DataFrame = {
+    val snap = IcebergLite.current(spark, table)
+    val m = snap.manifest
+    val t = snap.tiling.getOrElse(throw new IllegalArgumentException(
+      s"$table records no tiling of a known index: not a tiled table"))
+    named.foreach { case (n, prefixCol) =>
+      require(n == t && prefixCol == m.partitionCol,
+        s"$table is tiled as $t on ${m.partitionCol}, not $n on $prefixCol")
     }
+    // sum across snapshots: appended partitions have one entry per snapshot
+    val rows = IcebergLite.rowsByPartition(m)
+      .flatMap { case (p, n) => p.toLongOption.map(_ -> n) }
+    knnExpand(spark, t.lonCol, t.latCol, qLon, qLat, k, tieCol, t.index, t.prefixLevel,
+      cells => cells.fold(snap.df)(cs => snap.df.where(col(m.partitionCol).isin(cs: _*))),
+      Some(rows))
   }
 
   /** Dense raster of per-cell counts over a box — the engine equivalent of

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.sql.CellIndex
 
@@ -52,6 +52,20 @@ object StreamOps {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Starts `writer` and runs its query over the input at `path` to
+    * completion, with the shuffle sized by [[withInputSizedShuffle]]. */
+  private def runToCompletion(spark: SparkSession, path: String,
+                              writer: DataStreamWriter[_]): Unit =
+    withInputSizedShuffle(spark, path) {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** The state timeout of a handler with an optional `stateTtl`. */
+  private def ttlTimeout(stateTtl: String): GroupStateTimeout =
+    if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout
+    else GroupStateTimeout.ProcessingTimeTimeout
+
   /** A parquet file stream over `path`, a file or a directory, with its
     * cached schema. The file source needs a directory, so a file is read
     * as its parent directory filtered to its name. `maxFilesPerTrigger > 0`
@@ -73,10 +87,8 @@ object StreamOps {
   private def drain[T](spark: SparkSession, path: String, stream: Dataset[_],
                        outputMode: String)(project: DataFrame => Dataset[T]): Dataset[T] = {
     val name = s"stream_out_${System.nanoTime()}"
-    withInputSizedShuffle(spark, path) {
-      val q = stream.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    runToCompletion(spark, path,
+      stream.writeStream.format("memory").queryName(name).outputMode(outputMode))
     val out = project(spark.table(name)).localCheckpoint(true)
     spark.catalog.dropTempView(name)
     out
@@ -119,9 +131,11 @@ object StreamOps {
     * at `level`, partition prefix `tile_p` its ancestor at prefixLevel)
     * and APPENDED to an IcebergLite table via foreachBatch →
     * [[graft.data.IcebergLite.extend]] (file-level appends: each
-    * micro-batch adds a snapshot, no partition rewrite). The first batch
-    * CREATES the table with the tiling properties, so streamed tables are
-    * prune-aware like batch-written ones; `autoCompactEvery > 0` records
+    * micro-batch adds a snapshot, no partition rewrite). Each batch is
+    * tiled by the same [[graft.data.IcebergLite.Tiling]] as
+    * [[graft.data.IcebergLite.writeTiled]], and the first one CREATES the
+    * table recording it, so streamed tables are prune-aware like
+    * batch-written ones; `autoCompactEvery > 0` records
     * it as the table's [[graft.data.IcebergLite.PropAutoCompact]] policy,
     * which the appends then apply. Because the per-partition
     * checksums are XOR-accumulative, the stream-fed table's cumulative
@@ -134,7 +148,9 @@ object StreamOps {
                          autoCompactEvery: Int = 0,
                          index: CellIndex = CellIndex.Geohash): DataFrame = {
     import graft.data.IcebergLite
-    val props = IcebergLite.tilingProperties(index, prefixLevel, "lon", "lat") ++
+    import IcebergLite.Tiling
+    val tiling = Tiling(index, prefixLevel, "lon", "lat")
+    val props = tiling.properties ++
       (if (autoCompactEvery > 0) Map(IcebergLite.PropAutoCompact -> autoCompactEvery.toString)
        else Map.empty)
     val stream = fileStream(spark, parquetPath, maxFilesPerTrigger)
@@ -147,22 +163,17 @@ object StreamOps {
         // checkpoint is bounded by micro-batch size — the increment, never
         // the table — so this is safe at any corpus scale (guide §5:
         // localCheckpoint as the cheap lineage/materialization cut).
-        val tiled = SpatialOps.withDerivedPosition(batch, keyCol)
-          .withColumn("tile", index.cell(col("lon"), col("lat"), level))
-          .withColumn("tile_p", index.parent(col("tile"), level, prefixLevel))
+        val tiled = tiling.assign(SpatialOps.withDerivedPosition(batch, keyCol), level)
           .localCheckpoint(true)
         if (IcebergLite.readManifest(table).isEmpty)
-          IcebergLite.write(tiled, table, "tile_p", properties = props)
-        else IcebergLite.extend(tiled, table, "tile_p")
+          IcebergLite.write(tiled, table, Tiling.PrefixCol, properties = props)
+        else IcebergLite.extend(tiled, table, Tiling.PrefixCol)
       }
       ()
     }
-    withInputSizedShuffle(spark, parquetPath) {
-      val query = q.outputMode("append").start()
-      try query.processAllAvailable() finally query.stop()
-    }
+    runToCompletion(spark, parquetPath, q.outputMode("append"))
     IcebergLite.read(spark, table)
-      .groupBy("tile").agg(count(lit(1)).as("n")).select("tile", "n")
+      .groupBy(Tiling.TileCol).agg(count(lit(1)).as("n")).select(Tiling.TileCol, "n")
   }
 
   final case class DedupRow(fp: Long, doc_id: Long)
@@ -175,8 +186,9 @@ object StreamOps {
     * re-scanning the corpus per increment: state is partitioned by
     * fingerprint (shuffle on the dedup key), so each micro-batch costs
     * O(batch), not O(corpus). Over a single static batch the result
-    * equals `GROUP BY fp → min(doc_id)` — the DuckDB oracle (q64). */
-  /** `stateTtl` (e.g. "30 minutes"): optional BOUNDED-STATE mode. The
+    * equals `GROUP BY fp → min(doc_id)` — the DuckDB oracle (q64).
+    *
+    * `stateTtl` (e.g. "30 minutes"): optional BOUNDED-STATE mode. The
     * default keeps one state entry per distinct fingerprint forever —
     * exact, but on a months-long 100 TB ingest that is unbounded state
     * store growth. With a TTL, a fingerprint's entry expires after that
@@ -205,11 +217,8 @@ object StreamOps {
     val docs = fileStream(spark, parquetPath, maxFilesPerTrigger)
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val fps = TextOps.fingerprint(docs, "doc_id", "text").as[(Long, Long)]
-    val timeout =
-      if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
     fps.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(dedupHandler(stateTtl))
+      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(dedupHandler(stateTtl))
   }
 
   /** The per-fingerprint state handler behind [[streamedDedupStream]] —
@@ -305,11 +314,8 @@ object StreamOps {
         array_min(transform(array_distinct(TextOps.shingles3(col("_w"))),
           sh => TextOps.maskedHash60(sh))).as("_m"))
       .as[(Long, Long)]
-    val timeout =
-      if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
     val cands = keyed.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
+      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
         nearDupHandler(bucketCap, stateTtl))
     // a doc id is not unique in a stream: one id under two keys can
     // surface the same pair twice

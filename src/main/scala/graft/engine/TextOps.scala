@@ -304,8 +304,9 @@ object TextOps {
   /** Exact n-gram (3-shingle) jaccard for given candidate pairs — the
     * standalone n-gram-Jaccard dedup op (minhashLshPairs runs the same
     * [[exactJaccard]] on its min-hash candidates). Pairs that share no
-    * shingle score 0. */
-  /** `prefilterDocs`: semi-join `docs` to the pair set's doc ids BEFORE
+    * shingle score 0.
+    *
+    * `prefilterDocs`: semi-join `docs` to the pair set's doc ids BEFORE
     * shingling (guide §3.2 — reduce the big side early). Only docs that
     * appear in `pairs` contribute to any output column, so results are
     * identical either way. Turn it on when the pair set is a small

@@ -17,9 +17,9 @@ import graft.core.{BBox, GeoMath}
   * [[graft.engine.StreamOps.streamedTileIngest]], [[DeriveCoveringPrune]])
   * has one body parameterised by `(CellIndex, level)`, where `level` is
   * the index's precision (geohash bits, H3 resolution, S2 level). A table
-  * records its index as the manifest tag [[tag]]; [[CellIndex.fromManifest]]
-  * is the only reader of that tag. Coverings are conservative (a superset
-  * of the cells of every point inside); callers refine exactly. */
+  * records its index as the manifest tag [[tag]], written and read only
+  * by [[graft.data.IcebergLite.Tiling]]. Coverings are conservative (a
+  * superset of the cells of every point inside); callers refine exactly. */
 sealed trait CellIndex {
   /** The `tile.index` manifest tag a table written on this index records. */
   def tag: String
@@ -96,14 +96,6 @@ object CellIndex {
   /** A kNN ring expansion: `cells(r)` is ring r (called with
     * non-decreasing r); `maxRings` rings cover the grid. */
   final case class Rings(cells: Long => Seq[Long], maxRings: Long)
-
-  /** The index a manifest records: geohash when untagged, None for a tag
-    * this engine does not know (its cells are not ours to cover). */
-  def fromManifest(m: graft.data.IcebergLite.Manifest): Option[CellIndex] =
-    m.properties.get(graft.data.IcebergLite.PropIndexType) match {
-      case None => Some(Geohash)
-      case Some(t) => Seq(Geohash, H3U, S2U).find(_.tag == t)
-    }
 
   private[sql] def cellLiteral(cell: Long, attr: AttributeReference): Expression = attr.dataType match {
     case LongType => Literal(cell)

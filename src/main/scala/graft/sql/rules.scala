@@ -56,8 +56,8 @@ private[sql] object LiteralPip {
 
 /** Covering → partition-predicate derivation (SURVEY.md §5, round-2 roadmap
   * #3): a box or point-in-polygon filter over an IcebergLite table whose
-  * manifest records its tiling (prefix bits + lon/lat column names,
-  * [[graft.data.IcebergLite.writeTiled]]) implies `prefix_col IN
+  * manifest records its tiling ([[graft.data.IcebergLite.Tiling]]: index,
+  * prefix level, lon/lat column names) implies `prefix_col IN
   * (covering cells)` — a predicate over the DIRECTORY PARTITION column that
   * prunes at file-listing time, turning a 100 TB scan into the handful of
   * partitions the box touches. Catalyst pushes predicates it is given but
@@ -87,26 +87,22 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, l: LogicalRelation) =>
-      manifestFor(l) match {
-        case Some((m, bits)) =>
-          val conjuncts = splitConjunctivePredicates(cond)
-          (for {
-            // an unknown index tag derives nothing: its cells are not ours
-            index <- CellIndex.fromManifest(m)
-            lonName <- m.properties.get(graft.data.IcebergLite.PropLonCol)
-            latName <- m.properties.get(graft.data.IcebergLite.PropLatCol)
-            lonAttr <- attrOf(l, lonName)
-            latAttr <- attrOf(l, latName)
-            prefixAttr <- attrOf(l, m.partitionCol)
-            // already derived (fixed-point idempotency) — covers the plain
-            // IN, the compacted OR-of-INs, and INs over h3u_parent(prefix)
-            if !conjuncts.exists(isPrefixInShape(_, prefixAttr))
-            cells <- cellSetParents(conjuncts, index, lonAttr, latAttr, bits).orElse(
-              boundsOf(conjuncts, lonAttr, latAttr).flatMap(box =>
-                coveringCells(index, box, bits, pipRingsOf(conjuncts, lonAttr, latAttr))))
-          } yield Filter(And(cond, index.prunePredicate(cells, bits, prefixAttr)), l)).getOrElse(f)
-        case None => f
-      }
+      (for {
+        snap <- snapshotOf(l)
+        // no tiling, or an unknown index tag, derives nothing
+        t <- snap.tiling
+        lonAttr <- attrOf(l, t.lonCol)
+        latAttr <- attrOf(l, t.latCol)
+        prefixAttr <- attrOf(l, snap.manifest.partitionCol)
+        conjuncts = splitConjunctivePredicates(cond)
+        // already derived (fixed-point idempotency) — covers the plain
+        // IN, the compacted OR-of-INs, and INs over h3u_parent(prefix)
+        if !conjuncts.exists(isPrefixInShape(_, prefixAttr))
+        cells <- cellSetParents(conjuncts, t.index, lonAttr, latAttr, t.prefixLevel).orElse(
+          boundsOf(conjuncts, lonAttr, latAttr).flatMap(box =>
+            coveringCells(t.index, box, t.prefixLevel, pipRingsOf(conjuncts, lonAttr, latAttr))))
+      } yield Filter(And(cond, t.index.prunePredicate(cells, t.prefixLevel, prefixAttr)), l))
+        .getOrElse(f)
   }
 
   // covering memo: the optimizer re-plans the same Filter shape repeatedly
@@ -174,23 +170,20 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  /** The IcebergLite manifest backing this parquet relation, if its
-    * properties record a tiling. The table is the one
+  /** The IcebergLite snapshot backing this parquet relation: the one
     * [[graft.data.IcebergLite.snapshotAt]] finds for the relation's first
     * root path.
     *
     * The optimizer calls this on every fixed-point iteration for every
-    * Filter-over-parquet node, so the manifest comes from the session's
-    * snapshot slot ([[graft.data.IcebergLite.currentOption]]) rather than
-    * being re-parsed each pass; a new commit invalidates the slot. */
-  private def manifestFor(l: LogicalRelation) = l.relation match {
+    * Filter-over-parquet node, so the snapshot, and the tiling parsed from
+    * its manifest, come from the session's snapshot slot
+    * ([[graft.data.IcebergLite.currentOption]]) rather than being re-read
+    * each pass; a new commit invalidates the slot. */
+  private def snapshotOf(l: LogicalRelation) = l.relation match {
     case fs: HadoopFsRelation =>
       fs.location.rootPaths.headOption
         .flatMap(p => SparkSession.getActiveSession
           .flatMap(graft.data.IcebergLite.snapshotAt(_, p.toUri.getPath)))
-        .map(_.manifest)
-        .flatMap(m => m.properties.get(graft.data.IcebergLite.PropPrefixBits)
-          .map(b => (m, b.toInt)))
     case _ => None
   }
 

@@ -257,6 +257,29 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(e.getMessage.contains(t) && e.getMessage.contains("snapshot 0"), e.getMessage)
   }
 
+  test("Tiling.of reads back what writeTiled records on geohash, H3U and S2U, and no partial tiling") {
+    import IcebergLite.Tiling
+    Seq((CellIndex.Geohash, 30, 6), (CellIndex.H3U, 7, 2), (CellIndex.S2U, 12, 5)).foreach {
+      case (index, tileLevel, prefixLevel) =>
+        val t = s"${tmp(s"tiling_${index.tag}")}/t"
+        IcebergLite.writeTiled(pts(1, 201), t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        val m = IcebergLite.readManifest(t).get
+        val tiling = Tiling(index, prefixLevel, "lon", "lat")
+        assert(Tiling.of(m).contains(tiling), index.tag)
+        assert(IcebergLite.current(spark, t).tiling.contains(tiling), index.tag)
+        assert(m.partitionCol == Tiling.PrefixCol, index.tag)
+        // the written rows carry the tiling's own tile and prefix columns
+        val cols = Seq("c_custkey", Tiling.TileCol, Tiling.PrefixCol)
+        val read = IcebergLite.read(spark, t).select(cols.map(col): _*)
+        val assigned = tiling.assign(pts(1, 201), tileLevel).select(cols.map(col): _*)
+        assert(read.exceptAll(assigned).isEmpty && assigned.exceptAll(read).isEmpty, index.tag)
+    }
+    val m = IcebergLite.writeTiled(pts(1, 11), s"${tmp("tiling_keys")}/t", "lon", "lat", 30, 6)
+    Seq(Tiling.PropPrefixBits, Tiling.PropLonCol, Tiling.PropLatCol, Tiling.PropIndexType)
+      .foreach(key => assert(Tiling.of(m.copy(properties = m.properties - key)).isEmpty, key))
+    assert(Tiling.of(m.copy(properties = m.properties + (Tiling.PropIndexType -> "h3"))).isEmpty)
+  }
+
   // stops the suite's SparkContext: keep this test last
   test("a stopped context's slots are dropped, so they cannot keep its session alive") {
     val t = s"${tmp("slot_stop")}/t"

@@ -202,7 +202,8 @@ class EngineOpsSpec extends AnyFunSuite {
     val bm = IcebergLite.readManifest(s"$dir/batch").get
     assert(sm.snapshotId >= 1, "stream should have committed multiple snapshots")
     assert(IcebergLite.rowsByPartition(sm) == IcebergLite.rowsByPartition(bm))
-    assert(sm.properties.get(IcebergLite.PropIndexType).contains("s2u"))
+    assert(IcebergLite.Tiling.of(sm) == IcebergLite.Tiling.of(bm))
+    assert(IcebergLite.Tiling.of(sm).contains(IcebergLite.Tiling(CellIndex.S2U, 7, "lon", "lat")))
     val tbl = IcebergLite.read(spark, s"$dir/t")
     val q = tbl.where($"lon" >= -1.0 && $"lon" <= 1.0 && $"lat" >= 50.0 && $"lat" <= 53.0)
     val pf = q.queryExecution.executedPlan.toString.linesIterator
@@ -229,9 +230,9 @@ class EngineOpsSpec extends AnyFunSuite {
     val bm = IcebergLite.readManifest(s"$dir/batch").get
     assert(sm.snapshotId >= 1, "stream should have committed multiple snapshots")
     assert(IcebergLite.rowsByPartition(sm) == IcebergLite.rowsByPartition(bm))
-    // tiling properties recorded → the streamed table is prune-aware
-    assert(sm.properties.get(IcebergLite.PropIndexType).contains("h3u"))
-    assert(sm.properties.get(IcebergLite.PropPrefixBits).contains("3"))
+    // the batch write's tiling recorded → the streamed table is prune-aware
+    assert(IcebergLite.Tiling.of(sm) == IcebergLite.Tiling.of(bm))
+    assert(IcebergLite.Tiling.of(sm).contains(IcebergLite.Tiling(CellIndex.H3U, 3, "lon", "lat")))
     val tbl = IcebergLite.read(spark, s"$dir/t")
     val q = tbl.where($"lon" >= -1.0 && $"lon" <= 1.0 && $"lat" >= 50.0 && $"lat" <= 53.0)
     val pf = q.queryExecution.executedPlan.toString.linesIterator

@@ -152,9 +152,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("knn_idx").toString
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    val tiled = SpatialOps.withTile(pts, "lon", "lat", 30)
-      .withColumn("tile_p", graft.sql.functions.gh_parent($"tile", 30, 8))
-    graft.data.IcebergLite.write(tiled, s"$dir/t", "tile_p")
+    graft.data.IcebergLite.writeTiled(pts, s"$dir/t", "lon", "lat", 30, 8)
     val (qx, qy) = (-0.75, 51.25)
     var got: DataFrame = null
     val probed = probes {
@@ -810,11 +808,9 @@ class PlanSpec extends AnyFunSuite {
     val t = s"${java.nio.file.Files.createTempDirectory("unknown_tag")}/t"
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet("/root/testdata/sf0.01/customer.parquet").select("c_custkey"), "c_custkey")
-    val tiled = pts.withColumn("tile", gf.h3u_cell($"lon", $"lat", 7))
-      .withColumn("tile_p", gf.h3u_parent($"tile", 3))
-    graft.data.IcebergLite.write(tiled, t, "tile_p",
-      properties = graft.data.IcebergLite.tilingProperties(CellIndex.H3U, 3, "lon", "lat") +
-        (graft.data.IcebergLite.PropIndexType -> "h3"))
+    val tiling = graft.data.IcebergLite.Tiling(CellIndex.H3U, 3, "lon", "lat")
+    graft.data.IcebergLite.write(tiling.assign(pts, 7), t, "tile_p",
+      properties = tiling.properties + (graft.data.IcebergLite.Tiling.PropIndexType -> "h3"))
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
     val inBox = $"lon" >= box.minLon && $"lon" <= box.maxLon &&
                 $"lat" >= box.minLat && $"lat" <= box.maxLat
@@ -851,6 +847,33 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(SpatialOps.knnIndexedH3(
       spark, t, "tile_p", 0, "lon", "lat", -0.75, 51.25, 10, "c_custkey").count() == 10)
+  }
+
+  test("knnIndexed: every form throws over a table that records no tiling, and on other lon/lat") {
+    import graft.data.IcebergLite
+    // tile and tile_p columns, but a plain write records no tiling
+    val plain = s"${java.nio.file.Files.createTempDirectory("knn_untiled")}/t"
+    val pts = SpatialOps.withDerivedPosition(spark.range(1, 201).toDF("c_custkey"), "c_custkey")
+    IcebergLite.write(IcebergLite.Tiling(CellIndex.Geohash, 6, "lon", "lat").assign(pts, 30),
+      plain, "tile_p")
+    val (qx, qy) = (-0.75, 51.25)
+    Seq[(String, () => DataFrame)](
+      "recorded" -> (() => SpatialOps.knnIndexed(spark, plain, qx, qy, 10, "c_custkey")),
+      "geohash" -> (() => SpatialOps.knnIndexed(
+        spark, plain, "tile_p", 6, "lon", "lat", qx, qy, 10, "c_custkey")),
+      "h3" -> (() => SpatialOps.knnIndexedH3(
+        spark, plain, "tile_p", 6, "lon", "lat", qx, qy, 10, "c_custkey")),
+      "s2" -> (() => SpatialOps.knnIndexedS2(
+        spark, plain, "tile_p", 6, "lon", "lat", qx, qy, 10, "c_custkey"))).foreach {
+      case (form, knn) =>
+        val e = intercept[IllegalArgumentException](knn())
+        assert(e.getMessage.contains(plain), s"$form: ${e.getMessage}")
+    }
+    // the recorded layout under swapped coordinate columns
+    val t = wideTable("knn_lonlat")
+    intercept[IllegalArgumentException] {
+      SpatialOps.knnIndexedH3(spark, t, "tile_p", 0, "lat", "lon", qx, qy, 10, "c_custkey")
+    }
   }
 
   test("budget: minhashLshPairs shuffles at most 5 times and explodes no band structs") {
