@@ -6,7 +6,9 @@ Usage: python3 scripts/plan_diff.py <dirA> <dirB>
 Each `*.txt` file present in either directory is read from both, with
 run-specific tokens masked (expression ids `#123`, `plan_id=7`, UUIDs,
 temporary paths, AQE statistics, lambda class names and variable ids,
-RDD ids, source line numbers), and the queries whose masked plans differ
+RDD ids, source line numbers, and the AQE query-stage and whole-stage
+codegen numbers, which follow the order in which stages materialize),
+and the queries whose masked plans differ
 are printed with a unified diff. The last line counts identical, changed
 and one-sided files. Exit status 1 when any file differs or is missing
 on one side.
@@ -28,6 +30,8 @@ MASKS = [
     (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_N"),
     (re.compile(r"file:/[a-z]{0,3}\.\.\."), "TMP"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
+    (re.compile(r"\b(ShuffleQueryStage|BroadcastQueryStage|TableCacheQueryStage) \d+"), r"\1 N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
 ]
 
 

@@ -186,8 +186,11 @@ object SpatialOps {
     * them and probes once, after it. The in-plan variant passes None and
     * counts each batch's probe rows; a whole-corpus `count()` for a k-row
     * answer would be a full 100 TB scan, so when expansion stalls below k
-    * it re-bounds the target with ONE capped existence probe
-    * (`limit(k).count()`, reading at most k rows per partition) instead.
+    * it re-bounds the target with ONE capped existence probe instead: at
+    * most k rows collected (`limit(k)`, a CollectLimit that reads at most
+    * k rows per partition and starts with one partition). Unlike
+    * `limit(k).count()`, whose generated limit counter gets a fresh name
+    * in every plan, it compiles no new class per query.
     * A batch that adds no cell is not the end of the grid (consecutive S2
     * rings can share their cells); it skips its probe. */
   private def knnExpand(spark: SparkSession, lonCol: String, latCol: String,
@@ -240,7 +243,7 @@ object SpatialOps {
           // rows the target is unchanged and this never re-fires; if it
           // has fewer (incl. zero), the loop now exits as soon as every
           // existing row is a candidate instead of walking the grid
-          target = math.min(target, scan(None).limit(k).count())
+          target = math.min(target, scan(None).limit(k).collect().length.toLong)
           bounded = true
         }
       }

@@ -3,6 +3,8 @@ package graft.sql
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
@@ -159,6 +161,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => DerivePipBBox)
     ext.injectOptimizerRule(_ => DeriveCoveringPrune)
+    ext.injectOptimizerRule(_ => KernelNotNull)
+    // runs just before whole-stage codegen, on the plain and the adaptive path
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
   }
 }
 

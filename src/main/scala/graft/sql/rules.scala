@@ -2,6 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -41,6 +42,41 @@ object DerivePipBBox extends Rule[LogicalPlan] with PredicateHelper {
       val fresh = derived.filterNot(d => existing.exists(_.semanticEquals(d)))
       if (fresh.isEmpty) f
       else Filter(fresh.foldLeft(cond)(And(_, _)), child)
+  }
+}
+
+/** `isnotnull(f(args))` for a scalar [[KernelCall]] `f` with a primitive
+  * result, as tests on its arguments: `isnotnull` of each nullable
+  * argument and, for a NULL-on-NaN row, `NOT isnan` of lon and lat. The
+  * two are equivalent, since such a call is NULL exactly when an argument
+  * is NULL or a coordinate NaN. Applied to the arguments in turn, so
+  * `isnotnull(gh_parent(gh_encode(lon, lat, b), …))` becomes coordinate
+  * tests too.
+  *
+  * `InferFiltersFromConstraints` derives `isnotnull(gh_encode(lon, lat,
+  * b))` from a join or group key computed by the Project above, and
+  * pushes it into a Filter below that Project: without this rule every
+  * surviving row computes its cell twice. It runs in the optimizer batch
+  * after that inference, which nothing in that batch repeats, so the
+  * batch converges. A conjunct that another already states is dropped. */
+object KernelNotNull extends Rule[LogicalPlan] with PredicateHelper {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case f @ Filter(cond, _) if splitConjunctivePredicates(cond).exists(notNullCall(_).isDefined) =>
+      val tests = splitConjunctivePredicates(cond).flatMap(argTests)
+        .foldLeft(Seq.empty[Expression])((kept, c) => if (kept.exists(_.semanticEquals(c))) kept else kept :+ c)
+      f.copy(condition = tests.reduceOption(And).getOrElse(Literal.TrueLiteral))
+  }
+
+  private def notNullCall(e: Expression): Option[KernelCall] = e match {
+    case IsNotNull(k: KernelCall) if CodeGenerator.isPrimitiveType(k.dataType) => Some(k)
+    case _ => None
+  }
+
+  private def argTests(e: Expression): Seq[Expression] = notNullCall(e) match {
+    case Some(k) =>
+      val notNaN = if (k.fn.nullOnNaN) k.children.take(2).map(c => Not(IsNaN(c))) else Nil
+      (k.children.filter(_.nullable).map(IsNotNull) ++ notNaN).flatMap(argTests)
+    case None => Seq(e)
   }
 }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.{CellIndex, GraftSpark, functions => gf}
+import graft.sql.{CellIndex, GraftSpark, ParamInSet, ParamLiteral, functions => gf}
 
 /** Plan-shape assertions: the properties that decide whether the engine
   * still works at 100 TB — column pruning to the parquet scan, predicate
@@ -39,8 +39,13 @@ class PlanSpec extends AnyFunSuite {
   private def cellFiltered(plan: SparkPlan): Boolean = {
     def isCell(e: Expression) =
       Seq(CellIndex.Geohash, CellIndex.H3U, CellIndex.S2U).exists(_.cellArgs(e).isDefined)
-    // a one-cell IN is optimized into an equality
-    plan.collect { case f: FilterExec => f.condition }.exists(_.find {
+    // a one-cell IN is optimized into an equality; a codegen'd Filter
+    // holds it with its literals swapped (graft.sql.ParamLiterals)
+    def unswapped(e: Expression) = e.transform {
+      case p: ParamInSet => p.pred
+      case p: ParamLiteral => Literal(p.value, p.dataType)
+    }
+    plan.collect { case f: FilterExec => unswapped(f.condition) }.exists(_.find {
       case In(e, _) => isCell(e)
       case InSet(e, _) => isCell(e)
       case EqualTo(e, _: Literal) => isCell(e)
@@ -438,6 +443,43 @@ class PlanSpec extends AnyFunSuite {
     knn() // resolves the snapshot
     val again = graft.JobCount.sites(spark)(knn())
     assert(again.size == 1, again.mkString("; "))
+  }
+
+  test("budget: fresh geometry compiles no new class once each shape is warm, on all three indexes") {
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")
+    val rnd = new scala.util.Random(14)
+    // boxes of 1 to 20 degrees, none across the anti-meridian (another shape)
+    def box(): BBox = {
+      val w = 1 + rnd.nextDouble() * 19
+      val x = -179 + rnd.nextDouble() * (358 - w); val y = -80 + rnd.nextDouble() * (160 - w)
+      BBox(x, y, x + w, y + w)
+    }
+    def triangle(b: BBox) =
+      s"POLYGON ((${b.minLon} ${b.minLat}, ${b.maxLon} ${b.minLat}, ${b.maxLon} ${b.maxLat}, ${b.minLon} ${b.minLat}))"
+    Seq((CellIndex.Geohash, 30, 4, 20), (CellIndex.H3U, 7, 0, 4), (CellIndex.S2U, 12, 1, 8)).foreach {
+      case (index, tileLevel, prefixLevel, level) =>
+        val t = s"${java.nio.file.Files.createTempDirectory(s"fresh_${index.tag}")}/t"
+        graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        val tbl = graft.data.IcebergLite.read(spark, t)
+        val shapes: Seq[(String, BBox => Any)] = Seq(
+          "box filter" -> (b => tbl.where($"lon" >= b.minLon && $"lon" <= b.maxLon &&
+            $"lat" >= b.minLat && $"lat" <= b.maxLat).select("c_custkey").collect()),
+          "boxQuery" -> (b => SpatialOps.boxQuery(tbl, "lon", "lat", b, level, index = index)
+            .select("c_custkey").collect()),
+          "pipQuery" -> (b => SpatialOps.pipQuery(tbl, "lon", "lat", triangle(b), level, index)
+            .select("c_custkey").collect()),
+          "knnIndexed" -> (b => SpatialOps.knnIndexed(spark, t, b.minLon, b.minLat, 10, "c_custkey").collect()),
+          "knnRing" -> (b => SpatialOps.knnRing(tbl, "lon", "lat", 1, b.minLon, b.minLat, 10, level,
+            "c_custkey", index).collect()))
+        // warm-up: London's hot spot, dense enough that a kNN takes few
+        // probes, and open ocean, sparse enough that it takes every kind
+        Seq(BBox(-2.0, 50.0, 3.0, 55.0), BBox(-150.0, -30.0, -140.0, -20.0)).foreach(b => shapes.foreach(_._2(b)))
+        shapes.foreach { case (name, query) =>
+          val n = graft.CompileCount.of((1 to 5).foreach(_ => query(box())))
+          assert(n == 0, s"$index $name: $n compiles for 5 queries")
+        }
+    }
   }
 
   test("knnRing: k > table rows terminates via capped probe and returns all rows") {
