@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -18,9 +18,11 @@ import graft.sql.{CellIndex, functions => gf}
   * (kNN via cell-ring expansion, skew-aware salted joins).
   *
   * Scale notes (10¹²-row posture):
-  *  - box queries broadcast the covering cell set (bounded by the covering
-  *    guard) and hash-join on the tile key — no shuffle of the big side
-  *    beyond the scan, refine runs codegen'd per row;
+  *  - box, PIP and neighbour-block queries and kNN probes restrict rows to
+  *    their cells with one cell-set filter ([[CellIndex.within]], bounded
+  *    by the covering guard): one job, no broadcast and no shuffle, the
+  *    membership test and the refine codegen'd per row; over a tiled table
+  *    [[graft.sql.DeriveCoveringPrune]] turns it into a partition prune;
   *  - the cell join shuffles both sides by tile; hot cells (planted or
   *    real) are handled by explicit deterministic salting + AQE skew join;
   *  - nothing collects to the driver except covering cell lists (≤ 2^20).
@@ -39,43 +41,41 @@ object SpatialOps {
                tileCol: String = "tile"): DataFrame =
     df.withColumn(tileCol, gf.gh_encode(col(lonCol), col(latCol), bits))
 
-  /** Box query = covering(box) ⋈ cells, then exact refine — the reference's
-    * E2 with an added exact filter (reference is cell-coarse; pass
-    * refine=false for row-parity with it). The covering is `index`'s
-    * conservative covering at `level` (geohash bits by default), broadcast
-    * against the points' cells, so a table bucketed by any index needs no
-    * other key column. Handles anti-meridian boxes (minLon > maxLon). */
+  /** Box query = the points whose cell is in covering(box), then exact
+    * refine — the reference's E2 with an added exact filter (reference is
+    * cell-coarse; pass refine=false for row-parity with it). The covering
+    * is `index`'s conservative covering at `level` (geohash bits by
+    * default), tested against the points' cells, so a table bucketed by any
+    * index needs no other key column. Handles anti-meridian boxes
+    * (minLon > maxLon). */
   def boxQuery(points: DataFrame, lonCol: String, latCol: String,
                box: BBox, level: Int, refine: Boolean = true,
                index: CellIndex = CellIndex.Geohash): DataFrame = {
-    val joined = cellJoin(points, lonCol, latCol, index.coverBox(box, level), level, index)
-    if (!refine) joined
+    val inCover = inCells(index, lonCol, latCol, level, index.coverBox(box, level))
+    if (!refine) points.where(inCover)
     else {
       val lonPred =
         if (box.minLon <= box.maxLon) col(lonCol) >= box.minLon && col(lonCol) <= box.maxLon
         else col(lonCol) >= box.minLon || col(lonCol) <= box.maxLon
-      joined.where(lonPred && col(latCol) >= box.minLat && col(latCol) <= box.maxLat)
+      points.where(inCover && lonPred && col(latCol) >= box.minLat && col(latCol) <= box.maxLat)
     }
   }
 
-  /** Point-in-polygon query = polygon covering ⋈ cells on `index` at
-    * `level`, then the exact ray-cast refine (`st_contains_wkt`). The
-    * covering is the polygon's own ([[CellIndex.coverPolygon]]), tighter
-    * than its bbox's for L-shaped or sparse polygons. */
+  /** Point-in-polygon query = the points whose cell on `index` at `level`
+    * is in the polygon's covering, then the exact ray-cast refine
+    * (`st_contains_wkt`). The covering is the polygon's own
+    * ([[CellIndex.coverPolygon]]), tighter than its bbox's for L-shaped or
+    * sparse polygons. */
   def pipQuery(points: DataFrame, lonCol: String, latCol: String, wkt: String,
                level: Int, index: CellIndex = CellIndex.Geohash): DataFrame =
-    cellJoin(points, lonCol, latCol,
-        index.coverPolygon(GeoMath.parseWktPolygon(wkt), level), level, index)
-      .where(gf.st_contains_wkt(lit(wkt), col(lonCol), col(latCol)))
+    points.where(
+      inCells(index, lonCol, latCol, level, index.coverPolygon(GeoMath.parseWktPolygon(wkt), level)) &&
+      gf.st_contains_wkt(lit(wkt), col(lonCol), col(latCol)))
 
-  /** The points whose `index` cell at `level` is in `cells` (broadcast). */
-  private def cellJoin(points: DataFrame, lonCol: String, latCol: String,
-                       cells: Array[Long], level: Int, index: CellIndex): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.withColumn("__cell", index.cell(col(lonCol), col(latCol), level))
-      .join(broadcast(cells.toSeq.toDF("__cell")), "__cell").drop("__cell")
-  }
+  /** Is the point's `index` cell at `level` one of `cells`? */
+  private def inCells(index: CellIndex, lonCol: String, latCol: String, level: Int,
+                      cells: Array[Long]): Column =
+    CellIndex.within(index.cell(col(lonCol), col(latCol), level), cells)
 
   /** [[boxQuery]] on the Uber-H3 index at resolution `res`. */
   def boxQueryH3(points: DataFrame, lonCol: String, latCol: String,
@@ -127,12 +127,12 @@ object SpatialOps {
   }
 
   /** Points whose cell lies in the 3×3 block around (qLon, qLat) — the
-    * reference's neighbor expansion (#3/#9) as a join predicate. */
+    * reference's neighbor expansion (#3/#9) as a cell-set filter. */
   def neighborBlockQuery(points: DataFrame, lonCol: String, latCol: String,
                          qLon: Double, qLat: Double, bits: Int): DataFrame = {
     val center = Geohash.encode(qLon, qLat, bits)
-    cellJoin(points, lonCol, latCol, Geohash.neighbors(center, bits) :+ center, bits,
-      CellIndex.Geohash)
+    points.where(inCells(CellIndex.Geohash, lonCol, latCol, bits,
+      Geohash.neighbors(center, bits) :+ center))
   }
 
   /** Exact brute-force kNN per query point (squared equirectangular degree
@@ -152,9 +152,13 @@ object SpatialOps {
       .drop("qlon", "qlat")
   }
 
-  /** Cell lists longer than this are probed as one unfiltered pass: an
-    * IN-list that long is plan bloat (a 65k-cell probe spent about a
-    * second before its job ran), and the pass is exact all the same. */
+  /** Cell lists longer than this are probed as one unfiltered pass, which
+    * is exact all the same. A cell set costs little to build but ships in
+    * every task and prints in the plan: at sf0.001, geohash level 20 (4
+    * vCPUs, `local[2]`) a probe over 65,536 cells took 0.3–0.6 s, its plan
+    * serialised to 1.5 MB and printed in about 90 ms, against 0.07–0.11 s
+    * over 4,096 cells; ten ring kNNs took 11.5–13.7 s with a 65,536-cell
+    * cap and 5.2–6.5 s with this one. */
   private val MaxProbeCells = 4096
 
   /** A probe's top-k rows in rank order, each with its distance as the last
@@ -166,8 +170,10 @@ object SpatialOps {
     * ring count that covers the grid come from the index
     * ([[CellIndex.rings]]).
     *
-    * A probe collects `orderBy(dist, tieCol).limit(k)` over the candidate
-    * cells: one TakeOrderedAndProject job, at most k rows on the driver.
+    * A probe collects `orderBy(dist, tieCol).limit(k)` over the rows of
+    * `points` whose `cell` (the index's cell at `level`, or a tiled table's
+    * prefix column) is a candidate cell ([[CellIndex.within]]): one
+    * TakeOrderedAndProject job, at most k rows on the driver.
     * Its row count is the candidate count and its last row's distance the
     * k-th distance d. Every true neighbour then lies in the disc of radius
     * √d, so in the box `(qLon ± √d, qLat ± √d)` clipped to the globe (the
@@ -193,10 +199,9 @@ object SpatialOps {
     * in every plan, it compiles no new class per query.
     * A batch that adds no cell is not the end of the grid (consecutive S2
     * rings can share their cells); it skips its probe. */
-  private def knnExpand(spark: SparkSession, lonCol: String, latCol: String,
+  private def knnExpand(points: DataFrame, cell: Column, lonCol: String, latCol: String,
                         qLon: Double, qLat: Double, k: Int, tieCol: String,
                         index: CellIndex, level: Int,
-                        scan: Option[Seq[Long]] => DataFrame,
                         manifestRows: Option[Map[Long, Long]]): DataFrame = {
     require(k >= 1, s"k = $k: a kNN answers k >= 1 neighbours")
     val CellIndex.Rings(ringCells, maxRings) = index.rings(qLon, qLat, level)
@@ -209,8 +214,8 @@ object SpatialOps {
     // None, or more than MaxProbeCells listed cells: read every row
     def probe(cells: Option[collection.Set[Long]]): Probe = {
       val list = cells.map(listed).filter(_.size <= MaxProbeCells)
-      val df = scan(list.map(_.toSeq)).withColumn("__d", dist)
-        .orderBy(col("__d").asc, col(tieCol).asc).limit(k)
+      val df = list.fold(points)(cs => points.where(CellIndex.within(cell, cs)))
+        .withColumn("__d", dist).orderBy(col("__d").asc, col(tieCol).asc).limit(k)
       Probe(df.collect(), df.schema, list.isEmpty)
     }
     // insertion-ordered SET accumulator: per-ring `Seq ++ distinct` was
@@ -243,7 +248,7 @@ object SpatialOps {
           // rows the target is unchanged and this never re-fires; if it
           // has fewer (incl. zero), the loop now exits as soon as every
           // existing row is a candidate instead of walking the grid
-          target = math.min(target, scan(None).limit(k).collect().length.toLong)
+          target = math.min(target, points.limit(k).collect().length.toLong)
           bounded = true
         }
       }
@@ -266,7 +271,7 @@ object SpatialOps {
       }
     val ranked = answer.rows.iterator.zipWithIndex
       .map { case (row, i) => Row.fromSeq(row.toSeq.init :+ (i + 1)) }.toSeq
-    spark.createDataFrame(ranked.asJava,
+    points.sparkSession.createDataFrame(ranked.asJava,
       StructType(answer.schema.fields.init :+ StructField("rank", IntegerType, nullable = false)))
   }
 
@@ -283,9 +288,8 @@ object SpatialOps {
     // NO cache: the doubling expansion needs only O(log rings) probes, and
     // each re-scan recomputes a codegen'd encode — far cheaper than
     // materializing the whole input (which a 100 TB table could not afford)
-    val cell = index.cell(col(lonCol), col(latCol), level)
-    knnExpand(points.sparkSession, lonCol, latCol, qLon, qLat, k, tieCol, index, level,
-        cells => cells.fold(points)(cs => points.where(cell.isin(cs: _*))), None)
+    knnExpand(points, index.cell(col(lonCol), col(latCol), level), lonCol, latCol,
+        qLon, qLat, k, tieCol, index, level, None)
       .withColumn("qid", lit(qid))
   }
 
@@ -351,9 +355,8 @@ object SpatialOps {
     // sum across snapshots: appended partitions have one entry per snapshot
     val rows = IcebergLite.rowsByPartition(m)
       .flatMap { case (p, n) => p.toLongOption.map(_ -> n) }
-    knnExpand(spark, t.lonCol, t.latCol, qLon, qLat, k, tieCol, t.index, t.prefixLevel,
-      cells => cells.fold(snap.df)(cs => snap.df.where(col(m.partitionCol).isin(cs: _*))),
-      Some(rows))
+    knnExpand(snap.df, col(m.partitionCol), t.lonCol, t.latCol, qLon, qLat, k, tieCol,
+      t.index, t.prefixLevel, Some(rows))
   }
 
   /** Dense raster of per-cell counts over a box — the engine equivalent of

@@ -119,9 +119,11 @@ object TextOps {
     // 100 TB of documents the shingle set is another ~100 TB — memory
     // caching would evict/thrash every executor; serialized disk blocks
     // cost one local write + three sequential local reads, no recompute
-    // of the explode, and zero executor-memory pressure.
+    // of the explode, and zero executor-memory pressure. A lazy local
+    // checkpoint, not a persist: the blocks live as long as the returned
+    // plan and leave no CacheManager entry behind.
     val sh = shingleSet(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .localCheckpoint(eager = false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
     exactJaccard(sh, idCol, lshCandidates(sh, idCol, bucketCap))(identity)
       .where(col("jaccard") >= threshold)
   }

@@ -2,7 +2,8 @@ package graft.sql
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expression, In, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expression, In, InSet, Literal, Or}
+import org.apache.spark.sql.graftcolumn.ColumnOf
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.core.{BBox, GeoMath}
@@ -10,9 +11,10 @@ import graft.core.{BBox, GeoMath}
 /** The cell index of a tiled table — geohash (Morton), Uber-H3-compatible
   * (H3U) or published-layout S2 (S2U) — and the one place that decides how
   * its cells are made and covered: which cell a row lands in, which cells
-  * cover a box or polygon, how kNN rings grow around a query, which
+  * cover a box or polygon, how kNN rings grow around a query, how rows
+  * are restricted to a set of cells ([[CellIndex.within]]), which
   * partition predicate a covering becomes, and which prefix cells a set of
-  * its finer cells falls in ([[parentOf]]). Every tiled operator
+  * its finer cells falls in ([[prefixCellsOf]]). Every tiled operator
   * ([[graft.engine.SpatialOps]], [[graft.data.IcebergLite.writeTiled]],
   * [[graft.engine.StreamOps.streamedTileIngest]], [[DeriveCoveringPrune]])
   * has one body parameterised by `(CellIndex, level)`, where `level` is
@@ -36,6 +38,15 @@ sealed trait CellIndex {
 
   /** The ancestor at `toLevel` of `cell` at `fromLevel`. */
   def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long
+
+  /** The prefix cells at `prefixLevel` that can hold a row whose cell at
+    * `level` is one of `cells`, on a table whose prefix is the ancestor of
+    * a tile cell at any level ≥ `prefixLevel`: the distinct parents, where
+    * cells nest. A value that is no cell at `level` keeps no row and is
+    * skipped. */
+  def prefixCellsOf(cells: Iterable[Long], level: Int, prefixLevel: Int): Array[Long] =
+    cells.iterator.flatMap(c => scala.util.Try(parentOf(c, level, prefixLevel)).toOption)
+      .distinct.toArray
 
   /** (lon, lat, level) of a Catalyst expression that is this index's
     * [[cell]] at a literal level, as [[DeriveCoveringPrune]] matches it. */
@@ -96,6 +107,14 @@ object CellIndex {
   /** A kNN ring expansion: `cells(r)` is ring r (called with
     * non-decreasing r); `maxRings` rings cover the grid. */
   final case class Rings(cells: Long => Seq[Long], maxRings: Long)
+
+  /** The rows whose `cell` (a Long cell or prefix column) is one of
+    * `cells`: one `InSet`, the only form in which an operator restricts
+    * rows to a set of cells. [[DeriveCoveringPrune]] turns it into a
+    * partition prune on a tiled table, and the codegen'd filter tests
+    * membership in one referenced set, whatever the set's size. */
+  def within(cell: Column, cells: Iterable[Long]): Column =
+    ColumnOf(InSet(ColumnOf.expression(cell), cells.toSet[Any]))
 
   private[sql] def cellLiteral(cell: Long, attr: AttributeReference): Expression = attr.dataType match {
     case LongType => Literal(cell)
@@ -159,6 +178,14 @@ object CellIndex {
     private[sql] def cellFn = GraftFunctions.H3UCell
     def parent(cell: Column, fromLevel: Int, toLevel: Int): Column = functions.h3u_parent(cell, toLevel)
     def parentOf(cell: Long, fromLevel: Int, toLevel: Int): Long = H.cellToParent(cell, toLevel)
+    // H3 cells do not nest: a point's cell at one resolution and its tile
+    // cell at another can descend from two different prefix cells, which
+    // are adjacent (H3USpec checks this over 10^6 points), so the parents
+    // and their ring-1 neighbours hold every such row
+    override def prefixCellsOf(cells: Iterable[Long], level: Int, prefixLevel: Int): Array[Long] = {
+      val parents = super.prefixCellsOf(cells, level, prefixLevel)
+      (parents ++ parents.flatMap(H.neighbors(_))).distinct
+    }
     protected def coverLonRange(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                                 level: Int, maxCells: Int): Array[Long] =
       H.polyfillBox(minLon, minLat, maxLon, maxLat, level, maxCells)

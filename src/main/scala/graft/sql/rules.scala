@@ -112,9 +112,12 @@ private[sql] object LiteralPip {
   *
   * A cell set is a bound too: a top-level `index.cell(lon, lat, L) IN (…)`
   * or `= c` on the recorded index and lon/lat columns, with L at or finer
-  * than the prefix level, derives `prefix IN (distinct parents of the
-  * cells)` — the plan-time case of pushing a data-induced predicate
-  * (the ring kNN's probes have this shape).
+  * than the prefix level, derives `prefix IN (the prefix cells of the
+  * cells)` ([[CellIndex.prefixCellsOf]]) — the plan-time case of pushing a
+  * data-induced predicate ([[CellIndex.within]] builds this shape for the
+  * box, PIP and neighbour-block queries and the ring kNN's probes). The
+  * literal bounds are tried first, so a refined box or PIP query prunes by
+  * its own covering; the cell set serves the rest.
   * Idempotent: skips when an IN on the prefix column is already present.
   */
 object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
@@ -134,9 +137,9 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
         // already derived (fixed-point idempotency) — covers the plain
         // IN, the compacted OR-of-INs, and INs over h3u_parent(prefix)
         if !conjuncts.exists(isPrefixInShape(_, prefixAttr))
-        cells <- cellSetParents(conjuncts, t.index, lonAttr, latAttr, t.prefixLevel).orElse(
-          boundsOf(conjuncts, lonAttr, latAttr).flatMap(box =>
-            coveringCells(t.index, box, t.prefixLevel, pipRingsOf(conjuncts, lonAttr, latAttr))))
+        cells <- boundsOf(conjuncts, lonAttr, latAttr).flatMap(box =>
+            coveringCells(t.index, box, t.prefixLevel, pipRingsOf(conjuncts, lonAttr, latAttr)))
+          .orElse(cellSetParents(conjuncts, t.index, lonAttr, latAttr, t.prefixLevel))
       } yield Filter(And(cond, t.index.prunePredicate(cells, t.prefixLevel, prefixAttr)), l))
         .getOrElse(f)
   }
@@ -166,12 +169,12 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
     computed
   }
 
-  /** The prefix cells a top-level cell-set conjunct allows: the distinct
-    * parents at the prefix level `bits` of the cells of an
-    * `index.cell(lon, lat, L) IN (…)` or `= c` over the recorded lon/lat,
-    * L ≥ bits. Every row the conjunct keeps has one of those cells, so its
-    * prefix is one of their parents. None when there is no such conjunct
-    * or its parents exceed [[MaxInCells]]. */
+  /** The prefix cells a top-level cell-set conjunct allows: the
+    * [[CellIndex.prefixCellsOf]] at the prefix level `bits` of the cells of
+    * an `index.cell(lon, lat, L) IN (…)` or `= c` over the recorded
+    * lon/lat, L ≥ bits. Every row the conjunct keeps has one of those
+    * cells, so its prefix is one of them. None when there is no such
+    * conjunct or its prefix cells exceed [[MaxInCells]]. */
   private def cellSetParents(conjuncts: Seq[Expression], index: CellIndex,
                              lon: AttributeReference, lat: AttributeReference,
                              bits: Int): Option[Array[Long]] = {
@@ -186,10 +189,8 @@ object DeriveCoveringPrune extends Rule[LogicalPlan] with PredicateHelper {
       case EqualTo(Literal(v, _), e) => level(e).map(_ -> Seq(v))
       case _ => None
     }.map { case (l, cells) =>
-      // a NULL, or a value that is no cell at level l (parentOf rejects
-      // it), keeps no row
-      cells.collect { case c: Long => scala.util.Try(index.parentOf(c, l, bits)).toOption }
-        .flatten.distinct.toArray
+      // a NULL keeps no row
+      index.prefixCellsOf(cells.collect { case c: Long => c }, l, bits)
     }.find(_.length <= MaxInCells)
   }
 

@@ -88,6 +88,34 @@ class H3USpec extends AnyFunSuite {
     assert(H3U.gridDisk(pent, 1).length == 6)
   }
 
+  test("property: a point's cells at two resolutions descend from equal or adjacent prefix cells") {
+    // H3 cells do not nest, so the prefix cell above a point's res-L cell
+    // can differ from the one above its res-T tile cell; a cell-set prune
+    // (CellIndex.H3U.prefixCellsOf) keeps the parents' ring-1 neighbours,
+    // which is sound only if the two are always equal or adjacent
+    val triples = Seq((7, 4, 0), (7, 5, 0), (7, 5, 1), (9, 5, 2), (9, 3, 1), (4, 9, 3))
+    val resolutions = triples.flatMap(t => Seq(t._1, t._2)).distinct
+    val differ = Array.fill(triples.size)(0)
+    val rnd = new java.util.SplittableRandom(16)
+    (1 to 1000000).foreach { _ =>
+      // uniform on the sphere
+      val lat = math.toDegrees(math.asin(2 * rnd.nextDouble() - 1))
+      val lng = rnd.nextDouble() * 360 - 180
+      val cell = resolutions.map(r => r -> H3U.latLngToCell(lat, lng, r)).toMap
+      triples.zipWithIndex.foreach { case ((t, l, p), i) =>
+        val tileParent = H3U.cellToParent(cell(t), p)
+        val parent = H3U.cellToParent(cell(l), p)
+        if (tileParent != parent) {
+          differ(i) += 1
+          assert(H3U.neighbors(parent).contains(tileParent),
+            s"($lat, $lng) tile $t, cell $l, prefix $p: ${H3U.token(parent)} / ${H3U.token(tileParent)}")
+        }
+      }
+    }
+    info(triples.zip(differ).map { case (t, n) => s"$t: $n" }.mkString(", "))
+    assert(differ(0) > 0, "no point whose prefix cells differ: the property was not exercised")
+  }
+
   test("pentagon vicinity: neighbors exact within grid distance 3 of all 12 pentagons, res 1..4") {
     // the deleted-wedge crossing around pentagons is the known-hard case of
     // the lattice-step+re-encode neighbor construction; exercise EVERY cell

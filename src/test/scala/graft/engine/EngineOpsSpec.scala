@@ -1,10 +1,12 @@
 package graft.engine
 
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BBox
-import graft.sql.{CellIndex, GraftSpark}
+import graft.sql.{CellIndex, GraftSpark, ParamInSet}
 
 class EngineOpsSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.session("local[4]", appName = "engine-spec")
@@ -456,11 +458,19 @@ class EngineOpsSpec extends AnyFunSuite {
 
   test("explain: box query pushes tile equi-join to broadcast hash join, no shuffle of big side") {
     val box = BBox(-0.75, 51.0, 0.25, 52.0)
+    // one Filter tests the point's cell against the covering's InSet (a
+    // ParamInSet once graft.sql.ParamLiterals swaps it), so nothing is
+    // joined or exchanged
     Seq(CellIndex.Geohash -> 20, CellIndex.H3U -> 7, CellIndex.S2U -> 10).foreach { case (index, level) =>
-      val plan = SpatialOps.boxQuery(customers, "lon", "lat", box, level, index = index)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), s"$index: $plan")
-      assert(!plan.contains("SortMergeJoin"), s"$index: $plan")
+      val executed = SpatialOps.boxQuery(customers, "lon", "lat", box, level, index = index)
+        .queryExecution.executedPlan
+      val plan = executed.toString
+      val cellSets = executed.collect { case f: FilterExec => f.condition }.flatMap(_.collect {
+        case ParamInSet(InSet(cell, _)) => cell
+        case InSet(cell, _) => cell
+      })
+      assert(cellSets.exists(c => index.cellArgs(c).exists(_._3 == level)), s"$index: $plan")
+      assert(!plan.contains("Join") && !plan.contains("Exchange"), s"$index: $plan")
     }
   }
 }

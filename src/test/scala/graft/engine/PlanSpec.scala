@@ -445,6 +445,65 @@ class PlanSpec extends AnyFunSuite {
     assert(again.size == 1, again.mkString("; "))
   }
 
+  test("budget: boxQuery, pipQuery and neighborBlockQuery over a tiled table are one job with no broadcast, on all three indexes") {
+    val pts = SpatialOps.withDerivedPosition(
+      spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")
+    val box = BBox(-5.0, 48.0, 5.0, 54.0)
+    val wkt = "POLYGON ((-2.5 41.0, 3.0 41.5, 2.0 48.0, -4.5 47.5, -2.5 41.0))"
+    val (qx, qy) = (-0.75, 51.25)
+    val center = graft.core.Geohash.encode(qx, qy, 12)
+    val block = (graft.core.Geohash.neighbors(center, 12) :+ center).toSeq
+    def ids(df: DataFrame): Seq[Long] = df.select("c_custkey").collect().map(_.getLong(0)).sorted.toSeq
+    Seq((CellIndex.Geohash, 30, 4, 20), (CellIndex.H3U, 7, 0, 4), (CellIndex.S2U, 12, 1, 8)).foreach {
+      case (index, tileLevel, prefixLevel, level) =>
+        val t = s"${java.nio.file.Files.createTempDirectory(s"cellset_${index.tag}")}/t"
+        graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", tileLevel, prefixLevel, index = index)
+        val tbl = graft.data.IcebergLite.read(spark, t)
+        // (operator, its query, the bare filter that answers the same rows)
+        Seq(
+          ("boxQuery", SpatialOps.boxQuery(tbl, "lon", "lat", box, level, index = index),
+            tbl.where($"lon" >= box.minLon && $"lon" <= box.maxLon &&
+              $"lat" >= box.minLat && $"lat" <= box.maxLat)),
+          ("pipQuery", SpatialOps.pipQuery(tbl, "lon", "lat", wkt, level, index),
+            tbl.where(gf.st_contains_wkt(lit(wkt), $"lon", $"lat"))),
+          ("neighborBlockQuery", SpatialOps.neighborBlockQuery(tbl, "lon", "lat", qx, qy, 12),
+            pts.where(gf.gh_encode($"lon", $"lat", 12).isin(block: _*)))
+        ).foreach { case (name, query, bare) =>
+          var got: Seq[Long] = Nil
+          var sites: Seq[String] = Nil
+          val plans = graft.QueryPlans.of(spark) { sites = graft.JobCount.sites(spark) { got = ids(query) } }
+          assert(sites.size == 1, s"$index $name: ${sites.mkString("; ")}")
+          assert(!plans.exists(_.toString.contains("BroadcastExchange")), s"$index $name:\n${plans.mkString("\n")}")
+          assert(got.nonEmpty && got == ids(bare), s"$index $name: rows differ from the bare filter")
+        }
+    }
+  }
+
+  test("DeriveCoveringPrune: an H3U cell-set filter keeps rows whose tile descends from a neighbouring prefix cell") {
+    // H3 cells do not nest: each of these points' res-5 cell and res-7
+    // tile cell descend from two different res-0 cells
+    val h = graft.core.H3U
+    val rnd = new java.util.SplittableRandom(16)
+    val split = Iterator.continually {
+      (rnd.nextDouble() * 360 - 180, math.toDegrees(math.asin(2 * rnd.nextDouble() - 1)))
+    }.filter { case (lon, lat) =>
+      h.cellToParent(h.latLngToCell(lat, lon, 5), 0) != h.cellToParent(h.latLngToCell(lat, lon, 7), 0)
+    }.take(20).toSeq
+    val pts = SpatialOps.withDerivedPosition(
+        spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")
+      .unionByName(split.zipWithIndex.map { case ((lon, lat), i) => (10000000L + i, lon, lat) }
+        .toDF("c_custkey", "lon", "lat"))
+    val t = s"${java.nio.file.Files.createTempDirectory("cellset_h3_split")}/t"
+    graft.data.IcebergLite.writeTiled(pts, t, "lon", "lat", 7, 0, index = CellIndex.H3U)
+    val inCells = gf.h3u_cell($"lon", $"lat", 5).isin(split.map { case (lon, lat) => h.latLngToCell(lat, lon, 5) }: _*)
+    val q = graft.data.IcebergLite.read(spark, t).where(inCells).select("c_custkey")
+    assert(prunesOn(q.queryExecution.executedPlan, "tile_p"), q.queryExecution.executedPlan.toString)
+    val e = pts.where(inCells).select("c_custkey")
+    assert(e.count() >= split.size)
+    assert(q.exceptAll(e).isEmpty && e.exceptAll(q).isEmpty,
+      s"${q.count()} rows on the tiled table, ${e.count()} untiled")
+  }
+
   test("budget: fresh geometry compiles no new class once each shape is warm, on all three indexes") {
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet(s"$sf01/customer.parquet").select("c_custkey"), "c_custkey")

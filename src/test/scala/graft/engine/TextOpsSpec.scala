@@ -71,6 +71,16 @@ class TextOpsSpec extends AnyFunSuite {
       s"extra=${got.toSet -- expected} missing=${expected -- got.toSet}")
   }
 
+  test("minhashLshPairs: two calls leave no CacheManager entry behind") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // the session is shared with other specs, which may have cached frames
+    spark.catalog.clearCache()
+    val runs = (1 to 2).map(_ => TextOps.minhashLshPairs(docs, "doc_id", "text").collect().length)
+    assert(cache.isEmpty)
+    assert(runs.distinct.size == 1 && runs.head > 0, runs)
+  }
+
   test("minhashLshPairs recall and precision vs brute force, thresholds 0.5-0.9") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val rows = Seq(0.5, 0.6, 0.7, 0.8, 0.9).map { t =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.testcolumn.ColumnOf
+import org.apache.spark.sql.graftcolumn.ColumnOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{H3U, HexGrid, S2U}
